@@ -103,25 +103,3 @@ def result_ext_typed(result_ext: DataFrame) -> DataFrame:
         st_num.try_cast("double").alias("start_timing_s"),
         race_time_s.alias("race_time_s"),
     )
-
-
-def typed_view(df: DataFrame, columns: list[str], aliases: list[str]) -> DataFrame:
-    """Romanized, typed, NULL-normalized view of a silver/gold table.
-
-    ``-1`` payout sentinels become NULL; numeric strings cast to their
-    real types (SURVEY §1.3). ``try_cast`` keeps ANSI mode safe against
-    stray unparseable values.
-    """
-    out = []
-    for orig, alias in zip(columns, aliases):
-        col = F.col(orig)
-        target = S.GOLD_TYPES.get(alias)
-        if target is not None:
-            col = col.try_cast(target)
-            if alias in {
-                "win", "place1", "place2", "exacta", "quinella",
-                "wide12", "wide13", "wide23", "trifecta", "trio",
-            }:
-                col = F.when(col == -1, F.lit(None)).otherwise(col)
-        out.append(col.alias(alias))
-    return df.select(*out)

@@ -8,6 +8,8 @@ parallel scans with full column pruning.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -53,12 +55,6 @@ def stopword_ratio(text: Column) -> Column:
 def digit_ratio(text: Column) -> Column:
     digits = F.length(F.regexp_replace(text, r"[^0-9]", ""))
     return digits / F.greatest(F.length(text), F.lit(1))
-
-
-def avg_word_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks), F.lit(1))
 
 
 def quality_score(text: Column) -> Column:
@@ -820,8 +816,8 @@ def chunk_documents(
 
 
 # --------------------------------------------------------------------------
-# BPE tokenizer training (Sennrich et al.) — the driver-coordinated
-# iterative algorithm class: M merge rounds, each one tiny aggregation.
+# BPE tokenizer training (Sennrich et al.) — one Spark aggregation to the
+# word-frequency table, then M merge rounds on the driver.
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
@@ -832,93 +828,69 @@ def bpe_train(
     tokenizer-TRAINING face of the token-counting battery (a
     `bpe_ish_token_count` that earns its vocabulary instead of
     guessing one). Returns merge rules [(a, b), ...] in learned order;
-    feed to `bpe_encode_count`/`bpe_segment`.
+    feed to `bpe_encode_count`.
 
     The Sennrich trick makes this distributed-cheap: training state is
     the WORD-FREQUENCY table (distinct words × counts — vocabulary-
-    sized, not corpus-sized), computed from the corpus ONCE. Each
-    merge round is then (1) a JVM explode+groupBy pair count over the
-    word table weighted by word frequency, (2) a 1-row argmax to the
-    driver (ties break lexicographically so training is deterministic),
-    (3) a JVM `aggregate` fold rewriting each word's symbol sequence —
-    greedy left-to-right, non-overlapping, exactly python BPE's
-    application order (property-tested against a pure-python
-    reference). No Python touches the row path; lineage is flattened
-    every round (localCheckpoint) so M rounds cannot stack M nested
-    plans.
+    sized, not corpus-sized). Spark builds it in ONE aggregation over
+    the corpus (explode tokens → groupBy word → count, each word split
+    into symbols by Spark's ``split``, so training sees exactly the
+    JVM tokenizer's words) and the table is collected once. The merge
+    rounds then run on the driver over that table: each round counts
+    adjacent symbol pairs weighted by word frequency, takes the argmax
+    (count desc, then pair lexicographic — deterministic), and rewrites
+    every word with `_bpe_merge`, the same greedy left-to-right,
+    non-overlapping rule `_bpe_apply` encodes with.
 
-    At 100 TB the word table is millions of rows — each round stays a
-    partial-agg scan of it; the corpus is read exactly once. Training
-    stops early when no pair reaches ``min_pair_count`` (merging
-    singletons memorizes the corpus).
+    Contract: driver memory is O(distinct words), never O(corpus) —
+    the word table must fit on the driver, which is the Sennrich
+    premise (natural-language vocabularies are zipfian and small next
+    to the text). The corpus is read exactly once whatever ``n_merges``
+    is. Training stops early when no pair reaches ``min_pair_count``
+    (merging singletons memorizes the corpus).
     """
-    spark = docs.sparkSession
-    words = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = [
+        (r.seq, r.cnt)
+        for r in docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.split("w", "").alias("seq"), "cnt")
-        .localCheckpoint(eager=True)
-    )
+        .collect()
+    ]
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
-        pair_counts = (
-            words.where(F.size("seq") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("seq") - 2),
-                        lambda i: F.struct(
-                            F.element_at("seq", i + 1).alias("a"),
-                            F.element_at("seq", i + 2).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
-                "cnt",
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not pair_counts or pair_counts[0].n < min_pair_count:
+        pairs: Counter[tuple[str, str]] = Counter()
+        for seq, cnt in words:
+            for pair in zip(seq, seq[1:]):
+                pairs[pair] += cnt
+        if not pairs:
             break
-        a, b = pair_counts[0].a, pair_counts[0].b
+        (a, b), n = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if n < min_pair_count:
+            break
         merges.append((a, b))
-        la, lb = F.lit(a), F.lit(b)
-        merged = F.aggregate(
-            "seq",
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == la)
-                & (s == lb),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.concat(la, lb)),
-                ),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-        words = words.select(merged.alias("seq"), "cnt").localCheckpoint(
-            eager=True
-        )
+        words = [(_bpe_merge(seq, a, b), cnt) for seq, cnt in words]
     return merges
 
 
+def _bpe_merge(seq: list[str], a: str, b: str) -> list[str]:
+    """Apply ONE merge rule to a symbol sequence: greedy left-to-right,
+    non-overlapping (``a a a`` under (a, a) is ``aa a``)."""
+    out: list[str] = []
+    for s in seq:
+        if out and out[-1] == a and s == b:
+            out[-1] = a + b
+        else:
+            out.append(s)
+    return out
+
+
 def _bpe_apply(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Pure-python BPE application (one word): each rule greedily
-    left-to-right, rules in learned order — the contract bpe_train's
-    JVM fold is tested against."""
+    """Pure-python BPE application (one word): each rule in learned
+    order via `_bpe_merge` — the rewrite `bpe_train` trains with."""
     seq = list(word)
     for a, b in merges:
-        out: list[str] = []
-        for s in seq:
-            if out and out[-1] == a and s == b:
-                out[-1] = a + b
-            else:
-                out.append(s)
-        seq = out
+        seq = _bpe_merge(seq, a, b)
     return seq
 
 

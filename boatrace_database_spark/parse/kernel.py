@@ -407,23 +407,3 @@ def parse_lzh_files(spark: SparkSession, path_glob: str) -> DataFrame:
     binary = spark.read.format("binaryFile").load(path_glob).select("content")
     binary = binary.coalesce(spark.sparkContext.defaultParallelism * 2)
     return binary.mapInPandas(_parse_lzh_batches, schema=PARSED_SCHEMA)
-
-
-def parse_bronze_lines(bronze: DataFrame) -> DataFrame:
-    """Alternate entry: parse an existing bronze lines DataFrame.
-
-    Groups by file (shuffle) — use ``parse_txt_files`` when starting
-    from raw files; this path serves pre-staged bronze tables.
-    """
-
-    def _parse_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("line_no")
-        kind = pdf["kind"].iloc[0]
-        race_date = pdf["race_date"].iloc[0]
-        out = parse_file(pdf["line"].tolist(), kind, race_date)
-        out.insert(0, "race_date", race_date)
-        out.insert(0, "kind", kind)
-        out.insert(0, "file", pdf["file"].iloc[0])
-        return out
-
-    return bronze.groupBy("file").applyInPandas(_parse_group, schema=PARSED_SCHEMA)

@@ -1180,12 +1180,12 @@ ORDER BY o_orderstatus, q
 
 def bpe_token_count(spark, sf_dir):
     """Trained-tokenizer counting (text.bpe_train + bpe_encode_count):
-    16 BPE merges learned from the corpus's word-frequency table
-    (Sennrich trick — training never rescans the corpus), then each
-    document counted under the learned segmentation. No SQL oracle:
-    greedy merge application is iterative; the JVM fold is pinned to a
-    pure-python reference and the count is monotone in merges
-    (pytest)."""
+    16 BPE merges learned from the corpus's word-frequency table (one
+    Spark aggregation, collected once; the merge rounds run on the
+    driver — training never rescans the corpus), then each document
+    counted under the learned segmentation. No SQL oracle: greedy merge
+    application is iterative; training is pinned to a pure-python
+    trainer and the count is monotone in merges (pytest)."""
     d = _t(spark, sf_dir, "documents")
     merges = TX.bpe_train(d, n_merges=16)
     return (

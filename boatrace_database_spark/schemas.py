@@ -72,30 +72,3 @@ BRONZE_LINES_SCHEMA = T.StructType(
         T.StructField("line", T.StringType()),
     ]
 )
-
-# Typed gold-layer types per romanized column (cast targets; SURVEY §1.3).
-GOLD_TYPES = {
-    "lane": T.IntegerType(),
-    "rank": T.IntegerType(),
-    "age": T.IntegerType(),
-    "weight": T.IntegerType(),
-    "wind_speed": T.IntegerType(),
-    "wave": T.IntegerType(),
-    "exhibition_time": T.DoubleType(),
-    "natl_win_rate": T.DoubleType(),
-    "natl_top2_rate": T.DoubleType(),
-    "local_win_rate": T.DoubleType(),
-    "local_top2_rate": T.DoubleType(),
-    "motor_top2_rate": T.DoubleType(),
-    "boat_top2_rate": T.DoubleType(),
-    "win": T.IntegerType(),
-    "place1": T.IntegerType(),
-    "place2": T.IntegerType(),
-    "exacta": T.IntegerType(),
-    "quinella": T.IntegerType(),
-    "wide12": T.IntegerType(),
-    "wide13": T.IntegerType(),
-    "wide23": T.IntegerType(),
-    "trifecta": T.IntegerType(),
-    "trio": T.IntegerType(),
-}

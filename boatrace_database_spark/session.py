@@ -84,34 +84,3 @@ def get_spark(app_name: str = "boatrace_database_spark", master: str | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     return builder.getOrCreate()
-
-
-STAR_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def register_star_schema(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver's synthetic star schema and register temp views.
-
-    Parquet scans get Catalyst column pruning + predicate pushdown for
-    free; callers never need to cache these (each query reads only the
-    columns/row-groups it touches).
-    """
-    dfs = {}
-    for name in STAR_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

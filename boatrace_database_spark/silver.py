@@ -66,13 +66,3 @@ def silver_tables(parsed: DataFrame) -> dict[str, DataFrame]:
         "result_ext": result_ext_table(parsed),
         "race_meta": race_meta_table(parsed),
     }
-
-
-def write_silver(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
-    """Persist silver tables as Parquet partitioned by race_date."""
-    for name, df in tables.items():
-        (
-            df.write.mode("overwrite")
-            .partitionBy("race_date")
-            .parquet(f"{warehouse_dir}/{name}")
-        )

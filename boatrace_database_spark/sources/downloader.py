@@ -71,11 +71,3 @@ def month_dates(year: int, *months: int) -> list[str]:
         days = calendar.monthrange(year, month)[1]
         out.extend(f"{year}-{month:02d}-{day:02d}" for day in range(1, days + 1))
     return out
-
-
-def year_dates(*years: int) -> list[str]:
-    """P15 (main.py:277-279)."""
-    out: list[str] = []
-    for year in years:
-        out.extend(month_dates(year, *range(1, 13)))
-    return out

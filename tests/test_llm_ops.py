@@ -2120,12 +2120,11 @@ def test_bpe_train_learns_frequent_pairs(spark):
     assert ("lo", "w") in m1[:2]  # 'low' is next
 
 
-def test_bpe_jvm_fold_matches_python_reference(spark):
-    """The JVM aggregate-fold application of each learned rule equals
-    pure-python greedy left-to-right BPE, including the overlapping
-    'aaaa' -> (aa)(aa) case: training on a corpus re-segmented by the
-    python reference finds NO remaining pair that the learned rules
-    should have merged."""
+def test_bpe_non_overlapping_merge_matches_python_reference(spark):
+    """Training's rewrite of each learned rule is greedy left-to-right
+    and non-overlapping, like the encoder's: the overlapping
+    'aaaa' -> (aa)(aa) and 'aaa' -> (aa)(a) cases segment the way the
+    pair counts that chose the rule assumed."""
     from boatrace_database_spark.operators import text as TX
 
     rows = [(0, "aaaa aaa aa banana bandana"), (1, "aaaa banana abab")]
@@ -2136,6 +2135,33 @@ def test_bpe_jvm_fold_matches_python_reference(spark):
     # 'aaaa' segments as two 'aa' symbols after the first merge
     assert TX._bpe_apply("aaaa", merges[:1]) == ["aa", "aa"]
     assert TX._bpe_apply("aaa", merges[:1]) == ["aa", "a"]
+
+
+def test_bpe_train_is_one_spark_aggregation(spark):
+    """On the committed benchmark corpus, training 16 merges launches at
+    most two Spark jobs (the word table is aggregated and collected
+    once; the merge rounds run on the driver), and bpe_token_count's
+    value hash still equals the one recorded for the benchmark."""
+    import json
+
+    from boatrace_database_spark.queries import QUERIES
+    from perfbench.catalog import DATA, EXPECTED, value_hash
+
+    docs = spark.read.parquet(f"{DATA}/documents.parquet")
+    sc = spark.sparkContext
+    group = "test_bpe_train_is_one_spark_aggregation"
+    sc.setJobGroup(group, "bpe_train job count")
+    try:
+        merges = TX.bpe_train(docs, n_merges=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(merges) == 16
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    df = QUERIES["bpe_token_count"](spark, DATA)
+    got = value_hash(df.columns, [tuple(r) for r in df.collect()])
+    with open(EXPECTED) as fh:
+        assert got == tuple(json.load(fh)["bpe_token_count"])
 
 
 def test_bpe_encode_count_monotone_and_cached(spark):

@@ -431,13 +431,13 @@ def bpe_corpus(draw):
 
 @settings(**_SETTINGS)
 @given(docs=bpe_corpus())
-@pytest.mark.slow
 def test_bpe_train_matches_python_trainer(spark, docs):
-    """The ENTIRE distributed training loop equals a pure-python BPE
-    trainer: same word-frequency table, same greedy pair counts, same
-    (count desc, pair lexicographic) tie-break, same greedy
-    left-to-right rule application between rounds — so the learned
-    merge list is identical, round for round."""
+    """bpe_train (Spark word table + driver merge rounds) equals an
+    independent pure-python BPE trainer fed by str.split(): same
+    word-frequency table, same greedy pair counts, same (count desc,
+    pair lexicographic) tie-break, same greedy left-to-right rule
+    application between rounds — so the learned merge list is
+    identical, round for round."""
     from collections import Counter
 
     from boatrace_database_spark.operators import text as TX
