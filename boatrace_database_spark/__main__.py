@@ -48,28 +48,7 @@ def main(argv: list[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.cmd == "build":
-        if args.lzh:
-            from boatrace_database_spark.gold import race_table
-            from boatrace_database_spark.parse.kernel import parse_lzh_files
-            from boatrace_database_spark.silver import silver_tables
-
-            parsed = parse_lzh_files(spark, args.lzh).persist()
-            tables = silver_tables(parsed)
-            for name in W.SILVER_TABLES:
-                tables[name].write.mode("overwrite").partitionBy("race_date").parquet(
-                    f"{args.out}/{name}"
-                )
-            silver = {
-                n: spark.read.parquet(f"{args.out}/{n}") for n in W.SILVER_TABLES
-            }
-            race = race_table(silver["result"], silver["env"], silver["schedule"])
-            race.write.mode("overwrite").partitionBy("race_date").parquet(
-                f"{args.out}/race"
-            )
-            parsed.unpersist()
-            tables = W.register_views(spark, args.out)
-        else:
-            tables = W.build_warehouse(spark, args.txt, args.out)
+        tables = W.build_warehouse(spark, args.lzh or args.txt, args.out)
         for name, df in sorted(tables.items()):
             print(f"{name}: {df.count()} rows")
 

@@ -25,12 +25,24 @@ Faithfulness notes (SURVEY §2.4 is the spec):
 - race_num increments on distance markers (half-width ``H1800m`` in K
   files, full-width in B files) and resets at each section header.
 
-The kernel runs inside Arrow-batched ``mapInPandas`` with one input
-file per group — no shuffle, state never crosses a file boundary.
+Every ingest path reaches ``parse_file`` through ``parse_member``
+(decode CP932, parse, tag file/kind/race_date), and opens its inputs
+through ``sources.bronze.file_members``, so TXT files and ``.lzh``
+archives read the same way everywhere:
+
+- ``parse_files(spark, glob)``: binaryFile scan -> ``parse_binary_df``,
+  one Arrow-batched ``mapInPandas`` with one input file per group — no
+  shuffle, state never crosses a file boundary;
+- ``parse_binary_df(df)``: the same over a (path, content) frame; the
+  streaming ingest calls it per micro-batch;
+- ``parse_files_sectioned(spark, glob)``: split at venue sections,
+  redistribute, parse per section (large single files);
+- ``spark.read.format("boatrace")`` (sources/datasource.py).
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -39,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from boatrace_database_spark.parse import patterns as P
-from boatrace_database_spark.sources.bronze import file_meta
+from boatrace_database_spark.sources.bronze import file_members, file_meta
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -280,130 +292,95 @@ def parse_file(lines: list[str], kind: str, race_date: str) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def _parse_binary_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """binaryFile rows -> parsed rows. Decode+parse fused: no shuffle."""
+def parse_member(name: str, raw: bytes) -> pd.DataFrame:
+    """One reference-format file (a daily TXT or an archive member) ->
+    parsed rows tagged with its file, kind and race_date.
+
+    The name must be ``[KB]yymmdd.TXT``: it carries the kind and the
+    date, so any other name is refused rather than parsed to nothing.
+    """
+    file, kind, race_date = file_meta(name)
+    if not kind:
+        raise ValueError(f"not a [KB]yymmdd.TXT race file: {name!r}")
+    text = raw.decode("cp932", errors="replace")
+    out = parse_file(text.splitlines(), kind, race_date)
+    out.insert(0, "race_date", race_date)
+    out.insert(0, "kind", kind)
+    out.insert(0, "file", file)
+    return out
+
+
+def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(path, content) rows -> parsed rows. Decode+parse fused: no shuffle."""
     for pdf in batches:
         for path, content in zip(pdf["path"], pdf["content"]):
-            name, kind, race_date = file_meta(path)
-            text = bytes(content).decode("cp932", errors="replace")
-            out = parse_file(text.splitlines(), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", name)
-            yield out
+            for name, raw in file_members(path, content):
+                yield parse_member(name, raw)
 
 
-def parse_txt_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One-pass scan: raw TXT files -> tagged parsed rows.
-
-    The scale path: decode and parse fused inside a single
-    ``mapInPandas`` so raw lines never shuffle. The binaryFile source
-    emits one partition per file; daily TXT files are ~160 KB, so the
-    scan is coalesced (narrow, no shuffle) to a few partitions per core
-    — per-task scheduling + Arrow overhead would otherwise dominate on
-    small-file corpora. With large files the coalesce is a no-op.
-    """
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    return parse_binary_df(binary)
+def parse_files(spark: SparkSession, path_glob: str) -> DataFrame:
+    """One-pass scan: raw TXT files or ``.lzh`` archives -> tagged
+    parsed rows (the full S1->silver input with zero shuffles)."""
+    return parse_binary_df(spark.read.format("binaryFile").load(path_glob))
 
 
 def parse_binary_df(binary: DataFrame) -> DataFrame:
     """Fused decode+parse over an existing (path, content) DataFrame —
-    shared by the batch glob reader and the streaming foreachBatch
-    ingest (streaming/ingest.stream_ingest_boatrace)."""
-    # coalesce never increases partition count, so this is a no-op when
-    # the corpus has fewer files than 2x cores
+    shared by ``parse_files`` and the streaming foreachBatch ingest
+    (streaming/ingest.stream_ingest_boatrace).
+
+    The binaryFile source emits one partition per file; daily TXT files
+    are ~160 KB, so the scan is coalesced (narrow, no shuffle) to a few
+    partitions per core — per-task scheduling + Arrow overhead would
+    otherwise dominate on small-file corpora. coalesce never increases
+    the partition count, so it is a no-op with fewer files than 2x cores.
+    """
     binary = binary.select("path", "content").coalesce(
         binary.sparkSession.sparkContext.defaultParallelism * 2
     )
-    return binary.mapInPandas(_parse_binary_batches, schema=PARSED_SCHEMA)
+    return binary.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
 
 
-_SECTION_SCHEMA = (
-    "file STRING, kind STRING, race_date STRING, section_no INT, text STRING"
-)
+# section markers at line starts in the raw bytes: CP932 never uses
+# 0x0A as a trail byte, so a slice at a line start keeps every
+# character whole and decodes to the same lines as the whole file
+_BGN = re.compile(rb"^\d{2}[KB]BGN", re.M)
 
 
-def _split_section_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(path, content) -> one row per venue section (NN[KB]BGN marker).
+def _split_sections(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(path, content) -> one (path, section_no, content) row per venue
+    section (NN[KB]BGN marker), ``path`` being the member's TXT name.
 
-    Narrow pass: decode + line split only; the expensive regex parse
-    happens after sections redistribute across the cluster."""
-    import re
-
-    bgn = re.compile(r"^\d{2}[KB]BGN")
+    Narrow pass: byte slicing only; the expensive decode and parse
+    happen after sections redistribute across the cluster."""
     for pdf in batches:
+        rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            name, kind, race_date = file_meta(path)
-            lines = bytes(content).decode("cp932", errors="replace").splitlines()
-            starts = [i for i, l in enumerate(lines) if bgn.match(l)]
-            if not starts:
-                continue
-            bounds = starts[1:] + [len(lines)]
-            yield pd.DataFrame(
-                {
-                    "file": name,
-                    "kind": kind,
-                    "race_date": race_date,
-                    "section_no": range(len(starts)),
-                    "text": [
-                        "\n".join(lines[a:b]) for a, b in zip(starts, bounds)
-                    ],
-                }
-            )
+            for name, raw in file_members(path, content):
+                starts = [m.start() for m in _BGN.finditer(raw)]
+                for i, (a, b) in enumerate(zip(starts, starts[1:] + [len(raw)])):
+                    rows.append((name, i, raw[a:b]))
+        if rows:
+            yield pd.DataFrame(rows, columns=["path", "section_no", "content"])
 
 
-def _parse_section_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        for file, kind, race_date, text in zip(
-            pdf["file"], pdf["kind"], pdf["race_date"], pdf["text"]
-        ):
-            out = parse_file(text.split("\n"), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", file)
-            yield out
-
-
-def parse_txt_files_sectioned(spark: SparkSession, path_glob: str) -> DataFrame:
+def parse_files_sectioned(spark: SparkSession, path_glob: str) -> DataFrame:
     """Large-file scale path (SURVEY §7.4(5)): split each file into its
     venue sections (``NNKBGN`` markers) in a cheap narrow pass, then
-    redistribute the sections and run the SAME parse kernel per
+    redistribute the sections and run the SAME ``parse_member`` per
     section. Sections are self-contained (every header resets the
-    parse state), so the output is row-identical to
-    ``parse_txt_files`` — asserted on the committed month in
-    tests/test_parse_golden.py. Use when single files are large enough
-    that one-file-one-task would serialize the scan (a multi-GB
-    day-file becomes ~a dozen independent tasks; at 100 TB the split
-    pass streams bytes while the parse pass holds one section each).
+    parse state), so the output is row-identical to ``parse_files`` —
+    asserted on the committed month in tests/test_parse_golden.py and
+    on a generated corpus in tests/test_ingest_paths.py. Use when single
+    files are large enough that one-file-one-task would serialize the
+    scan (a multi-GB day-file becomes ~a dozen independent tasks; at
+    100 TB the split pass streams bytes while the parse pass holds one
+    section each).
     """
     binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    sections = binary.mapInPandas(_split_section_batches, schema=_SECTION_SCHEMA)
+    sections = binary.mapInPandas(
+        _split_sections, schema="path STRING, section_no INT, content BINARY"
+    )
     parallelism = spark.sparkContext.defaultParallelism
-    sections = sections.repartition(parallelism, "file", "section_no")
-    return sections.mapInPandas(_parse_section_batches, schema=PARSED_SCHEMA)
-
-
-def _parse_lzh_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """LZH archive bytes -> decode members -> parse. Fused, no shuffle."""
-    from boatrace_database_spark.sources.lzh import read_lzh_bytes
-
-    for pdf in batches:
-        for content in pdf["content"]:
-            for member in read_lzh_bytes(bytes(content)):
-                name, kind, race_date = file_meta(member.filename)
-                text = member.data.decode("cp932", errors="replace")
-                out = parse_file(text.splitlines(), kind, race_date)
-                out.insert(0, "race_date", race_date)
-                out.insert(0, "kind", kind)
-                out.insert(0, "file", name)
-                yield out
-
-
-def parse_lzh_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One-pass scan over raw ``.lzh`` archives: decompress (bundled
-    -lh5- decoder) + decode + parse fused in a single ``mapInPandas`` —
-    the full S1->silver path with zero shuffles."""
-    binary = spark.read.format("binaryFile").load(path_glob).select("content")
-    binary = binary.coalesce(spark.sparkContext.defaultParallelism * 2)
-    return binary.mapInPandas(_parse_lzh_batches, schema=PARSED_SCHEMA)
+    sections = sections.repartition(parallelism, "path", "section_no")
+    return sections.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)

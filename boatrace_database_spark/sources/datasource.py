@@ -5,15 +5,15 @@ decompressed by the bundled -lh5- decoder — and emits the engine's
 tagged parsed-row schema (parse/kernel.PARSED_SCHEMA) without the
 caller touching binaryFile or mapInPandas.
 
-Why a Data Source and not just `parse_txt_files`: the DataSourceV2
+Why a Data Source and not just `parse_files`: the DataSourceV2
 contract makes the format a first-class catalog citizen — usable from
 pure SQL (`CREATE TEMPORARY VIEW r USING boatrace OPTIONS (path ...)`),
 from any session that registered it, and with planning-time control of
-the file→task packing (the small-file coalesce the helper had to bolt
-on after the scan). Same fused decode+parse hot path: each task opens
-its files, decodes CP932, runs the vectorized kernel, and ships Arrow
-RecordBatches to the JVM — raw lines never shuffle, Python touches
-each byte once.
+the file→task packing (the small-file coalesce `parse_binary_df` has
+to bolt on after the scan). Same fused decode+parse hot path: each
+task opens its files through `bronze.file_members`, runs
+`kernel.parse_member` on each, and ships Arrow RecordBatches to the
+JVM — raw lines never shuffle, Python touches each byte once.
 
 Registration is per-session: ``register(spark)`` (idempotent).
 
@@ -30,16 +30,18 @@ from __future__ import annotations
 import glob as _glob
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
-_DDL = (
-    "file string, kind string, race_date string, "
-    "table string, race_id string, vals array<string>"
-)
+from boatrace_database_spark.parse.kernel import PARSED_SCHEMA, parse_member
+from boatrace_database_spark.sources.bronze import file_members
+
+_ARROW_SCHEMA = to_arrow_schema(PARSED_SCHEMA)
 
 
 class _FilesPartition(InputPartition):
@@ -67,47 +69,13 @@ class BoatraceReader(DataSourceReader):
         ]
 
     def read(self, partition: _FilesPartition) -> Iterator:
-        # imports inside read(): this object is pickled to executors,
-        # keep it free of JVM/session state
-        import pyarrow as pa
-
-        from boatrace_database_spark.parse.kernel import parse_file
-        from boatrace_database_spark.sources.bronze import file_meta
-        from boatrace_database_spark.sources.lzh import read_lzh_bytes
-
-        arrow_schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("kind", pa.string()),
-                ("race_date", pa.string()),
-                ("table", pa.string()),
-                ("race_id", pa.string()),
-                ("vals", pa.list_(pa.string())),
-            ]
-        )
-
-        def emit(name: str, raw: bytes):
-            _, kind, race_date = file_meta(name)
-            text = raw.decode("cp932", errors="replace")
-            out = parse_file(text.splitlines(), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", name)
-            return pa.RecordBatch.from_pandas(
-                out, schema=arrow_schema, preserve_index=False
-            )
-
         for path in partition.paths:
-            if path.lower().endswith(".lzh"):
-                with open(path, "rb") as fh:
-                    data = fh.read()
-                for member in read_lzh_bytes(data):
-                    yield emit(member.filename, member.data)
-            else:
-                import os
-
-                with open(path, "rb") as fh:
-                    yield emit(os.path.basename(path), fh.read())
+            with open(path, "rb") as fh:
+                content = fh.read()
+            for name, raw in file_members(path, content):
+                yield pa.RecordBatch.from_pandas(
+                    parse_member(name, raw), schema=_ARROW_SCHEMA, preserve_index=False
+                )
 
 
 class BoatraceDataSource(DataSource):
@@ -115,8 +83,8 @@ class BoatraceDataSource(DataSource):
     def name(cls) -> str:
         return "boatrace"
 
-    def schema(self) -> str:
-        return _DDL
+    def schema(self):
+        return PARSED_SCHEMA
 
     def reader(self, schema) -> BoatraceReader:
         return BoatraceReader(self.options)

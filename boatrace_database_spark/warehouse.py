@@ -1,5 +1,6 @@
-"""Warehouse orchestration: raw TXT -> silver parquet -> gold race table,
-registered views, legacy query API, and reference-layout CSV export.
+"""Warehouse orchestration: raw TXT or .lzh -> silver parquet -> gold
+race table, registered views, legacy query API, and reference-layout
+CSV export.
 
 Maps the reference's storage operators (SURVEY §2.1):
 - S5 SQLite append sink  -> Parquet tables partitioned by race_date
@@ -23,23 +24,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from boatrace_database_spark import gold, silver
 from boatrace_database_spark import schemas as S
-from boatrace_database_spark.gold import race_table
-from boatrace_database_spark.parse.kernel import parse_txt_files
-from boatrace_database_spark.silver import silver_tables
+from boatrace_database_spark.parse.kernel import parse_files
 
 SILVER_TABLES = ("schedule", "result", "odds", "env", "result_ext", "race_meta")
 
 
 def build_warehouse(
-    spark: SparkSession, txt_glob: str, warehouse_dir: str
+    spark: SparkSession, path_glob: str, warehouse_dir: str
 ) -> dict[str, DataFrame]:
-    """Full rebuild (reference __main__ semantics: delete + reload,
-    main.py:283-294 — here an idempotent overwrite, no duplicate-append
-    defect; SURVEY §2.4 documents why per-rebuild semantics are the
-    intended ones)."""
-    parsed = parse_txt_files(spark, txt_glob).persist()
-    tables = silver_tables(parsed)
+    """Full rebuild from a glob of daily TXT files or ``.lzh`` archives
+    (reference __main__ semantics: delete + reload, main.py:283-294 —
+    here an idempotent overwrite, no duplicate-append defect; SURVEY
+    §2.4 documents why per-rebuild semantics are the intended ones)."""
+    parsed = parse_files(spark, path_glob).persist()
+    tables = silver.silver_tables(parsed)
     for name in SILVER_TABLES:
         (
             tables[name]
@@ -48,11 +48,11 @@ def build_warehouse(
             .parquet(f"{warehouse_dir}/{name}")
         )
     # build gold from the written silver (stable lineage, cache-free)
-    silver = {
+    stored = {
         name: spark.read.parquet(f"{warehouse_dir}/{name}")
         for name in SILVER_TABLES
     }
-    race = race_table(silver["result"], silver["env"], silver["schedule"])
+    race = gold.race_table(stored["result"], stored["env"], stored["schedule"])
     race.write.mode("overwrite").partitionBy("race_date").parquet(
         f"{warehouse_dir}/race"
     )
@@ -187,7 +187,7 @@ def export_sqlite(
 
     if "race" in include and "race" not in tables:
         tables = dict(tables)
-        tables["race"] = race_table(
+        tables["race"] = gold.race_table(
             tables["result"], tables["env"], tables["schedule"]
         )
     con = sqlite3.connect(db_path)
@@ -287,7 +287,7 @@ def export_reference_csvs(
     import glob
     import shutil
 
-    race = race_table(tables["result"], tables["env"], tables["schedule"])
+    race = gold.race_table(tables["result"], tables["env"], tables["schedule"])
     odds = tables["odds"]
     written: list[str] = []
     for sub, df, cols in (

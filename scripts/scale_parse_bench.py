@@ -54,11 +54,11 @@ def build_corpus() -> int:
 
 def run_e2e(spark, glob: str) -> tuple[float, int]:
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     t0 = time.perf_counter()
-    parsed = parse_txt_files(spark, glob).persist()
+    parsed = parse_files(spark, glob).persist()
     t = silver_tables(parsed)
     n = race_table(t["result"], t["env"], t["schedule"]).count()
     dt = time.perf_counter() - t0
@@ -96,11 +96,11 @@ def main() -> None:
           file=sys.stderr)
 
     # the large-file scale path: section split + redistribute + parse
-    from boatrace_database_spark.parse.kernel import parse_txt_files_sectioned
+    from boatrace_database_spark.parse.kernel import parse_files_sectioned
 
     before = stage_ids(spark)
     t0 = time.perf_counter()
-    n_sec = parse_txt_files_sectioned(spark, f"{DST}/*.TXT").count()
+    n_sec = parse_files_sectioned(spark, f"{DST}/*.TXT").count()
     dt_sec = time.perf_counter() - t0
     bal_sec = task_balance(spark, stage_ids(spark) - before)
     print(

@@ -6,12 +6,10 @@ from __future__ import annotations
 
 import pytest
 
-from boatrace_database_spark.sources.bronze import (
-    decompress_lzh_to_dir,
-    read_lzh_txt_lines,
-    read_txt_lines,
-)
+from boatrace_database_spark.sources.bronze import decompress_lzh_to_dir, read_lines
 from boatrace_database_spark.sources.lzh import read_lzh
+
+pytestmark = pytest.mark.requires_reference
 
 
 @pytest.mark.parametrize(
@@ -40,8 +38,8 @@ def test_decompress_to_dir(tmp_path):
 
 
 def test_lzh_bronze_equals_txt_bronze(spark):
-    via_lzh = read_lzh_txt_lines(spark, "/root/reference/lzh/K2020-08-01.lzh")
-    via_txt = read_txt_lines(spark, "/root/reference/txt/K200801.TXT")
+    via_lzh = read_lines(spark, "/root/reference/lzh/K2020-08-01.lzh")
+    via_txt = read_lines(spark, "/root/reference/txt/K200801.TXT")
     a = sorted(tuple(r) for r in via_lzh.collect())
     b = sorted(tuple(r) for r in via_txt.collect())
     assert a == b
@@ -54,10 +52,10 @@ def test_full_year_from_archives(spark):
     from pyspark.sql import functions as F
 
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_lzh_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
-    parsed = parse_lzh_files(spark, "/root/reference/lzh/*.lzh").persist()
+    parsed = parse_files(spark, "/root/reference/lzh/*.lzh").persist()
     t = silver_tables(parsed)
     race = race_table(t["result"], t["env"], t["schedule"])
     by_month = dict(

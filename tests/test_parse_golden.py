@@ -17,10 +17,12 @@ import pytest
 
 from boatrace_database_spark import schemas as S
 from boatrace_database_spark.gold import race_table
-from boatrace_database_spark.parse.kernel import parse_txt_files
+from boatrace_database_spark.parse.kernel import parse_files
 from boatrace_database_spark.silver import silver_tables
 
 REF = "/root/reference"
+
+pytestmark = pytest.mark.requires_reference
 
 RACE_FLOAT_COLS = {
     "展示", "全国勝率", "全国2率", "当地勝率", "当地2率", "モーター2率", "ボート2率",
@@ -49,7 +51,7 @@ def _read_golden(path: str, canon) -> list[tuple]:
 
 @pytest.fixture(scope="module")
 def aug_tables(spark):
-    parsed = parse_txt_files(spark, f"{REF}/txt/*2008*.TXT").persist()
+    parsed = parse_files(spark, f"{REF}/txt/*2008*.TXT").persist()
     tables = silver_tables(parsed)
     yield tables
     parsed.unpersist()
@@ -112,16 +114,16 @@ def test_sectioned_parse_equals_whole_file(spark):
     §7.4(5)) is row-identical to the whole-file kernel on the full
     committed month."""
     from boatrace_database_spark.parse.kernel import (
-        parse_txt_files,
-        parse_txt_files_sectioned,
+        parse_files,
+        parse_files_sectioned,
     )
 
     glob_pat = "/root/reference/txt/*2008*.TXT"
     whole = sorted(
-        tuple(r) for r in parse_txt_files(spark, glob_pat).collect()
+        tuple(r) for r in parse_files(spark, glob_pat).collect()
     )
     sectioned = sorted(
-        tuple(r) for r in parse_txt_files_sectioned(spark, glob_pat).collect()
+        tuple(r) for r in parse_files_sectioned(spark, glob_pat).collect()
     )
     assert len(whole) == len(sectioned)
     assert whole == sectioned

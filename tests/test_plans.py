@@ -196,14 +196,15 @@ def test_bucket_cap_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.requires_reference
 def test_race_join_is_shuffle_free(spark):
     """The gold race join: AQE converts both joins to broadcast-hash —
     zero shuffle exchanges in the final plan."""
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
-    parsed = parse_txt_files(spark, "/root/reference/txt/*200801.TXT").persist()
+    parsed = parse_files(spark, "/root/reference/txt/*200801.TXT").persist()
     t = silver_tables(parsed)
     race = race_table(t["result"], t["env"], t["schedule"])
     race.count()  # let AQE finalize
@@ -450,6 +451,7 @@ def test_packed_split_documents_scanned_once_behind_checkpoints(spark):
     assert all("_bkt" in l for l in hash_ex)
 
 
+@pytest.mark.requires_reference
 def test_domain_behavioral_plans_are_join_safe(spark):
     """The boatrace-domain compositions ride the cached gold table:
     transitions/funnel keep ONE user-key exchange over it (the

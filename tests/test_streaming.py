@@ -151,6 +151,7 @@ def test_stream_ingest_appends_incrementally(spark, tmp_path):
 
 
 @pytest.mark.slow
+@pytest.mark.requires_reference
 def test_stream_boatrace_day_replay_equals_batch(spark, tmp_path):
     """Replaying the corpus day-by-day through the streaming ingest
     converges to the same warehouse as the one-shot batch build — the

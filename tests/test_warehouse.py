@@ -24,6 +24,7 @@ def wh(spark, tmp_path_factory):
     return out, tables
 
 
+@pytest.mark.requires_reference
 def test_build_and_views(spark, wh):
     out, tables = wh
     assert set(tables) == {"schedule", "result", "odds", "env", "result_ext", "race_meta", "race"}
@@ -34,6 +35,7 @@ def test_build_and_views(spark, wh):
     assert os.path.isdir(f"{out}/race/race_date=2020-08-01")
 
 
+@pytest.mark.requires_reference
 def test_day_slice_prunes(spark, wh):
     _, tables = wh
     sliced = W.day_slice(tables["race"], "2020-08-01")
@@ -45,6 +47,7 @@ def test_day_slice_prunes(spark, wh):
 
 
 @pytest.mark.slow
+@pytest.mark.requires_reference
 def test_overwrite_rebuild_idempotent(spark, tmp_path):
     # own directory: rebuilding over existing files (S7 semantics) must
     # not disturb other tests' readers
@@ -54,6 +57,7 @@ def test_overwrite_rebuild_idempotent(spark, tmp_path):
     assert tables["race"].count() == 854
 
 
+@pytest.mark.requires_reference
 def test_csv_export_reference_layout(spark, wh, tmp_path):
     _, tables = wh
     written = W.export_reference_csvs(tables, str(tmp_path))
@@ -80,6 +84,7 @@ def test_csv_export_reference_layout(spark, wh, tmp_path):
     assert a == b
 
 
+@pytest.mark.requires_reference
 def test_csv_export_reimport_roundtrip(spark, wh, tmp_path):
     """S4 closes the loop: exported reference-layout CSVs re-import
     through the CSV source into the same race rows (values survive the
@@ -97,6 +102,7 @@ def test_csv_export_reimport_roundtrip(spark, wh, tmp_path):
     assert a == b
 
 
+@pytest.mark.requires_reference
 def test_sqlite_export_runs_reference_queries(spark, wh, tmp_path):
     """The exported boatrace.db answers the reference's read_db.py
     query shapes verbatim (LIKE-prefix day slice, disjunctive range,
@@ -123,6 +129,7 @@ def test_sqlite_export_runs_reference_queries(spark, wh, tmp_path):
         con.close()
 
 
+@pytest.mark.requires_reference
 def test_sqlite_export_size_guard(spark, wh, tmp_path):
     """The driver-side SQLite exit refuses cluster-scale tables instead
     of silently funneling them through toPandas."""
@@ -150,6 +157,7 @@ def test_sqlite_export_size_guard(spark, wh, tmp_path):
         con.close()
 
 
+@pytest.mark.requires_reference
 def test_sqlite_roundtrip_import(spark, wh, tmp_path):
     """export_sqlite -> import_sqlite round-trips every table value and
     re-derives the race_date partition column from レースID."""
@@ -177,6 +185,7 @@ def test_sqlite_roundtrip_import(spark, wh, tmp_path):
     assert n == 854
 
 
+@pytest.mark.requires_reference
 def test_result_ext_covers_dropped_codes(spark, wh):
     _, tables = wh
     ext = tables["result_ext"]
@@ -194,12 +203,14 @@ def test_result_ext_covers_dropped_codes(spark, wh):
     assert st_ok / ranked > 0.99
 
 
+@pytest.mark.requires_reference
 def test_race_meta_kimarite(spark, wh):
     _, tables = wh
     vals = {r[0] for r in tables["race_meta"].select("kimarite").distinct().collect()}
     assert "逃げ" in vals, vals
 
 
+@pytest.mark.requires_reference
 def test_result_ext_typed_view(spark, wh):
     from boatrace_database_spark.gold import result_ext_typed
 
@@ -207,11 +218,11 @@ def test_result_ext_typed_view(spark, wh):
     typed = result_ext_typed(tables["result_ext"])
     # F0.01 flying marks become booleans with their numeric ST kept
     # (2020-08-01 has no flying start; 2020-08-12 has five — SURVEY §2.4)
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     day12 = silver_tables(
-        parse_txt_files(spark, "/root/reference/txt/*200812.TXT")
+        parse_files(spark, "/root/reference/txt/*200812.TXT")
     )["result_ext"]
     flying = result_ext_typed(day12).where(F.col("is_flying")).collect()
     assert flying and all(r.start_timing_s is not None for r in flying)
@@ -234,6 +245,7 @@ def test_result_ext_typed_view(spark, wh):
     assert joined.count() == 0
 
 
+@pytest.mark.requires_reference
 def test_player_features_and_roi(spark, wh):
     _, tables = wh
     race = tables["race"]
@@ -279,6 +291,7 @@ def test_month_dates():
     assert days[0] == "2020-08-01" and days[-1] == "2020-08-31" and len(days) == 31
 
 
+@pytest.mark.requires_reference
 def test_train_win_model(spark, wh):
     _, tables = wh
     model, auc = A.train_win_model(tables["race"])
@@ -287,6 +300,7 @@ def test_train_win_model(spark, wh):
 
 
 @pytest.mark.slow
+@pytest.mark.requires_reference
 def test_train_win_model_gbt_beats_lr(spark, wh):
     """A5 parity: the reference's published model is LightGBM (boosted
     trees, README.md:9,20); the GBT variant must train on the golden
@@ -320,6 +334,7 @@ def test_approx_agg_close_to_exact(spark):
         assert abs(a.approx_median - e.median) / e.median < 0.05
 
 
+@pytest.mark.requires_reference
 def test_odds_map_view(spark, wh):
     from boatrace_database_spark.gold import odds_map_view
 
@@ -336,6 +351,7 @@ def test_odds_map_view(spark, wh):
     assert n_null == flat_null
 
 
+@pytest.mark.requires_reference
 def test_merge_upsert_late_corrections(spark, tmp_path):
     out = str(tmp_path / "m")
     W.build_warehouse(spark, TXT, out)
@@ -361,6 +377,7 @@ def test_merge_upsert_late_corrections(spark, tmp_path):
     assert again.where(F.col("天候") == "雪").count() == 2
 
 
+@pytest.mark.requires_reference
 def test_merge_upsert_cross_partition_move(spark, tmp_path):
     """A correction that MOVES a race to a different date: the
     superseded row lives in a partition the update rows do not name —
@@ -387,6 +404,7 @@ def test_merge_upsert_cross_partition_move(spark, tmp_path):
 
 
 @pytest.mark.slow
+@pytest.mark.requires_reference
 def test_merge_upsert_emptied_partition(spark, tmp_path):
     """A correction that moves EVERY row out of a partition: dynamic
     partition overwrite never rewrites a partition absent from the
