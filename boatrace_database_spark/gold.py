@@ -37,12 +37,7 @@ def race_table(
             how="inner",
         )
     )
-    order = (
-        S.RESULT_COLUMNS
-        + [c for c in S.ENV_COLUMNS if c != S.RACE_ID]
-        + [c for c in S.SCHEDULE_COLUMNS if c not in (S.RACE_ID, S.PLAYER_ID)]
-    )
-    return joined.select("race_date", *order)
+    return joined.select("race_date", *S.RACE_COLUMNS)
 
 
 def odds_map_view(odds: DataFrame) -> DataFrame:

@@ -43,16 +43,6 @@ ODDS_ALIASES = [
 ENV_ALIASES = ["race_id", "weather", "wind_dir", "wind_speed", "wave", "venue"]
 
 
-def _all_string(cols: list[str]) -> T.StructType:
-    return T.StructType([T.StructField(c, T.StringType()) for c in cols])
-
-
-# Silver = reference-parity layer: everything string, like SQLite TEXT.
-SCHEDULE_SCHEMA = _all_string(SCHEDULE_COLUMNS)
-RESULT_SCHEMA = _all_string(RESULT_COLUMNS)
-ODDS_SCHEMA = _all_string(ODDS_COLUMNS)
-ENV_SCHEMA = _all_string(ENV_COLUMNS)
-
 # EXTENSION tables (fields the reference drops — SURVEY §1.2): romanized
 # names directly, no Japanese-parity requirement.
 RESULT_EXT_COLUMNS = [
@@ -61,6 +51,36 @@ RESULT_EXT_COLUMNS = [
     "start_timing", "race_time",
 ]
 RACE_META_COLUMNS = ["race_id", "kimarite"]
+
+# Gold: the race table in golden-CSV order — result columns first, then
+# env and schedule without their join keys (gold.race_table).
+RACE_COLUMNS = (
+    RESULT_COLUMNS
+    + [c for c in ENV_COLUMNS if c != RACE_ID]
+    + [c for c in SCHEDULE_COLUMNS if c not in (RACE_ID, PLAYER_ID)]
+)
+
+
+def _all_string(cols: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(c, T.StringType()) for c in cols])
+
+
+# The warehouse tables as stored: every column a string, like SQLite
+# TEXT, with the race_date partition column last (where Spark's reader
+# puts it). Reads declare these rather than infer them from a parquet
+# footer, which costs a Spark job per read.
+WAREHOUSE_SCHEMAS = {
+    name: _all_string([*cols, "race_date"])
+    for name, cols in (
+        ("schedule", SCHEDULE_COLUMNS),
+        ("result", RESULT_COLUMNS),
+        ("odds", ODDS_COLUMNS),
+        ("env", ENV_COLUMNS),
+        ("result_ext", RESULT_EXT_COLUMNS),
+        ("race_meta", RACE_META_COLUMNS),
+        ("race", RACE_COLUMNS),
+    )
+}
 
 # Bronze: one row per decoded text line, tagged with provenance.
 BRONZE_LINES_SCHEMA = T.StructType(

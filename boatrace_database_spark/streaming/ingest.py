@@ -1797,6 +1797,13 @@ def stream_ingest_boatrace(
     partition (idempotent) instead of duplicating it (the reference's
     duplicate-append defect, SURVEY §2.4, cannot occur).
 
+    What an epoch launches: one aggregate over the persisted parse
+    (which tables received rows, for which days; it also fills the
+    cache), one partition-replace write per silver table that received
+    rows, and the gold race join over the merged silver of the touched
+    days (declared-schema reads, so no footer-inference jobs) with its
+    one write. A day's K+B epoch is about a dozen jobs.
+
     Exactly-once: the file source checkpoints which files each epoch
     consumed, and the partition-replace merge is idempotent per day, so
     replays after failure converge to the batch-build state.
@@ -1829,43 +1836,40 @@ def stream_ingest_boatrace(
         )
         return fs.exists(jpath)
 
-    def _upsert(name: str, df: DataFrame) -> None:
-        # an empty frame (the day's other file kind hasn't arrived yet)
-        # must not create a footerless parquet dir the next read chokes
-        # on — and has nothing to merge anyway
-        if df.isEmpty():
-            return
-        tdir = f"{warehouse_dir}/{name}"
-        if _exists(tdir):
-            W.merge_upsert(spark, tdir, df, keys=["race_date"])
-        else:
-            df.write.partitionBy("race_date").parquet(tdir)
-
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         parsed = parse_binary_df(batch).persist()
+        # one aggregate decides every write: a table without rows (the
+        # day's other file kind hasn't arrived yet) has nothing to merge
+        dates = {
+            r["table"]: r["dates"]
+            for r in parsed.groupBy("table")
+            .agg(F.collect_set("race_date").alias("dates"))
+            .collect()
+        }
         tables = silver_tables(parsed)
         for name in W.SILVER_TABLES:
-            _upsert(name, tables[name])
+            if name in dates:
+                W.merge_upsert(
+                    spark, f"{warehouse_dir}/{name}", tables[name], keys=["race_date"]
+                )
         # rebuild gold for the touched dates from the MERGED silver, not
         # the batch frames: a day's K (results) and B (program) files
         # may arrive in different micro-batches, and the inner race join
         # needs both sides — joining only the batch's own rows would
         # silently drop the day whenever the pair splits across batches.
         # Until all three inputs exist on disk the join is empty anyway.
-        if all(
+        if dates and all(
             _exists(f"{warehouse_dir}/{n}") for n in ("result", "env", "schedule")
         ):
-            dates = [r[0] for r in parsed.select("race_date").distinct().collect()]
+            touched = sorted(set().union(*dates.values()))
             silver = {
-                name: spark.read.parquet(f"{warehouse_dir}/{name}")
-                .withColumn("race_date", F.col("race_date").cast("string"))
-                .where(F.col("race_date").isin(dates))
+                name: W.read_table(spark, warehouse_dir, name).where(
+                    F.col("race_date").isin(touched)
+                )
                 for name in ("result", "env", "schedule")
             }
             race = race_table(silver["result"], silver["env"], silver["schedule"])
-            _upsert("race", race)
+            W.merge_upsert(spark, f"{warehouse_dir}/race", race, keys=["race_date"])
         parsed.unpersist()
 
     return (

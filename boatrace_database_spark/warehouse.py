@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from boatrace_database_spark import gold, silver
 from boatrace_database_spark import schemas as S
@@ -49,8 +50,8 @@ def build_warehouse(
         )
     # build gold from the written silver (stable lineage, cache-free)
     stored = {
-        name: spark.read.parquet(f"{warehouse_dir}/{name}")
-        for name in SILVER_TABLES
+        name: read_table(spark, warehouse_dir, name)
+        for name in ("result", "env", "schedule")
     }
     race = gold.race_table(stored["result"], stored["env"], stored["schedule"])
     race.write.mode("overwrite").partitionBy("race_date").parquet(
@@ -60,18 +61,48 @@ def build_warehouse(
     return register_views(spark, warehouse_dir)
 
 
+def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
+    """One warehouse table, read with its declared schema
+    (``schemas.WAREHOUSE_SCHEMAS``): no footer-inference job, and
+    race_date stays a string."""
+    return spark.read.schema(S.WAREHOUSE_SCHEMAS[name]).parquet(
+        f"{warehouse_dir}/{name}"
+    )
+
+
 def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
-    """S6: make every table addressable by name in spark.sql."""
+    """S6: make every table present under ``warehouse_dir`` addressable
+    by name in spark.sql.
+
+    Declared-schema contract: each table is read with its schema from
+    ``schemas.WAREHOUSE_SCHEMAS``, so registering launches no Spark job.
+    A declared read would turn a column missing on disk into nulls, so
+    the columns of one part file per table are checked first (a footer
+    read on the driver, no job): a table whose columns differ from the
+    declared ones raises ``ValueError`` naming the table and both
+    column lists. A table directory without part files reads as empty.
+    """
+    import glob
+
+    import pyarrow.parquet as pq
+
     out = {}
     for name in (*SILVER_TABLES, "race"):
         path = f"{warehouse_dir}/{name}"
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            # partition-type inference turns 'YYYY-MM-DD' into DateType on
-            # read-back; keep the column a string like the silver layer
-            df = df.withColumn("race_date", F.col("race_date").cast("string"))
-            df.createOrReplaceTempView(name)
-            out[name] = df
+        if not os.path.exists(path):
+            continue
+        part = next(glob.iglob(f"{path}/race_date=*/*.parquet"), None)
+        if part is not None:
+            on_disk = pq.read_schema(part).names
+            declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
+            if set(on_disk) != set(declared):
+                raise ValueError(
+                    f"register_views: table {name!r} ({path}) has columns "
+                    f"{on_disk}, declared {declared}"
+                )
+        df = read_table(spark, warehouse_dir, name)
+        df.createOrReplaceTempView(name)
+        out[name] = df
     return out
 
 
@@ -103,24 +134,75 @@ def merge_upsert(
     (anti-join + union). The use case is late corrections — the
     official site occasionally republishes a day's results.
 
-    At scale this rewrites only the touched race_date partitions:
-    updates are sliced per partition value and each partition
-    overwrites independently (dynamic partition overwrite semantics).
+    At scale this rewrites only the touched race_date partitions, with
+    a writer-scoped dynamic partition overwrite: a partition absent
+    from the written rows is left in place.
+
+    Keyed on race_date alone, the merge is a partition replace: the
+    anti-join removes every target row of every touched date, so the
+    merged rows of those partitions are exactly `updates`. They are
+    written as they are — no target scan, no join, no collect; one
+    write job (plus whatever computing `updates` takes). No touched
+    partition can be emptied, since each receives its own update rows.
+    A missing `table_dir` is created.
+
+    Lineage contract for `updates`: it may be derived lazily from the
+    table's own files. The replace path evaluates it once, inside the
+    write; dynamic overwrite writes to a staging directory and swaps
+    partitions only after that job commits. The other key sets
+    materialize the merged rows (localCheckpoint) before the write.
+
+    The table's schema is `updates`' columns with race_date last, the
+    layout the partitioned writer produces (for warehouse tables,
+    ``schemas.WAREHOUSE_SCHEMAS``); reads declare it, so none of them
+    launches a footer-inference job.
     """
-    target = spark.read.parquet(table_dir).withColumn(
-        "race_date", F.col("race_date").cast("string")
+    schema = T.StructType(
+        [f for f in updates.schema if f.name != "race_date"]
+        + [updates.schema["race_date"]]
     )
+    if list(keys) == ["race_date"]:
+        staged, emptied = updates, []
+    else:
+        staged, emptied = _stage_merge(spark, table_dir, schema, updates, keys)
+    # partitionOverwriteMode as a WRITER option, not session conf: it
+    # scopes dynamic overwrite to this single write — a session-level
+    # conf.set would silently leak, turning a later caller's
+    # mode("overwrite").partitionBy(...) full-table truncate into a
+    # partial one.
+    staged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("race_date").parquet(table_dir)
+    # Dynamic mode only rewrites partitions PRESENT in the written data:
+    # delete the emptied ones explicitly (Hadoop FS API, so any scheme
+    # works).
+    hconf = spark._jsc.hadoopConfiguration()
+    for d in emptied:
+        p = spark._jvm.org.apache.hadoop.fs.Path(f"{table_dir}/race_date={d}")
+        p.getFileSystem(hconf).delete(p, True)
+    # drop the stale shared file-status cache for this path
+    spark.catalog.refreshByPath(table_dir)
+    return spark.read.schema(schema).parquet(table_dir)
+
+
+def _stage_merge(
+    spark: SparkSession,
+    table_dir: str,
+    schema: T.StructType,
+    updates: DataFrame,
+    keys: list[str],
+) -> tuple[DataFrame, list[str]]:
+    """The general merge: (the merged rows of every touched partition,
+    materialized; the touched partitions the merge leaves empty)."""
+    target = spark.read.schema(schema).parquet(table_dir)
     merged = target.join(updates.select(*keys), on=keys, how="left_anti").unionByName(
         updates
     )
-    # touched partitions only — dynamic mode leaves the rest in place.
     # A key match may live in a DIFFERENT partition than its update row
     # (e.g. a correction moves a race to another date, or keys omit the
     # date), so the touched set is partitions holding update rows UNION
     # partitions holding superseded target rows — otherwise superseded
     # rows in unrewritten partitions would survive as duplicates.
-    # localCheckpoint materializes the merged rows BEFORE the overwrite
-    # deletes the source files they were read from.
     touched_df = updates.select("race_date")
     if "race_date" not in keys:
         # only possible when the merge key does not pin the partition:
@@ -131,35 +213,18 @@ def merge_upsert(
             .select("race_date")
         )
     touched = [r[0] for r in touched_df.distinct().collect()]
+    # localCheckpoint materializes the merged rows BEFORE the overwrite
+    # deletes the source files they were read from.
     staged = (
         merged.where(F.col("race_date").isin(touched)).localCheckpoint(eager=True)
     )
-    # partitionOverwriteMode as a WRITER option, not session conf: it
-    # scopes dynamic overwrite to this single write — a session-level
-    # conf.set would silently leak, turning a later caller's
-    # mode("overwrite").partitionBy(...) full-table truncate into a
-    # partial one.
-    staged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("race_date").parquet(table_dir)
-    # Dynamic mode only rewrites partitions PRESENT in the written data.
+    if "race_date" in keys:
+        # every touched partition receives its own update rows
+        return staged, []
     # If an update moved every row out of a touched partition, staged has
-    # zero rows for it and the stale directory survives — delete those
-    # emptied partitions explicitly (Hadoop FS API, so any scheme works).
+    # zero rows for it and the stale directory would survive.
     staged_dates = {r[0] for r in staged.select("race_date").distinct().collect()}
-    emptied = [d for d in touched if d not in staged_dates]
-    if emptied:
-        hconf = spark._jsc.hadoopConfiguration()
-        for d in emptied:
-            p = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{table_dir}/race_date={d}"
-            )
-            p.getFileSystem(hconf).delete(p, True)
-    # drop the stale shared file-status cache for this path
-    spark.catalog.refreshByPath(table_dir)
-    return spark.read.parquet(table_dir).withColumn(
-        "race_date", F.col("race_date").cast("string")
-    )
+    return staged, [d for d in touched if d not in staged_dates]
 
 
 def export_sqlite(

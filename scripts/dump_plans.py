@@ -3,10 +3,19 @@ the plan-audit artifact: PushedFilters/ReadSchema at scans, broadcast
 vs sort-merge joins, codegen spans, partial aggregates, no cartesians.
 
 Usage: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
+
+Before/after mode, for the queries a change touches — one file per
+query, ``<out>/<name>_<suffix>.txt``. Run it on the old tree with
+``--suffix before`` and on the new one with ``--suffix after``, then
+diff the pairs:
+
+    python scripts/dump_plans.py <sf_dir> --names q1_pricing_summary,bm25_topk_docs \
+        --out plans/<change> --suffix after
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -106,7 +115,32 @@ AUDIT = [
 ]
 
 
+def dump_named(argv: list[str]) -> None:
+    """The before/after mode: ``sf_dir --names a,b --out DIR --suffix S``."""
+    ap = argparse.ArgumentParser(prog="dump_plans.py")
+    ap.add_argument("sf_dir")
+    ap.add_argument("--names", required=True, help="comma-separated queries")
+    ap.add_argument("--out", required=True, help="directory for the plan files")
+    ap.add_argument("--suffix", required=True, help="e.g. before or after")
+    args = ap.parse_args(argv)
+    os.makedirs(args.out, exist_ok=True)
+    spark = get_spark("plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    for name in args.names.split(","):
+        df = QUERIES[name](spark, args.sf_dir)
+        plan = df._jdf.queryExecution().explainString(mode)
+        path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"  {path} ({len(plan)} chars)")
+
+
 def main() -> None:
+    if "--names" in sys.argv:
+        return dump_named(sys.argv[1:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
+import warnings
 
 import duckdb
 import pyarrow as pa
@@ -215,9 +217,21 @@ def test_catalog_schemas_driver_canonicalizable(spark):
 
     Schema inspection only — the plan is never executed, so this stays
     cheap across the full catalog.
+
+    The boatrace-domain entries parse the reference month while they
+    build their plans; without the reference tree they are skipped, with
+    a warning that names them.
     """
+    skipped = set() if os.path.isdir(domain.REF) else REFERENCE_QUERIES
+    if skipped:
+        warnings.warn(
+            f"skipped {sorted(skipped)}: they need {domain.REF} "
+            "(reference tree not on this host)"
+        )
     offenders = {}
     for name in entry_mod.oracle_sql():
+        if name in skipped:
+            continue
         sdf = entry_mod.queries()[name](spark, "/root/testdata/sf0.001")
         bad = {
             f.name: f.dataType.simpleString()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import csv
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,8 +14,12 @@ from boatrace_database_spark import analytics as A
 from boatrace_database_spark import schemas as S
 from boatrace_database_spark import warehouse as W
 from boatrace_database_spark.sources import downloader as DL
+from perfbench import corpus
 
 TXT = "/root/reference/txt/*200801.TXT"
+# a generated two-day corpus for the hermetic merge tests
+GEN_SEED = 904
+GEN_DATES = ["2020-03-02", "2020-03-03"]
 
 
 @pytest.fixture(scope="module")
@@ -432,6 +437,167 @@ def test_merge_upsert_emptied_partition(spark, tmp_path):
     assert merged.where(F.col("race_date") == victim).count() == 0
     assert merged.where(F.col("race_date") == "2020-08-09").count() == n_moved
     assert not os.path.exists(f"{env_dir}/race_date={victim}")
+
+
+@pytest.fixture(scope="module")
+def gen_wh(spark, tmp_path_factory):
+    """A warehouse built from two generated days (``perfbench.corpus``)."""
+    root = tmp_path_factory.mktemp("gen_wh")
+    corpus.build(GEN_SEED, GEN_DATES, str(root / "lzh"))
+    W.build_warehouse(spark, str(root / "lzh" / "*.lzh"), str(root / "wh"))
+    return str(root / "wh")
+
+
+def _env_copy(spark, gen_wh, tmp_path):
+    """(directory, frame) of a private copy of the generated env table."""
+    env_dir = str(tmp_path / "env")
+    shutil.copytree(f"{gen_wh}/env", env_dir)
+    return env_dir, spark.read.schema(S.WAREHOUSE_SCHEMAS["env"]).parquet(env_dir)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _files(table_dir, date) -> dict[str, tuple[int, int]]:
+    d = f"{table_dir}/race_date={date}"
+    return {
+        n: (os.stat(f"{d}/{n}").st_size, os.stat(f"{d}/{n}").st_mtime_ns)
+        for n in os.listdir(d)
+    }
+
+
+def test_merge_upsert_late_corrections_generated(spark, gen_wh, tmp_path):
+    """Twin of test_merge_upsert_late_corrections on the generated days."""
+    env_dir, env = _env_copy(spark, gen_wh, tmp_path)
+    n_before = env.count()
+    some = (
+        env.orderBy(S.RACE_ID)
+        .limit(2)
+        .withColumn("天候", F.lit("霧"))  # not a generated weather
+        .localCheckpoint(eager=True)
+    )
+    merged = W.merge_upsert(spark, env_dir, some, keys=[S.RACE_ID])
+    assert merged.count() == n_before  # upsert, not append
+    assert merged.where(F.col("天候") == "霧").count() == 2
+    again = W.merge_upsert(spark, env_dir, some, keys=[S.RACE_ID])
+    assert again.count() == n_before
+    assert again.where(F.col("天候") == "霧").count() == 2
+
+
+def test_merge_upsert_cross_partition_move_generated(spark, gen_wh, tmp_path):
+    """Twin of test_merge_upsert_cross_partition_move on the generated
+    days; then a correction keyed on (race id, race_date) that touches
+    both partitions, which the general path merges without looking for
+    emptied partitions (none can be)."""
+    env_dir, env = _env_copy(spark, gen_wh, tmp_path)
+    day1, day2 = GEN_DATES
+    n_before = env.count()
+    moved = (
+        env.where(F.col("race_date") == day1)
+        .orderBy(S.RACE_ID)
+        .limit(1)
+        .withColumn("race_date", F.lit(day2))
+        .localCheckpoint(eager=True)
+    )
+    key = moved.collect()[0][S.RACE_ID]
+    merged = W.merge_upsert(spark, env_dir, moved, keys=[S.RACE_ID])
+    assert merged.count() == n_before, "superseded row left behind"
+    rows = merged.where(F.col(S.RACE_ID) == key).collect()
+    assert len(rows) == 1 and rows[0]["race_date"] == day2
+
+    fixes = (
+        merged.where(F.col("race_date") == day1)
+        .orderBy(S.RACE_ID)
+        .limit(1)
+        .unionByName(merged.where(F.col(S.RACE_ID) == key))
+        .withColumn("天候", F.lit("霧"))
+        .localCheckpoint(eager=True)
+    )
+    expected = {
+        (r[S.RACE_ID], r["race_date"]): r
+        for r in merged.collect() + fixes.collect()
+    }
+    fixed = W.merge_upsert(spark, env_dir, fixes, keys=[S.RACE_ID, "race_date"])
+    assert _rows(fixed) == _rows(spark.createDataFrame(list(expected.values())))
+    assert fixed.where(F.col("天候") == "霧").count() == 2
+
+
+def test_merge_upsert_emptied_partition_generated(spark, gen_wh, tmp_path):
+    """Twin of test_merge_upsert_emptied_partition on the generated days."""
+    env_dir, env = _env_copy(spark, gen_wh, tmp_path)
+    victim = GEN_DATES[0]
+    n_before = env.count()
+    moved = (
+        env.where(F.col("race_date") == victim)
+        .withColumn("race_date", F.lit("2020-03-09"))
+        .localCheckpoint(eager=True)
+    )
+    n_moved = moved.count()
+    assert n_moved > 0
+    merged = W.merge_upsert(spark, env_dir, moved, keys=[S.RACE_ID])
+    assert merged.count() == n_before, "emptied partition left on disk"
+    assert merged.where(F.col("race_date") == victim).count() == 0
+    assert merged.where(F.col("race_date") == "2020-03-09").count() == n_moved
+    assert not os.path.exists(f"{env_dir}/race_date={victim}")
+
+
+def test_partition_replace_shrinks_only_its_partition(spark, gen_wh, tmp_path):
+    """Keyed on race_date, a republished day with fewer rows replaces its
+    own partition; the other partition keeps its rows and its files
+    (same names, sizes and mtimes); a second identical merge changes
+    nothing."""
+    env_dir, env = _env_copy(spark, gen_wh, tmp_path)
+    day1, day2 = GEN_DATES
+    other = _rows(env.where(F.col("race_date") == day2))
+    other_files = _files(env_dir, day2)
+    fewer = (
+        env.where(F.col("race_date") == day1)
+        .orderBy(S.RACE_ID)
+        .limit(5)
+        .withColumn("天候", F.lit("霧"))
+        .localCheckpoint(eager=True)
+    )
+    assert env.where(F.col("race_date") == day1).count() > 5
+    merged = W.merge_upsert(spark, env_dir, fewer, keys=["race_date"])
+    after = _rows(merged)
+    assert _rows(merged.where(F.col("race_date") == day1)) == _rows(fewer)
+    assert _rows(merged.where(F.col("race_date") == day2)) == other
+    assert _files(env_dir, day2) == other_files
+    again = W.merge_upsert(spark, env_dir, fewer, keys=["race_date"])
+    assert _rows(again) == after
+    assert _files(env_dir, day2) == other_files
+
+
+def test_partition_replace_from_own_files(spark, gen_wh, tmp_path):
+    """`updates` read lazily from the table's own files: the write reads
+    them before dynamic overwrite swaps the partition in."""
+    env_dir, env = _env_copy(spark, gen_wh, tmp_path)
+    day1, day2 = GEN_DATES
+    other = _rows(env.where(F.col("race_date") == day2))
+    lazy = env.where(F.col("race_date") == day1).withColumn("天候", F.lit("霧"))
+    want = _rows(lazy)
+    merged = W.merge_upsert(spark, env_dir, lazy, keys=["race_date"])
+    assert _rows(merged.where(F.col("race_date") == day1)) == want
+    assert _rows(merged.where(F.col("race_date") == day2)) == other
+
+
+def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
+    """Views read with the declared schemas; a table whose on-disk
+    columns differ is refused, naming the table and the columns, rather
+    than read as nulls."""
+    wh = str(tmp_path / "wh")
+    shutil.copytree(gen_wh, wh)
+    views = W.register_views(spark, wh)
+    assert set(views) == {*W.SILVER_TABLES, "race"}
+    for name, df in views.items():
+        assert df.schema == S.WAREHOUSE_SCHEMAS[name], name
+    assert _rows(views["race"]) == _rows(spark.read.parquet(f"{gen_wh}/race").select(
+        *S.RACE_COLUMNS, F.col("race_date").cast("string")))
+    renamed = views["odds"].withColumnRenamed("単勝", "win").localCheckpoint(eager=True)
+    renamed.write.mode("overwrite").partitionBy("race_date").parquet(f"{wh}/odds")
+    with pytest.raises(ValueError, match=r"'odds'.*'win'"):
+        W.register_views(spark, wh)
 
 
 @pytest.mark.slow
