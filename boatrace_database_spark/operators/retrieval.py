@@ -167,6 +167,25 @@ def bm25_topk(
     term. Rankings are identical to the full-index construction
     (`_index_components` + `_score_topk`, still the build/stats path);
     parity is pinned by test + oracle hash.
+
+    ID CONTRACT: ``id_col`` must be non-null and unique. Otherwise the
+    two paths count documents differently, and their scores (hence
+    possibly rankings) diverge:
+
+    - a null-id row is dropped HERE before the corpus stats; the index
+      path (`_index_components`, i.e. `bm25_write_index` /
+      `bm25_topk_prebuilt` and the streaming twins) counts it in
+      n_docs, avgdl and df. Neither path ever returns it.
+    - rows sharing an id are separate documents HERE (each counted in
+      n_docs, avgdl and df; their term weights summed into one output
+      row); the index path merges them into ONE document (tf and dl
+      summed, counted once).
+
+    On a 3-doc corpus and a one-term query, a duplicated id scores
+    1.147855 here against 1.033847 from the index, and a null id moves
+    the other match's score from 0.754913 here to 0.523548 there. The
+    contract is not checked at run time: a check would cost a Spark
+    job per call.
     """
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     qterms = _query_terms(queries, query_id_col, query_text_col).select(

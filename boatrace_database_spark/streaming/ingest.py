@@ -63,6 +63,20 @@ or a Kafka topic by swapping readStream.format. Exception: once
 scheduling timeout-check batches and processAllAvailable() never
 settles — TTL tests poll the sink instead (wait_until), which is also
 why every TTL contract test is written that way.
+
+Two helpers carry what every entry point shares:
+
+- `_keyed_state` is the one applyInPandasWithState site. Each custom
+  stateful operator hands it a per-group ``fn(key, batch, prev) ->
+  (new_state, out_frame)``; the state lifecycle (timed-out group →
+  remove, update, TTL re-arm, NoTimeout vs ProcessingTimeTimeout)
+  lives once, in `_state_step`. The near-dup twins also share one
+  capped first-seen admission loop, `_admit_capped`.
+- `_start` is the one sink path: a memory sink, or a foreachBatch sink.
+  A foreachBatch sink REQUIRES ``checkpoint_dir`` and is refused
+  (ValueError) before any query starts without one — an
+  uncheckpointed foreachBatch append restarts from offset zero and
+  double-appends every prior epoch.
 """
 
 from __future__ import annotations
@@ -94,6 +108,114 @@ def _id_type(schema: StructType, col: str):
         f"unsupported id column type {dt.simpleString()} for {col!r}: "
         "integral or string required"
     )
+
+
+def _state_step(fn, ttl_ms: int | None):
+    """The per-group step of every custom stateful operator — the one
+    copy of the state lifecycle. ``fn(key, batch, prev)`` gets the
+    group's rows as ONE pandas frame and the stored state tuple (None
+    when the group has none) and returns ``(new_state, out_frame)``;
+    ``new_state=None`` keeps no state (no update, no timeout).
+
+    A timed-out group is removed and emits nothing: its next arrival
+    sees ``prev=None`` — the re-admission contract every ``state_ttl_ms``
+    docstring states. A set TTL is re-armed on every update."""
+    import pandas as pd
+
+    def step(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        new_state, out = fn(
+            key, pd.concat(list(pdfs)), state.get if state.exists else None
+        )
+        if new_state is not None:
+            state.update(new_state)
+            if ttl_ms is not None:
+                state.setTimeoutDuration(ttl_ms)
+        yield out
+
+    return step
+
+
+def _keyed_state(
+    frame: DataFrame,
+    by: list[str],
+    fn,
+    out_ddl: str,
+    state_ddl: str,
+    mode: str,
+    ttl_ms: int | None,
+) -> DataFrame:
+    """The one applyInPandasWithState site: ``frame`` grouped by ``by``
+    runs `_state_step(fn, ttl_ms)`. ``ttl_ms=None`` is NoTimeout (state
+    held for the life of the query); a TTL is ProcessingTimeTimeout."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return frame.groupBy(*by).applyInPandasWithState(
+        _state_step(fn, ttl_ms),
+        outputStructType=out_ddl,
+        stateStructType=state_ddl,
+        outputMode=mode,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if ttl_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
+    )
+
+
+def _admit_capped(batch, ids, members, cid, max_members, as_member, match):
+    """The capped first-seen admission policy of the near-dup twins
+    (stated on `stream_dedup_minhash`): rows visit in id order; each is
+    scored against every stored member, and a non-None
+    ``match(row_member, member)`` payload emits
+    ``(member id, row id, *payload)``; the row is then admitted while
+    the bucket holds fewer than ``max_members``. ``ids``/``members`` are
+    the decoded bucket state, extended in place; returns the rows."""
+    out = []
+    for row in batch.sort_values("id").itertuples():
+        rid, m = cid(row.id), as_member(row)
+        for mid, member in zip(ids, members):
+            hit = match(m, member)
+            if hit is not None:
+                out.append((cid(mid), rid, *hit))
+        if len(ids) < max_members:
+            ids.append(rid)
+            members.append(m)
+    return out
+
+
+def _start(
+    frame: DataFrame,
+    query_name: str | None,
+    mode: str = "append",
+    *,
+    each_batch=None,
+    checkpoint_dir: str | None = None,
+) -> StreamingQuery:
+    """The one sink path. Without ``each_batch``: a memory sink named
+    ``query_name`` (the test/demo shape). With it: a foreachBatch sink,
+    which REQUIRES ``checkpoint_dir`` — an uncheckpointed foreachBatch
+    append restarts from offset zero and double-appends every prior
+    row, so the call is refused before any query starts.
+    ``query_name=None`` leaves the query unnamed."""
+    writer = frame.writeStream.outputMode(mode)
+    if each_batch is None:
+        writer = writer.format("memory")
+    elif checkpoint_dir is None:
+        raise ValueError(
+            f"{query_name or 'stream'}: a foreachBatch sink requires "
+            "checkpoint_dir (restart without one reprocesses from offset "
+            "zero and double-appends into the sink)"
+        )
+    else:
+        writer = writer.foreachBatch(each_batch).option(
+            "checkpointLocation", checkpoint_dir
+        )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    return writer.start()
 
 
 def stream_events_rollup(
@@ -129,12 +251,7 @@ def stream_events_rollup(
             "total",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(agg, query_name)
 
 
 def stream_sessionize(
@@ -176,12 +293,7 @@ def stream_sessionize(
             "total",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(agg, query_name)
 
 
 def stream_running_counters(
@@ -208,43 +320,24 @@ def stream_running_counters(
     lifetime-counter semantics with unbounded state.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     uddl, _ = _id_type(schema, "user_id")
     events = normalize_ts(spark.readStream.schema(schema).parquet(source_dir))
 
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+    def update(key, batch, prev):
+        n, total = prev or (0, 0.0)
+        n += len(batch)
+        total += float(batch["value"].sum())
+        return (n, total), pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
         )
 
-    out = events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=f"user_id {uddl}, n_events LONG, total_value DOUBLE",
-        stateStructType="n LONG, total DOUBLE",
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    out = _keyed_state(
+        events, ["user_id"], update,
+        f"user_id {uddl}, n_events LONG, total_value DOUBLE",
+        "n LONG, total DOUBLE", "update", state_ttl_ms,
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name, "update")
 
 
 def stream_asof_enrich(
@@ -269,20 +362,15 @@ def stream_asof_enrich(
     unbounded.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     uddl, _ = _id_type(schema, "user_id")
     eddl, _ecid = _id_type(schema, "event_id")
     events = normalize_ts(spark.readStream.schema(schema).parquet(source_dir))
     relevant = events.where(F.col("event_type").isin("view", "purchase"))
 
-    def enrich(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_ts, last_val = state.get if state.exists else (None, None)
+    def enrich(key, batch, prev):
+        last_ts, last_val = prev or (None, None)
         out_rows = []
-        batch = pd.concat(list(pdfs))
         for row in batch.sort_values(["ts", "event_id"]).itertuples():
             ts_us = int(row.ts.value // 1000)
             if row.event_type == "view":
@@ -293,33 +381,20 @@ def stream_asof_enrich(
                     (_ecid(row.event_id), key[0],
                      round(last_val, 4) if last_val is not None else -1.0)
                 )
-        state.update((last_ts if last_ts is not None else -1,
-                      last_val if last_val is not None else -1.0))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
-            out_rows, columns=["event_id", "user_id", "last_view_value"]
+        return (
+            (last_ts if last_ts is not None else -1,
+             last_val if last_val is not None else -1.0),
+            pd.DataFrame(
+                out_rows, columns=["event_id", "user_id", "last_view_value"]
+            ),
         )
 
-    out = relevant.groupBy("user_id").applyInPandasWithState(
-        enrich,
-        outputStructType=(
-            f"event_id {eddl}, user_id {uddl}, last_view_value DOUBLE"
-        ),
-        stateStructType="last_ts LONG, last_val DOUBLE",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    out = _keyed_state(
+        relevant, ["user_id"], enrich,
+        f"event_id {eddl}, user_id {uddl}, last_view_value DOUBLE",
+        "last_ts LONG, last_val DOUBLE", "append", state_ttl_ms,
     )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name)
 
 
 def stream_funnel(
@@ -368,7 +443,6 @@ def stream_funnel(
     (anchored at the user's funnel entry, second-boundary arithmetic).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stages = list(stages or ["view", "click", "purchase"])
     if len(set(stages)) != len(stages):
@@ -380,12 +454,8 @@ def stream_funnel(
     events = normalize_ts(spark.readStream.schema(schema).parquet(source_dir))
     relevant = events.where(F.col("event_type").isin(stages))
 
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        t = list(state.get) if state.exists else [-1] * k
-        batch = pd.concat(list(pdfs))
+    def update(key, batch, prev):
+        t = list(prev or [-1] * k)
         # no leading underscore: itertuples() renames such columns
         batch = batch.assign(sidx=batch["event_type"].map(idx_of))
         for row in batch.sort_values(["ts", "sidx"]).itertuples():
@@ -400,11 +470,8 @@ def stream_funnel(
                 ) + within_seconds
             if t[i - 1] == -1 and qualifies:
                 t[i - 1] = ts_us
-        state.update(tuple(t))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
         reached = sum(1 for v in t if v != -1)
-        yield pd.DataFrame(
+        return tuple(t), pd.DataFrame(
             [(key[0], reached, *t)],
             columns=["user_id", "stage_reached"]
             + [f"t_{i}_us" for i in range(1, k + 1)],
@@ -414,23 +481,11 @@ def stream_funnel(
         f"t_{i}_us LONG" for i in range(1, k + 1)
     )
     state_ddl = ", ".join(f"t{i} LONG" for i in range(1, k + 1))
-    out = relevant.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_ddl,
-        stateStructType=state_ddl,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    out = _keyed_state(
+        relevant, ["user_id"], update, out_ddl, state_ddl, "update",
+        state_ttl_ms,
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name, "update")
 
 
 def stream_sketch_rollup(
@@ -478,12 +533,7 @@ def stream_sketch_rollup(
             "n_rows",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(agg, query_name)
 
 
 def stream_cms_rollup(
@@ -546,12 +596,7 @@ def stream_cms_rollup(
             F.lit(depth).alias("depth"),
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(agg, query_name)
 
 
 def stream_cohort_activity(
@@ -593,21 +638,13 @@ def stream_cohort_activity(
     a fresh cohort (re-admission, like the rest of the family).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     uddl, _ = _id_type(schema, "user_id")
     events = normalize_ts(spark.readStream.schema(schema).parquet(source_dir))
 
-    def cells(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            cohort_day, seen = state.get
-            seen = set(seen)
-        else:
-            cohort_day, seen = None, set()
-        batch = pd.concat(list(pdfs))
+    def cells(key, batch, prev):
+        cohort_day, seen = prev or (None, ())
+        seen = set(seen)
         # .value is ns-since-epoch for naive AND tz-aware timestamps
         days = [int(row.ts.value // 86_400_000_000_000)
                 for row in batch.itertuples()]
@@ -619,10 +656,9 @@ def stream_cohort_activity(
             if not anchors:
                 # pre-cohort arrivals: nothing to anchor against (the
                 # documented divergence); keep no state
-                yield pd.DataFrame(
+                return None, pd.DataFrame(
                     [], columns=["user_id", "cohort_day", "week_offset"]
                 )
-                return
             cohort_day = min(anchors)
         out = []
         for d in days:
@@ -633,32 +669,16 @@ def stream_cohort_activity(
                     (key[0], pd.Timestamp(cohort_day * 86_400_000_000_000),
                      off)
                 )
-        state.update((cohort_day, sorted(seen)))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return (cohort_day, sorted(seen)), pd.DataFrame(
             out, columns=["user_id", "cohort_day", "week_offset"]
         )
 
-    out = events.groupBy("user_id").applyInPandasWithState(
-        cells,
-        outputStructType=(
-            f"user_id {uddl}, cohort_day TIMESTAMP, week_offset LONG"
-        ),
-        stateStructType="cohort_day LONG, seen ARRAY<LONG>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    out = _keyed_state(
+        events, ["user_id"], cells,
+        f"user_id {uddl}, cohort_day TIMESTAMP, week_offset LONG",
+        "cohort_day LONG, seen ARRAY<LONG>", "append", state_ttl_ms,
     )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name)
 
 
 def stream_event_edges(
@@ -690,26 +710,17 @@ def stream_event_edges(
     fresh chain (no cross-eviction edge).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     uddl, _ = _id_type(schema, "user_id")
     eddl, _ecid = _id_type(schema, "event_id")
     events = normalize_ts(spark.readStream.schema(schema).parquet(source_dir))
 
-    def edges(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # existence of a previous event is carried by state.exists
-        # itself (a typed id has no universal "-1 unset" sentinel)
-        if state.exists:
-            last_ts, last_eid, last_type = state.get
-            has_prev = True
-        else:
-            last_ts, last_eid, last_type = 0, None, ""
-            has_prev = False
+    def edges(key, batch, prev):
+        # existence of a previous event is carried by the state's
+        # presence itself (a typed id has no universal "-1 unset" sentinel)
+        has_prev = prev is not None
+        last_ts, last_eid, last_type = prev or (0, None, "")
         out = []
-        batch = pd.concat(list(pdfs))
         for row in batch.sort_values(["ts", "event_id"]).itertuples():
             if has_prev:
                 out.append((key[0], last_type, str(row.event_type)))
@@ -717,30 +728,17 @@ def stream_event_edges(
             last_ts = int(row.ts.value // 1000)
             last_eid = _ecid(row.event_id)
             last_type = str(row.event_type)
-        state.update((last_ts, last_eid, last_type))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return (last_ts, last_eid, last_type), pd.DataFrame(
             out, columns=["user_id", "from_type", "to_type"]
         )
 
-    out = events.groupBy("user_id").applyInPandasWithState(
-        edges,
-        outputStructType=f"user_id {uddl}, from_type STRING, to_type STRING",
-        stateStructType=f"last_ts LONG, last_eid {eddl}, last_type STRING",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    out = _keyed_state(
+        events, ["user_id"], edges,
+        f"user_id {uddl}, from_type STRING, to_type STRING",
+        f"last_ts LONG, last_eid {eddl}, last_type STRING", "append",
+        state_ttl_ms,
     )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name)
 
 
 def _interval_join_frames(
@@ -826,12 +824,7 @@ def stream_interval_join(
         spark.readStream.schema(schema).parquet(purchases_dir)
     ).withWatermark("ts", watermark)
     out = _interval_join_frames(views, purchases, horizon, how)
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(out, query_name)
 
 
 def stream_dedup_exact(
@@ -906,7 +899,6 @@ def stream_dedup_exact(
     full adjudication.)
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from boatrace_database_spark.operators.text import fingerprint
 
@@ -916,64 +908,30 @@ def stream_dedup_exact(
         F.col(id_col).alias("id"), fingerprint(F.col(text_col)).alias("fp")
     )
 
-    def flag(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # TTL expired with no new arrivals: forget the keeper; the
-            # fingerprint's next arrival re-admits as a fresh first-seen
-            state.remove()
-            return
-        keeper = state.get[0] if state.exists else None
-        batch = pd.concat(list(pdfs)).sort_values("id")
+    def flag(key, batch, prev):
+        keeper = prev[0] if prev is not None else None
         out = []
-        for doc_id in batch["id"]:
+        for doc_id in batch.sort_values("id")["id"]:
             if keeper is None:
                 keeper = _cid(doc_id)
             out.append((_cid(doc_id), keeper, _cid(doc_id) != keeper))
-        state.update((keeper,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out, columns=["id", "keeper_id", "is_duplicate"])
-
-    flagged = keyed.groupBy("fp").applyInPandasWithState(
-        flag,
-        outputStructType=(
-            f"id {iddl}, keeper_id {iddl}, is_duplicate BOOLEAN"
-        ),
-        stateStructType=f"keeper {iddl}",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-    if sink_dir is not None:
-        if checkpoint_dir is None:
-            # an uncheckpointed foreachBatch parquet append restarts
-            # from offset zero and double-appends every prior row —
-            # the documented restart contract only holds WITH a
-            # checkpoint, so refuse rather than silently violate it
-            raise ValueError(
-                "stream_dedup_exact: sink_dir requires checkpoint_dir "
-                "(restart without one reprocesses from offset zero and "
-                "double-appends into the sink)"
-            )
-
-        def _append(batch: DataFrame, epoch_id: int) -> None:
-            batch.write.mode("append").parquet(sink_dir)
-
-        return (
-            flagged.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
+        return (keeper,), pd.DataFrame(
+            out, columns=["id", "keeper_id", "is_duplicate"]
         )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+
+    flagged = _keyed_state(
+        keyed, ["fp"], flag,
+        f"id {iddl}, keeper_id {iddl}, is_duplicate BOOLEAN",
+        f"keeper {iddl}", "append", state_ttl_ms,
+    )
+
+    def _append(batch: DataFrame, epoch_id: int) -> None:
+        batch.write.mode("append").parquet(sink_dir)
+
+    return _start(
+        flagged, query_name,
+        each_batch=_append if sink_dir is not None else None,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -1016,12 +974,7 @@ def stream_dedup_within_watermark(
     deduped = rows.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
         key_cols
     )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(deduped, query_name)
 
 
 def stream_dedup_bloom(
@@ -1060,7 +1013,6 @@ def stream_dedup_bloom(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from boatrace_database_spark.operators.bloom import (
         _positions,
@@ -1082,13 +1034,13 @@ def stream_dedup_bloom(
 
     n_bytes = (m + 7) // 8
 
-    def flag(key, pdfs, state):
+    def flag(key, batch, prev):
         bits = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
+            np.frombuffer(prev[0], dtype=np.uint8).copy()
+            if prev is not None
             else np.zeros(n_bytes, dtype=np.uint8)
         )
-        batch = pd.concat(list(pdfs)).sort_values("id")
+        batch = batch.sort_values("id")
         out = []
         for doc_id, pos in zip(batch["id"], batch["pos"]):
             p = np.asarray(pos, dtype=np.int64)
@@ -1096,23 +1048,15 @@ def stream_dedup_bloom(
             insert_positions(bits, p)  # set AFTER testing: within-batch
             # duplicates of an earlier row in the same shard still flag
             out.append((_cid(doc_id), dup))
-        state.update((bits.tobytes(),))
-        yield pd.DataFrame(out, columns=["id", "is_duplicate"])
+        return (bits.tobytes(),), pd.DataFrame(out, columns=["id", "is_duplicate"])
 
-    flagged = keyed.groupBy("shard").applyInPandasWithState(
-        flag,
-        outputStructType=f"id {iddl}, is_duplicate BOOLEAN",
-        stateStructType="bits BINARY",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,  # state is constant-
-        # size by construction; TTL would only reset the lookback
+    flagged = _keyed_state(
+        keyed, ["shard"], flag, f"id {iddl}, is_duplicate BOOLEAN",
+        "bits BINARY", "append",
+        None,  # state is constant-size by construction; a TTL would
+        # only reset the lookback
     )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(flagged, query_name)
 
 
 def stream_dedup_minhash(
@@ -1170,7 +1114,6 @@ def stream_dedup_minhash(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from boatrace_database_spark.operators.dedup import word_shingles
 
@@ -1215,58 +1158,33 @@ def stream_dedup_minhash(
         ).alias("bb"),
     ).select("id", "sig", "bb.band", "bb.bucket")
 
-    def flag(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, flat = state.get
-            ids = list(ids)
-            members = [
-                np.asarray(flat[i * num_hashes : (i + 1) * num_hashes])
-                for i in range(len(ids))
-            ]
-        else:
-            ids, members = [], []
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values("id")
-        for row in batch.itertuples():
-            s = np.asarray(row.sig)
-            for mid, msig in zip(ids, members):
-                est = round(float((s == msig).mean()), 6)
-                if est >= threshold:
-                    out.append((_cid(mid), _cid(row.id), int(row.band), est))
-            if len(ids) < max_members:
-                ids.append(_cid(row.id))
-                members.append(s)
-        state.update(
-            (ids, [int(v) for m in members for v in m])
+    def flag(key, batch, prev):
+        ids, flat = prev or ([], [])
+        ids = list(ids)
+        members = [
+            np.asarray(flat[i * num_hashes : (i + 1) * num_hashes])
+            for i in range(len(ids))
+        ]
+        band = int(key[0])  # the group key is (band, bucket)
+
+        def match(s, msig):
+            est = round(float((s == msig).mean()), 6)
+            return (band, est) if est >= threshold else None
+
+        out = _admit_capped(
+            batch, ids, members, _cid, max_members,
+            lambda row: np.asarray(row.sig), match,
         )
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return (ids, [int(v) for m in members for v in m]), pd.DataFrame(
             out, columns=["id_a", "id_b", "band", "est_jaccard"]
         )
 
-    flagged = banded.groupBy("band", "bucket").applyInPandasWithState(
-        flag,
-        outputStructType=(
-            f"id_a {iddl}, id_b {iddl}, band INT, est_jaccard DOUBLE"
-        ),
-        stateStructType=f"ids ARRAY<{iddl}>, flat ARRAY<LONG>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    flagged = _keyed_state(
+        banded, ["band", "bucket"], flag,
+        f"id_a {iddl}, id_b {iddl}, band INT, est_jaccard DOUBLE",
+        f"ids ARRAY<{iddl}>, flat ARRAY<LONG>", "append", state_ttl_ms,
     )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(flagged, query_name)
 
 
 def stream_dedup_simhash(
@@ -1366,7 +1284,6 @@ def _hamming_dedup_stream(
     within ``max_hamming``. ``sig``: streaming (id, sim LONG) frame.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     n_chunks = bits // chunk_bits
     chunk_mask = (1 << chunk_bits) - 1
@@ -1388,48 +1305,24 @@ def _hamming_dedup_stream(
         ).alias("cc"),
     ).select("id", "sim", "cc.chunk", "cc.key")
 
-    def flag(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, sims = state.get
-            ids, sims = list(ids), list(sims)
-        else:
-            ids, sims = [], []
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values("id")
-        for row in batch.itertuples():
-            s = int(row.sim)
-            for mid, msim in zip(ids, sims):
-                h = bin((s ^ msim) & 0xFFFFFFFFFFFFFFFF).count("1")
-                if h <= max_hamming:
-                    out.append((_cid(mid), _cid(row.id), h))
-            if len(ids) < max_members:
-                ids.append(_cid(row.id))
-                sims.append(s)
-        state.update((ids, sims))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out, columns=["id_a", "id_b", "hamming"])
+    def match(s, msim):
+        h = bin((s ^ msim) & 0xFFFFFFFFFFFFFFFF).count("1")
+        return (h,) if h <= max_hamming else None
 
-    flagged = chunked.groupBy("chunk", "key").applyInPandasWithState(
-        flag,
-        outputStructType=f"id_a {iddl}, id_b {iddl}, hamming INT",
-        stateStructType=f"ids ARRAY<{iddl}>, sims ARRAY<LONG>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    def flag(key, batch, prev):
+        ids, sims = prev or ([], [])
+        ids, sims = list(ids), list(sims)
+        out = _admit_capped(
+            batch, ids, sims, _cid, max_members, lambda row: int(row.sim), match
+        )
+        return (ids, sims), pd.DataFrame(out, columns=["id_a", "id_b", "hamming"])
+
+    flagged = _keyed_state(
+        chunked, ["chunk", "key"], flag,
+        f"id_a {iddl}, id_b {iddl}, hamming INT",
+        f"ids ARRAY<{iddl}>, sims ARRAY<LONG>", "append", state_ttl_ms,
     )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(flagged, query_name)
 
 
 def stream_dedup_dhash(
@@ -1508,7 +1401,6 @@ def stream_dedup_audio(
     ``audio_dedup_pairs(...)`` exactly (same fingerprints, same
     candidate condition, same BER arithmetic)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from boatrace_database_spark.operators import multimodal as _M
 
@@ -1523,59 +1415,38 @@ def stream_dedup_audio(
         F.explode(F.array_distinct("fps")).alias("fp"),
     )
 
-    def flag(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, cat, lens = state.get
-            ids, cat, lens = list(ids), list(cat), list(lens)
-        else:
-            ids, cat, lens = [], [], []
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values("id")
-        for row in batch.itertuples():
-            fps = [int(v) for v in row.fps]
-            off = 0
-            for mid, mlen in zip(ids, lens):
-                mfps = cat[off : off + mlen]
-                off += mlen
-                n = min(len(fps), mlen)
-                if n == 0:
-                    continue
-                err = sum(
-                    bin(a ^ b).count("1")
-                    for a, b in zip(fps[:n], mfps[:n])
-                )
-                ber = err / (n * 32)
-                if ber <= max_ber:
-                    out.append((_cid(mid), _cid(row.id), round(ber, 6)))
-            if len(ids) < max_members:
-                ids.append(_cid(row.id))
-                cat.extend(fps)
-                lens.append(len(fps))
-        state.update((ids, cat, lens))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out, columns=["id_a", "id_b", "ber"])
+    def match(fps, mfps):
+        n = min(len(fps), len(mfps))
+        if n == 0:
+            return None
+        err = sum(
+            bin(a ^ b).count("1")
+            for a, b in zip(fps[:n], mfps[:n])
+        )
+        ber = err / (n * 32)
+        return (round(ber, 6),) if ber <= max_ber else None
 
-    flagged = keyed.groupBy("fp").applyInPandasWithState(
-        flag,
-        outputStructType=f"id_a {iddl}, id_b {iddl}, ber DOUBLE",
-        stateStructType=f"ids ARRAY<{iddl}>, cat ARRAY<LONG>, lens ARRAY<INT>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    def flag(key, batch, prev):
+        ids, cat, lens = prev or ([], [], [])
+        ids, cat, members, off = list(ids), list(cat), [], 0
+        for mlen in lens:
+            members.append(cat[off : off + mlen])
+            off += mlen
+        out = _admit_capped(
+            batch, ids, members, _cid, max_members,
+            lambda row: [int(v) for v in row.fps], match,
+        )
+        return (
+            (ids, [v for m in members for v in m], [len(m) for m in members]),
+            pd.DataFrame(out, columns=["id_a", "id_b", "ber"]),
+        )
+
+    flagged = _keyed_state(
+        keyed, ["fp"], flag, f"id_a {iddl}, id_b {iddl}, ber DOUBLE",
+        f"ids ARRAY<{iddl}>, cat ARRAY<LONG>, lens ARRAY<INT>", "append",
+        state_ttl_ms,
     )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(flagged, query_name)
 
 
 def stream_decontaminate(
@@ -1703,12 +1574,7 @@ def stream_decontaminate(
             ).alias("contamination_rate"),
         )
     )
-    return (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(scored, query_name)
 
 
 def stream_quality_gate(
@@ -1775,12 +1641,7 @@ def stream_quality_gate(
             F.col("_cal").isNotNull().alias("calibrated"),
         )
     )
-    return (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(gated, query_name)
 
 
 def stream_ingest_boatrace(
@@ -1872,11 +1733,7 @@ def stream_ingest_boatrace(
             W.merge_upsert(spark, f"{warehouse_dir}/race", race, keys=["race_date"])
         parsed.unpersist()
 
-    return (
-        binary.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start(binary, None, each_batch=_ingest, checkpoint_dir=checkpoint_dir)
 
 
 def stream_token_budget(
@@ -1931,7 +1788,6 @@ def stream_token_budget(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     if any(b < 0 for b in budgets.values()) or default_budget < 0:
         raise ValueError(f"budgets must be >= 0 (got {budgets})")
@@ -1969,13 +1825,9 @@ def stream_token_budget(
         hi = x // np.uint64(65536)
         return (lo * K + ((hi * K) % M32) * np.uint64(65536)) % M32
 
-    def gate(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        consumed = state.get[0] if state.exists else 0
+    def gate(key, batch, prev):
+        consumed = prev[0] if prev is not None else 0
         budget = budgets.get(key[0], default_budget)
-        batch = pd.concat(list(pdfs))
         # final tie-break = the RAW id (string-safe), so two string ids
         # colliding on xxhash64 still get a deterministic relative
         # admission order instead of falling back to arrival order
@@ -2008,34 +1860,17 @@ def stream_token_budget(
             if consumed < budget:
                 out.append((row_id, key[0], n_tokens, consumed + n_tokens))
             consumed += n_tokens
-        state.update((consumed,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return (consumed,), pd.DataFrame(
             out,
             columns=["id", "stratum", "n_tokens", "stratum_cum_tokens"],
         )
 
-    gated = docs.groupBy("stratum").applyInPandasWithState(
-        gate,
-        outputStructType=(
-            f"id {iddl}, stratum STRING, n_tokens LONG, "
-            "stratum_cum_tokens LONG"
-        ),
-        stateStructType="consumed LONG",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    gated = _keyed_state(
+        docs, ["stratum"], gate,
+        f"id {iddl}, stratum STRING, n_tokens LONG, stratum_cum_tokens LONG",
+        "consumed LONG", "append", state_ttl_ms,
     )
-    return (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(gated, query_name)
 
 
 def stream_ingest_parquet(
@@ -2052,11 +1887,7 @@ def stream_ingest_parquet(
     def _append(batch: DataFrame, epoch_id: int) -> None:
         batch.write.mode("append").parquet(target_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start(stream, None, each_batch=_append, checkpoint_dir=checkpoint_dir)
 
 
 def stream_dedup_semantic(
@@ -2102,7 +1933,6 @@ def stream_dedup_semantic(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from boatrace_database_spark.operators.similarity import (
         _nearest_cell_udf,
@@ -2140,66 +1970,47 @@ def stream_dedup_semantic(
             ).alias("cell"),
         )
 
-    def flag(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, flat = state.get
-            ids = list(ids)
-            dim = len(flat) // max(len(ids), 1)
-            members = [
-                np.asarray(flat[i * dim : (i + 1) * dim], dtype=np.float64)
-                for i in range(len(ids))
-            ]
-            norms = [float(np.sqrt(v @ v)) for v in members]
-        else:
-            ids, members, norms = [], [], []
-        out = []
-        cell = int(key[0])
-        batch = pd.concat(list(pdfs)).sort_values("id")
-        for row in batch.itertuples():
-            v = np.asarray(row.vec, dtype=np.float64)
-            nv = float(np.sqrt(v @ v))
-            for mid, mv, mn in zip(ids, members, norms):
-                den = mn * nv
-                if den == 0.0:
-                    # zero-norm vector (padding / failed-encode
-                    # sentinel): the engine-wide policy is that such
-                    # vectors produce no pairs (batch emits -inf /
-                    # NULL scores that fail the threshold) — skip
-                    # instead of raising ZeroDivisionError and
-                    # killing the query
-                    continue
-                score = round(float(v @ mv) / den, 4)
-                if score >= threshold:
-                    out.append((_cid(mid), _cid(row.id), cell, score))
-            if len(ids) < max_members:
-                ids.append(_cid(row.id))
-                members.append(v)
-                norms.append(nv)
-        state.update((ids, [float(x) for m in members for x in m]))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out, columns=["id_a", "id_b", "cell", "score"])
+    def with_norm(x):
+        v = np.asarray(x, dtype=np.float64)
+        return v, float(np.sqrt(v @ v))
 
-    flagged = assigned.groupBy("cell").applyInPandasWithState(
-        flag,
-        outputStructType=f"id_a {id_ddl}, id_b {id_ddl}, cell INT, score DOUBLE",
-        stateStructType=f"ids ARRAY<{id_ddl}>, flat ARRAY<DOUBLE>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    def flag(key, batch, prev):
+        ids, flat = prev or ([], [])
+        ids = list(ids)
+        dim = len(flat) // max(len(ids), 1)
+        members = [
+            with_norm(flat[i * dim : (i + 1) * dim]) for i in range(len(ids))
+        ]
+        cell = int(key[0])
+
+        def match(row_member, member):
+            (v, nv), (mv, mn) = row_member, member
+            den = mn * nv
+            if den == 0.0:
+                # zero-norm vector (padding / failed-encode
+                # sentinel): the engine-wide policy is that such
+                # vectors produce no pairs (batch emits -inf /
+                # NULL scores that fail the threshold) — skip
+                # instead of raising ZeroDivisionError and
+                # killing the query
+                return None
+            score = round(float(v @ mv) / den, 4)
+            return (cell, score) if score >= threshold else None
+
+        out = _admit_capped(
+            batch, ids, members, _cid, max_members,
+            lambda row: with_norm(row.vec), match,
+        )
+        return (ids, [float(x) for m, _ in members for x in m]), pd.DataFrame(
+            out, columns=["id_a", "id_b", "cell", "score"]
+        )
+
+    flagged = _keyed_state(
+        assigned, ["cell"], flag,
+        f"id_a {id_ddl}, id_b {id_ddl}, cell INT, score DOUBLE",
+        f"ids ARRAY<{id_ddl}>, flat ARRAY<DOUBLE>", "append", state_ttl_ms,
     )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(flagged, query_name)
 
 
 def stream_decontaminate_semantic(
@@ -2244,12 +2055,7 @@ def stream_decontaminate_semantic(
             "is_contaminated", F.col("max_eval_cosine") >= F.lit(threshold)
         )
     )
-    return (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(scored, query_name)
 
 
 def stream_ivfpq_ingest(
@@ -2324,13 +2130,7 @@ def stream_ivfpq_ingest(
                 )
             ).alias("norm")
         )
-    return (
-        assigned.select(*cols)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _start(assigned.select(*cols), query_name)
 
 
 def stream_ann_serve(
@@ -2398,14 +2198,11 @@ def stream_ann_serve(
         )
         out.write.mode("append").parquet(sink_dir)
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_serve)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start(
+        spark.readStream.schema(schema).parquet(source_dir),
+        query_name,
+        each_batch=_serve,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -2451,7 +2248,11 @@ def stream_bm25_serve(
     rank-per-group (not a stateless append-mode streaming plan), and
     the parquet append is idempotent per epoch only WITH a checkpoint,
     so ``checkpoint_dir`` is required (`stream_dedup_exact`'s restart
-    contract)."""
+    contract).
+
+    Ids must be non-null and unique: the index's doc ids (otherwise it
+    scores differently from the in-memory `bm25_topk` — that docstring
+    states how), and the query ids, since rankings are per query id."""
     from boatrace_database_spark.operators.retrieval import bm25_topk_prebuilt
 
     def _serve(batch: DataFrame, epoch_id: int) -> None:
@@ -2470,14 +2271,11 @@ def stream_bm25_serve(
         )
         out.write.mode("append").parquet(sink_dir)
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_serve)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start(
+        spark.readStream.schema(schema).parquet(source_dir),
+        query_name,
+        each_batch=_serve,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -2573,14 +2371,11 @@ def stream_hybrid_serve(
             "append"
         ).parquet(sink_dir)
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_serve)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start(
+        spark.readStream.schema(schema).parquet(source_dir),
+        query_name,
+        each_batch=_serve,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -2618,7 +2413,13 @@ def stream_bm25_ingest(
     prescribes; the expensive part (tokenize + explode + tf groupBy)
     touches only the arriving batch either way. Serving reads the
     next index snapshot by restarting `stream_bm25_serve` — the
-    snapshot contract both serve twins document."""
+    snapshot contract both serve twins document.
+
+    Doc ids must be non-null and unique across the stream. The sidecar
+    guard drops a later arrival that reuses an indexed id, and the
+    index counts null ids and merges rows sharing an id — where the
+    in-memory `bm25_topk` over the same corpus does not, so the two
+    score differently (that docstring states how)."""
     from boatrace_database_spark.operators.retrieval import bm25_add_to_index
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
@@ -2632,12 +2433,9 @@ def stream_bm25_ingest(
             n_buckets=n_buckets,
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_ingest)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start(
+        spark.readStream.schema(schema).parquet(source_dir),
+        query_name,
+        each_batch=_ingest,
+        checkpoint_dir=checkpoint_dir,
     )

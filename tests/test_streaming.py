@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +38,20 @@ def _make_deliver(tmp_path):
         shutil.copy(part, dst)
 
     return deliver
+
+
+def wait_until(predicate, what: str, timeout: float = 90.0) -> None:
+    """Poll ``predicate`` every 0.5 s until it holds, failing after
+    ``timeout`` seconds. The TTL tests need it: ProcessingTimeTimeout
+    keeps scheduling no-data state-cleanup batches, so
+    processAllAvailable() never quiesces — they poll the memory sink
+    for the delivered rows instead."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        if predicate():
+            return
+        time.sleep(0.5)
+    raise AssertionError(f"timed out waiting for {what}")
 
 
 def test_stream_rollup_matches_batch(spark, tmp_path):
@@ -591,7 +606,6 @@ def test_stream_counters_and_asof_ttl_eviction(spark, tmp_path):
       and a fresh view re-admits them.
     """
     import datetime
-    import time
 
     from boatrace_database_spark.streaming.ingest import (
         stream_asof_enrich,
@@ -616,14 +630,6 @@ def test_stream_counters_and_asof_ttl_eviction(spark, tmp_path):
             str(stage / f) for f in os.listdir(stage) if f.endswith(".parquet")
         )
         shutil.copy(part, f"{dst_dir}/b{stage_n[0]}.parquet")
-
-    def wait_until(predicate, what, timeout=90.0):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if predicate():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {what}")
 
     src_c = str(tmp_path / "cnt_src")
     src_a = str(tmp_path / "asof_src")
@@ -701,8 +707,6 @@ def test_stream_dedup_ttl_eviction_and_readmission(spark, tmp_path):
        as first-seen — a NEW keeper, is_duplicate=false — i.e. dedup
        is exact within a TTL window, windowed beyond it.
     """
-    import time
-
     from boatrace_database_spark.streaming.ingest import stream_dedup_exact
 
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -737,34 +741,23 @@ def test_stream_dedup_ttl_eviction_and_readmission(spark, tmp_path):
     def seen_ids() -> set[int]:
         return {r.id for r in spark.sql("SELECT id FROM sdedup_ttl").collect()}
 
-    def wait_for(ids: set[int], timeout: float = 90.0) -> None:
-        # ProcessingTimeTimeout keeps scheduling no-data state-cleanup
-        # batches, so processAllAvailable() never quiesces — poll the
-        # memory sink for the delivered ids instead
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if ids <= seen_ids():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"ids {ids - seen_ids()} never emitted")
-
     q = stream_dedup_exact(
         spark, src, schema, query_name="sdedup_ttl", state_ttl_ms=ttl_ms
     )
     try:
         deliver([row(1, T), row(10, U)], "c1", f"{src}/c1.parquet")
-        wait_for({1, 10})
+        wait_until(lambda: {1, 10} <= seen_ids(), "ids {1, 10}")
         # within TTL: normal dedup against the keeper
         deliver([row(2, T)], "c2", f"{src}/c2.parquet")
-        wait_for({2})
+        wait_until(lambda: {2} <= seen_ids(), "ids {2}")
         # age ALL state past the TTL (the cleanup batches evict it),
         # prove the stream is still live with an unrelated doc, then
         # re-deliver T — it must re-admit as a fresh first-seen keeper
         time.sleep(ttl_ms / 1000 + 3.0)
         deliver([row(99, V)], "c3", f"{src}/c3.parquet")
-        wait_for({99})
+        wait_until(lambda: {99} <= seen_ids(), "ids {99}")
         deliver([row(3, T)], "c4", f"{src}/c4.parquet")
-        wait_for({3})
+        wait_until(lambda: {3} <= seen_ids(), "ids {3}")
         got = {
             r.id: (r.keeper_id, r.is_duplicate)
             for r in spark.sql("SELECT * FROM sdedup_ttl").collect()
@@ -788,8 +781,6 @@ def test_stream_minhash_ttl_eviction_and_readmission(spark, tmp_path):
     bucket idles past the TTL it is evicted, so the text's next arrival
     pairs with NOTHING (no cross-eviction pair) and becomes the bucket
     member that subsequent arrivals pair against."""
-    import time
-
     from boatrace_database_spark.streaming.ingest import stream_dedup_minhash
 
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -822,14 +813,6 @@ def test_stream_minhash_ttl_eviction_and_readmission(spark, tmp_path):
             for r in spark.sql("SELECT id_a, id_b FROM smh_ttl").collect()
         }
 
-    def wait_for_pair(p: tuple[int, int], timeout: float = 90.0) -> None:
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if p in pairs():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"pair {p} never emitted; got {pairs()}")
-
     src = str(tmp_path / "mh_ttl_src")
     os.makedirs(src)
     ttl_ms = 20_000
@@ -841,14 +824,14 @@ def test_stream_minhash_ttl_eviction_and_readmission(spark, tmp_path):
         # within TTL: identical text -> est_jaccard 1.0 -> pair with
         # the stored member
         deliver([row(2, T)], "m2", f"{src}/m2.parquet")
-        wait_for_pair((1, 2))
+        wait_until(lambda: (1, 2) in pairs(), "pair (1, 2)")
         # idle ALL buckets past the TTL, keep the stream alive with an
         # unrelated doc, then re-deliver T twice
         time.sleep(ttl_ms / 1000 + 3.0)
         deliver([row(99, V)], "m3", f"{src}/m3.parquet")
         deliver([row(3, T)], "m4", f"{src}/m4.parquet")
         deliver([row(4, T)], "m5", f"{src}/m5.parquet")
-        wait_for_pair((3, 4))
+        wait_until(lambda: (3, 4) in pairs(), "pair (3, 4)")
         got = pairs()
     finally:
         q.stop()
@@ -1442,8 +1425,6 @@ def test_stream_token_budget_ttl_reopens_budget(spark, tmp_path):
     idle period past state_ttl_ms evicts the counter so the budget
     RE-OPENS (rolling-window admission) — with liveness proven by an
     unrelated stratum between deliveries."""
-    import time
-
     from boatrace_database_spark.streaming.ingest import stream_token_budget
 
     schema = spark.read.parquet(
@@ -1478,14 +1459,6 @@ def test_stream_token_budget_ttl_reopens_budget(spark, tmp_path):
             r.id for r in spark.sql("SELECT id FROM tb_ttl").collect()
         }
 
-    def wait_for(ids, timeout=90.0):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if ids <= seen():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"ids {ids - seen()} never emitted")
-
     src = str(tmp_path / "tbttl_src")
     os.makedirs(src)
     ttl_ms = 20_000
@@ -1497,19 +1470,20 @@ def test_stream_token_budget_ttl_reopens_budget(spark, tmp_path):
         # doc 1 (8 tokens) passes; doc 2 arrives with the budget at
         # 8 < 10 so it passes too and exhausts it; doc 3 is rejected
         deliver([row(1, "sA", 8)], src)
-        wait_for({1})
+        wait_until(lambda: {1} <= seen(), "ids {1}")
         deliver([row(2, "sA", 8)], src)
-        wait_for({2})
+        wait_until(lambda: {2} <= seen(), "ids {2}")
         deliver([row(3, "sA", 8)], src)
         deliver([row(50, "sB", 2)], src)
-        wait_for({50})  # liveness: sB emitted while sA's gate is shut
+        # liveness: sB emitted while sA's gate is shut
+        wait_until(lambda: {50} <= seen(), "ids {50}")
         assert 3 not in seen(), "exhausted budget must stay closed"
         # idle past the TTL: sA's counter evicts, budget re-opens
         time.sleep(ttl_ms / 1000 + 3.0)
         deliver([row(51, "sB", 2)], src)
-        wait_for({51})
+        wait_until(lambda: {51} <= seen(), "ids {51}")
         deliver([row(4, "sA", 8)], src)
-        wait_for({4})
+        wait_until(lambda: {4} <= seen(), "ids {4}")
         rows = {
             r.id: r.stratum_cum_tokens
             for r in spark.sql("SELECT * FROM tb_ttl").collect()
@@ -2119,24 +2093,154 @@ def test_stream_dedup_within_watermark_event_time_contract(spark, tmp_path):
     assert b_times[0] == t0 and b_times[1] == t0 + dt.timedelta(minutes=35)
 
 
-def test_stream_dedup_sink_without_checkpoint_refused(spark, tmp_path):
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "stream_dedup_exact",
+        "stream_ingest_parquet",
+        "stream_bm25_ingest",
+        "stream_ingest_boatrace",
+    ],
+)
+def test_stream_dedup_sink_without_checkpoint_refused(spark, tmp_path, entry):
     """r6 ADVICE: sink_dir without checkpoint_dir would silently start
     an uncheckpointed foreachBatch parquet append whose restart
     reprocesses from offset zero and double-appends — the documented
     restart contract only holds WITH a checkpoint, so the combination
-    must raise before any query starts."""
-    import pytest as _pytest
-
-    from boatrace_database_spark.streaming.ingest import stream_dedup_exact
+    must raise before any query starts. The rule holds for EVERY
+    foreachBatch entry point: each shares one sink path, `_start`."""
+    from boatrace_database_spark.streaming import ingest as I
 
     docs = spark.createDataFrame([(1, "t")], "doc_id long, text string")
     src = str(tmp_path / "nock_src")
     os.makedirs(src)
-    with _pytest.raises(ValueError, match="checkpoint_dir"):
-        stream_dedup_exact(
+    calls = {
+        "stream_dedup_exact": lambda: I.stream_dedup_exact(
             spark, src, docs.schema, query_name="sd_nockpt",
             sink_dir=str(tmp_path / "nock_sink"),
-        )
+        ),
+        "stream_ingest_parquet": lambda: I.stream_ingest_parquet(
+            spark, src, docs.schema, str(tmp_path / "nock_sink"),
+            checkpoint_dir=None,
+        ),
+        "stream_bm25_ingest": lambda: I.stream_bm25_ingest(
+            spark, src, docs.schema, str(tmp_path / "nock_index"),
+            checkpoint_dir=None,
+        ),
+        "stream_ingest_boatrace": lambda: I.stream_ingest_boatrace(
+            spark, src, str(tmp_path / "nock_wh"), checkpoint_dir=None
+        ),
+    }
+    before = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="checkpoint_dir"):
+            calls[entry]()
+    finally:
+        started = [q for q in spark.streams.active if q.id not in before]
+        for q in started:
+            q.stop()
+    assert not started
+
+
+class _FakeGroupState:
+    """Just enough of pyspark's GroupState to drive `_state_step`
+    without a Spark job: records every update, timeout and removal."""
+
+    def __init__(self, value=None):
+        self.value, self.hasTimedOut = value, False
+        self.updates, self.timeouts, self.removals = [], [], 0
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+        self.updates.append(value)
+
+    def setTimeoutDuration(self, ms):
+        self.timeouts.append(ms)
+
+    def remove(self):
+        self.value = None
+        self.removals += 1
+
+
+def _counting_fn(seen_prev):
+    """A per-group fn that counts rows, recording each ``prev`` it sees."""
+    import pandas as pd
+
+    def fn(key, batch, prev):
+        seen_prev.append(prev)
+        n = (prev[0] if prev is not None else 0) + len(batch)
+        return (n,), pd.DataFrame({"k": [key[0]], "n": [n]})
+
+    return fn
+
+
+def _frames(*sizes):
+    import pandas as pd
+
+    return [pd.DataFrame({"v": range(n)}) for n in sizes]
+
+
+def test_state_step_timeout_removes_and_readmits():
+    from boatrace_database_spark.streaming.ingest import _state_step
+
+    seen_prev = []
+    step = _state_step(_counting_fn(seen_prev), 20_000)
+    state = _FakeGroupState((5,))
+    state.hasTimedOut = True
+    assert list(step(("a",), iter([]), state)) == []
+    assert state.removals == 1 and not state.exists
+    assert seen_prev == [] and state.updates == [] and state.timeouts == []
+    # the re-admission contract: the next arrival starts from nothing
+    state.hasTimedOut = False
+    (out,) = list(step(("a",), iter(_frames(2)), state))
+    assert seen_prev == [None]
+    assert out["n"].tolist() == [2] and state.value == (2,)
+
+
+def test_state_step_none_state_keeps_nothing():
+    import pandas as pd
+
+    from boatrace_database_spark.streaming.ingest import _state_step
+
+    empty = pd.DataFrame({"k": []})
+    step = _state_step(lambda key, batch, prev: (None, empty), 20_000)
+    state = _FakeGroupState()
+    (out,) = list(step(("a",), iter(_frames(3)), state))
+    assert out is empty
+    assert state.updates == [] and state.timeouts == [] and not state.exists
+
+
+def test_state_step_without_ttl_never_sets_timeout():
+    from boatrace_database_spark.streaming.ingest import _state_step
+
+    seen_prev = []
+    step = _state_step(_counting_fn(seen_prev), None)
+    state = _FakeGroupState()
+    for _ in range(3):
+        list(step(("a",), iter(_frames(1, 2)), state))
+    # the group's pandas chunks arrive concatenated into one frame
+    assert state.updates == [(3,), (6,), (9,)]
+    assert seen_prev == [None, (3,), (6,)]
+    assert state.timeouts == []
+
+
+def test_state_step_ttl_rearmed_per_update():
+    from boatrace_database_spark.streaming.ingest import _state_step
+
+    step = _state_step(_counting_fn([]), 20_000)
+    state = _FakeGroupState()
+    for i in range(1, 4):
+        list(step(("a",), iter(_frames(1)), state))
+        assert len(state.updates) == i
+        assert state.timeouts == [20_000] * i
 
 
 @pytest.mark.slow
@@ -2573,7 +2677,6 @@ def test_stream_funnel_ttl_eviction_and_restart(spark, tmp_path):
     processAllAvailable keeps scheduling timeout-check batches and the
     call never settles."""
     import datetime
-    import time
 
     from boatrace_database_spark.streaming.ingest import stream_funnel
 
@@ -2592,14 +2695,6 @@ def test_stream_funnel_ttl_eviction_and_restart(spark, tmp_path):
 
     def rows():
         return spark.sql("SELECT * FROM funnel_ttl").collect()
-
-    def wait_until(predicate, what, timeout=90.0):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if predicate():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {what}")
 
     q = stream_funnel(
         spark, src, schema, query_name="funnel_ttl", state_ttl_ms=ttl_ms
@@ -2650,7 +2745,6 @@ def test_stream_cohort_ttl_eviction_and_readmission(spark, tmp_path):
     other TTL tests (processAllAvailable never settles under
     ProcessingTimeTimeout)."""
     import datetime
-    import time
 
     from boatrace_database_spark.streaming.ingest import stream_cohort_activity
 
@@ -2671,14 +2765,6 @@ def test_stream_cohort_ttl_eviction_and_readmission(spark, tmp_path):
 
     def rows():
         return spark.sql("SELECT * FROM cohort_ttl").collect()
-
-    def wait_until(predicate, what, timeout=90.0):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if predicate():
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {what}")
 
     q = stream_cohort_activity(
         spark, src, schema, cohort_event="signup",
