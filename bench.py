@@ -7,7 +7,9 @@ Prints ONE JSON line:
 
 Also times the boatrace corpus end-to-end (62 raw TXT -> silver ->
 gold race join -> count) as `boatrace_month_e2e`, directly comparable
-to BASELINE.md's single-thread ≈2.75 s for the same work.
+to BASELINE.md's single-thread ≈2.75 s for the same work. Without the
+reference tree those boatrace lines are not timed; the JSON line then
+carries `"skipped": {line: reason}` for them.
 """
 
 from __future__ import annotations
@@ -65,6 +67,11 @@ HEADLINE = [
 ]
 
 BOATRACE_TXT = "/root/reference/txt/*2008*.TXT"
+# the timing lines that need the reference tree; on a host without it
+# they are named under "skipped" with the reason instead of dropped
+BOATRACE_LINES = (
+    "boatrace_month_e2e", "boatrace_month_sectioned", "boatrace_year_from_lzh",
+)
 
 
 ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
@@ -166,6 +173,7 @@ def main() -> None:
     }
 
     timings: dict[str, float] = {}
+    skipped: dict[str, str] = {}
     if os.path.exists("/root/reference/txt"):
         from boatrace_database_spark.parse.kernel import (
             parse_files,
@@ -194,6 +202,10 @@ def main() -> None:
             timings["boatrace_year_from_lzh"] = round(
                 min(time_boatrace_year(spark) for _ in range(ITERS)), 3
             )
+        else:
+            skipped["boatrace_year_from_lzh"] = "no reference lzh"
+    else:
+        skipped = dict.fromkeys(BOATRACE_LINES, "no reference txt")
 
     # IVF deployment shape: the index is built once (its own timing
     # line) and every ann_ivf_topk invocation below measures SEARCH
@@ -279,12 +291,22 @@ def main() -> None:
         "host": host,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
+    if skipped:
+        payload["skipped"] = skipped
+    print(stdout_line(payload))
+
+
+def stdout_line(payload: dict) -> str:
+    """The one JSON stdout line, kept at most 1900 chars (headroom under
+    a 2000-char output capture): past that, the quality dict moves to
+    stderr."""
     line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > 1900:  # keep headroom under the 2000-char capture
+    if len(line) > 1900:
+        quality = payload["quality"]
         print(f"quality: {json.dumps(quality, separators=(',', ':'))}", file=sys.stderr)
         payload["quality"] = {"see": "stderr"}
         line = json.dumps(payload, separators=(",", ":"))
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

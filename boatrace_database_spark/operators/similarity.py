@@ -52,6 +52,18 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(den != 0, dot(a, b) / den)
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail every search path shares: rank each query's
+    scored candidates by (score DESC, neighbor_id) and keep
+    (query_id, neighbor_id, score, rk) for rk <= k."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "score", "rk")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -83,12 +95,7 @@ def cosine_topk(
             F.round(cosine(F.col("qvec"), F.col("cvec")), round_to).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "score", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def _lloyd_kmeans(X: "np.ndarray", k: int, iters: int = 20, seed: int = 7):
@@ -447,12 +454,7 @@ def ivf_probe(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "score", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_write_index(
@@ -1383,12 +1385,7 @@ def lsh_ann_topk(
         "neighbor_id",
         F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "score", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_bucket_stats(
@@ -2287,15 +2284,10 @@ def ivfpq_probe(
     scored = cand.mapInPandas(adc_score, out_schema).select(
         "query_id", "neighbor_id", F.round("score", 6).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
     if refine:
         if corpus is None:
             raise ValueError("ivfpq_probe: refine > 0 requires the raw corpus")
-        shortlist = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= refine)
-            .select("query_id", "neighbor_id")
-        )
+        shortlist = _rank_topk(scored, refine).select("query_id", "neighbor_id")
         raw = corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
         )
@@ -2308,16 +2300,8 @@ def ivfpq_probe(
                 F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("score"),
             )
         )
-        return (
-            exact.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "score", "rk")
-        )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "score", "rk")
-    )
+        return _rank_topk(exact, k)
+    return _rank_topk(scored, k)
 
 
 def ivfpq_topk(

@@ -6,15 +6,28 @@ MinHash/SimHash/ANN use xxhash64 (JVM-side; no DuckDB equivalent) so
 they carry no oracle — the driver records rows-only checks; their
 correctness is covered by pytest recall/agreement tests against the
 exact operators (tests/test_llm_ops.py).
+
+The synthetic-media family (`media_decode_*`, `media_frame_sample`,
+`media_gif_animation`, the audio and dHash builders) keeps only its
+closed form: each query defines ``encode(doc_id) -> (payload_bytes,
+mime)`` and feeds it to three shared helpers — `_synth_media` builds
+the `MEDIA_SCHEMA` table (one payload per document, meta.n_bytes =
+len(payload)); `_features_with_weighted_sum` joins the production
+feature columns with `_weighted_pixel_sum` (``Σ (p+1)·v_p mod 2^31``
+over the native decode); `_sampled_frame_stats` samples every 2nd
+frame and emits its content mean and weighted sum.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from boatrace_database_spark.operators import corpus as C
 from boatrace_database_spark.operators import dedup as D
+from boatrace_database_spark.operators import media_codecs as MC
 from boatrace_database_spark.operators import multimodal as M
 from boatrace_database_spark.operators import privacy as P
 from boatrace_database_spark.operators import retrieval as R
@@ -1510,6 +1523,12 @@ FROM embeddings GROUP BY label ORDER BY label
 """
 
 
+def _lit_list(plane) -> str:
+    """One ±1 Rademacher plane as a DuckDB list literal, for the oracle
+    SQL's `list_dot_product`."""
+    return "[" + ", ".join(f"{c:.1f}" for c in plane) + "]"
+
+
 def ann_lsh_topk(spark, sf_dir):
     """Approximate NN via multi-table hyperplane LSH. Oracle-backed
     since round 9 (r8 verdict #5 — previously rows-only): the ±1
@@ -1553,13 +1572,10 @@ def _ann_lsh_topk_oracle_sql(
         n_tables * n_planes, dim, SIM.ANN_PLANE_SEED
     )
 
-    def lit_list(plane):
-        return "[" + ", ".join(f"{c:.1f}" for c in plane) + "]"
-
     sels = []
     for t in range(n_tables):
         key = " + ".join(
-            f"(CASE WHEN list_dot_product(vec, {lit_list(planes[t * n_planes + j])}) > 0 "
+            f"(CASE WHEN list_dot_product(vec, {_lit_list(planes[t * n_planes + j])}) > 0 "
             f"THEN {1 << j} ELSE 0 END)"
             for j in range(n_planes)
         )
@@ -1641,13 +1657,10 @@ def _ann_bucket_stats_oracle_sql(
         n_tables * n_planes, dim, SIM.ANN_PLANE_SEED
     )
 
-    def lit_list(plane):
-        return "[" + ", ".join(f"{c:.1f}" for c in plane) + "]"
-
     sels = []
     for t in range(n_tables):
         key = " + ".join(
-            f"(CASE WHEN list_dot_product(vec, {lit_list(planes[t * n_planes + j])}) > 0 "
+            f"(CASE WHEN list_dot_product(vec, {_lit_list(planes[t * n_planes + j])}) > 0 "
             f"THEN {1 << j} ELSE 0 END)"
             for j in range(n_planes)
         )
@@ -1705,12 +1718,9 @@ def _jl_oracle_sql() -> str:
     planes = SIM.rademacher_planes(8, 64, SIM.PROJECTION_SEED)
     scale = repr(1.0 / math.sqrt(8))
 
-    def lit_list(plane):
-        return "[" + ", ".join(f"{c:.1f}" for c in plane) + "]"
-
     dims = "\nUNION ALL\n".join(
         f"SELECT vec_id, CAST({d} AS INTEGER) AS dim,\n"
-        f"       round(list_dot_product(vec, {lit_list(p)}) * {scale}, 6)"
+        f"       round(list_dot_product(vec, {_lit_list(p)}) * {scale}, 6)"
         f" AS component FROM c"
         for d, p in enumerate(planes)
     )
@@ -1928,6 +1938,93 @@ FROM documents ORDER BY media_id
 """
 
 
+def _media_batch(pdf, encode):
+    """One `MEDIA_SCHEMA` batch from a (doc_id, source) batch: `encode`
+    maps a doc_id to ``(payload_bytes, mime)``; meta.n_bytes is the
+    payload length."""
+    encoded = [encode(int(did)) for did in pdf["doc_id"]]
+    payloads = [bytes(p) for p, _ in encoded]
+    return pd.DataFrame(
+        {
+            "media_id": pdf["doc_id"],
+            "payload": pd.Series(payloads, dtype="object"),
+            "meta": [
+                {"mime": mime, "source": s, "n_bytes": len(p)}
+                for p, (_, mime), s in zip(payloads, encoded, pdf["source"])
+            ],
+        }
+    )
+
+
+def _synth_media(spark, sf_dir, encode):
+    """The synthetic media table behind every media query: one encoded
+    payload per document, built per Arrow batch by `_media_batch`."""
+    return _media_docs(spark, sf_dir).mapInPandas(
+        lambda batches: (_media_batch(pdf, encode) for pdf in batches),
+        schema=M.MEDIA_SCHEMA,
+    )
+
+
+def _weighted_pixel_sum(payload) -> int:
+    """Position-weighted pixel sum ``Σ (p+1)·v_p mod 2^31`` over the
+    sniff-dispatched native decode, flattened row-major (h, w, channel)
+    — order-sensitive, so a transposed, flipped or channel-swapped
+    reconstruction moves it even when the plain mean survives."""
+    px = MC.decode_pixels(bytes(payload)).reshape(-1).astype(np.int64)
+    return int(((np.arange(px.size, dtype=np.int64) + 1) * px).sum() % 2**31)
+
+
+def _features_with_weighted_sum(media):
+    """The production feature columns (`extract_features(use_stub=False)`)
+    joined with a second Arrow pass's `_weighted_pixel_sum` per media_id."""
+    media = media.localCheckpoint(eager=False)
+
+    def weighted_sums(batches):
+        for pdf in batches:
+            sums = [_weighted_pixel_sum(p) for p in pdf["payload"]]
+            yield pd.DataFrame({"media_id": pdf["media_id"], "weighted_sum": sums})
+
+    wdf = media.mapInPandas(weighted_sums, "media_id long, weighted_sum long")
+    return (
+        M.extract_features(media, use_stub=False)
+        .select(
+            "media_id",
+            "mime",
+            F.col("width").cast("int").alias("width"),
+            F.col("height").cast("int").alias("height"),
+            F.col("channels").cast("int").alias("channels"),
+            F.round("content_mean", 6).alias("content_mean"),
+        )
+        .join(wdf, on="media_id")
+        .orderBy("media_id")
+    )
+
+
+def _sampled_frame_stats(media):
+    """Every 2nd frame (`sample_frames(use_stub=False)`), re-decoded:
+    per-frame content mean and `_weighted_pixel_sum`."""
+
+    def frame_stats(batches):
+        for pdf in batches:
+            frames = [bytes(fr) for fr in pdf["frame"]]
+            means = [round(float(MC.decode_pixels(fr).mean()), 6) for fr in frames]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "frame_no": pdf["frame_no"].astype("int32"),
+                    "content_mean": pd.Series(means, dtype="float64"),
+                    "weighted_sum": pd.Series(
+                        [_weighted_pixel_sum(fr) for fr in frames], dtype="int64"
+                    ),
+                }
+            )
+
+    return M.sample_frames(media, every_n=2, use_stub=False).mapInPandas(
+        frame_stats,
+        "media_id LONG, frame_no INT, content_mean DOUBLE, weighted_sum LONG",
+    ).orderBy("media_id", "frame_no")
+
+
 def media_decode_roundtrip(spark, sf_dir):
     """REAL media decode, driver-checked (round 8): each document gets
     a deterministic 4x3 24-bit BMP whose 36 pixel bytes are the closed
@@ -1942,39 +2039,13 @@ def media_decode_roundtrip(spark, sf_dir):
     — so a drift anywhere in encode, decode, sniffing, or the feature
     fold breaks the hash. Complements `multimodal_features` (stub
     plumbing face) with the real-codec face."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        px = (did * 7 + np.arange(36) * 13) % 256
+        return MC.encode_bmp(px.astype(np.uint8).reshape(3, 4, 3)), "image/bmp"
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = [
-                bytes(
-                    MC.encode_bmp(
-                        (
-                            (int(did) * 7 + np.arange(36) * 13) % 256
-                        ).astype(np.uint8).reshape(3, 4, 3)
-                    )
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/bmp", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
     return (
-        M.extract_features(media, use_stub=False)
+        M.extract_features(_synth_media(spark, sf_dir, encode), use_stub=False)
         .select(
             "media_id",
             "n_bytes",
@@ -2038,66 +2109,12 @@ def media_decode_png(spark, sf_dir):
     oracle can re-derive (the BMP twin `media_decode_roundtrip` covers
     payload-byte checksumming; filters 1-4 and the chunk-walk edge
     cases are pinned in tests/test_media_codecs.py)."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        px = (did * 11 + np.arange(36) * 17) % 256
+        return MC.encode_png(px.astype(np.uint8).reshape(3, 4, 3)), "image/png"
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = [
-                bytes(
-                    MC.encode_png(
-                        (
-                            (int(did) * 11 + np.arange(36) * 17) % 256
-                        ).astype(np.uint8).reshape(3, 4, 3)
-                    )
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/png", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA).localCheckpoint(
-        eager=False
-    )
-
-    def weighted(batches):
-        w = np.arange(36, dtype=np.int64) + 1
-        for pdf in batches:
-            sums = [
-                int(
-                    (w * MC.decode_png(bytes(p))["pixels"]
-                        .reshape(-1).astype(np.int64)).sum() % 2**31
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "weighted_sum": sums})
-
-    wdf = media.mapInPandas(weighted, "media_id long, weighted_sum long")
-    return (
-        M.extract_features(media, use_stub=False)
-        .select(
-            "media_id",
-            "mime",
-            F.col("width").cast("int").alias("width"),
-            F.col("height").cast("int").alias("height"),
-            F.col("channels").cast("int").alias("channels"),
-            F.round("content_mean", 6).alias("content_mean"),
-        )
-        .join(wdf, on="media_id")
-        .orderBy("media_id")
-    )
+    return _features_with_weighted_sum(_synth_media(spark, sf_dir, encode))
 
 
 MEDIA_DECODE_PNG_SQL = """
@@ -2135,66 +2152,21 @@ def media_frame_sample(spark, sf_dir):
     the two decode paths — a drift in the P6 splitter, the TIFF page
     walk, LZW, the sampler stride, or either decoder breaks the
     hash."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        frames = [
+            ((did * 13 + f * 31 + np.arange(12) * 7) % 256)
+            .astype(np.uint8).reshape(2, 2, 3)
+            for f in range(did % 4 + 3)
+        ]
+        if did % 2:
+            return MC.encode_tiff(frames, compression=5), "image/tiff"
+        return (
+            b"".join(bytes(MC.encode_ppm(fr)) for fr in frames),
+            "image/x-portable-pixmap",
+        )
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads, mimes = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = [
-                    ((did * 13 + f * 31 + np.arange(12) * 7) % 256)
-                    .astype(np.uint8).reshape(2, 2, 3)
-                    for f in range(did % 4 + 3)
-                ]
-                if did % 2:
-                    payloads.append(bytes(MC.encode_tiff(frames, compression=5)))
-                    mimes.append("image/tiff")
-                else:
-                    payloads.append(
-                        b"".join(bytes(MC.encode_ppm(fr)) for fr in frames)
-                    )
-                    mimes.append("image/x-portable-pixmap")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": mm, "source": s, "n_bytes": len(pl)}
-                        for mm, s, pl in zip(mimes, pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
-    frames = M.sample_frames(media, every_n=2, use_stub=False)
-
-    def stats(batches):
-        w = np.arange(12, dtype=np.int64) + 1
-        for pdf in batches:
-            means, wsums = [], []
-            for fr in pdf["frame"]:
-                px = MC.decode_pixels(bytes(fr)).reshape(-1).astype(np.int64)
-                means.append(round(float(px.mean()), 6))
-                wsums.append(int((w * px).sum() % 2**31))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_no": pdf["frame_no"].astype("int32"),
-                    "content_mean": pd.Series(means, dtype="float64"),
-                    "weighted_sum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        stats,
-        "media_id LONG, frame_no INT, content_mean DOUBLE, weighted_sum LONG",
-    ).orderBy("media_id", "frame_no")
+    return _sampled_frame_stats(_synth_media(spark, sf_dir, encode))
 
 
 MEDIA_FRAME_SAMPLE_SQL = """
@@ -2244,71 +2216,20 @@ def media_decode_jpeg(spark, sf_dir):
     reordering of the identical quantized coefficients, so the SAME
     closed-form oracle covers both decode paths — the driver gate
     exercises multi-scan/refinement decoding at zero oracle cost."""
-    import numpy as np
-    import pandas as pd
-
     from boatrace_database_spark.operators import jpeg as JC
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                v0 = int(did) * 23 % 256
-                img = np.empty((8, 16), dtype=np.uint8)
-                img[:, :8] = v0
-                img[:, 8:] = (v0 + 101) % 256
-                prog = int(did) % 3 == 0
-                payloads.append(
-                    bytes(
-                        JC.encode_jpeg(
-                            img, quality=90,
-                            progressive=prog, successive=prog,
-                        )
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/jpeg", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA).localCheckpoint(
-        eager=False
-    )
-
-    def weighted(batches):
-        w = np.arange(128, dtype=np.int64) + 1
-        for pdf in batches:
-            sums = [
-                int(
-                    (w * JC.decode_jpeg(bytes(p))["pixels"]
-                        .reshape(-1).astype(np.int64)).sum() % 2**31
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "weighted_sum": sums})
-
-    wdf = media.mapInPandas(weighted, "media_id long, weighted_sum long")
-    return (
-        M.extract_features(media, use_stub=False)
-        .select(
-            "media_id",
-            "mime",
-            F.col("width").cast("int").alias("width"),
-            F.col("height").cast("int").alias("height"),
-            F.col("channels").cast("int").alias("channels"),
-            F.round("content_mean", 6).alias("content_mean"),
+    def encode(did):
+        v0 = did * 23 % 256
+        img = np.empty((8, 16), dtype=np.uint8)
+        img[:, :8] = v0
+        img[:, 8:] = (v0 + 101) % 256
+        prog = did % 3 == 0
+        return (
+            JC.encode_jpeg(img, quality=90, progressive=prog, successive=prog),
+            "image/jpeg",
         )
-        .join(wdf, on="media_id")
-        .orderBy("media_id")
-    )
+
+    return _features_with_weighted_sum(_synth_media(spark, sf_dir, encode))
 
 
 # The reconstruction closed form r(v), inlined twice (once per block
@@ -2360,73 +2281,21 @@ def media_decode_cmyk(spark, sf_dir):
     or inversion drift breaks the hash even when the plain mean
     survives; `extract_features(use_stub=False)` supplies the
     channels=4 feature columns through the production seam."""
-    import numpy as np
-    import pandas as pd
-
     from boatrace_database_spark.operators import jpeg as JC
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                img = np.empty((8, 16, 4), dtype=np.uint8)
-                for c in range(4):
-                    v0 = (did * 23 + 53 * c) % 256
-                    img[:, :8, c] = v0
-                    img[:, 8:, c] = (v0 + 101) % 256
-                prog = did % 3 == 0
-                payloads.append(
-                    bytes(
-                        JC.encode_jpeg(
-                            img, quality=90,
-                            progressive=prog, successive=prog,
-                        )
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/jpeg", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA).localCheckpoint(
-        eager=False
-    )
-
-    def weighted(batches):
-        w = np.arange(512, dtype=np.int64) + 1
-        for pdf in batches:
-            sums = [
-                int(
-                    (w * JC.decode_jpeg(bytes(p))["pixels"]
-                        .reshape(-1).astype(np.int64)).sum() % 2**31
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "weighted_sum": sums})
-
-    wdf = media.mapInPandas(weighted, "media_id long, weighted_sum long")
-    return (
-        M.extract_features(media, use_stub=False)
-        .select(
-            "media_id",
-            "mime",
-            F.col("width").cast("int").alias("width"),
-            F.col("height").cast("int").alias("height"),
-            F.col("channels").cast("int").alias("channels"),
-            F.round("content_mean", 6).alias("content_mean"),
+    def encode(did):
+        img = np.empty((8, 16, 4), dtype=np.uint8)
+        for c in range(4):
+            v0 = (did * 23 + 53 * c) % 256
+            img[:, :8, c] = v0
+            img[:, 8:, c] = (v0 + 101) % 256
+        prog = did % 3 == 0
+        return (
+            JC.encode_jpeg(img, quality=90, progressive=prog, successive=prog),
+            "image/jpeg",
         )
-        .join(wdf, on="media_id")
-        .orderBy("media_id")
-    )
+
+    return _features_with_weighted_sum(_synth_media(spark, sf_dir, encode))
 
 
 # CMYK reconstruction: the media_decode_jpeg closed form applied to
@@ -2470,63 +2339,16 @@ def media_gif_animation(spark, sf_dir):
     frame → per-frame content mean + position-weighted pixel sum over
     the 36 RGB values. A drift in LZW (either direction), palette
     handling, compositing, or the sampler stride breaks the hash."""
-    import numpy as np
-    import pandas as pd
+    pal = ((np.arange(8)[:, None] * np.array([37, 59, 83])) % 256).astype(np.uint8)
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        frames = [
+            pal[(did + 5 * f + 3 * np.arange(12)) % 8].reshape(3, 4, 3)
+            for f in range(did % 3 + 2)
+        ]
+        return MC.encode_gif(frames), "image/gif"
 
-    d = _media_docs(spark, sf_dir)
-    pal = (np.arange(8)[:, None] * np.array([37, 59, 83])) % 256
-
-    def synth(batches):
-        p = pal.astype(np.uint8)
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                n_frames = int(did) % 3 + 2
-                frames = [
-                    p[(int(did) + 5 * f + 3 * np.arange(12)) % 8]
-                    .reshape(3, 4, 3)
-                    for f in range(n_frames)
-                ]
-                payloads.append(bytes(MC.encode_gif(frames)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/gif", "source": s, "n_bytes": len(pl)}
-                        for s, pl in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
-    frames = M.sample_frames(media, every_n=2, use_stub=False)
-
-    def stats(batches):
-        w = np.arange(36, dtype=np.int64) + 1
-        for pdf in batches:
-            means, wsums = [], []
-            for fr in pdf["frame"]:
-                px = MC.decode_gif(bytes(fr))["pixels"].reshape(-1).astype(
-                    np.int64
-                )
-                means.append(round(float(px.mean()), 6))
-                wsums.append(int((w * px).sum() % 2**31))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_no": pdf["frame_no"].astype("int32"),
-                    "content_mean": pd.Series(means, dtype="float64"),
-                    "weighted_sum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        stats,
-        "media_id LONG, frame_no INT, content_mean DOUBLE, weighted_sum LONG",
-    ).orderBy("media_id", "frame_no")
+    return _sampled_frame_stats(_synth_media(spark, sf_dir, encode))
 
 
 MEDIA_GIF_ANIMATION_SQL = """
@@ -2567,67 +2389,12 @@ def media_decode_tiff(spark, sf_dir):
     LZW decode); a second Arrow pass re-decodes and emits the
     position-weighted pixel sum — lossless format, so the SQL oracle
     is exact, like the PNG/GIF twins."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        px = ((did * 19 + np.arange(36) * 29) % 256).astype(np.uint8)
+        return MC.encode_tiff(px.reshape(3, 4, 3), compression=5), "image/tiff"
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = [
-                bytes(
-                    MC.encode_tiff(
-                        (
-                            (int(did) * 19 + np.arange(36) * 29) % 256
-                        ).astype(np.uint8).reshape(3, 4, 3),
-                        compression=5,
-                    )
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/tiff", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA).localCheckpoint(
-        eager=False
-    )
-
-    def weighted(batches):
-        w = np.arange(36, dtype=np.int64) + 1
-        for pdf in batches:
-            sums = [
-                int(
-                    (w * MC.decode_tiff(bytes(p))["pixels"]
-                        .reshape(-1).astype(np.int64)).sum() % 2**31
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "weighted_sum": sums})
-
-    wdf = media.mapInPandas(weighted, "media_id long, weighted_sum long")
-    return (
-        M.extract_features(media, use_stub=False)
-        .select(
-            "media_id",
-            "mime",
-            F.col("width").cast("int").alias("width"),
-            F.col("height").cast("int").alias("height"),
-            F.col("channels").cast("int").alias("channels"),
-            F.round("content_mean", 6).alias("content_mean"),
-        )
-        .join(wdf, on="media_id")
-        .orderBy("media_id")
-    )
+    return _features_with_weighted_sum(_synth_media(spark, sf_dir, encode))
 
 
 MEDIA_DECODE_TIFF_SQL = """
@@ -2650,42 +2417,16 @@ def _audio_synth_media(spark, sf_dir):
     posting-list cap fraction on the identical media the recall anchor
     runs on. Groups of three documents share a recording; each doc is
     a distorted take."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        content = np.random.default_rng(1000 + did // 3).standard_normal(12288)
+        take = np.random.default_rng(did)
+        x = (1.0 - 0.1 * (did % 3)) * content
+        x = x + (0.02 + 0.01 * (did % 3)) * take.standard_normal(12288)
+        s = np.clip(np.round(x * 8000), -32768, 32767).astype(np.int16)
+        return MC.encode_wav(s, 8000, 1), "audio/wav"
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                content = np.random.default_rng(
-                    1000 + did // 3
-                ).standard_normal(12288)
-                take = np.random.default_rng(did)
-                x = (1.0 - 0.1 * (did % 3)) * content
-                x = x + (0.02 + 0.01 * (did % 3)) * take.standard_normal(
-                    12288
-                )
-                s = np.clip(np.round(x * 8000), -32768, 32767).astype(
-                    np.int16
-                )
-                payloads.append(bytes(MC.encode_wav(s, 8000, 1)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "audio/wav", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    return d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, encode)
 
 
 def media_audio_dedup(spark, sf_dir):
@@ -2745,41 +2486,21 @@ def audio_features(spark, sf_dir):
     multiples of the frame (hop 128 | period), so every Hann frame is
     identical and the frame mean adds nothing — the oracle's
     single-frame physics is the whole spectrum."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        t = did % 3
+        c = 1001 + 2 * (did * 37 % 14000)
+        n = 256 * (1 + did % 7 % 3)
+        i = np.arange(n)
+        if t == 0:
+            s = c * np.array([1, 0, -1, 0])[i % 4]
+        elif t == 1:
+            s = c * (1 - 2 * (i % 2))
+        else:
+            s = np.full(n, c)
+        return MC.encode_wav(s.astype(np.int16), 8000, 1), "audio/wav"
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                t = did % 3
-                c = 1001 + 2 * (did * 37 % 14000)
-                n = 256 * (1 + did % 7 % 3)
-                i = np.arange(n)
-                if t == 0:
-                    s = c * np.array([1, 0, -1, 0])[i % 4]
-                elif t == 1:
-                    s = c * (1 - 2 * (i % 2))
-                else:
-                    s = np.full(n, c)
-                payloads.append(bytes(MC.encode_wav(s.astype(np.int16), 8000, 1)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "audio/wav", "source": s, "n_bytes": len(p)}
-                        for s, p in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, encode)
     bin_hz = 8000.0 / 256  # 31.25 Hz per FFT bin
     return (
         M.audio_features(media, frame_len=256, hop=128, rolloff_frac=0.5)
@@ -2852,10 +2573,8 @@ def media_dedup_dhash(spark, sf_dir):
     bit_count(xor) distances from the closed form — a drift anywhere
     in the encoder, decoder, grayscale/resize conventions, bit order,
     or blocking breaks the hash."""
-    from boatrace_database_spark.operators import dedup as DD
-
     hashes = _dhash_synth_hashes(spark, sf_dir)
-    return DD.hamming_pairs_banded(
+    return D.hamming_pairs_banded(
         hashes, "media_id", "dhash", max_hamming=4, bits=49, chunk_bits=7,
         key_chunks=2,
     ).orderBy("id_a", "id_b")
@@ -2867,37 +2586,18 @@ def _dhash_synth_hashes(spark, sf_dir):
     harness can measure the banding cap fraction on the identical
     hash table the recall anchor blocks on (closed form documented on
     the query)."""
-    import numpy as np
-    import pandas as pd
 
-    from boatrace_database_spark.operators import media_codecs as MC
+    def encode(did):
+        g, m = did // 5, did % 5
+        p = np.arange(56)
+        k = g * 2654435761 % 2**32
+        v = ((k >> (5 * p % 24)) + 29 * p * p + np.where(p == m, 101, 0)) % 256
+        return (
+            MC.encode_pgm(v.astype(np.uint8).reshape(7, 8)),
+            "image/x-portable-graymap",
+        )
 
-    d = _media_docs(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g, m = int(did) // 5, int(did) % 5
-                p = np.arange(56)
-                k = g * 2654435761 % 2**32
-                v = ((k >> (5 * p % 24)) + 29 * p * p
-                     + np.where(p == m, 101, 0)) % 256
-                payloads.append(bytes(MC.encode_pgm(v.astype(np.uint8).reshape(7, 8))))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "meta": [
-                        {"mime": "image/x-portable-graymap", "source": s,
-                         "n_bytes": len(pl)}
-                        for s, pl in zip(pdf["source"], payloads)
-                    ],
-                }
-            )
-
-    media = d.mapInPandas(synth, schema=M.MEDIA_SCHEMA)
-    return M.dhash_media(media, hash_size=7)
+    return M.dhash_media(_synth_media(spark, sf_dir, encode), hash_size=7)
 
 
 MEDIA_DEDUP_DHASH_SQL = """

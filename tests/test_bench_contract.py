@@ -81,3 +81,17 @@ def test_headline_line_fits_driver_capture():
 def test_headline_queries_exist():
     missing = [k for k in bench.HEADLINE if k not in QUERIES]
     assert not missing, f"bench.HEADLINE names unknown queries: {missing}"
+
+
+def test_skipped_lines_stay_within_guard():
+    """A host without the reference tree names the boatrace lines under
+    "skipped" instead of timing them; at worst-case widths that payload
+    trips the guard, which moves quality to stderr and keeps the line
+    (with its "skipped" entry) within 1900 chars."""
+    payload = _max_width_payload()
+    for name in bench.BOATRACE_LINES:
+        payload["queries"].pop(name)
+    payload["skipped"] = dict.fromkeys(bench.BOATRACE_LINES, "no reference txt")
+    line = bench.stdout_line(payload)
+    assert len(line) <= 1900, len(line)
+    assert json.loads(line)["skipped"] == payload["skipped"]

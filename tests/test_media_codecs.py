@@ -1961,3 +1961,161 @@ def test_decode_bmp_8bit_palette_spec_literal():
     ]
     with pytest.raises(ValueError, match="palette index out of range"):
         mc.decode_bmp(header + info + quads + bytes([5, 1, 0, 0, 0, 1, 0, 0]))
+
+
+# ---------------------------------------------------------------------------
+# the synthetic-media catalog family's shared helpers (queries/llm.py):
+# every payload below is built with the encoder and pixel formula its
+# catalog query uses, and the weighted sum is checked against the
+# closed form the query's DuckDB oracle computes
+
+from fractions import Fraction  # noqa: E402
+from math import floor  # noqa: E402
+
+import pandas as pd  # noqa: E402
+
+from boatrace_database_spark.queries import QUERIES, llm  # noqa: E402
+
+MEDIA_DOC_IDS = [0, 1, 2, 3, 7, 254, 499]
+
+
+def _closed_weighted_sum(values) -> int:
+    return sum((p + 1) * int(v) for p, v in enumerate(values)) % 2**31
+
+
+def _jpeg_r(v: int) -> int:
+    """The DC-only reconstruction at quality 90 (Q00 = 3), exact."""
+    q = floor(Fraction(8 * (v - 128), 3) + Fraction(1, 2))
+    return max(0, min(255, floor(Fraction(q * 3, 8) + Fraction(257, 2))))
+
+
+def test_weighted_pixel_sum_png():
+    for did in MEDIA_DOC_IDS:
+        v = (did * 11 + np.arange(36) * 17) % 256
+        payload = mc.encode_png(v.astype(np.uint8).reshape(3, 4, 3))
+        assert llm._weighted_pixel_sum(payload) == _closed_weighted_sum(v), did
+
+
+def test_weighted_pixel_sum_tiff_lzw():
+    for did in MEDIA_DOC_IDS:
+        v = (did * 19 + np.arange(36) * 29) % 256
+        payload = mc.encode_tiff(v.astype(np.uint8).reshape(3, 4, 3), compression=5)
+        assert llm._weighted_pixel_sum(payload) == _closed_weighted_sum(v), did
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+def test_weighted_pixel_sum_jpeg(progressive):
+    for did in MEDIA_DOC_IDS:
+        v0 = did * 23 % 256
+        img = np.empty((8, 16), dtype=np.uint8)
+        img[:, :8] = v0
+        img[:, 8:] = (v0 + 101) % 256
+        payload = J.encode_jpeg(
+            img, quality=90, progressive=progressive, successive=progressive
+        )
+        r0, r1 = _jpeg_r(v0), _jpeg_r((v0 + 101) % 256)
+        want = [r0 if p % 16 < 8 else r1 for p in range(128)]
+        assert llm._weighted_pixel_sum(payload) == _closed_weighted_sum(want), did
+
+
+def test_weighted_pixel_sum_adobe_cmyk_jpeg():
+    for did in MEDIA_DOC_IDS:
+        img = np.empty((8, 16, 4), dtype=np.uint8)
+        for c in range(4):
+            v0 = (did * 23 + 53 * c) % 256
+            img[:, :8, c] = v0
+            img[:, 8:, c] = (v0 + 101) % 256
+        prog = did % 3 == 0
+        payload = J.encode_jpeg(img, quality=90, progressive=prog, successive=prog)
+        # Adobe inversion: each channel reconstructs as 255 - r(255 - v),
+        # interleaved row-major (h, w, channel)
+        want = []
+        for p in range(128):
+            for c in range(4):
+                v = (did * 23 + 53 * c) % 256
+                v = v if p % 16 < 8 else (v + 101) % 256
+                want.append(255 - _jpeg_r(255 - v))
+        assert llm._weighted_pixel_sum(payload) == _closed_weighted_sum(want), did
+
+
+def test_weighted_pixel_sum_gif_frame():
+    pal = ((np.arange(8)[:, None] * np.array([37, 59, 83])) % 256).astype(np.uint8)
+    for did in MEDIA_DOC_IDS:
+        for f in (0, 2, 4):
+            frame = pal[(did + 5 * f + 3 * np.arange(12)) % 8].reshape(3, 4, 3)
+            want = [
+                (k * m) % 256
+                for k in ((did + 5 * f + 3 * j) % 8 for j in range(12))
+                for m in (37, 59, 83)
+            ]
+            got = llm._weighted_pixel_sum(mc.encode_gif([frame]))
+            assert got == _closed_weighted_sum(want), (did, f)
+
+
+def test_weighted_pixel_sum_p6_frame():
+    for did in MEDIA_DOC_IDS:
+        for f in (0, 2, 4):
+            v = (did * 13 + f * 31 + np.arange(12) * 7) % 256
+            payload = mc.encode_ppm(v.astype(np.uint8).reshape(2, 2, 3))
+            assert llm._weighted_pixel_sum(payload) == _closed_weighted_sum(v), (
+                did, f
+            )
+
+
+def test_media_batch_meta_from_encode():
+    """The per-batch MEDIA_SCHEMA frame: media_id and source pass
+    through, mime comes from `encode`, n_bytes is the payload length."""
+    pdf = pd.DataFrame({"doc_id": [4, 9, 12], "source": ["web", "code", "wiki"]})
+
+    def encode(did):
+        payload = bytearray(b"x" * (did + 1))
+        return payload, "image/tiff" if did % 2 else "image/x-portable-pixmap"
+
+    out = llm._media_batch(pdf, encode)
+    assert list(out.columns) == ["media_id", "payload", "meta"]
+    assert out["media_id"].tolist() == [4, 9, 12]
+    assert out["payload"].tolist() == [b"x" * 5, b"x" * 10, b"x" * 13]
+    assert all(type(p) is bytes for p in out["payload"])
+    assert out["meta"].tolist() == [
+        {"mime": "image/x-portable-pixmap", "source": "web", "n_bytes": 5},
+        {"mime": "image/tiff", "source": "code", "n_bytes": 10},
+        {"mime": "image/x-portable-pixmap", "source": "wiki", "n_bytes": 13},
+    ]
+    empty = llm._media_batch(pdf.iloc[:0], encode)
+    assert len(empty) == 0 and list(empty.columns) == ["media_id", "payload", "meta"]
+
+
+# output schema (column names, order, types) of the ten media-family
+# catalog entries; test_query_matches_oracle compares columns sorted by
+# name, so their ORDER is pinned here
+_FEATURES_WS = (
+    "struct<media_id:bigint,mime:string,width:int,height:int,channels:int,"
+    "content_mean:double,weighted_sum:bigint>"
+)
+_FRAME_STATS = (
+    "struct<media_id:bigint,frame_no:int,content_mean:double,weighted_sum:bigint>"
+)
+MEDIA_CATALOG_SCHEMAS = {
+    "media_decode_roundtrip": (
+        "struct<media_id:bigint,n_bytes:int,mime:string,width:int,height:int,"
+        "channels:int,content_mean:double,checksum:bigint>"
+    ),
+    "media_decode_png": _FEATURES_WS,
+    "media_frame_sample": _FRAME_STATS,
+    "media_decode_jpeg": _FEATURES_WS,
+    "media_decode_cmyk": _FEATURES_WS,
+    "media_gif_animation": _FRAME_STATS,
+    "media_decode_tiff": _FEATURES_WS,
+    "media_audio_dedup": "struct<id_a:bigint,id_b:bigint,ber:double>",
+    "audio_features": (
+        "struct<media_id:bigint,duration_ms:bigint,rms:double,zcr:double,"
+        "centroid_bin:int,rolloff_bin:int>"
+    ),
+    "media_dedup_dhash": "struct<id_a:bigint,id_b:bigint,hamming:int>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(MEDIA_CATALOG_SCHEMAS))
+def test_media_catalog_column_order(name, spark, sf_dir):
+    sdf = QUERIES[name](spark, sf_dir)
+    assert sdf.schema.simpleString() == MEDIA_CATALOG_SCHEMAS[name]
