@@ -194,8 +194,11 @@ def bm25_topk(
     base = docs.where(F.col(id_col).isNotNull()).repartition(
         parallelism, F.col(id_col)
     )  # parity: the index path drops null ids at its dl join; docs
-    # arrive 1-file-1-task. Both branches below hang off this ONE
-    # exchange (ReuseExchange), so the corpus shuffles once.
+    # arrive 1-file-1-task. The corpus shuffles TWICE, not once: the
+    # stats branch's `dl > 0` filter is pushed below this repartition as
+    # a different expression from the postings branch's, so the plan
+    # holds two `Exchange hashpartitioning(doc_id)` over the documents;
+    # only df_t reuses the postings branch's exchange.
     # identical arithmetic to _index_components' stats: dl there is
     # sum(tf) over ALL of a doc's terms == its token count here, and
     # zero-token docs never reach the postings-derived doclens table.

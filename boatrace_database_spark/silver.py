@@ -1,4 +1,5 @@
-"""Silver layer: tagged parse rows -> the four reference-parity tables.
+"""Silver layer: tagged parse rows -> the four reference-parity tables
+and the two extension tables.
 
 Column names and string values match the reference's SQLite tables
 (all-TEXT; main.py:104-108). ``race_date`` rides along as the partition
@@ -15,12 +16,16 @@ from boatrace_database_spark import schemas as S
 
 
 def _extract(parsed: DataFrame, table: str, columns: list[str]) -> DataFrame:
-    """Project the vals array of one table's rows into named columns."""
-    body = [F.col("vals")[i].alias(c) for i, c in enumerate(columns[1:])]
-    return (
-        parsed.where(F.col("table") == table)
-        .select(F.col("race_date"), F.col("race_id").alias(columns[0]), *body)
+    """Project the vals array of one table's rows into named columns, as
+    one ``selectExpr`` (one py4j call, not a Column object per field)."""
+    body = [f"vals[{i}] AS {_quote(c)}" for i, c in enumerate(columns[1:])]
+    return parsed.where(F.col("table") == table).selectExpr(
+        "race_date", f"race_id AS {_quote(columns[0])}", *body
     )
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def schedule_table(parsed: DataFrame) -> DataFrame:
@@ -51,11 +56,11 @@ def race_meta_table(parsed: DataFrame) -> DataFrame:
 
 
 def silver_tables(parsed: DataFrame) -> dict[str, DataFrame]:
-    """All four silver tables from one parsed DataFrame.
+    """All six silver tables from one parsed DataFrame.
 
     Callers that materialize more than one table should
     ``parsed.persist()`` first (or write parsed to Parquet) so the file
-    scan+parse runs once, not four times — the reference's triple-scan
+    scan+parse runs once, not six times — the reference's triple-scan
     anti-pattern (main.py:249-252) is what we're avoiding.
     """
     return {

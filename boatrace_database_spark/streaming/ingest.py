@@ -81,6 +81,8 @@ Two helpers carry what every entry point shares:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -1653,17 +1655,20 @@ def stream_ingest_boatrace(
     """The reference's daily-append workflow (main.py:240-267) made
     incremental: a binaryFile stream watches for arriving daily TXT
     files; each micro-batch runs the fused decode+parse kernel and
-    upserts the day into every silver table plus the gold race join via
-    merge_upsert keyed on race_date — so a republished day REPLACES its
-    partition (idempotent) instead of duplicating it (the reference's
-    duplicate-append defect, SURVEY §2.4, cannot occur).
+    upserts the day into every silver table plus the gold race join
+    with merge_upsert's write keyed on race_date — so a republished day
+    REPLACES its partition (idempotent) instead of duplicating it (the
+    reference's duplicate-append defect, SURVEY §2.4, cannot occur).
 
-    What an epoch launches: one aggregate over the persisted parse
-    (which tables received rows, for which days; it also fills the
-    cache), one partition-replace write per silver table that received
-    rows, and the gold race join over the merged silver of the touched
-    days (declared-schema reads, so no footer-inference jobs) with its
-    one write. A day's K+B epoch is about a dozen jobs.
+    What an epoch launches: one job that fills the cache of the
+    persisted parse and observes, on the way, which tables received
+    rows for which days; then one partition-replace write per silver
+    table that received rows, all submitted together from driver
+    threads; and, as soon as result, env and schedule have committed,
+    the gold race join over the merged silver of the touched days
+    (declared-schema reads, so no footer-inference jobs) with its one
+    write, overlapping the remaining silver writes. A day's K+B epoch
+    is at most ten jobs, every one in the query's job group.
 
     Exactly-once: the file source checkpoints which files each epoch
     consumed, and the partition-replace merge is idempotent per day, so
@@ -1698,40 +1703,49 @@ def stream_ingest_boatrace(
         return fs.exists(jpath)
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
-        parsed = parse_binary_df(batch).persist()
-        # one aggregate decides every write: a table without rows (the
-        # day's other file kind hasn't arrived yet) has nothing to merge
-        dates = {
-            r["table"]: r["dates"]
-            for r in parsed.groupBy("table")
-            .agg(F.collect_set("race_date").alias("dates"))
-            .collect()
-        }
+        parsed, pairs = W._materialize(parse_binary_df(batch))
+        # a table without rows (the day's other file kind hasn't arrived
+        # yet) has nothing to merge
+        received = {table for table, _ in pairs}
+        touched = sorted({d for _, d in pairs})
         tables = silver_tables(parsed)
-        for name in W.SILVER_TABLES:
-            if name in dates:
-                W.merge_upsert(
-                    spark, f"{warehouse_dir}/{name}", tables[name], keys=["race_date"]
-                )
+
         # rebuild gold for the touched dates from the MERGED silver, not
         # the batch frames: a day's K (results) and B (program) files
         # may arrive in different micro-batches, and the inner race join
         # needs both sides — joining only the batch's own rows would
         # silently drop the day whenever the pair splits across batches.
         # Until all three inputs exist on disk the join is empty anyway.
-        if dates and all(
-            _exists(f"{warehouse_dir}/{n}") for n in ("result", "env", "schedule")
-        ):
-            touched = sorted(set().union(*dates.values()))
+        def write_race() -> None:
+            if not all(_exists(f"{warehouse_dir}/{n}") for n in W.GOLD_INPUTS):
+                return
             silver = {
                 name: W.read_table(spark, warehouse_dir, name).where(
                     F.col("race_date").isin(touched)
                 )
-                for name in ("result", "env", "schedule")
+                for name in W.GOLD_INPUTS
             }
             race = race_table(silver["result"], silver["env"], silver["schedule"])
-            W.merge_upsert(spark, f"{warehouse_dir}/race", race, keys=["race_date"])
-        parsed.unpersist()
+            W._merge_write(spark, f"{warehouse_dir}/race", race, ["race_date"])
+
+        try:
+            W._write_together(
+                spark,
+                {
+                    name: partial(
+                        W._merge_write,
+                        spark,
+                        f"{warehouse_dir}/{name}",
+                        tables[name],
+                        ["race_date"],
+                    )
+                    for name in W.SILVER_TABLES
+                    if name in received
+                },
+                write_race if pairs else None,
+            )
+        finally:
+            parsed.unpersist()
 
     return _start(binary, None, each_batch=_ingest, checkpoint_dir=checkpoint_dir)
 

@@ -13,15 +13,22 @@ Maps the reference's storage operators (SURVEY §2.1):
 
 Scale notes: every table partitions by race_date, so P11's LIKE-prefix
 day query prunes to one partition; the silver build reads raw bytes
-once (fused decode+parse) and writes all four tables from the cached
-one-pass parse (the reference re-scans each K file 3x; SURVEY §4).
+once (fused decode+parse) and writes all six silver tables plus the
+gold ``race`` table from the cached one-pass parse (the reference
+re-scans each K file 3x; SURVEY §4). The writes are independent Spark
+jobs, so they are submitted together from driver threads
+(``_write_together``) instead of one after another.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,6 +37,8 @@ from boatrace_database_spark import schemas as S
 from boatrace_database_spark.parse.kernel import parse_files
 
 SILVER_TABLES = ("schedule", "result", "odds", "env", "result_ext", "race_meta")
+# the silver tables the gold race join reads
+GOLD_INPUTS = ("result", "env", "schedule")
 
 
 def build_warehouse(
@@ -38,27 +47,81 @@ def build_warehouse(
     """Full rebuild from a glob of daily TXT files or ``.lzh`` archives
     (reference __main__ semantics: delete + reload, main.py:283-294 —
     here an idempotent overwrite, no duplicate-append defect; SURVEY
-    §2.4 documents why per-rebuild semantics are the intended ones)."""
-    parsed = parse_files(spark, path_glob).persist()
+    §2.4 documents why per-rebuild semantics are the intended ones).
+
+    Every silver table and ``race`` is written, empty or not: a B-only
+    build still registers all seven tables."""
+    parsed, _ = _materialize(parse_files(spark, path_glob))
     tables = silver.silver_tables(parsed)
-    for name in SILVER_TABLES:
-        (
-            tables[name]
-            .write.mode("overwrite")
-            .partitionBy("race_date")
-            .parquet(f"{warehouse_dir}/{name}")
+
+    def write_race() -> None:
+        # build gold from the written silver (stable lineage, cache-free)
+        stored = {name: read_table(spark, warehouse_dir, name) for name in GOLD_INPUTS}
+        race = gold.race_table(stored["result"], stored["env"], stored["schedule"])
+        _overwrite(race, f"{warehouse_dir}/race")
+
+    try:
+        _write_together(
+            spark,
+            {
+                name: partial(_overwrite, tables[name], f"{warehouse_dir}/{name}")
+                for name in SILVER_TABLES
+            },
+            write_race,
         )
-    # build gold from the written silver (stable lineage, cache-free)
-    stored = {
-        name: read_table(spark, warehouse_dir, name)
-        for name in ("result", "env", "schedule")
-    }
-    race = gold.race_table(stored["result"], stored["env"], stored["schedule"])
-    race.write.mode("overwrite").partitionBy("race_date").parquet(
-        f"{warehouse_dir}/race"
-    )
-    parsed.unpersist()
+    finally:
+        parsed.unpersist()
     return register_views(spark, warehouse_dir)
+
+
+def _overwrite(df: DataFrame, table_dir: str) -> None:
+    """S7: replace the whole table with ``df``, partitioned by race_date."""
+    df.write.mode("overwrite").partitionBy("race_date").parquet(table_dir)
+
+
+def _materialize(parsed: DataFrame) -> tuple[DataFrame, set[tuple[str, str]]]:
+    """Persist the parse and fill the cache with one job (a ``noop``
+    write), observing on the way which ``(table, race_date)`` pairs it
+    holds. The writes that follow all start from a warm cache, and the
+    pairs decide which tables and days they touch without another
+    aggregate."""
+    seen = Observation("parsed")
+    observed = parsed.observe(
+        seen, F.collect_set(F.struct("table", "race_date")).alias("pairs")
+    ).persist()
+    observed.write.format("noop").mode("overwrite").save()
+    return observed, {(r["table"], r["race_date"]) for r in seen.get["pairs"]}
+
+
+def _write_together(
+    spark: SparkSession,
+    writes: dict[str, Callable[[], object]],
+    race: Callable[[], object] | None = None,
+) -> None:
+    """Run each of ``writes`` (silver table name -> write) on its own
+    driver thread, and ``race`` as soon as the ``GOLD_INPUTS`` among them
+    have committed, so gold overlaps the other silver writes. A failed
+    gold input leaves ``race`` unsubmitted.
+
+    Each thread starts with a copy of the caller's local properties
+    (``inheritable_thread_target``): a stream's job group reaches the
+    threads' jobs, so stopping the query cancels them. Every submitted
+    write is waited for; then the first error, in submission order, is
+    re-raised — a failed write fails the caller only after no write of
+    its is still running.
+    """
+    with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
+
+        def submit(fn: Callable[[], object]) -> Future:
+            return pool.submit(inheritable_thread_target(spark)(fn))
+
+        futures = [submit(fn) for fn in writes.values()]
+        inputs = [f for name, f in zip(writes, futures) if name in GOLD_INPUTS]
+        wait(inputs)
+        if race is not None and not any(f.exception() for f in inputs):
+            futures.append(submit(race))
+    for f in futures:
+        f.result()
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
@@ -157,6 +220,19 @@ def merge_upsert(
     ``schemas.WAREHOUSE_SCHEMAS``); reads declare it, so none of them
     launches a footer-inference job.
     """
+    schema = _merge_write(spark, table_dir, updates, keys)
+    return spark.read.schema(schema).parquet(table_dir)
+
+
+def _merge_write(
+    spark: SparkSession,
+    table_dir: str,
+    updates: DataFrame,
+    keys: list[str],
+) -> T.StructType:
+    """``merge_upsert``'s write, without reading the table back (building
+    that frame lists every partition of the table); returns the table's
+    schema."""
     schema = T.StructType(
         [f for f in updates.schema if f.name != "race_date"]
         + [updates.schema["race_date"]]
@@ -182,7 +258,7 @@ def merge_upsert(
         p.getFileSystem(hconf).delete(p, True)
     # drop the stale shared file-status cache for this path
     spark.catalog.refreshByPath(table_dir)
-    return spark.read.schema(schema).parquet(table_dir)
+    return schema
 
 
 def _stage_merge(

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from boatrace_database_spark import warehouse as W
 from boatrace_database_spark.streaming.ingest import stream_ingest_boatrace
@@ -32,6 +33,15 @@ def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()), key=repr)
 
 
+def _marker_job(spark) -> int:
+    """Run one job outside any job group; return its id."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    spark.sparkContext.parallelize([0], 1).count()
+    (job,) = set(tracker.getJobIdsForGroup(None)) - before
+    return job
+
+
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
     """(streamed warehouse, batch-built warehouse of the latest version of
@@ -51,7 +61,7 @@ def streamed(spark, tmp_path_factory):
     watch.mkdir()
     query = stream_ingest_boatrace(spark, str(watch), wh, str(root / "checkpoint"))
     tracker = spark.sparkContext.statusTracker()
-    jobs = []
+    jobs, outside_group = [], []
     try:
         for i, files in enumerate(epochs):
             # publish an epoch's files with one rename (the file source
@@ -60,10 +70,16 @@ def streamed(spark, tmp_path_factory):
             for sub, day, kind in files:
                 _write(stage / sub, day, kind)
             before = set(tracker.getJobIdsForGroup(str(query.runId)))
+            first = _marker_job(spark)
             os.rename(stage, watch / f"epoch-{i}")
             query.processAllAvailable()
             assert query.exception() is None
-            jobs.append(len(set(tracker.getJobIdsForGroup(str(query.runId))) - before))
+            last = _marker_job(spark)
+            grouped = set(tracker.getJobIdsForGroup(str(query.runId))) - before
+            jobs.append(len(grouped))
+            # job ids are sequential: every job launched between the two
+            # markers is the epoch's, and must carry the query's group
+            outside_group.append(set(range(first + 1, last)) - grouped)
     finally:
         query.stop()
 
@@ -74,18 +90,18 @@ def streamed(spark, tmp_path_factory):
         _write(latest, day, "B")
     batch = str(root / "batch")
     W.build_warehouse(spark, str(latest / "*.TXT"), batch)
-    return wh, batch, jobs, republished
+    return wh, batch, jobs, republished, outside_group
 
 
 def test_stream_equals_batch_build_of_latest_days(spark, streamed):
-    wh, batch, _, _ = streamed
+    wh, batch, *_ = streamed
     for name in TABLES:
         got = _rows(W.read_table(spark, wh, name))
         assert got and got == _rows(W.read_table(spark, batch, name)), name
 
 
 def test_republished_day_replaces_its_odds(spark, streamed):
-    wh, _, _, republished = streamed
+    wh, _, _, republished, _ = streamed
     odds = W.register_views(spark, wh)["odds"]
     day = W.day_slice(odds, republished.date)
     assert day.count() == republished.counts["odds"]
@@ -93,9 +109,56 @@ def test_republished_day_replaces_its_odds(spark, streamed):
 
 
 def test_one_day_epoch_launches_few_jobs(streamed):
-    """A day's K+B epoch: one aggregate, six partition-replace writes and
-    the gold join with its write — no per-table probes, scans or
-    footer-inference reads."""
-    jobs = streamed[2]
+    """A day's K+B epoch: one observed cache fill, six partition-replace
+    writes and the gold join with its write — no per-table probes, scans
+    or footer-inference reads. The writes run on driver threads, and
+    every job they launch carries the query's job group (so stopping
+    the query cancels them, and the count above sees them)."""
+    jobs, outside_group = streamed[2], streamed[4]
     assert len(jobs) == 5 and min(jobs) > 0, jobs
-    assert jobs[2] <= 20 and jobs[3] <= 20, jobs
+    assert jobs[2] <= 10 and jobs[3] <= 10, jobs
+    assert all(not ids for ids in outside_group), outside_group
+
+
+def test_failed_write_fails_the_epoch_then_replays(spark, tmp_path, monkeypatch):
+    """A write error in one table's thread fails the epoch, but only once
+    every other submitted write (gold's included) has finished; the file
+    source has not committed the epoch, so a restart on the same
+    checkpoint replays it into the whole day."""
+    day = corpus.generate_day(SEED, DATES[0])
+    watch, wh = tmp_path / "watch", str(tmp_path / "wh")
+    checkpoint = str(tmp_path / "checkpoint")
+    for kind in "KB":
+        _write(watch / ".epoch", day, kind)
+    merge_write, started, finished = W._merge_write, [], []
+
+    def flaky(spark, table_dir, updates, keys):
+        name = os.path.basename(table_dir)
+        started.append(name)
+        if name == "odds":
+            raise RuntimeError("write of odds failed")
+        schema = merge_write(spark, table_dir, updates, keys)
+        finished.append(name)
+        return schema
+
+    monkeypatch.setattr(W, "_merge_write", flaky)
+    query = stream_ingest_boatrace(spark, str(watch), wh, checkpoint)
+    try:
+        os.rename(watch / ".epoch", watch / "epoch")
+        with pytest.raises(StreamingQueryException, match="write of odds failed"):
+            query.processAllAvailable()
+    finally:
+        query.stop()
+    assert sorted(started) == sorted(TABLES)
+    assert sorted(finished) == sorted(set(TABLES) - {"odds"})
+
+    monkeypatch.undo()
+    query = stream_ingest_boatrace(spark, str(watch), wh, checkpoint)
+    try:
+        query.processAllAvailable()
+        assert query.exception() is None
+    finally:
+        query.stop()
+    for name in W.SILVER_TABLES:
+        assert W.read_table(spark, wh, name).count() == day.counts[name], name
+    assert W.read_table(spark, wh, "race").count() == day.race_rows

@@ -600,6 +600,43 @@ def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
         W.register_views(spark, wh)
 
 
+def test_b_only_build_registers_all_tables(spark, tmp_path):
+    """A build over program (B) files alone still writes and registers
+    all seven tables; those fed only by result (K) files are empty."""
+    corpus.build(GEN_SEED, GEN_DATES, str(tmp_path / "lzh"))
+    views = W.build_warehouse(spark, str(tmp_path / "lzh" / "B*.lzh"), str(tmp_path / "wh"))
+    assert set(views) == {*W.SILVER_TABLES, "race"}
+    counts = {name: df.count() for name, df in views.items()}
+    assert counts["schedule"] > 0, counts
+    assert counts["result"] == counts["race"] == 0, counts
+
+
+@pytest.mark.parametrize("failing", ["odds", "result"])
+def test_build_write_error_raised_after_all_writes(spark, tmp_path, monkeypatch, failing):
+    """A failed table write fails the build, but only once every other
+    submitted write has finished. Gold is submitted unless one of its
+    inputs failed."""
+    corpus.build(GEN_SEED, GEN_DATES, str(tmp_path / "lzh"))
+    overwrite, started, finished = W._overwrite, [], []
+
+    def flaky(df, table_dir):
+        name = os.path.basename(table_dir)
+        started.append(name)
+        if name == failing:
+            raise RuntimeError(f"write of {name} failed")
+        overwrite(df, table_dir)
+        finished.append(name)
+
+    monkeypatch.setattr(W, "_overwrite", flaky)
+    with pytest.raises(RuntimeError, match=f"write of {failing} failed"):
+        W.build_warehouse(spark, str(tmp_path / "lzh" / "*.lzh"), str(tmp_path / "wh"))
+    others = {*W.SILVER_TABLES} - {failing}
+    if failing not in W.GOLD_INPUTS:
+        others.add("race")
+    assert sorted(started) == sorted({*others, failing})
+    assert sorted(finished) == sorted(others)
+
+
 @pytest.mark.slow
 def test_compact_partitions_merges_small_files_only(spark, tmp_path):
     """Fragmented partitions collapse to the byte-sized file count with
