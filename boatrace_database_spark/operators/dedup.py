@@ -737,7 +737,7 @@ def simhash_table(
     bit-vote aggregates (shift amounts must be Python ints — Spark's
     shiftright takes no column offset). One shuffle on id, map-side
     partial sums. Default 64 bits (the Manku et al. fingerprint width):
-    a 10x replicated-corpus probe (scripts/scale_dedup_bench.py)
+    a 10x replicated-corpus probe (BENCHNOTES §12)
     measured 32-bit saturating at 50k docs — random Hamming-<=4
     collisions (~1e-5 of all pairs in a 32-bit space) tripled the pair
     count over linear, while 64-bit held linearity 0.99 for +40% CPU
@@ -819,7 +819,7 @@ def simhash_pairs(
     explicit dials to pin a geometry.
 
     64-bit signatures are the scale-safe width: the 10x scale probe
-    (scripts/scale_dedup_bench.py) showed 32-bit random collisions
+    (BENCHNOTES §12) showed 32-bit random collisions
     tripling the pair count at 50k docs; 64-bit restores linearity.
     """
     sig = simhash_table(df, id_col, text_col, shingle_n, bits)

@@ -1188,7 +1188,7 @@ def lsh_ann_geometry(
       plane counts.
 
     Measured at the derived sf1 point (20k vectors → planes=10, L=8;
-    scripts/lsh_geometry_sweep.py): candidates/query 7,671 = 38% of
+    BENCHNOTES §48): candidates/query 7,671 = 38% of
     the corpus vs the fixed geometry's 16,092 = 80%, and the fraction
     now SHRINKS each decade (the model projects 12% at 200k, 3% at
     2M) instead of holding at 80%. Recall at that point: **1.0** on a

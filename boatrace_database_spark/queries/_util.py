@@ -78,7 +78,7 @@ def cents(col, digits: int = 2):
     plain double sum — where DECIMAL(20,6) sums (the round-11 shape)
     fall off Spark's long-backed Decimal fast path into
     java.math.BigDecimal and measured 2.3× on q1
-    (scripts/money_sum_bench.py: decimal 1.066 s / long 0.643 s /
+    (BENCHNOTES §46: decimal 1.066 s / long 0.643 s /
     two-level 0.681 s at sf0.1, identical value hashes).
 
     Overflow discipline (why callers pick between ONE flat sum and the

@@ -33,7 +33,7 @@ def q1_pricing_summary(spark, sf_dir):
     ANSI-loud if ever exceeded — then a DECIMAL(38,0) combine over the
     tiny partial table (same shuffle volume as the flat agg; measured
     0.68 s vs decimal's 1.07 s and flat-long's 0.64 s at sf0.1,
-    identical value hashes — scripts/money_sum_bench.py). Averages
+    identical value hashes — BENCHNOTES §46). Averages
     divide the exact sum as double by the count — the same double on
     both sides. Outputs stay DOUBLE."""
     l = _t(spark, sf_dir, "lineitem")

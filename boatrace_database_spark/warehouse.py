@@ -743,8 +743,8 @@ def zorder_write(
     (`cluster_write` on l_shipdate makes date scans near-free but
     leaves an orderkey scan reading every row group; z-order trades a
     little date locality for locality in both — measured in
-    scripts/cluster_scan_bench.py and pytest's footer-math
-    assertions, the same trade Delta's OPTIMIZE ZORDER BY makes).
+    BENCHNOTES §23/§30 and pytest's footer-math assertions, the same
+    trade Delta's OPTIMIZE ZORDER BY makes).
 
     Mechanics, all codegen: each column normalizes value-uniformly
     into 2^bits buckets against its global min/max (one 1-row

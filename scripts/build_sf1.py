@@ -2,11 +2,10 @@
 scale run (r7 verdict item #6).
 
 The driver ships sf{0.001,0.01,0.1}; the 100x design argument so far
-composes per-FAMILY 10x scripts (scale_dedup_bench, scale_parse_bench,
-scale_behavior_bench). This builds ONE coherent sf1 star schema so
-bench.py's full 39-query set can run a decade up and expose
-cross-family interactions (cache pressure, AQE plan flips) the
-isolated scripts can't.
+composed per-FAMILY 10x runs (BENCHNOTES §8, §12, §18, §34). This
+builds ONE coherent sf1 star schema so bench.py's full 39-query set
+can run a decade up and expose cross-family interactions (cache
+pressure, AQE plan flips) the per-family runs can't.
 
 Construction — replica k of 10, all JVM-side, written once to
 /tmp/sf1 (multiple parquet part-files so scans parallelize):
@@ -21,9 +20,9 @@ Construction — replica k of 10, all JVM-side, written once to
   every join keeps exactly its sf0.1 fan-out, 10x the rows.
 - events: event_id/user_id shifted (10x users, same per-user history
   shape — the behavioral family's per-user state distribution is
-  preserved, matching scale_behavior_bench's construction).
+  preserved, the BENCHNOTES §34 construction).
 - documents: doc_id shifted; replica text word-remapped with an rK
-  suffix (disjoint vocabularies, the scale_dedup_bench recipe) so
+  suffix (disjoint vocabularies, the BENCHNOTES §12 recipe) so
   exact/minhash/ngram dedup outputs scale exactly linearly.
 - embeddings: vec_id shifted; replica vectors circularly rotated by k
   components (norm- and distribution-preserving, so each replica's
@@ -80,7 +79,7 @@ def build_table(spark, name: str, dst_dir: str) -> None:
             if f.name in shifted_keys:
                 cols.append(_shift(f.name, k))
             elif name == "documents" and f.name == "text" and k > 0:
-                # disjoint replica vocabulary (scale_dedup_bench recipe)
+                # disjoint replica vocabulary (BENCHNOTES §12 recipe)
                 cols.append(
                     F.array_join(
                         F.transform(

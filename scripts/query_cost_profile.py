@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from boatrace_database_spark.queries import QUERIES  # noqa: E402
 from boatrace_database_spark.session import get_spark  # noqa: E402
-from scripts.spark_rest import api, app_id  # noqa: E402
+from perfbench.harness import rest  # noqa: E402
 
 
 def main() -> None:
@@ -44,22 +44,19 @@ def main() -> None:
         .select(_warm(col("id").cast("double")))
         .count()
     )
-    app = app_id(spark)
     out = {}
     for name in names:
         # warm run (codegen/broadcast caches), then measured run
         QUERIES[name](spark, sf_dir).collect()
-        jobs0 = len(api(spark, f"/applications/{app}/jobs"))
-        stages0 = {
-            s["stageId"] for s in api(spark, f"/applications/{app}/stages")
-        }
+        jobs0 = len(rest(spark, "jobs"))
+        stages0 = {s["stageId"] for s in rest(spark, "stages")}
         t0 = time.perf_counter()
         QUERIES[name](spark, sf_dir).collect()
         wall = time.perf_counter() - t0
-        jobs1 = len(api(spark, f"/applications/{app}/jobs"))
+        jobs1 = len(rest(spark, "jobs"))
         run = cpu = 0.0
         ntasks = 0
-        for s in api(spark, f"/applications/{app}/stages"):
+        for s in rest(spark, "stages"):
             if s["stageId"] in stages0 or s["status"] != "COMPLETE":
                 continue
             run += s["executorRunTime"] / 1e3
