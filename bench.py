@@ -69,9 +69,7 @@ HEADLINE = [
 BOATRACE_TXT = "/root/reference/txt/*2008*.TXT"
 # the timing lines that need the reference tree; on a host without it
 # they are named under "skipped" with the reason instead of dropped
-BOATRACE_LINES = (
-    "boatrace_month_e2e", "boatrace_month_sectioned", "boatrace_year_from_lzh",
-)
+BOATRACE_LINES = ("boatrace_month_e2e", "boatrace_year_from_lzh")
 
 
 ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
@@ -175,10 +173,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     skipped: dict[str, str] = {}
     if os.path.exists("/root/reference/txt"):
-        from boatrace_database_spark.parse.kernel import (
-            parse_files,
-            parse_files_sectioned,
-        )
+        from boatrace_database_spark.parse.kernel import parse_files
 
         parse_files(spark, "/root/reference/txt/K200801.TXT").count()
         # min-of-N like the star-schema queries below: BASELINE.md's
@@ -186,17 +181,6 @@ def main() -> None:
         # first run absorbs one-time JVM codegen compilation
         timings["boatrace_month_e2e"] = round(
             min(time_boatrace(spark) for _ in range(ITERS)), 3
-        )
-        # the large-file scale path (split into venue sections, shuffle,
-        # parse per-section) — tracked beside the whole-file kernel so a
-        # regression in either shows up
-        def _sectioned() -> float:
-            t0 = time.perf_counter()
-            parse_files_sectioned(spark, BOATRACE_TXT).count()
-            return time.perf_counter() - t0
-
-        timings["boatrace_month_sectioned"] = round(
-            min(_sectioned() for _ in range(ITERS)), 3
         )
         if os.path.exists("/root/reference/lzh"):
             timings["boatrace_year_from_lzh"] = round(

@@ -4,7 +4,8 @@ Re-implements the query and data-processing capabilities of the
 reference ETL (`tyPhoon-collab/boatrace-database`, snapshot at
 /root/reference) as an idiomatic Spark DataFrame/SQL engine:
 
-- bronze: raw archive bytes -> CP932-decoded tagged lines
+- bronze: raw TXT files and .lzh archives -> named CP932 members,
+  parsed in one pass into rows tagged with file, kind and date
 - silver: typed relational tables (schedule / result / odds / env)
 - gold:   the denormalized ``race`` table + analytics (A1-A4)
 - plus large-scale training-data-pipeline operators (dedup,

@@ -1,1 +1,1 @@
-"""Fixed-layout CP932 parse layer (bronze lines -> silver tables)."""
+"""Fixed-layout CP932 parse layer (raw files -> tagged parsed rows)."""

@@ -25,24 +25,20 @@ Faithfulness notes (SURVEY §2.4 is the spec):
 - race_num increments on distance markers (half-width ``H1800m`` in K
   files, full-width in B files) and resets at each section header.
 
-Every ingest path reaches ``parse_file`` through ``parse_member``
-(decode CP932, parse, tag file/kind/race_date), and opens its inputs
-through ``sources.bronze.file_members``, so TXT files and ``.lzh``
-archives read the same way everywhere:
-
-- ``parse_files(spark, glob)``: binaryFile scan -> ``parse_binary_df``,
-  one Arrow-batched ``mapInPandas`` with one input file per group — no
-  shuffle, state never crosses a file boundary;
-- ``parse_binary_df(df)``: the same over a (path, content) frame; the
-  streaming ingest calls it per micro-batch;
-- ``parse_files_sectioned(spark, glob)``: split at venue sections,
-  redistribute, parse per section (large single files);
-- ``spark.read.format("boatrace")`` (sources/datasource.py).
+The one batch reader is ``parse_files(spark, glob)``: a ``binaryFile``
+scan -> ``parse_binary_df``, one Arrow-batched ``mapInPandas`` that
+opens each input through ``sources.bronze.file_members`` (TXT files
+and ``.lzh`` archives read the same way) and hands every member to
+``parse_member`` (decode CP932, parse, tag file/kind/race_date). No
+shuffle: state never crosses a file boundary. The streaming ingest
+calls ``parse_binary_df`` on each micro-batch. Packing files into
+tasks is left to Spark's file-source planner, which bins small files
+by bytes (``openCostInBytes`` plus each file's size); SQL access is
+``parse_files(spark, glob).createOrReplaceTempView(name)``.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -329,58 +325,11 @@ def parse_binary_df(binary: DataFrame) -> DataFrame:
     shared by ``parse_files`` and the streaming foreachBatch ingest
     (streaming/ingest.stream_ingest_boatrace).
 
-    The binaryFile source emits one partition per file; daily TXT files
-    are ~160 KB, so the scan is coalesced (narrow, no shuffle) to a few
-    partitions per core — per-task scheduling + Arrow overhead would
-    otherwise dominate on small-file corpora. coalesce never increases
-    the partition count, so it is a no-op with fewer files than 2x cores.
+    The scan's partitions are kept as Spark's file planner made them:
+    it already packs small files into byte-balanced splits (a week of
+    14 daily archives plans 4 tasks on 4 cores), so no coalesce or
+    repartition sits between the scan and the parse.
     """
-    binary = binary.select("path", "content").coalesce(
-        binary.sparkSession.sparkContext.defaultParallelism * 2
+    return binary.select("path", "content").mapInPandas(
+        _parse_batches, schema=PARSED_SCHEMA
     )
-    return binary.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
-
-
-# section markers at line starts in the raw bytes: CP932 never uses
-# 0x0A as a trail byte, so a slice at a line start keeps every
-# character whole and decodes to the same lines as the whole file
-_BGN = re.compile(rb"^\d{2}[KB]BGN", re.M)
-
-
-def _split_sections(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(path, content) -> one (path, section_no, content) row per venue
-    section (NN[KB]BGN marker), ``path`` being the member's TXT name.
-
-    Narrow pass: byte slicing only; the expensive decode and parse
-    happen after sections redistribute across the cluster."""
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            for name, raw in file_members(path, content):
-                starts = [m.start() for m in _BGN.finditer(raw)]
-                for i, (a, b) in enumerate(zip(starts, starts[1:] + [len(raw)])):
-                    rows.append((name, i, raw[a:b]))
-        if rows:
-            yield pd.DataFrame(rows, columns=["path", "section_no", "content"])
-
-
-def parse_files_sectioned(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Large-file scale path (SURVEY §7.4(5)): split each file into its
-    venue sections (``NNKBGN`` markers) in a cheap narrow pass, then
-    redistribute the sections and run the SAME ``parse_member`` per
-    section. Sections are self-contained (every header resets the
-    parse state), so the output is row-identical to ``parse_files`` —
-    asserted on the committed month in tests/test_parse_golden.py and
-    on a generated corpus in tests/test_ingest_paths.py. Use when single
-    files are large enough that one-file-one-task would serialize the
-    scan (a multi-GB day-file becomes ~a dozen independent tasks; at
-    100 TB the split pass streams bytes while the parse pass holds one
-    section each).
-    """
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    sections = binary.mapInPandas(
-        _split_sections, schema="path STRING, section_no INT, content BINARY"
-    )
-    parallelism = spark.sparkContext.defaultParallelism
-    sections = sections.repartition(parallelism, "path", "section_no")
-    return sections.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)

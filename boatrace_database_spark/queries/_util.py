@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from boatrace_database_spark.timeutil import normalize_ts
 
-# Parquet-footer SCHEMA cache, keyed by (app, path). Schema inference
+# Parquet-footer SCHEMA cache: (app, path) -> (freshness token, schema),
+# one entry per path, so a rewrite replaces its entry. Schema inference
 # for an unknown parquet path runs a real 1-task Spark job per
 # spark.read.parquet call; with every catalog query re-reading 1-4
 # tables per invocation those inference jobs were ~10-20% of the wall
@@ -47,13 +48,14 @@ def _freshness_token(path: str):
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path, _freshness_token(path))
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    key = (spark.sparkContext.applicationId, path)
+    token = _freshness_token(path)
+    cached = _SCHEMA_CACHE.get(key)
+    if cached is None or cached[0] != token:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        _SCHEMA_CACHE[key] = (token, df.schema)
         return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(cached[1]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Schemas for the boatrace warehouse (bronze / silver / gold).
+"""Schemas for the boatrace warehouse (silver / gold).
 
 The reference stores every column as SQLite TEXT (see SURVEY §1.1;
 reference main.py:104-108 declares header names only). Silver keeps the
@@ -81,14 +81,3 @@ WAREHOUSE_SCHEMAS = {
         ("race", RACE_COLUMNS),
     )
 }
-
-# Bronze: one row per decoded text line, tagged with provenance.
-BRONZE_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType()),      # source file name, e.g. K200801.TXT
-        T.StructField("kind", T.StringType()),      # K (results) | B (program)
-        T.StructField("race_date", T.StringType()), # YYYY-MM-DD
-        T.StructField("line_no", T.IntegerType()),
-        T.StructField("line", T.StringType()),
-    ]
-)

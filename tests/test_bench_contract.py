@@ -24,7 +24,6 @@ def _max_width_payload() -> dict:
     # every timing at a worst-case width (xxx.xxx -> 7 chars)
     keys = list(bench.HEADLINE) + [
         "boatrace_month_e2e",
-        "boatrace_month_sectioned",
         "boatrace_year_from_lzh",
         "ann_ivf_build",
         "ann_ivfpq_build",

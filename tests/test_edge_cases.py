@@ -139,6 +139,23 @@ def test_race_counter_resets_per_section():
     assert list(env["race_id"]) == ["2020-08-01大　村テスト記念レース1R"] * 2
 
 
+def test_malformed_header_drops_section():
+    """A section whose name and venue lines fail to extract emits no
+    records, and does not inherit the previous section's context."""
+    bad_header = HEADER[:3] + [
+        "MALFORMED-NAME-LINE",  # the name pattern needs 10 leading spaces
+        "",
+        "   第 1日          2020/ 8/ 1              (venue line missing its marker)",
+    ]
+    out = parse_file(
+        HEADER + [RACE_HEADER] + bad_header + [RACE_HEADER.replace("1R", "2R")],
+        "K", "2020-08-01",
+    )
+    env = _rows(out, "env")
+    assert list(env["race_id"]) == ["2020-08-01大　村テスト記念レース1R"]
+    assert set(out["race_id"]) == {"2020-08-01大　村テスト記念レース1R"}
+
+
 def test_odds_stanza_truncated_at_eof():
     # anchor as the LAST line: every lead falls off the file -> all -1
     # except what the anchor line itself provides

@@ -1,8 +1,9 @@
-"""Every ingest path of the reference format reads TXT files and .lzh
-archives the same way, on a generated corpus: two seeded days of K/B
-files from ``perfbench.corpus`` (official CP932 fixed layout, -lh5-
-archives, ground-truth manifest), and the same members decompressed
-to ``.TXT``. Needs neither the reference tree nor the test data."""
+"""The one reader of the reference format, ``parse_files``, reads TXT
+files and .lzh archives the same way, on a generated corpus: two seeded
+days of K/B files from ``perfbench.corpus`` (official CP932 fixed
+layout, -lh5- archives, ground-truth manifest), and the same members
+decompressed to ``.TXT``. Needs neither the reference tree nor the
+test data."""
 
 from __future__ import annotations
 
@@ -13,14 +14,8 @@ import shutil
 import pytest
 
 from boatrace_database_spark import __main__ as cli
-from boatrace_database_spark.parse.kernel import (
-    parse_files,
-    parse_files_sectioned,
-    parse_member,
-)
+from boatrace_database_spark.parse.kernel import parse_files, parse_member
 from boatrace_database_spark.silver import silver_tables
-from boatrace_database_spark.sources.bronze import read_lines
-from boatrace_database_spark.sources.datasource import register
 from boatrace_database_spark.sources.lzh import read_lzh
 from perfbench import corpus
 
@@ -62,12 +57,6 @@ def _expected_counts(manifest: dict) -> dict[str, int]:
 def test_parse_paths_agree_across_formats(spark, days, parsed):
     lzh, txt, _, manifest = days
     assert parsed == _rows(parse_files(spark, txt))
-    for glob_ in (lzh, txt):
-        assert _rows(parse_files_sectioned(spark, glob_)) == parsed, glob_
-    register(spark)
-    for glob_ in (lzh, txt):
-        ds = spark.read.format("boatrace").load(glob_)
-        assert _rows(ds) == parsed, glob_
     # per-table counts of the parse equal the generator's ground truth
     tables = silver_tables(parse_files(spark, lzh))
     expected = _expected_counts(manifest)
@@ -76,22 +65,26 @@ def test_parse_paths_agree_across_formats(spark, days, parsed):
     }
 
 
-def test_sql_view_packs_one_file_per_task(spark, days, parsed):
-    lzh = days[0]
-    register(spark)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW ingest_raw "
-        f"USING boatrace OPTIONS (path '{lzh}', files_per_task '1')"
-    )
-    view = spark.table("ingest_raw")
-    assert view.rdd.getNumPartitions() == len(glob.glob(lzh)) == 2 * len(DATES)
-    assert _rows(view) == parsed
+def test_parse_files_keeps_the_file_planners_partitions(spark, days):
+    """Spark's file-source planner is the one task packer: the parse runs
+    straight on the scan's byte-packed splits (as many partitions as the
+    bare binaryFile scan), with no coalesce and no shuffle between the
+    scan and the parse."""
+    for glob_ in days[:2]:
+        df = parse_files(spark, glob_)
+        scan = spark.read.format("binaryFile").load(glob_)
+        assert df.rdd.getNumPartitions() == scan.rdd.getNumPartitions(), glob_
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "FileScan binaryFile" in plan, plan
+        assert "Coalesce" not in plan and "Exchange" not in plan, plan
 
 
-def test_read_lines_agree_across_formats(spark, days):
-    lzh, txt, _, _ = days
-    via_lzh = _rows(read_lines(spark, lzh))
-    assert via_lzh and via_lzh == _rows(read_lines(spark, txt))
+def test_empty_glob_is_refused(spark, tmp_path):
+    """A glob that matches no file fails the read and names the path,
+    rather than parsing to zero rows."""
+    missing = str(tmp_path / "nope_*.TXT")
+    with pytest.raises(Exception, match="nope_"):
+        parse_files(spark, missing).collect()
 
 
 def test_misnamed_file_is_refused(spark, days, tmp_path):

@@ -1,12 +1,12 @@
 """The bundled pure-Python -lh5- decoder must reproduce the committed
-txt corpus byte-for-byte (after CRLF normalization), and the
-archive->lines bronze path must parse identically to the txt path."""
+txt corpus byte-for-byte (after CRLF normalization), and the whole
+archive year must parse to the golden month's counts."""
 
 from __future__ import annotations
 
 import pytest
 
-from boatrace_database_spark.sources.bronze import decompress_lzh_to_dir, read_lines
+from boatrace_database_spark.sources.bronze import decompress_lzh_to_dir
 from boatrace_database_spark.sources.lzh import read_lzh
 
 pytestmark = pytest.mark.requires_reference
@@ -35,14 +35,6 @@ def test_decompress_to_dir(tmp_path):
     assert out == [str(tmp_path / "K200802.TXT")]
     golden = open("/root/reference/txt/K200802.TXT", "rb").read()
     assert open(out[0], "rb").read() == golden
-
-
-def test_lzh_bronze_equals_txt_bronze(spark):
-    via_lzh = read_lines(spark, "/root/reference/lzh/K2020-08-01.lzh")
-    via_txt = read_lines(spark, "/root/reference/txt/K200801.TXT")
-    a = sorted(tuple(r) for r in via_lzh.collect())
-    b = sorted(tuple(r) for r in via_txt.collect())
-    assert a == b
 
 
 def test_full_year_from_archives(spark):

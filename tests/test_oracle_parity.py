@@ -203,6 +203,20 @@ def test_contract_invariants():
     assert len(qs) >= 60
 
 
+def test_schema_cache_keeps_one_entry_per_path(spark, tmp_path):
+    """Rewriting a catalog path replaces its cached schema instead of
+    adding a key per rewrite, and the next read sees the new columns."""
+    from boatrace_database_spark.queries import _util
+
+    path = str(tmp_path / "t.parquet")
+    for i in range(3):
+        spark.range(2).selectExpr(f"id AS c{i}").write.mode("overwrite").parquet(path)
+        assert _util._read_parquet(spark, path).columns == [f"c{i}"]
+    assert [k for k in _util._SCHEMA_CACHE if k[1] == path] == [
+        (spark.sparkContext.applicationId, path)
+    ]
+
+
 @pytest.mark.slow
 def test_catalog_schemas_driver_canonicalizable(spark):
     """Round-7 failure class, pinned: the driver's pandas canonicalizer

@@ -107,23 +107,3 @@ def test_silver_cardinalities(aug_tables):
     assert aug_tables["env"].count() == 4810
     assert aug_tables["result"].count() == 28473
     assert aug_tables["schedule"].count() == 27561
-
-
-def test_sectioned_parse_equals_whole_file(spark):
-    """The large-file scale path (per-venue-section split, SURVEY
-    §7.4(5)) is row-identical to the whole-file kernel on the full
-    committed month."""
-    from boatrace_database_spark.parse.kernel import (
-        parse_files,
-        parse_files_sectioned,
-    )
-
-    glob_pat = "/root/reference/txt/*2008*.TXT"
-    whole = sorted(
-        tuple(r) for r in parse_files(spark, glob_pat).collect()
-    )
-    sectioned = sorted(
-        tuple(r) for r in parse_files_sectioned(spark, glob_pat).collect()
-    )
-    assert len(whole) == len(sectioned)
-    assert whole == sectioned
