@@ -328,6 +328,20 @@ def _drop_fat_buckets(
     )
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """MinHash rows per LSH band, derived once for every banding caller
+    (batch and stream). A ``bands`` that does not divide
+    ``num_hashes`` is refused: past ``num_hashes`` the band slices are
+    empty and every document lands in one bucket per band, and below it
+    the leftover hashes are silently unused."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes} "
+            "(rows per band = num_hashes / bands)"
+        )
+    return num_hashes // bands
+
+
 def _minhash_banded(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """Explode a (id, sig) table to (id, sig, band, bucket) rows — one
     row per band, bucket = hash of that band's signature slice."""
@@ -367,7 +381,7 @@ def lsh_bucket_stats(
     Columns per band: n_docs, n_buckets, max_bucket, p99_bucket,
     avg_bucket, est_candidate_pairs.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     sig = minhash_table(df, id_col, text_col, num_hashes, shingle_n)
     sizes = _minhash_banded(sig, bands, rows_per_band).groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("sz")
@@ -408,7 +422,7 @@ def minhash_lsh_pairs(
     minhash_table: boilerplate-heavy corpora drop ubiquitous shingles
     before hashing so similarity reflects distinguishing content.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     sig = minhash_table(df, id_col, text_col, num_hashes, shingle_n, max_df)
 
     banded = _minhash_banded(sig, bands, rows_per_band)
@@ -555,7 +569,7 @@ def incremental_minhash_dedup(
     ids come back. Within-batch dedup is the standard banded
     self-join, trivially sized.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     sig = minhash_table(new_df, id_col, text_col, num_hashes, shingle_n)
     banded = _minhash_banded(sig, bands, rows_per_band).localCheckpoint(
         eager=False
@@ -747,26 +761,43 @@ def simhash_table(
     sh = shingle_table(df, id_col, text_col, shingle_n).withColumn(
         "h", F.xxhash64("shingle")
     )
-    # Each aggregate/reconstruction term is ONE F.expr SQL string rather
-    # than a chain of ~6 Column operator calls: with 64 bit positions the
-    # operator form cost ~400 py4j round trips ≈ 1.5 s of driver time per
-    # invocation (measured r13; the JVM expression trees are identical —
-    # same sum((shiftright(h,b) & 1) * 2 - 1) votes, same conditional
-    # bit reconstruction — so results are byte-equal).
     votes = sh.groupBy("id").agg(
-        *[
-            F.expr(
-                f"sum((shiftright(h, {b}) & CAST(1 AS BIGINT)) * 2 - 1)"
-            ).alias(f"v{b}")
-            for b in range(bits)
-        ]
+        *[F.expr(f"sum({_simhash_vote(b)})").alias(f"v{b}") for b in range(bits)]
     )
+    return votes.select("id", _simhash_bits(lambda b: f"v{b}", bits).alias("sim"))
+
+
+# The SimHash bit rule, written once for the batch table above and the
+# per-row form the stream twin uses. Each term is ONE SQL string rather
+# than a chain of ~6 Column operator calls: with 64 bit positions the
+# operator form cost ~400 py4j round trips ≈ 1.5 s of driver time per
+# invocation (measured r13; the JVM expression trees are identical, so
+# results are byte-equal).
+def _simhash_vote(b: int) -> str:
+    """SQL for hash ``h``'s vote on bit ``b``: +1 if set, -1 if clear."""
+    return f"(shiftright(h, {b}) & CAST(1 AS BIGINT)) * 2 - 1"
+
+
+def _simhash_bits(tally, bits: int):
+    """The signature whose bit b is set iff the SQL ``tally(b)`` (bit
+    b's summed votes) is > 0; bit 63 is the sign bit."""
     terms = " + ".join(
-        f"IF(v{b} > 0, CAST({-(1 << 63) if b == 63 else (1 << b)} AS BIGINT),"
+        f"IF({tally(b)} > 0, CAST({-(1 << 63) if b == 63 else (1 << b)} AS BIGINT),"
         " CAST(0 AS BIGINT))"
         for b in range(bits)
     )
-    return votes.select("id", F.expr(f"CAST(0 AS BIGINT) + {terms}").alias("sim"))
+    return F.expr(f"CAST(0 AS BIGINT) + {terms}")
+
+
+def _simhash_per_row(hashes: str, bits: int = 64):
+    """Per-row SimHash of an array<long> column of shingle hashes: the
+    same votes and bits as `simhash_table`, folded over the array with
+    ``aggregate`` instead of a groupBy, so a stream needs no shuffle."""
+    return _simhash_bits(
+        lambda b: f"aggregate(`{hashes}`, CAST(0 AS BIGINT), "
+        f"(acc, h) -> acc + {_simhash_vote(b)})",
+        bits,
+    )
 
 
 def hamming64(a, b):

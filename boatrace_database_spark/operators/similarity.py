@@ -524,12 +524,16 @@ def ivf_add_to_index(
     the trained distribution, max_cell balloons relative to avg_cell —
     the signal to retrain rather than keep appending.
     """
-    spark = indexed.sparkSession
-    C = centroid_matrix(centroids)
-    addition = new_corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    ).withColumn("cell", _nearest_cell_udf(spark, C)(F.col("cvec")))
+    addition = _assign_cells(new_corpus, centroid_matrix(centroids), id_col, vec_col)
     return indexed.unionByName(addition)
+
+
+def _assign_cells(corpus: DataFrame, C: "np.ndarray", id_col: str, vec_col: str):
+    """(neighbor_id, cvec, cell): each vector with its nearest cell of
+    the centroid matrix ``C`` — the assignment step of every index add."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+    ).withColumn("cell", _nearest_cell_udf(corpus.sparkSession, C)(F.col("cvec")))
 
 
 def ivfpq_add_to_index(
@@ -548,34 +552,26 @@ def ivfpq_add_to_index(
     cells, so an append touches only the new rows. Same drift caveat
     as the IVF twin: watch cell stats, retrain when max_cell balloons.
     """
-    spark = codes.sparkSession
+    return codes.unionByName(
+        _pq_extend_rows(codes, centroids, books, new_corpus, id_col, vec_col)
+    )
+
+
+def _pq_extend_rows(codes, centroids, books, new_corpus, id_col, vec_col):
+    """Index rows that extend the built IVF-PQ index ``codes`` with
+    ``new_corpus``: assigned to the existing cells, encoded in the
+    index's own by_residual mode (its codes metadata), with a norm iff
+    the index stores one. The batch add and the stream ingest both
+    emit exactly these rows."""
     meta = codes.schema["codes"].metadata or {}
     by_residual = bool(meta.get("by_residual", False))
-    has_norm = "norm" in codes.columns
     C = centroid_matrix(centroids)
-    addition = new_corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    ).withColumn("cell", _nearest_cell_udf(spark, C)(F.col("cvec")))
-    enc = _pq_encode_udf(spark, books, C if by_residual else None)
-    code_col = (
-        enc(F.col("cvec"), F.col("cell")) if by_residual else enc(F.col("cvec"))
+    return _pq_index_rows(
+        _assign_cells(new_corpus, C, id_col, vec_col),
+        books,
+        C if by_residual else None,
+        with_norm="norm" in codes.columns,
     )
-    cols = [
-        F.col("neighbor_id"),
-        F.col("cell"),
-        code_col.alias("codes", metadata={"by_residual": by_residual}),
-    ]
-    if has_norm:
-        cols.append(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("cvec", lambda x: x.cast("double") * x),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ).alias("norm")
-        )
-    return codes.unionByName(addition.select(*cols))
 
 
 def ivf_topk(
@@ -1935,7 +1931,6 @@ def ivfpq_build_index(
     `ivfpq_probe` self-configures and a parquet round-trip through
     `ivfpq_write_index`/`ivfpq_read_index` preserves it.
     """
-    spark = corpus.sparkSession
     if target_recall is not None:
         if n_subspaces is not None:
             raise ValueError(
@@ -1975,27 +1970,40 @@ def ivfpq_build_index(
         corpus, id_col, vec_col, n_subspaces, n_codes,
         _n=n, _train_sample=shared, _assign_C=C,
     )
-    enc = _pq_encode_udf(spark, books, C)
+    return _pq_index_rows(indexed, books, C), centroids, books
+
+
+def _pq_index_rows(assigned: DataFrame, books, C, with_norm: bool = True):
+    """The one IVF-PQ row encoder: assigned (neighbor_id, cvec, cell)
+    rows to index rows (neighbor_id, cell, codes[, norm]). With a
+    centroid matrix ``C`` the codes quantize the residual
+    ``x − C[cell]``, without it the raw vector; the mode is stamped
+    into the codes column's metadata, so probes self-configure."""
+    enc = _pq_encode_udf(assigned.sparkSession, books, C)
+    by_residual = C is not None
     code_col = (
         enc(F.col("cvec"), F.col("cell")) if by_residual else enc(F.col("cvec"))
     )
-    codes = indexed.withColumn("codes", code_col).select(
-        "neighbor_id",
-        "cell",
-        F.col("codes").alias("codes", metadata={"by_residual": by_residual}),
+    cols = [
+        F.col("neighbor_id"),
+        F.col("cell"),
+        code_col.alias("codes", metadata={"by_residual": by_residual}),
+    ]
+    if with_norm:
         # exact |x| stored per vector (JVM-side, one double — noise in
         # the ADC cosine DENOMINATOR disappears entirely, leaving only
         # numerator quantization; the standard store-the-norm trick
         # for cosine/IP over PQ codes, +8 B/vector vs dim floats)
-        F.sqrt(
-            F.aggregate(
-                F.transform("cvec", lambda x: x.cast("double") * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ).alias("norm"),
-    )
-    return codes, centroids, books
+        cols.append(
+            F.sqrt(
+                F.aggregate(
+                    F.transform("cvec", lambda x: x.cast("double") * x),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                )
+            ).alias("norm")
+        )
+    return assigned.select(*cols)
 
 
 def index_remove(

@@ -64,19 +64,32 @@ scheduling timeout-check batches and processAllAvailable() never
 settles — TTL tests poll the sink instead (wait_until), which is also
 why every TTL contract test is written that way.
 
-Two helpers carry what every entry point shares:
+These helpers carry what the entry points share:
 
 - `_keyed_state` is the one applyInPandasWithState site. Each custom
   stateful operator hands it a per-group ``fn(key, batch, prev) ->
   (new_state, out_frame)``; the state lifecycle (timed-out group →
   remove, update, TTL re-arm, NoTimeout vs ProcessingTimeTimeout)
   lives once, in `_state_step`. The near-dup twins also share one
-  capped first-seen admission loop, `_admit_capped`.
+  capped first-seen admission loop, `_admit_capped`, and the text
+  twins one shingling prelude, `_shingled`.
 - `_start` is the one sink path: a memory sink, or a foreachBatch sink.
   A foreachBatch sink REQUIRES ``checkpoint_dir`` and is refused
   (ValueError) before any query starts without one — an
   uncheckpointed foreachBatch append restarts from offset zero and
-  double-appends every prior epoch.
+  double-appends every prior epoch. `_append_parquet` is the one
+  parquet-append body such a sink runs.
+- `_each_epoch` is the one tail of the batch-operator streams (the
+  serve twins and `stream_bm25_ingest`): the batch operator runs once
+  per non-empty micro-batch, the serves' output appended to their
+  sink. The dense and lexical probes it runs are `_ann_probe` and
+  `_bm25_probe`, shared by the single serves and the hybrid serve.
+
+The twins compute with their batch twins' own kernels rather than
+copies: MinHash banding (`dedup._minhash_banded`, rows per band from
+`dedup._rows_per_band`), Hamming chunking (`dedup._hamming_chunked`),
+the SimHash bit rule (`dedup._simhash_per_row`) and the IVF-PQ row
+encoder (`similarity._pq_extend_rows`).
 """
 
 from __future__ import annotations
@@ -218,6 +231,69 @@ def _start(
     if query_name is not None:
         writer = writer.queryName(query_name)
     return writer.start()
+
+
+def _append_parquet(path: str):
+    """The one parquet-append body: a foreachBatch function appending
+    each epoch's frame to the parquet table at ``path``."""
+    return lambda frame, epoch_id: frame.write.mode("append").parquet(path)
+
+
+def _each_epoch(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    run,
+    query_name: str,
+    checkpoint_dir: str,
+    sink_dir: str | None = None,
+) -> StreamingQuery:
+    """The tail of every batch-operator stream: parquet files arriving
+    under ``source_dir`` run ``run(batch)`` — a batch operator — once
+    per non-empty micro-batch, through `_start`'s checkpointed
+    foreachBatch sink. With ``sink_dir`` the frame ``run`` returns is
+    appended there."""
+    append = _append_parquet(sink_dir) if sink_dir is not None else None
+
+    def each_batch(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        out = run(batch)
+        if append is not None:
+            append(out, epoch_id)
+
+    return _start(
+        spark.readStream.schema(schema).parquet(source_dir),
+        query_name,
+        each_batch=each_batch,
+        checkpoint_dir=checkpoint_dir,
+    )
+
+
+def _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus):
+    """``probe(batch, k=…)``: the batch `ivfpq_probe` against the frozen
+    index — the dense side of `stream_ann_serve` and
+    `stream_hybrid_serve`."""
+    from boatrace_database_spark.operators.similarity import ivfpq_probe
+
+    return partial(
+        ivfpq_probe, codes, centroids, books,
+        id_col=id_col, vec_col=vec_col, nprobe=nprobe, refine=refine,
+        corpus=corpus,
+    )
+
+
+def _bm25_probe(spark, index_path, query_id_col, query_text_col, k1, b, n_buckets):
+    """``probe(batch, k=…)``: the batch `bm25_topk_prebuilt` against the
+    persisted index — the lexical side of `stream_bm25_serve` and
+    `stream_hybrid_serve`."""
+    from boatrace_database_spark.operators.retrieval import bm25_topk_prebuilt
+
+    return partial(
+        bm25_topk_prebuilt, spark, index_path,
+        query_id_col=query_id_col, query_text_col=query_text_col,
+        k1=k1, b=b, n_buckets=n_buckets,
+    )
 
 
 def stream_events_rollup(
@@ -927,12 +1003,9 @@ def stream_dedup_exact(
         f"keeper {iddl}", "append", state_ttl_ms,
     )
 
-    def _append(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("append").parquet(sink_dir)
-
     return _start(
         flagged, query_name,
-        each_batch=_append if sink_dir is not None else None,
+        each_batch=_append_parquet(sink_dir) if sink_dir is not None else None,
         checkpoint_dir=checkpoint_dir,
     )
 
@@ -1061,6 +1134,20 @@ def stream_dedup_bloom(
     return _start(flagged, query_name)
 
 
+def _shingled(spark, source_dir, schema, id_col, text_col, shingle_n):
+    """(id, _sh) rows of the arriving docs that have at least one
+    shingle — the prelude of the MinHash and SimHash twins. Docs with
+    fewer than ``shingle_n`` tokens drop, exactly like the batch
+    groupBy over exploded shingles."""
+    from boatrace_database_spark.operators.dedup import word_shingles
+
+    docs = spark.readStream.schema(schema).parquet(source_dir)
+    return docs.select(
+        F.col(id_col).alias("id"),
+        word_shingles(F.col(text_col), shingle_n).alias("_sh"),
+    ).where(F.size("_sh") >= 1)
+
+
 def stream_dedup_minhash(
     spark: SparkSession,
     source_dir: str,
@@ -1117,15 +1204,12 @@ def stream_dedup_minhash(
     import numpy as np
     import pandas as pd
 
-    from boatrace_database_spark.operators.dedup import word_shingles
+    from boatrace_database_spark.operators.dedup import _minhash_banded, _rows_per_band
 
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     iddl, _cid = _id_type(schema, id_col)
-    docs = spark.readStream.schema(schema).parquet(source_dir)
-    shingled = docs.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("_sh"),
-    ).where(F.size("_sh") >= 1)
+    shingled = _shingled(spark, source_dir, schema, id_col, text_col, shingle_n)
+
     def _seeded_hash(seed: int):
         # factory, NOT a default arg: a two-parameter lambda would be
         # treated by F.transform as an (element, index) lambda and the
@@ -1141,24 +1225,7 @@ def stream_dedup_minhash(
             ]
         ).alias("sig"),
     )
-    banded = sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            F.lit(b),
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bucket")
+    banded = _minhash_banded(sig, bands, rows_per_band)
 
     def flag(key, batch, prev):
         ids, flat = prev or ([], [])
@@ -1223,14 +1290,10 @@ def stream_dedup_simhash(
     ``max_hamming``; under id-ordered replay the distinct pair set
     equals batch ``simhash_pairs`` (tested).
     """
-    from boatrace_database_spark.operators.dedup import word_shingles
+    from boatrace_database_spark.operators.dedup import _simhash_per_row
 
     iddl, _cid = _id_type(schema, id_col)
-    docs = spark.readStream.schema(schema).parquet(source_dir)
-    shingled = docs.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("_sh"),
-    ).where(F.size("_sh") >= 1)
+    shingled = _shingled(spark, source_dir, schema, id_col, text_col, shingle_n)
 
     # hash each shingle ONCE (the batch twin's shape: its exploded
     # table carries one xxhash64 per shingle row); folding the raw
@@ -1239,23 +1302,7 @@ def stream_dedup_simhash(
     hashed = shingled.withColumn(
         "_hs", F.transform("_sh", lambda s: F.xxhash64(s))
     )
-
-    def _bit_vote(b: int):
-        # factory, not a default arg (two-param lambdas become
-        # (element, index) lambdas under F.aggregate's merge fn too)
-        return lambda acc, h: acc + (
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1
-        )
-
-    sig_bits = []
-    for b in range(bits):
-        vote = F.aggregate("_hs", F.lit(0).cast("long"), _bit_vote(b))
-        bit_val = F.lit(-(1 << 63) if b == 63 else (1 << b)).cast("long")
-        sig_bits.append(
-            F.when(vote > 0, bit_val).otherwise(F.lit(0).cast("long"))
-        )
-    sim = sum(sig_bits[1:], start=sig_bits[0])
-    sig = hashed.select("id", sim.alias("sim"))
+    sig = hashed.select("id", _simhash_per_row("_hs", bits).alias("sim"))
     return _hamming_dedup_stream(
         sig, iddl, _cid,
         max_hamming=max_hamming, bits=bits, chunk_bits=chunk_bits,
@@ -1287,25 +1334,10 @@ def _hamming_dedup_stream(
     """
     import pandas as pd
 
-    n_chunks = bits // chunk_bits
-    chunk_mask = (1 << chunk_bits) - 1
-    chunked = sig.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("sim", c * chunk_bits)
-                        .bitwiseAND(F.lit(chunk_mask))
-                        .alias("key"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "sim", "cc.chunk", "cc.key")
+    from boatrace_database_spark.operators.dedup import _hamming_chunked
+
+    # one chunk per band key: band c keys on chunk c alone
+    chunked = _hamming_chunked(sig, "id", "sim", bits, chunk_bits, 1)
 
     def match(s, msim):
         h = bin((s ^ msim) & 0xFFFFFFFFFFFFFFFF).count("1")
@@ -1897,11 +1929,10 @@ def stream_ingest_parquet(
     """Incremental file ingest: new parquet files under source_dir are
     appended to the target parquet table per micro-batch."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def _append(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("append").parquet(target_dir)
-
-    return _start(stream, None, each_batch=_append, checkpoint_dir=checkpoint_dir)
+    return _start(
+        stream, None, each_batch=_append_parquet(target_dir),
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def stream_dedup_semantic(
@@ -2096,55 +2127,25 @@ def stream_ivfpq_ingest(
     metadata supplies the by_residual mode and its schema says whether
     exact norms are stored — the stream cannot misconfigure itself
     against the index it feeds. Stream-static and STATELESS like
-    `stream_decontaminate_semantic`: assignment and encoding reuse the
-    batch Arrow kernels verbatim (`_nearest_cell_udf`,
-    `_pq_encode_udf` — both deterministic), so every emitted row is
-    byte-identical to what `ivfpq_add_to_index` would append for the
-    same vector: exact batch parity under ANY arrival order, no
-    state, no shuffle, no watermark; throughput is scan-bound with
-    one broadcast of the centroid matrix + codebook tensor per query.
+    `stream_decontaminate_semantic`: assignment and encoding are the
+    batch add's own row encoder (`similarity._pq_extend_rows`, over the
+    Arrow kernels `_nearest_cell_udf` and `_pq_encode_udf` — both
+    deterministic), so every emitted row is byte-identical to what
+    `ivfpq_add_to_index` would append for the same vector: exact batch
+    parity under ANY arrival order, no state, no shuffle, no
+    watermark; throughput is scan-bound with one broadcast of the
+    centroid matrix + codebook tensor per query.
 
     At 100 TB this is the continuous-embedding-ingest shape: the sink
     appends to the parquet index partitioned by `cell`, probes read
     the next snapshot, and `ivf_cell_stats` on the accumulating index
     is the retrain signal (ballooning max_cell = distribution drift),
     exactly as the batch twin documents."""
-    from boatrace_database_spark.operators.similarity import (
-        _nearest_cell_udf,
-        _pq_encode_udf,
-        centroid_matrix,
-    )
-
-    meta = codes.schema["codes"].metadata or {}
-    by_residual = bool(meta.get("by_residual", False))
-    has_norm = "norm" in codes.columns
-    C = centroid_matrix(centroids)
-    enc = _pq_encode_udf(spark, books, C if by_residual else None)
+    from boatrace_database_spark.operators.similarity import _pq_extend_rows
 
     vecs = spark.readStream.schema(schema).parquet(source_dir)
-    assigned = vecs.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-    ).withColumn("cell", _nearest_cell_udf(spark, C)(F.col("cvec")))
-    code_col = (
-        enc(F.col("cvec"), F.col("cell")) if by_residual else enc(F.col("cvec"))
-    )
-    cols = [
-        F.col("neighbor_id"),
-        F.col("cell"),
-        code_col.alias("codes", metadata={"by_residual": by_residual}),
-    ]
-    if has_norm:
-        cols.append(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("cvec", lambda x: x.cast("double") * x),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ).alias("norm")
-        )
-    return _start(assigned.select(*cols), query_name)
+    rows = _pq_extend_rows(codes, centroids, books, vecs, id_col, vec_col)
+    return _start(rows, query_name)
 
 
 def stream_ann_serve(
@@ -2193,30 +2194,10 @@ def stream_ann_serve(
     raw rows in the cold vector table. Index updates arrive by
     restarting the serve stream on the next index snapshot, exactly as
     `stream_ivfpq_ingest` documents from the maintenance side."""
-    from boatrace_database_spark.operators.similarity import ivfpq_probe
-
-    def _serve(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = ivfpq_probe(
-            codes,
-            centroids,
-            books,
-            batch,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k,
-            nprobe=nprobe,
-            refine=refine,
-            corpus=corpus,
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    return _start(
-        spark.readStream.schema(schema).parquet(source_dir),
-        query_name,
-        each_batch=_serve,
-        checkpoint_dir=checkpoint_dir,
+    probe = _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus)
+    return _each_epoch(
+        spark, source_dir, schema, partial(probe, k=k), query_name,
+        checkpoint_dir, sink_dir,
     )
 
 
@@ -2267,29 +2248,12 @@ def stream_bm25_serve(
     Ids must be non-null and unique: the index's doc ids (otherwise it
     scores differently from the in-memory `bm25_topk` — that docstring
     states how), and the query ids, since rankings are per query id."""
-    from boatrace_database_spark.operators.retrieval import bm25_topk_prebuilt
-
-    def _serve(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = bm25_topk_prebuilt(
-            spark,
-            index_path,
-            batch,
-            query_id_col=query_id_col,
-            query_text_col=query_text_col,
-            k=k,
-            k1=k1,
-            b=b,
-            n_buckets=n_buckets,
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    return _start(
-        spark.readStream.schema(schema).parquet(source_dir),
-        query_name,
-        each_batch=_serve,
-        checkpoint_dir=checkpoint_dir,
+    probe = _bm25_probe(
+        spark, index_path, query_id_col, query_text_col, k1, b, n_buckets
+    )
+    return _each_epoch(
+        spark, source_dir, schema, partial(probe, k=k), query_name,
+        checkpoint_dir, sink_dir,
     )
 
 
@@ -2343,53 +2307,26 @@ def stream_hybrid_serve(
     one groupBy over 2·depth rows per query — trivial next to the
     probes. ``checkpoint_dir`` required (idempotent-append restart
     contract)."""
-    from boatrace_database_spark.operators.retrieval import (
-        bm25_topk_prebuilt,
-        rrf_fuse,
-    )
-    from boatrace_database_spark.operators.similarity import ivfpq_probe
+    from boatrace_database_spark.operators.retrieval import rrf_fuse
 
     d = depth or k
+    dense = _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus)
+    lexical = _bm25_probe(spark, index_path, id_col, text_col, k1, b, n_buckets)
 
-    def _serve(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        dense = ivfpq_probe(
-            codes,
-            centroids,
-            books,
-            batch,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=d,
-            nprobe=nprobe,
-            refine=refine,
-            corpus=corpus,
-        ).select(
-            F.col("query_id"),
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rk"),
+    def fuse(batch: DataFrame) -> DataFrame:
+        return rrf_fuse(
+            [
+                dense(batch, k=d).select(
+                    "query_id", F.col("neighbor_id").alias("doc_id"), "rk"
+                ),
+                lexical(batch, k=d).select("query_id", "doc_id", "rk"),
+            ],
+            k=k,
+            k_rrf=k_rrf,
         )
-        lex = bm25_topk_prebuilt(
-            spark,
-            index_path,
-            batch,
-            query_id_col=id_col,
-            query_text_col=text_col,
-            k=d,
-            k1=k1,
-            b=b,
-            n_buckets=n_buckets,
-        ).select("query_id", "doc_id", "rk")
-        rrf_fuse([dense, lex], k=k, k_rrf=k_rrf).write.mode(
-            "append"
-        ).parquet(sink_dir)
 
-    return _start(
-        spark.readStream.schema(schema).parquet(source_dir),
-        query_name,
-        each_batch=_serve,
-        checkpoint_dir=checkpoint_dir,
+    return _each_epoch(
+        spark, source_dir, schema, fuse, query_name, checkpoint_dir, sink_dir
     )
 
 
@@ -2436,20 +2373,11 @@ def stream_bm25_ingest(
     score differently (that docstring states how)."""
     from boatrace_database_spark.operators.retrieval import bm25_add_to_index
 
-    def _ingest(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        bm25_add_to_index(
-            batch,
-            index_path,
-            id_col=id_col,
-            text_col=text_col,
-            n_buckets=n_buckets,
-        )
-
-    return _start(
-        spark.readStream.schema(schema).parquet(source_dir),
-        query_name,
-        each_batch=_ingest,
-        checkpoint_dir=checkpoint_dir,
+    add = partial(
+        bm25_add_to_index,
+        path=index_path,
+        id_col=id_col,
+        text_col=text_col,
+        n_buckets=n_buckets,
     )
+    return _each_epoch(spark, source_dir, schema, add, query_name, checkpoint_dir)

@@ -400,6 +400,45 @@ def test_lsh_bucket_stats_consistent(docs, spark):
         assert s.est_candidate_pairs == sum(b * (b - 1) // 2 for b in sizes)
 
 
+@pytest.mark.parametrize("bands", [64, 5, 0])
+def test_minhash_banding_refuses_bands_not_dividing_num_hashes(docs, bands):
+    """Every batch MinHash banding entry point refuses a ``bands`` that
+    does not divide ``num_hashes``, naming both values. At bands=64
+    over 32 hashes the band slices were empty, so each band held one
+    bucket with every doc in it."""
+    msg = f"bands={bands} must divide num_hashes=32"
+    for call in (D.minhash_lsh_pairs, D.lsh_bucket_stats):
+        with pytest.raises(ValueError, match=msg):
+            call(docs, "doc_id", "text", num_hashes=32, bands=bands)
+    with pytest.raises(ValueError, match=msg):
+        D.incremental_minhash_dedup(
+            docs, docs.limit(0), "doc_id", "text", num_hashes=32, bands=bands
+        )
+
+
+@pytest.mark.parametrize("bits", [64, 32])
+def test_simhash_per_row_matches_simhash_table(docs, bits):
+    """The per-row SimHash the stream twin folds over each doc's
+    shingle hashes equals `simhash_table`'s groupBy votes for every
+    doc on a static frame."""
+    table = {
+        r.id: r.sim
+        for r in D.simhash_table(docs, "doc_id", "text", 2, bits).collect()
+    }
+    per_row = (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            F.transform(
+                D.word_shingles(F.col("text"), 2), lambda s: F.xxhash64(s)
+            ).alias("_hs"),
+        )
+        .where(F.size("_hs") >= 1)
+        .select("id", D._simhash_per_row("_hs", bits).alias("sim"))
+    )
+    got = {r.id: r.sim for r in per_row.collect()}
+    assert table and got == table
+
+
 def test_exact_dedup_counts(docs, spark):
     out = D.exact_dedup(docs, ["text"], "doc_id")
     total = out.agg(F.sum("n_copies")).collect()[0][0]

@@ -41,3 +41,33 @@ def test_script_compiles_and_imports_resolve(path, monkeypatch):
         if importlib.util.find_spec(name) is None
     ]
     assert not missing, f"{path.name} imports unresolvable {missing}"
+
+
+def test_code_lines_skips_docstrings_comments_and_blanks():
+    spec = importlib.util.spec_from_file_location(
+        "code_lines", ROOT / "scripts" / "code_lines.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    source = (
+        '"""Module docstring,\n'
+        'two lines."""\n'
+        "\n"
+        "import os  # a trailing comment keeps its line\n"
+        "\n"
+        "\n"
+        "def f(x):\n"
+        '    """One-line docstring."""\n'
+        "    # a comment-only line\n"
+        '    s = """a string that is\n'
+        '# not a comment"""\n'
+        "    return x\n"
+        "\n"
+        "\n"
+        "class C:\n"
+        '    """Class docstring."""\n'
+        "\n"
+        "    y = 1\n"
+    )
+    # import, def, the two lines of s, return, class, y
+    assert module.code_lines(source) == 7

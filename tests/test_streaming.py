@@ -413,7 +413,6 @@ def test_stream_dedup_shuffled_replay_invariants(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_stream_minhash_matches_batch_pairs(spark, tmp_path):
     """Streaming MinHash near-dup over an id-ordered two-chunk replay
     yields exactly the batch minhash_lsh_pairs pair list: identical
@@ -461,7 +460,27 @@ def test_stream_minhash_matches_batch_pairs(spark, tmp_path):
         assert abs(got[pair] - est) < 1e-9, (pair, got[pair], est)
 
 
-@pytest.mark.slow
+def test_stream_minhash_refuses_bands_not_dividing_num_hashes(spark, tmp_path):
+    """The stream twin shares the batch refusal of a ``bands`` that
+    does not divide ``num_hashes`` and raises it before any query
+    starts."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from boatrace_database_spark.streaming.ingest import stream_dedup_minhash
+
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    src = str(tmp_path / "mh_refused")
+    os.makedirs(src)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="bands=64 must divide num_hashes=32"):
+        stream_dedup_minhash(
+            spark, src, schema, num_hashes=32, bands=64, query_name="smh_refused"
+        )
+    assert {q.id for q in spark.streams.active} == active
+
+
 def test_stream_simhash_matches_batch_pairs(spark, tmp_path):
     """Streaming SimHash over an id-ordered two-chunk replay equals the
     batch simhash_pairs pair list — identical bit votes, chunk
@@ -2909,7 +2928,6 @@ def test_stream_event_edges_ordered_replay_matches_batch_pairs(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.slow
 def test_stream_dedup_dhash_matches_batch(spark, tmp_path):
     """Round-9 image-dedup twin: streaming dHash over arriving media
     payloads (decoded by the SAME dhash_media transform) must emit
@@ -3026,7 +3044,6 @@ def test_stream_dedup_audio_matches_batch(spark, tmp_path):
     assert got == batch
 
 
-@pytest.mark.slow
 def test_stream_ivfpq_ingest_matches_batch_add(spark, tmp_path):
     """Round-11 streaming ANN-index maintenance: arriving vectors
     assigned + PQ-encoded against the FROZEN quantizer must emit rows
@@ -3094,7 +3111,6 @@ def test_stream_ivfpq_ingest_matches_batch_add(spark, tmp_path):
     assert p1 == p2
 
 
-@pytest.mark.slow
 def test_stream_ann_serve_matches_batch_probe(spark, tmp_path):
     """Round-13 streaming ANN query SERVING: arriving query vectors
     answered from the static IVF-PQ index must equal the batch
@@ -3143,7 +3159,6 @@ def test_stream_ann_serve_matches_batch_probe(spark, tmp_path):
     assert got == want and len({g[0] for g in got}) == 10
 
 
-@pytest.mark.slow
 def test_stream_bm25_serve_matches_batch_prebuilt(spark, tmp_path):
     """Round-13 streaming BM25 query SERVING: arriving query texts
     answered from the persisted index must equal the batch
@@ -3191,7 +3206,6 @@ def test_stream_bm25_serve_matches_batch_prebuilt(spark, tmp_path):
     assert got == want and len({g[0] for g in got}) == 7
 
 
-@pytest.mark.slow
 def test_stream_hybrid_serve_matches_batch_fusion(spark, tmp_path):
     """Round-13 streaming HYBRID serving: arriving (text, embedding)
     queries answered by RRF-fusing the IVF-PQ probe with the BM25
@@ -3260,7 +3274,6 @@ def test_stream_hybrid_serve_matches_batch_fusion(spark, tmp_path):
     assert got == want and len({g[0] for g in got}) == 6
 
 
-@pytest.mark.slow
 def test_stream_bm25_ingest_matches_full_rebuild(spark, tmp_path):
     """Round-13 streaming BM25 index maintenance: extending a
     persisted index from a stream (2 micro-batches) must leave
