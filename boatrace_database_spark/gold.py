@@ -40,26 +40,6 @@ def race_table(
     return joined.select("race_date", *S.RACE_COLUMNS)
 
 
-def odds_map_view(odds: DataFrame) -> DataFrame:
-    """Spark-idiomatic enrichment (SURVEY §1.3): odds as a
-    map<bet_type, payout_yen>, NULL for `-1` sentinels. The wide
-    10-column layout stays primary (it is what the reference
-    publishes); this view derives the map for consumers that want
-    per-bet-type access without 10 hardcoded columns."""
-    entries = [
-        F.struct(
-            F.lit(c).alias("key"),
-            F.when(F.col(c) != "-1", F.col(c).try_cast("int")).alias("value"),
-        )
-        for c in S.ODDS_COLUMNS[1:]
-    ]
-    return odds.select(
-        "race_date",
-        F.col(S.RACE_ID).alias("race_id"),
-        F.map_from_entries(F.array(*entries)).alias("payouts"),
-    )
-
-
 def result_ext_typed(result_ext: DataFrame) -> DataFrame:
     """Typed view of the extension table: the fields the reference
     parser drops but its published model consumes (README.md:19 lists

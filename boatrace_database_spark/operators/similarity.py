@@ -15,6 +15,18 @@
   SemDeDup-style cluster-scoped semantic dedup (semantic_pairs /
   semantic_dedup) — the moderate-threshold regime where hyperplane
   banding stops pruning.
+
+The ANN families share one skeleton of private helpers:
+`_corpus_rows`/`_query_rows` (the (neighbor_id, cvec) and (query_id,
+qvec) projections), `_probe_cells` (the IVF cell probe of `ivf_probe`
+and `ivfpq_probe`), `_exact_score` + `_rank_topk` (exact rescoring and
+the top-k tail of every search), `_stack` (the vector-batch prelude of
+every Arrow UDF, owning the empty batch), `_nearest_cells` (the
+nearest-centroid kernel of k-means, cell assignment, multi-assignment,
+PQ training and encoding, and OPQ) with `_nearest_cells_udf` its one
+Arrow wrapper, and `_broadcast_pair_scores`/`_join_pair_scores` (the
+two candidate-pair scoring strategies of `cosine_pairs_lsh` and
+`semantic_pairs`).
 """
 
 from __future__ import annotations
@@ -52,6 +64,54 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(den != 0, dot(a, b) / den)
 
 
+def _corpus_rows(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """(neighbor_id, cvec, *extra): the corpus side of every index and
+    search."""
+    return df.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), *extra
+    )
+
+
+def _query_rows(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """(query_id, qvec, *extra): the query side of every search."""
+    return df.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), *extra
+    )
+
+
+def _exact_score(round_to: int = 6) -> Column:
+    """The exact rescoring every search ranks on: cosine(qvec, cvec)
+    rounded to ``round_to`` dp, as ``score``."""
+    return F.round(cosine(F.col("qvec"), F.col("cvec")), round_to).alias("score")
+
+
+def _stack(vecs: pd.Series, dim: int = 0) -> "np.ndarray":
+    """The prelude of every vector pandas UDF: an Arrow batch of
+    vectors as one (n × dim) float64 matrix. An empty batch becomes a
+    (0 × dim) matrix, so each kernel's own arithmetic yields its empty
+    result and no UDF needs an empty-batch guard."""
+    if not len(vecs):
+        return np.zeros((0, dim))
+    return np.stack(vecs.to_numpy()).astype(np.float64)
+
+
+def _nearest_cells(
+    A: "np.ndarray", C: "np.ndarray", n: int | None = None
+) -> "np.ndarray":
+    """The nearest-centroid kernel: rows of ``A`` against centroids
+    ``C`` by squared L2 (||x-c||² = ||x||² - 2x·c + ||c||², the x term
+    dropped — it does not change any row's order). ``n=None`` gives
+    each row's nearest cell (argmin), ``n`` its n nearest cells in
+    ascending distance. Ties go to the lower cell id either way (argmin
+    keeps the first minimum, the argsort is stable), so n=1 is exactly
+    the argmin. k-means, IVF cell assignment, SemDeDup
+    multi-assignment, PQ training and encoding, and OPQ all call it."""
+    d = -2.0 * (A @ C.T) + np.einsum("ij,ij->i", C, C)
+    if n is None:
+        return d.argmin(axis=1)
+    return np.argsort(d, kind="stable", axis=1)[:, :n]
+
+
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """The top-k tail every search path shares: rank each query's
     scored candidates by (score DESC, neighbor_id) and keep
@@ -77,23 +137,15 @@ def cosine_topk(
     are engine-portable (``round_to`` loosens the rounding for
     witnesses whose inputs carry extra FP noise, e.g. a rotation's
     ~1e-13 — see rotation_invariant_topk)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
+    q = _query_rows(queries, id_col, vec_col)
     # single-file parquet arrives as one partition; spread the O(|corpus|
     # × |queries| × dim) dot-product work across all cores first
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    c = corpus.repartition(parallelism).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
+    c = _corpus_rows(corpus.repartition(parallelism), id_col, vec_col)
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), round_to).alias("score"),
-        )
+        .select("query_id", "neighbor_id", _exact_score(round_to))
     )
     return _rank_topk(scored, k)
 
@@ -131,9 +183,7 @@ def _lloyd_kmeans(X: "np.ndarray", k: int, iters: int = 20, seed: int = 7):
     if len(C) < k:  # corpus smaller than k: pad with jittered repeats
         C = np.vstack([C, C[rng.integers(0, len(C), k - len(C))] + 1e-6])
     for _ in range(iters):
-        # ||x-c||² = ||x||² - 2x·c + ||c||²; argmin drops the x term
-        d = -2.0 * (X @ C.T) + np.einsum("ij,ij->i", C, C)
-        assign = d.argmin(axis=1)
+        assign = _nearest_cells(X, C)
         # vectorized centroid update (round 9): scatter-add + bincount
         # replaces the per-centroid boolean-mask loop, whose k scans of
         # X dominated the PQ codebook training (measured 15× on the
@@ -152,22 +202,22 @@ def _lloyd_kmeans(X: "np.ndarray", k: int, iters: int = 20, seed: int = 7):
     return C
 
 
-def _nearest_cell_udf(spark, C: "np.ndarray"):
-    """Arrow-batched argmin-L2 cell assignment against a broadcast
-    (n_cells × dim) centroid matrix — shared by the full build and
-    incremental add so both assign identically."""
+def _nearest_cells_udf(spark, C: "np.ndarray", n: int | None = None):
+    """Arrow-batched `_nearest_cells` against a broadcast (n_cells ×
+    dim) centroid matrix: ``n=None`` gives an int column (each
+    vector's nearest cell — the full build, incremental add and stream
+    ingest, so all assign identically), ``n`` an array<int> of the n
+    nearest cells in ascending distance (SemDeDup multi-assignment and
+    its streaming twin)."""
     bc = spark.sparkContext.broadcast(C)
 
-    @F.pandas_udf("int")
-    def nearest_cell(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series(np.zeros(0, dtype=np.int32))
+    @F.pandas_udf("int" if n is None else "array<int>")
+    def nearest_cells(vecs: pd.Series) -> pd.Series:
         M = bc.value
-        A = np.stack(vecs.to_numpy()).astype(np.float64)
-        d = -2.0 * (A @ M.T) + np.einsum("ij,ij->i", M, M)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        cells = _nearest_cells(_stack(vecs, M.shape[1]), M, n).astype(np.int32)
+        return pd.Series(cells if n is None else list(cells))
 
-    return nearest_cell
+    return nearest_cells
 
 
 def _bounded_training_sample(base: DataFrame, n: int, train_n: int):
@@ -332,8 +382,7 @@ def ivf_build_index(
     `cell` assignment (the inverted file), ``centroids`` the tiny
     lookup the probe ranks against. At 100 TB the index is built ONCE
     and persisted as a table partitioned/clustered by `cell`; probes
-    are a separate, far cheaper job. Callers that want a one-shot
-    search use ``ivf_topk`` (build + probe fused).
+    are a separate, far cheaper job: ``ivf_probe`` searches it.
     """
     spark = corpus.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
@@ -355,20 +404,16 @@ def ivf_build_index(
     # inverted file keeps this partitioning), while a big corpus still
     # fans out to the full parallelism.
     n_parts = max(1, min(parallelism, n // 2048))
-    base = corpus.repartition(n_parts).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-    )
+    base = _corpus_rows(corpus.repartition(n_parts), id_col, vec_col)
     train_n = sample_per_cell * n_cells
     sample_pdf = (
         _train_sample
         if _train_sample is not None
         else _bounded_training_sample(base, n, train_n)
     )
-    X = np.stack(sample_pdf["cvec"].to_numpy()).astype(np.float64)
-    C = _lloyd_kmeans(X, n_cells)
+    C = _lloyd_kmeans(_stack(sample_pdf["cvec"]), n_cells)
 
-    indexed = base.withColumn("cell", _nearest_cell_udf(spark, C)(F.col("cvec")))
+    indexed = base.withColumn("cell", _nearest_cells_udf(spark, C)(F.col("cvec")))
     # NOTE: leave the centroid table a plain LocalRelation — Catalyst
     # inlines it into broadcast exchanges driver-side. Wrapping it in
     # coalesce(1) or localCheckpoint "to optimize" forces real jobs and
@@ -407,6 +452,38 @@ def _centroid_cells(centroids: DataFrame) -> int:
     return int(n) if n is not None else centroids.count()
 
 
+def _probe_cells(
+    centroids: DataFrame, q: DataFrame, nprobe: int | None, *keep: str | Column
+) -> DataFrame:
+    """The IVF cell probe `ivf_probe` and `ivfpq_probe` share: each
+    (query_id, qvec) row ranks the broadcast centroid table by squared
+    L2 (ties to the lower cell) and keeps its ``nprobe`` nearest cells
+    as (query_id, cell, *keep) rows. ``keep`` columns are evaluated on
+    the same query × centroid row (``qvec``, or IVF-PQ's centroid dot
+    term). ``nprobe=None`` derives it from the cell count at constant
+    probed fraction (`ann_nprobe`) — a schema-metadata read, NOT a
+    count: even a 16-row LocalRelation count launches a job (~0.45 s —
+    r11 §45)."""
+    if nprobe is None:
+        nprobe = ann_nprobe(_centroid_cells(centroids))
+    qc = q.crossJoin(F.broadcast(centroids)).select(
+        "query_id",
+        "cell",
+        F.aggregate(
+            F.zip_with("qvec", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ).alias("d2"),
+        *keep,
+    )
+    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
+    return (
+        qc.withColumn("cr", F.row_number().over(wq))
+        .where(F.col("cr") <= nprobe)
+        .drop("d2", "cr")
+    )
+
+
 def ivf_probe(
     indexed: DataFrame,
     centroids: DataFrame,
@@ -423,35 +500,13 @@ def ivf_probe(
     recovers brute force). ``nprobe=None`` (default) derives it from
     the index's cell count at constant probed fraction (`ann_nprobe`),
     so the dial scales with an `ann_cells`-derived quantizer."""
-    if nprobe is None:
-        # schema-metadata read, NOT a count: even a 16-row
-        # LocalRelation count launches a job (~0.45 s — r11 §45)
-        nprobe = ann_nprobe(_centroid_cells(centroids))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    # rank cells per query by centroid distance; keep nprobe cells
-    qc = q.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.aggregate(
-            F.zip_with("qvec", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
+    probes = _probe_cells(
+        centroids, _query_rows(queries, id_col, vec_col), nprobe, "qvec"
     )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probes = qc.withColumn("cr", F.row_number().over(wq)).where(
-        F.col("cr") <= nprobe
-    ).select("query_id", "qvec", "cell")
-
     scored = (
         indexed.join(F.broadcast(probes), on="cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("score"),
-        )
+        .select("query_id", "neighbor_id", _exact_score())
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     return _rank_topk(scored, k)
@@ -531,9 +586,8 @@ def ivf_add_to_index(
 def _assign_cells(corpus: DataFrame, C: "np.ndarray", id_col: str, vec_col: str):
     """(neighbor_id, cvec, cell): each vector with its nearest cell of
     the centroid matrix ``C`` — the assignment step of every index add."""
-    return corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    ).withColumn("cell", _nearest_cell_udf(corpus.sparkSession, C)(F.col("cvec")))
+    cells = _nearest_cells_udf(corpus.sparkSession, C)(F.col(vec_col))
+    return _corpus_rows(corpus, id_col, vec_col, cells.alias("cell"))
 
 
 def ivfpq_add_to_index(
@@ -572,24 +626,6 @@ def _pq_extend_rows(codes, centroids, books, new_corpus, id_col, vec_col):
         C if by_residual else None,
         with_norm="norm" in codes.columns,
     )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_cells: int | None = None,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """One-shot IVF approximate top-k (build + probe fused). Prefer the
-    split ``ivf_build_index`` / ``ivf_probe`` pair whenever the index
-    can be reused across searches — training inside every call is the
-    anti-pattern the round-3 bench flagged. None dials derive from the
-    corpus size (`ann_cells`/`ann_nprobe`)."""
-    indexed, centroids = ivf_build_index(corpus, id_col, vec_col, n_cells)
-    return ivf_probe(indexed, centroids, queries, id_col, vec_col, k, nprobe)
 
 
 def cosine_pairs(
@@ -634,11 +670,7 @@ def dot_batch(a: Column, b: Column) -> Column:
     """
     @F.pandas_udf("double")
     def _dot(xs, ys):
-        if not len(xs):
-            return pd.Series(np.zeros(0))
-        A = np.stack(xs.to_numpy()).astype(np.float64)
-        B = np.stack(ys.to_numpy()).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", A, B))
+        return pd.Series(np.einsum("ij,ij->i", _stack(xs), _stack(ys)))
 
     return _dot(a, b)
 
@@ -685,9 +717,7 @@ def _band_keys_udf(
 
     @F.pandas_udf("array<int>")
     def band_keys(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series(np.zeros(0, dtype=object))
-        A = np.stack(vecs.to_numpy()).astype(np.float64)
+        A = _stack(vecs, P.shape[1])
         D = A @ P.T  # (n, bands·rows_per_band)
         risky = np.abs(D) < 1e-6
         if risky.any():
@@ -722,8 +752,8 @@ def _broadcast_pair_scores(
 
     ``base``: (id, vec) — one row per corpus vector, ids matching the
     pair ids. Rounding (4 dp, JVM-side) and the >= threshold filter
-    are identical to the vector-join strategy, so both produce the
-    same rows.
+    are identical to the vector-join strategy (`_join_pair_scores`),
+    so both produce the same rows.
     """
     spark = base.sparkSession
     pdf = base.select("id", "vec").toPandas()  # size-gated driver exit
@@ -770,6 +800,49 @@ def _broadcast_pair_scores(
     return scored.select(
         "id_a", "id_b", *extra_cols, F.round(F.col("raw"), 4).alias("score")
     ).where(F.col("score") >= threshold)
+
+
+def _join_pair_scores(
+    base: DataFrame,
+    cand: DataFrame,
+    threshold: float,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """`_broadcast_pair_scores`' vector-join twin, for corpora too
+    large to broadcast: vectors hash-join onto the candidate (id_a,
+    id_b, *extra_cols) list — AQE picks broadcast when ``base`` fits
+    and a shuffled hash join at cluster scale, no hardcoded hint — and
+    each pair scores ONE `dot_batch` over the stored norms.
+
+    ``base``: (id, vec, norm). Rows with norm 0 are dropped before the
+    joins: zero-norm vectors produce no pairs (the engine-wide policy),
+    and under ANSI mode an unguarded /0 would kill the job. Rounding
+    (4 dp) and the >= threshold filter match the broadcast twin, so
+    both strategies produce the same rows."""
+    nonzero = base.where(F.col("norm") != 0)
+    va = nonzero.select(
+        F.col("id").alias("id_a"), F.col("vec").alias("vec_a"),
+        F.col("norm").alias("norm_a"),
+    )
+    vb = nonzero.select(
+        F.col("id").alias("id_b"), F.col("vec").alias("vec_b"),
+        F.col("norm").alias("norm_b"),
+    )
+    return (
+        cand.join(va, on="id_a")
+        .join(vb, on="id_b")
+        .select(
+            "id_a",
+            "id_b",
+            *extra_cols,
+            F.round(
+                dot_batch(F.col("vec_a"), F.col("vec_b"))
+                / (F.col("norm_a") * F.col("norm_b")),
+                4,
+            ).alias("score"),
+        )
+        .where(F.col("score") >= threshold)
+    )
 
 
 def lsh_band_geometry(
@@ -1007,33 +1080,7 @@ def cosine_pairs_lsh(
     # ---- vector-join scoring (corpus too large to broadcast) ---------
     # here the dedup stays BEFORE the vector joins: at deep-band scale
     # settings it shrinks the rows that must carry vectors.
-    # norm != 0: zero-norm vectors produce no pairs (the engine-wide
-    # policy) — and under ANSI mode an unguarded /0 would kill the job
-    cand = cand_raw.dropDuplicates(["id_a", "id_b"])
-    va = base.where(F.col("norm") != 0).select(
-        F.col("id").alias("id_a"), F.col("vec").alias("vec_a"),
-        F.col("norm").alias("norm_a"),
-    )
-    vb = base.where(F.col("norm") != 0).select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vec_b"),
-        F.col("norm").alias("norm_b"),
-    )
-    # AQE picks broadcast when base fits and a shuffled hash join at
-    # cluster scale — no hardcoded hint
-    return (
-        cand.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot_batch(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                4,
-            ).alias("score"),
-        )
-        .where(F.col("score") >= threshold)
-    )
+    return _join_pair_scores(base, cand_raw.dropDuplicates(["id_a", "id_b"]), threshold)
 
 
 def cosine_pairs_lsh_oracle_sql(
@@ -1138,11 +1185,7 @@ def project_embeddings(
 
     @F.pandas_udf("array<double>")
     def _proj(vecs):  # pd.Series[array<float>] -> pd.Series[array<double>]
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        A = np.stack(vecs.to_numpy()).astype(np.float64)
-        Y = (A @ P.T) * scale
-        return pd.Series(list(Y))
+        return pd.Series(list((_stack(vecs, dim) @ P.T) * scale))
 
     return df.withColumn(out_col, _proj(F.col(vec_col)))
 
@@ -1269,20 +1312,11 @@ def lsh_ann_candidates(
     if not multiprobe:
         probe_hamming = 0
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    c = corpus.repartition(parallelism).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.posexplode(
-            _table_buckets(F.col(vec_col), n_planes, dim, n_tables)
-        ).alias("tbl", "bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.posexplode(
-            _table_buckets(F.col(vec_col), n_planes, dim, n_tables)
-        ).alias("tbl", "bucket"),
-    )
+    buckets = F.posexplode(
+        _table_buckets(F.col(vec_col), n_planes, dim, n_tables)
+    ).alias("tbl", "bucket")
+    c = _corpus_rows(corpus.repartition(parallelism), id_col, vec_col, buckets)
+    q = _query_rows(queries, id_col, vec_col, buckets)
     if probe_hamming >= 1:
         probes = [F.col("bucket")] + [
             F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)
@@ -1376,12 +1410,7 @@ def lsh_ann_topk(
             multiprobe, n_tables, probe_hamming, n,
         )
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("score"),
-    )
-    return _rank_topk(scored, k)
+    return _rank_topk(cand.select("query_id", "neighbor_id", _exact_score()), k)
 
 
 def ann_bucket_stats(
@@ -1429,26 +1458,6 @@ def ann_bucket_stats(
         )
         .orderBy("tbl")
     )
-
-
-def _topn_cells_udf(spark, C: "np.ndarray", n: int):
-    """Arrow-batched top-n nearest cells (ascending L2) against the
-    broadcast centroid matrix — multi-assignment's analog of
-    `_nearest_cell_udf` (n=1 reproduces it exactly: same distance
-    arithmetic, same argmin tie behavior via stable argsort)."""
-    bc = spark.sparkContext.broadcast(C)
-
-    @F.pandas_udf("array<int>")
-    def topn_cells(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series(np.zeros(0, dtype=object))
-        M = bc.value
-        A = np.stack(vecs.to_numpy()).astype(np.float64)
-        d = -2.0 * (A @ M.T) + np.einsum("ij,ij->i", M, M)
-        idx = np.argsort(d, kind="stable", axis=1)[:, :n].astype(np.int32)
-        return pd.Series(list(idx))
-
-    return topn_cells
 
 
 def _cell_gram_pairs(
@@ -1593,16 +1602,13 @@ def semantic_pairs(
         # linear — the scale-safe default per BENCHNOTES §38). The one
         # count is threaded into the build so the corpus isn't scanned
         # twice.
+        n = None
         if n_cells is None:
             n = corpus.count()
-            index = ivf_build_index(
-                corpus, id_col, vec_col, semantic_cells(n), sample_per_cell,
-                _n=n,
-            )
-        else:
-            index = ivf_build_index(
-                corpus, id_col, vec_col, n_cells, sample_per_cell
-            )
+            n_cells = semantic_cells(n)
+        index = ivf_build_index(
+            corpus, id_col, vec_col, n_cells, sample_per_cell, _n=n
+        )
     indexed, centroids = index
     spark = indexed.sparkSession
     if n_assign is None:
@@ -1621,7 +1627,7 @@ def semantic_pairs(
         assigned = indexed.select(
             "neighbor_id",
             F.explode(
-                _topn_cells_udf(spark, C, na_eff)(F.col("cvec"))
+                _nearest_cells_udf(spark, C, na_eff)(F.col("cvec"))
             ).alias("cell"),
             "cvec",
         )
@@ -1688,37 +1694,9 @@ def semantic_pairs(
         return _broadcast_pair_scores(base, cand, threshold, extra_cols=("cell",))
 
     # corpus too large to broadcast: vectors hash-join onto the
-    # already-distinct pair list (AQE picks broadcast vs shuffle).
-    # norm != 0: zero-norm vectors produce no pairs (engine-wide
-    # policy; unguarded /0 is fatal under ANSI mode)
-    withn = base.withColumn("norm", l2_norm(F.col("vec"))).where(
-        F.col("norm") != 0
-    ).localCheckpoint(eager=False)
-    va = withn.select(
-        F.col("id").alias("id_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("norm").alias("norm_a"),
-    )
-    vb = withn.select(
-        F.col("id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("norm").alias("norm_b"),
-    )
-    return (
-        cand.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "cell",
-            F.round(
-                dot_batch(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                4,
-            ).alias("score"),
-        )
-        .where(F.col("score") >= threshold)
-    )
+    # already-distinct pair list
+    withn = base.withColumn("norm", l2_norm(F.col("vec"))).localCheckpoint(eager=False)
+    return _join_pair_scores(withn, cand, threshold, extra_cols=("cell",))
 
 
 def semantic_dedup(
@@ -1821,33 +1799,37 @@ def pq_train(
     n = corpus.count() if _n is None else _n
     if n == 0:
         raise ValueError("pq_train: corpus is empty")
-    base = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pdf = (
-        _train_sample
-        if _train_sample is not None
-        else _bounded_training_sample(base, n, train_n)
-    )
-    X = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
+    if _train_sample is None:
+        base = _corpus_rows(corpus, id_col, vec_col)
+        _train_sample = _bounded_training_sample(base, n, train_n)
+    X = _stack(_train_sample["cvec"])
     if _assign_C is not None:
-        # residual mode: same argmin-L2 assignment rule as
-        # `_nearest_cell_udf`, then train on x − C[cell]
+        # residual mode: the cell assignment rule of
+        # `_nearest_cells_udf`, then train on x − C[cell]
         C = np.asarray(_assign_C, dtype=np.float64)
-        d = -2.0 * (X @ C.T) + np.einsum("ij,ij->i", C, C)
-        X = X - C[d.argmin(axis=1)]
-    dim = X.shape[1]
+        X = X - C[_nearest_cells(X, C)]
+    slices = _subspaces(X.shape[1], n_subspaces, "pq_train")
+    return np.stack(_subspace_kmeans(X, slices, n_codes))
+
+
+def _subspaces(dim: int, n_subspaces: int, who: str) -> list[slice]:
+    """The contiguous column slices of PQ's ``n_subspaces`` subspaces;
+    ``dim`` must divide evenly."""
     if dim % n_subspaces:
         raise ValueError(
-            f"pq_train: dim {dim} not divisible by n_subspaces {n_subspaces}"
+            f"{who}: dim {dim} not divisible by n_subspaces {n_subspaces}"
         )
     dsub = dim // n_subspaces
-    return np.stack(
-        [
-            _lloyd_kmeans(X[:, s * dsub : (s + 1) * dsub], n_codes, seed=7 + s)
-            for s in range(n_subspaces)
-        ]
-    )
+    return [slice(s * dsub, (s + 1) * dsub) for s in range(n_subspaces)]
+
+
+def _subspace_kmeans(X, slices: list[slice], n_codes: int, iters: int = 20) -> list:
+    """One seeded Lloyd fit per subspace (seed 7+s): `pq_train`'s
+    codebooks and each `opq_train_rotation` iteration's."""
+    return [
+        _lloyd_kmeans(X[:, sl], n_codes, iters=iters, seed=7 + s)
+        for s, sl in enumerate(slices)
+    ]
 
 
 def _pq_encode_udf(spark, books: "np.ndarray", C: "np.ndarray | None" = None):
@@ -1861,25 +1843,20 @@ def _pq_encode_udf(spark, books: "np.ndarray", C: "np.ndarray | None" = None):
     ``x − C[cell]`` (IVFADC) and the returned UDF takes a second
     ``cell`` column; without it, the raw vector."""
     bc = spark.sparkContext.broadcast(books)
+    dim = books.shape[0] * books.shape[2]
 
     def _codes_for(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
         S, _, dsub = B.shape
         codes = np.empty((len(A), S), dtype=np.int32)
         for s in range(S):
-            Xs = A[:, s * dsub : (s + 1) * dsub]
-            Cs = B[s]
-            d = -2.0 * (Xs @ Cs.T) + np.einsum("ij,ij->i", Cs, Cs)
-            codes[:, s] = d.argmin(axis=1)
+            codes[:, s] = _nearest_cells(A[:, s * dsub : (s + 1) * dsub], B[s])
         return codes
 
     if C is None:
 
         @F.pandas_udf("array<int>")
         def encode(vecs: pd.Series) -> pd.Series:
-            if not len(vecs):
-                return pd.Series([], dtype=object)
-            A = np.stack(vecs.to_numpy()).astype(np.float64)
-            return pd.Series(list(_codes_for(A, bc.value)))
+            return pd.Series(list(_codes_for(_stack(vecs, dim), bc.value)))
 
         return encode
 
@@ -1887,10 +1864,7 @@ def _pq_encode_udf(spark, books: "np.ndarray", C: "np.ndarray | None" = None):
 
     @F.pandas_udf("array<int>")
     def encode_residual(vecs: pd.Series, cells: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        A = np.stack(vecs.to_numpy()).astype(np.float64)
-        A = A - cbc.value[cells.to_numpy().astype(np.int64)]
+        A = _stack(vecs, dim) - cbc.value[cells.to_numpy().astype(np.int64)]
         return pd.Series(list(_codes_for(A, bc.value)))
 
     return encode_residual
@@ -1956,10 +1930,7 @@ def ivfpq_build_index(
     pq_train_n = 65536  # pq_train's default train_n
     shared = None
     if n <= min(ivf_train_n, pq_train_n) or ivf_train_n == pq_train_n:
-        base = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-        )
+        base = _corpus_rows(corpus, id_col, vec_col)
         shared = _bounded_training_sample(base, n, ivf_train_n)
     indexed, centroids = ivf_build_index(
         corpus, id_col, vec_col, n_cells, sample_per_cell,
@@ -1994,15 +1965,7 @@ def _pq_index_rows(assigned: DataFrame, books, C, with_norm: bool = True):
         # the ADC cosine DENOMINATOR disappears entirely, leaving only
         # numerator quantization; the standard store-the-norm trick
         # for cosine/IP over PQ codes, +8 B/vector vs dim floats)
-        cols.append(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("cvec", lambda x: x.cast("double") * x),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ).alias("norm")
-        )
+        cols.append(l2_norm(F.col("cvec")).alias("norm"))
     return assigned.select(*cols)
 
 
@@ -2155,35 +2118,15 @@ def ivfpq_probe(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = codes.sparkSession
-    if nprobe is None:
-        # constant-fraction default, like ivf_probe — a schema-
-        # metadata read, not a count (see _centroid_cells)
-        nprobe = ann_nprobe(_centroid_cells(centroids))
     code_meta = codes.schema["codes"].metadata or {}
     by_residual = bool(code_meta.get("by_residual", False))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    # rank cells per query by centroid distance; keep nprobe cells
-    qc = q.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "cell",
-        F.aggregate(
-            F.zip_with("qvec", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
-        # dot(q, C[cell]) rides the SAME crossJoin row (JVM-side) —
-        # the residual ADC numerator's centroid term, carried through
-        # the probes join so the probe never collects the centroid
-        # table driver-side (a per-probe job that measured ~0.65 s)
-        dot(F.col("qvec"), F.col("centroid")).alias("qdotc"),
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probes = (
-        qc.withColumn("cr", F.row_number().over(wq))
-        .where(F.col("cr") <= nprobe)
-        .select("query_id", "cell", "qdotc")
+    q = _query_rows(queries, id_col, vec_col)
+    # dot(q, C[cell]) rides the SAME crossJoin row (JVM-side) — the
+    # residual ADC numerator's centroid term, carried through the
+    # probes join so the probe never collects the centroid table
+    # driver-side (a per-probe job that measured ~0.65 s)
+    probes = _probe_cells(
+        centroids, q, nprobe, dot(F.col("qvec"), F.col("centroid")).alias("qdotc")
     )
 
     qpdf = q.toPandas()
@@ -2296,45 +2239,14 @@ def ivfpq_probe(
         if corpus is None:
             raise ValueError("ivfpq_probe: refine > 0 requires the raw corpus")
         shortlist = _rank_topk(scored, refine).select("query_id", "neighbor_id")
-        raw = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-        )
         exact = (
-            raw.join(F.broadcast(shortlist), "neighbor_id")
+            _corpus_rows(corpus, id_col, vec_col)
+            .join(F.broadcast(shortlist), "neighbor_id")
             .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("score"),
-            )
+            .select("query_id", "neighbor_id", _exact_score())
         )
         return _rank_topk(exact, k)
     return _rank_topk(scored, k)
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_cells: int | None = None,
-    n_subspaces: int = 8,
-    n_codes: int = 256,
-    nprobe: int | None = None,
-    by_residual: bool = True,
-) -> DataFrame:
-    """One-shot IVF-PQ approximate top-k (build + encode + probe
-    fused). Prefer the split build/probe pair when the index is
-    reused — same argument as `ivf_topk`. None dials derive from the
-    corpus size (`ann_cells`/`ann_nprobe`)."""
-    codes, centroids, books = ivfpq_build_index(
-        corpus, id_col, vec_col, n_cells, n_subspaces, n_codes,
-        by_residual=by_residual,
-    )
-    return ivfpq_probe(
-        codes, centroids, books, queries, id_col, vec_col, k, nprobe
-    )
 
 
 def rotation_matrix(dim: int, seed: int = 0x0501) -> "np.ndarray":
@@ -2382,29 +2294,18 @@ def opq_train_rotation(
     n = corpus.count()
     if n == 0:
         raise ValueError("opq_train_rotation: corpus is empty")
-    base = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pdf = _bounded_training_sample(base, n, train_n)
-    X = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
-    dim = X.shape[1]
-    if dim % n_subspaces:
-        raise ValueError(
-            f"opq_train_rotation: dim {dim} not divisible by "
-            f"n_subspaces {n_subspaces}"
-        )
-    dsub = dim // n_subspaces
-    R = rotation_matrix(dim, seed)
+    base = _corpus_rows(corpus, id_col, vec_col)
+    X = _stack(_bounded_training_sample(base, n, train_n)["cvec"])
+    slices = _subspaces(X.shape[1], n_subspaces, "opq_train_rotation")
+    R = rotation_matrix(X.shape[1], seed)
     for _ in range(n_iters):
         Y = X @ R
         # (a) PQ fit + reconstruct on the current rotation (same
         # seeded Lloyd as pq_train, modest per-iter budget)
         Yhat = np.empty_like(Y)
-        for s in range(n_subspaces):
-            Ys = Y[:, s * dsub : (s + 1) * dsub]
-            Cs = _lloyd_kmeans(Ys, min(n_codes, len(Ys)), iters=pq_iters, seed=7 + s)
-            d = -2.0 * (Ys @ Cs.T) + np.einsum("ij,ij->i", Cs, Cs)
-            Yhat[:, s * dsub : (s + 1) * dsub] = Cs[d.argmin(axis=1)]
+        books = _subspace_kmeans(Y, slices, min(n_codes, len(Y)), pq_iters)
+        for sl, Cs in zip(slices, books):
+            Yhat[:, sl] = Cs[_nearest_cells(Y[:, sl], Cs)]
         # (b) orthogonal Procrustes toward the reconstruction
         U, _, Vt = np.linalg.svd(X.T @ Yhat)
         R = U @ Vt
@@ -2457,10 +2358,7 @@ def rotate_embeddings(
 
     @F.pandas_udf("array<double>")
     def _rot(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        X = np.stack(vecs.to_numpy()).astype(np.float64)
-        return pd.Series(list(X @ bc.value.T))
+        return pd.Series(list(_stack(vecs, len(Q)) @ bc.value.T))
 
     return df.withColumn(out_col or vec_col, _rot(F.col(vec_col)))
 
@@ -2496,10 +2394,8 @@ def max_eval_cosine_udf(
 
     @F.pandas_udf("double")
     def max_cos(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=np.float64)
         Em, enm = bc.value
-        X = np.stack(vecs.to_numpy()).astype(np.float64)
+        X = _stack(vecs, Em.shape[1])
         xn = np.linalg.norm(X, axis=1)
         sims = (X @ Em.T) / np.maximum(np.outer(xn, enm), 1e-300)
         out = sims.max(axis=1)
@@ -2547,21 +2443,3 @@ def decontaminate_semantic(
     ).withColumn(
         "is_contaminated", F.col("max_eval_cosine") >= F.lit(threshold)
     )
-
-
-def pq_compression_stats(
-    dim: int, n_subspaces: int, n_codes: int, raw_bytes_per_dim: int = 4
-) -> dict:
-    """The sizing arithmetic for the PQ decision: bytes per vector raw
-    vs coded (ceil(log2(n_codes))/8 per subspace), and the ratio. At
-    dim=768/S=8/K=256: 3072 B -> 8 B, ratio 384."""
-    import math
-
-    code_bits = max(1, math.ceil(math.log2(n_codes)))
-    raw = dim * raw_bytes_per_dim
-    coded = max(1, (n_subspaces * code_bits + 7) // 8)
-    return {
-        "raw_bytes": raw,
-        "code_bytes": coded,
-        "compression_ratio": round(raw / coded, 1),
-    }

@@ -83,29 +83,3 @@ def read_jsonl(
         bad = bad.localCheckpoint(eager=True)  # one scan, one truth
         bad.write.mode("append").parquet(quarantine_path)
     return good, bad
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = None,
-) -> None:
-    """Write newline-delimited JSON — ``read_jsonl``'s sink twin, for
-    handing a curated corpus back to tools that speak JSONL (tokenizer
-    trainers, labeling UIs, other engines).
-
-    Spark's native json sink already emits one object per line per
-    row, distributed, no Python in the row path. ``compression``:
-    leave None for splittable re-reads (a gzip .jsonl.gz is ONE
-    stream per file — re-ingest parallelism collapses to the file
-    count unless files are kept small); 'gzip'/'zstd' when the
-    consumer wants small transfer files more than splittability.
-    Column types survive a round-trip through ``read_jsonl`` with the
-    same schema; binary columns do NOT belong in JSONL (base64 them
-    explicitly upstream if unavoidable).
-    """
-    w = df.write.mode(mode)
-    if compression is not None:
-        w = w.option("compression", compression)
-    w.json(path)

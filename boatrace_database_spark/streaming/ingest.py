@@ -1961,7 +1961,7 @@ def stream_dedup_semantic(
     shape of ``stream_decontaminate``. Pass the SAME centroids to the
     batch ``semantic_pairs(..., index=...)`` and the twins agree:
     cell assignment reuses the batch Arrow kernels verbatim
-    (`_nearest_cell_udf` / `_topn_cells_udf` run fine pre-state on a
+    (`_nearest_cells_udf` runs fine pre-state on a
     streaming frame), and scoring is the same float64 dot/norm
     arithmetic. Watch ``ivf_cell_stats`` on the accumulating corpus:
     centroid drift showing up as ballooning cells is the signal to
@@ -1980,8 +1980,7 @@ def stream_dedup_semantic(
     import pandas as pd
 
     from boatrace_database_spark.operators.similarity import (
-        _nearest_cell_udf,
-        _topn_cells_udf,
+        _nearest_cells_udf,
         centroid_matrix,
     )
 
@@ -1997,23 +1996,13 @@ def stream_dedup_semantic(
     # cell ids (see centroid_matrix)
     C = centroid_matrix(centroids)
 
-    vecs = spark.readStream.schema(schema).parquet(source_dir)
-    if n_assign == 1:
-        assigned = vecs.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            _nearest_cell_udf(spark, C)(F.col(vec_col)).alias("cell"),
-        )
-    else:
-        assigned = vecs.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.explode(
-                _topn_cells_udf(spark, C, min(n_assign, len(C)))(
-                    F.col(vec_col)
-                )
-            ).alias("cell"),
-        )
+    # the n nearest cells, nearest first (n_assign=1: the build's cell)
+    cells = _nearest_cells_udf(spark, C, min(n_assign, len(C)))
+    assigned = spark.readStream.schema(schema).parquet(source_dir).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        F.explode(cells(F.col(vec_col))).alias("cell"),
+    )
 
     def with_norm(x):
         v = np.asarray(x, dtype=np.float64)
@@ -2129,7 +2118,7 @@ def stream_ivfpq_ingest(
     against the index it feeds. Stream-static and STATELESS like
     `stream_decontaminate_semantic`: assignment and encoding are the
     batch add's own row encoder (`similarity._pq_extend_rows`, over the
-    Arrow kernels `_nearest_cell_udf` and `_pq_encode_udf` — both
+    Arrow kernels `_nearest_cells_udf` and `_pq_encode_udf` — both
     deterministic), so every emitted row is byte-identical to what
     `ivfpq_add_to_index` would append for the same vector: exact batch
     parity under ANY arrival order, no state, no shuffle, no

@@ -647,68 +647,6 @@ def export_orc(
     w.orc(path)
 
 
-def import_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Read an ORC table written by ``export_orc`` (or any engine) —
-    schema comes from the ORC footers; filters and projections push
-    into the stripe scan exactly as with parquet."""
-    return spark.read.orc(path)
-
-
-def bucket_write(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a HASH-BUCKETED (optionally bucket-sorted)
-    parquet table in the session catalog — the storage-layout lever
-    for SHUFFLE-FREE joins and aggregations on the bucket key.
-
-    Every row lands in bucket hash(bucket_cols) % n_buckets, recorded
-    in the catalog. A join between two tables bucketed on the join key
-    with the SAME bucket count satisfies the join's distribution
-    requirement straight off disk: the SortMergeJoin runs with ZERO
-    Exchange on either input (plan-asserted in tests — the scans show
-    ``Bucketed: true``), and a groupBy on the bucket key skips its
-    exchange the same way. At 100 TB this converts every repeated
-    fact-fact join on a canonical key (orders⋈customer, doc⋈chunk,
-    train⋈features) from a full network shuffle of both sides into a
-    bucket-aligned local merge — the single biggest recurring-shuffle
-    eliminator Spark offers, paid for ONCE at write time (the write
-    itself shuffles into buckets).
-
-    Sizing: pick n_buckets so one bucket ≈ 100-500 MB (bucket count is
-    fixed at write time — both join sides must agree; Spark can coalesce
-    a larger count onto a smaller one's layout only when one divides
-    the other and spark.sql.bucketing.coalesceBucketsInJoin.enabled).
-    ``sort_cols`` pre-sorts within each bucket file: with one file per
-    bucket Spark can also elide the join's Sort; with several it still
-    tightens parquet row-group zone maps on the sort key.
-
-    Catalog note: ``saveAsTable`` writes under spark.sql.warehouse.dir
-    and registers in the session metastore — the cluster deployment
-    writes once and every later job (any session sharing the
-    metastore) gets the bucketed layout for free. Plain
-    ``spark.read.parquet`` of the same files would NOT see bucketing:
-    the layout lives in table metadata, so always read via
-    ``spark.table(name)``.
-    """
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if not bucket_cols:
-        raise ValueError("bucket_cols must be non-empty")
-    writer = (
-        df.write.format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .mode(mode)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def _zorder_bucket(col: F.Column, mn, mx, bits: int) -> F.Column:
     """Value-uniform bucket of a numeric/date/timestamp column into
     [0, 2^bits): floor((v - min) / (max - min) * 2^bits), clamped.

@@ -10,6 +10,14 @@ Only the named queries are hashed when names are given.
 Canonicalization: rows are rendered with repr() per value (full float
 precision — an ulp-level drift shows up), sorted lexicographically so
 nondeterministic row order doesn't alias as a diff.
+
+A query that fails is recorded with its error and the sweep goes on,
+as long as the Spark session is still alive (the boatrace-domain
+entries fail with `AnalysisException` on a host without the reference
+tree). A failure that leaves the session dead — the JVM went away —
+stops the sweep with a non-zero exit naming that query, and no JSON is
+written: every later query would otherwise be recorded as
+`ConnectionRefusedError` and show up as a "moved" hash.
 """
 
 from __future__ import annotations
@@ -19,6 +27,8 @@ import json
 import os
 import sys
 
+from py4j.protocol import Py4JError
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from boatrace_database_spark.queries import QUERIES  # noqa: E402
@@ -27,6 +37,18 @@ from boatrace_database_spark.session import get_spark  # noqa: E402
 
 def row_repr(row) -> str:
     return repr(tuple(row))
+
+
+def session_alive(spark) -> bool:
+    """True while the session's SparkContext runs: a stopped context
+    has no Java handle, and a lost JVM refuses the py4j call."""
+    jsc = spark.sparkContext._jsc
+    if jsc is None:
+        return False
+    try:
+        return not jsc.sc().isStopped()
+    except (Py4JError, OSError):
+        return False
 
 
 def main() -> None:
@@ -44,7 +66,12 @@ def main() -> None:
                 "rows": len(rows),
                 "sha": hashlib.sha256(canon.encode()).hexdigest(),
             }
-        except Exception as exc:  # pragma: no cover - diagnostic path
+        except Exception as exc:
+            if not session_alive(spark):
+                sys.exit(
+                    f"snapshot_hashes: Spark session lost at query {name!r} "
+                    f"({exc!r:.200}); no hashes written"
+                )
             hashes[name] = {"rows": None, "sha": None, "err": repr(exc)[:200]}
         print(f"  {name}: {hashes[name]}", file=sys.stderr)
     with open(out_path, "w") as f:

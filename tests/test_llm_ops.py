@@ -807,7 +807,8 @@ def test_ivf_recall_vs_brute_force(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 20)
     exact = SIM.cosine_topk(emb, queries, k=10).collect()
-    approx = SIM.ivf_topk(emb, queries, k=10, n_cells=16, nprobe=4).collect()
+    index = SIM.ivf_build_index(emb, n_cells=16)
+    approx = SIM.ivf_probe(*index, queries, k=10, nprobe=4).collect()
     es, aps = {}, {}
     for r in exact:
         es.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -846,8 +847,8 @@ def test_clustered_corpus_recall(spark):
     queries = emb.where(F.col("vec_id") < 10)
     exact = _recall_sets(SIM.cosine_topk(emb, queries, k=10).collect())
     ivf = _recall_sets(
-        SIM.ivf_topk(
-            emb, queries, k=10, n_cells=k_clusters, nprobe=1
+        SIM.ivf_probe(
+            *SIM.ivf_build_index(emb, n_cells=k_clusters), queries, k=10, nprobe=1
         ).collect()
     )
     recalls = [
@@ -1021,6 +1022,35 @@ def test_ivf_cell_stats_matches_direct_counts(spark):
     assert row.n_vectors == sum(sizes)
     assert row.min_cell == min(sizes)
     assert row.max_cell == max(sizes)
+
+
+def test_nearest_cells_kernel_ties_order_and_argmin():
+    """The one nearest-centroid kernel behind the IVF build, the
+    incremental add, SemDeDup multi-assignment, PQ and the stream twin:
+    an exact distance tie goes to the lower cell id, the top-n order is
+    ascending distance then cell id, and n=1 is the argmin."""
+    import numpy as np
+
+    # cells 1 and 3 coincide; cell 0 is far from every query
+    C = np.array([[0.0, 3.0], [1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [-1.0, 0.0]])
+    A = np.array([[1.0, 1.0], [2.0, 0.0], [0.0, 0.0], [-1.0, 0.1]])
+    assert SIM._nearest_cells(A, C).tolist() == [1, 1, 1, 4]
+    assert SIM._nearest_cells(A, C, 5).tolist() == [
+        [1, 2, 3, 0, 4],  # three-way tie 1/2/3, then a 0/4 tie
+        [1, 3, 2, 4, 0],  # 1 and 3 tie exactly
+        [1, 2, 3, 4, 0],  # four-way tie
+        [4, 2, 1, 3, 0],
+    ]
+    # integer grids make many exact ties; distances are exact there
+    rng = np.random.default_rng(3)
+    A = rng.integers(-2, 3, (200, 4)).astype(np.float64)
+    C = rng.integers(-2, 3, (16, 4)).astype(np.float64)
+    D = ((A[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+    top = SIM._nearest_cells(A, C, 16)
+    for i in range(len(A)):
+        assert top[i].tolist() == sorted(range(16), key=lambda j: (D[i, j], j))
+    assert (SIM._nearest_cells(A, C, 1)[:, 0] == SIM._nearest_cells(A, C)).all()
+    assert (SIM._nearest_cells(A, C) == D.argmin(axis=1)).all()
 
 
 def test_ivf_build_deterministic(spark):
@@ -1216,7 +1246,6 @@ def test_semantic_pairs_prebuilt_index_matches_in_call_build(spark):
     assert a == b
 
 
-@pytest.mark.slow
 def test_semantic_pairs_string_ids_both_strategies(spark):
     """semantic_pairs is the second caller of _broadcast_pair_scores:
     string ids must survive the whole chain (IVF build's orderBy +
@@ -1246,7 +1275,6 @@ def test_semantic_pairs_string_ids_both_strategies(spark):
         assert r.keeper_id <= r.id  # lexicographic min keeper
 
 
-@pytest.mark.slow
 def test_zero_norm_vectors_produce_no_pairs_any_strategy(spark):
     """Engine-wide zero-norm policy: a padding / failed-encode vector
     (all zeros) yields NO pairs and NO crash on every scoring path —
@@ -2297,8 +2325,9 @@ def test_ivfpq_lossless_equals_exact(spark):
     }
     pq = {
         (r.query_id, r.rk): (r.neighbor_id, r.score)
-        for r in SIM.ivfpq_topk(
-            emb, queries, k=5, n_cells=4, n_subspaces=8, n_codes=512, nprobe=4
+        for r in SIM.ivfpq_probe(
+            *SIM.ivfpq_build_index(emb, n_cells=4, n_subspaces=8, n_codes=512),
+            queries, k=5, nprobe=4,
         ).collect()
     }
     assert pq == exact
@@ -2316,13 +2345,10 @@ def test_ivfpq_recall_floor_and_determinism(spark):
     exact = SIM.cosine_topk(emb, queries, k=10).collect()
 
     def run():
-        return SIM.ivfpq_topk(
-            emb,
+        return SIM.ivfpq_probe(
+            *SIM.ivfpq_build_index(emb, n_cells=16, n_subspaces=16, n_codes=256),
             queries,
             k=10,
-            n_cells=16,
-            n_subspaces=16,
-            n_codes=256,
             nprobe=8,
         ).collect()
 
@@ -2420,9 +2446,12 @@ def test_ivfpq_residual_beats_raw_recall(spark):
     exact = SIM.cosine_topk(emb, queries, k=10).collect()
 
     def run(by_residual):
-        return SIM.ivfpq_topk(
-            emb, queries, k=10, n_cells=16, n_subspaces=16,
-            n_codes=256, nprobe=8, by_residual=by_residual,
+        return SIM.ivfpq_probe(
+            *SIM.ivfpq_build_index(
+                emb, n_cells=16, n_subspaces=16, n_codes=256,
+                by_residual=by_residual,
+            ),
+            queries, k=10, nprobe=8,
         ).collect()
 
     res, raw = run(True), run(False)
@@ -2473,8 +2502,9 @@ def test_rotation_lifts_pq_recall_on_decaying_spectrum(spark):
 
     def run(df):
         q = df.where(F.col("vec_id") < 10)
-        return SIM.ivfpq_topk(
-            df, q, k=10, n_cells=16, n_subspaces=16, n_codes=256, nprobe=8
+        return SIM.ivfpq_probe(
+            *SIM.ivfpq_build_index(df, n_cells=16, n_subspaces=16, n_codes=256),
+            q, k=10, nprobe=8,
         ).collect()
 
     r_raw = _recall_of(exact, run(emb))
@@ -2485,7 +2515,6 @@ def test_rotation_lifts_pq_recall_on_decaying_spectrum(spark):
     assert r_rot > r_raw + 0.1, f"rotated {r_rot:.3f} vs raw {r_raw:.3f}"
 
 
-@pytest.mark.slow
 def test_opq_learned_rotation_beats_random(spark):
     """Round-9 OPQ proper (r8 verdict #8): the learned rotation
     (alternating PQ-fit / orthogonal Procrustes, seeded random init)
@@ -2531,8 +2560,9 @@ def test_opq_learned_rotation_beats_random(spark):
     def run(Rm):
         rot = SIM.rotate_embeddings(emb, matrix=Rm).localCheckpoint(eager=True)
         q = rot.where(F.col("vec_id") < 10)
-        return SIM.ivfpq_topk(
-            rot, q, k=10, n_cells=16, n_subspaces=8, n_codes=64, nprobe=8
+        return SIM.ivfpq_probe(
+            *SIM.ivfpq_build_index(rot, n_cells=16, n_subspaces=8, n_codes=64),
+            q, k=10, nprobe=8,
         ).collect()
 
     r_rand = _recall_of(exact, run(R0))
@@ -2540,7 +2570,6 @@ def test_opq_learned_rotation_beats_random(spark):
     assert r_opq > r_rand + 0.03, f"opq {r_opq:.3f} vs random {r_rand:.3f}"
 
 
-@pytest.mark.slow
 def test_ivfpq_add_to_index_equals_full_encode(spark):
     """Incremental maintenance contract (round 8): building on half
     the corpus and appending the other half must produce EXACTLY the
@@ -2576,7 +2605,6 @@ def test_ivfpq_add_to_index_equals_full_encode(spark):
     assert any(v % 2 == 1 for v in neigh)
 
 
-@pytest.mark.slow
 def test_ivfpq_persist_roundtrip(spark, tmp_path):
     """write -> read -> probe must equal the in-memory probe row for
     row (codes partitioned by cell; codebook tensor reassembled
@@ -2711,18 +2739,6 @@ def test_ivfpq_dim_not_divisible_raises(spark):
         SIM.pq_train(emb, n_subspaces=7)
 
 
-def test_pq_compression_stats_arithmetic():
-    s = SIM.pq_compression_stats(dim=768, n_subspaces=8, n_codes=256)
-    assert s == {
-        "raw_bytes": 3072,
-        "code_bytes": 8,
-        "compression_ratio": 384.0,
-    }
-    s64 = SIM.pq_compression_stats(dim=64, n_subspaces=16, n_codes=256)
-    assert s64["raw_bytes"] == 256 and s64["code_bytes"] == 16
-
-
-@pytest.mark.slow
 def test_ivfpq_refine_recovers_clustered_ranking(spark):
     """The clustered-corpus finding (BENCHNOTES §29): with real cluster
     structure, cell pruning is nearly free but every candidate is
@@ -3059,7 +3075,6 @@ def test_semantic_pairs_derived_cells_match_explicit(spark):
     assert a == b
 
 
-@pytest.mark.slow
 def test_gram_strategy_matches_join_fallback(spark):
     """The default per-cell Gram scoring (round 10) must produce
     row-identical output to the candidate-join fallback
@@ -3278,7 +3293,6 @@ def test_banding_cap_fracs_healthy_at_demo_scale(spark):
         assert 0.0 <= v < 0.2, (k, v)
 
 
-@pytest.mark.slow
 def test_ivf_maintenance_membership(spark):
     """The round-12 catalog row's invariants, asserted directly: after
     build(80%) -> add(20%, frozen quantizer) -> remove(every 7th id),

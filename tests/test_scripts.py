@@ -71,3 +71,92 @@ def test_code_lines_skips_docstrings_comments_and_blanks():
     )
     # import, def, the two lines of s, return, class, y
     assert module.code_lines(source) == 7
+
+
+class _StubContext:
+    """Answers `_jsc.sc().isStopped()` like a live SparkContext until
+    the session is lost, then raises like py4j with the JVM gone."""
+
+    def __init__(self):
+        self.lost = False
+        self._jsc = self
+
+    def setLogLevel(self, level):
+        pass
+
+    def sc(self):
+        return self
+
+    def isStopped(self):
+        if self.lost:
+            raise ConnectionRefusedError(111, "Connection refused")
+        return False
+
+
+class _StubSession:
+    def __init__(self):
+        self.sparkContext = _StubContext()
+
+
+class _Rows:
+    def __init__(self, rows):
+        self.rows = rows
+
+    def collect(self):
+        return self.rows
+
+
+def _snapshot_module(monkeypatch, queries, out):
+    spec = importlib.util.spec_from_file_location(
+        "snapshot_hashes", ROOT / "scripts" / "snapshot_hashes.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    session = _StubSession()
+    monkeypatch.setattr(module, "get_spark", lambda name: session)
+    monkeypatch.setattr(module, "QUERIES", queries)
+    monkeypatch.setattr("sys.argv", ["snapshot_hashes.py", "sf", str(out)])
+    return module, session
+
+
+def test_snapshot_hashes_records_errors_of_a_live_session(monkeypatch, tmp_path):
+    import json
+
+    def domain(spark, sf_dir):
+        raise RuntimeError("AnalysisException: PATH_NOT_FOUND")
+
+    out = tmp_path / "hashes.json"
+    queries = {
+        "a": lambda spark, sf_dir: _Rows([(1, "x")]),
+        "domain": domain,
+        "b": lambda spark, sf_dir: _Rows([]),
+    }
+    module, _ = _snapshot_module(monkeypatch, queries, out)
+    module.main()
+    hashes = json.loads(out.read_text())
+    assert sorted(hashes) == ["a", "b", "domain"]
+    assert hashes["a"]["rows"] == 1 and hashes["a"]["sha"]
+    assert hashes["domain"]["sha"] is None
+    assert "PATH_NOT_FOUND" in hashes["domain"]["err"]
+
+
+def test_snapshot_hashes_stops_when_the_session_is_lost(monkeypatch, tmp_path):
+    out = tmp_path / "hashes.json"
+
+    def lose_jvm(spark, sf_dir):
+        spark.sparkContext.lost = True
+        raise ConnectionRefusedError(111, "Connection refused")
+
+    after = []
+    queries = {
+        "a": lambda spark, sf_dir: _Rows([(1,)]),
+        "media_frame_sample": lose_jvm,
+        "later": lambda spark, sf_dir: after.append(1) or _Rows([]),
+    }
+    module, _ = _snapshot_module(monkeypatch, queries, out)
+    with pytest.raises(SystemExit) as exc:
+        module.main()
+    assert exc.value.code not in (0, None)
+    assert "media_frame_sample" in str(exc.value.code)
+    assert not after  # the sweep stopped at the lost query
+    assert not out.exists()

@@ -340,23 +340,6 @@ def test_approx_agg_close_to_exact(spark):
 
 
 @pytest.mark.requires_reference
-def test_odds_map_view(spark, wh):
-    from boatrace_database_spark.gold import odds_map_view
-
-    _, tables = wh
-    m = odds_map_view(tables["odds"])
-    row = m.orderBy("race_id").limit(1).collect()[0]
-    assert set(row.payouts.keys()) == {
-        "単勝", "複勝1", "複勝2", "2連単", "2連複",
-        "拡連複12", "拡連複13", "拡連複23", "3連単", "3連複",
-    }
-    # sentinel -1 becomes NULL in the map
-    n_null = m.where(F.col("payouts")["複勝2"].isNull()).count()
-    flat_null = tables["odds"].where(F.col("複勝2") == "-1").count()
-    assert n_null == flat_null
-
-
-@pytest.mark.requires_reference
 def test_merge_upsert_late_corrections(spark, tmp_path):
     out = str(tmp_path / "m")
     W.build_warehouse(spark, TXT, out)
@@ -939,65 +922,14 @@ def test_zorder_bucket_nulls_land_in_bucket_zero(spark):
 
 
 # --------------------------------------------------------------------------
-# bucketed tables (warehouse.bucket_write): shuffle-free co-located joins
-def test_bucket_write_join_has_no_exchange(spark, sf_dir):
-    from boatrace_database_spark.warehouse import bucket_write
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    try:
-        bucket_write(o, "t_b_orders", ["o_custkey"], 8, sort_cols=["o_custkey"])
-        bucket_write(c, "t_b_customer", ["c_custkey"], 8, sort_cols=["c_custkey"])
-        bo, bc = spark.table("t_b_orders"), spark.table("t_b_customer")
-        # force SMJ (broadcast would trivially skip the exchange)
-        j = (
-            bo.hint("merge")
-            .join(bc, bo.o_custkey == bc.c_custkey)
-            .select("o_orderkey", "c_mktsegment")
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        # the whole point: both sides come off disk already distributed
-        assert "Exchange" not in plan
-        assert plan.count("Bucketed: true") == 2
-        # correctness: identical to the plain (non-bucketed) join
-        plain = (
-            o.join(c, o.o_custkey == c.c_custkey)
-            .select("o_orderkey", "c_mktsegment")
-        )
-        assert sorted(map(tuple, j.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-        # groupBy on the bucket key also needs no exchange before the agg
-        g = bo.groupBy("o_custkey").count()
-        gplan = g._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in gplan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_b_orders")
-        spark.sql("DROP TABLE IF EXISTS t_b_customer")
-
-
-def test_bucket_write_guards(spark, sf_dir):
-    import pytest as _pytest
-
-    from boatrace_database_spark.warehouse import bucket_write
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    with _pytest.raises(ValueError, match="n_buckets"):
-        bucket_write(o, "t_bad", ["o_custkey"], 0)
-    with _pytest.raises(ValueError, match="bucket_cols"):
-        bucket_write(o, "t_bad", [], 8)
-
-
-# --------------------------------------------------------------------------
-# ORC + JSONL interchange (warehouse.export_orc / sources.jsonl.write_jsonl)
+# ORC + JSONL interchange (warehouse.export_orc / sources.jsonl.read_jsonl)
 def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
-    from boatrace_database_spark.warehouse import export_orc, import_orc
+    from boatrace_database_spark.warehouse import export_orc
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     path = str(tmp_path / "orders_orc")
     export_orc(o, path, partition_by=["o_orderpriority"])
-    back = import_orc(spark, path)
+    back = spark.read.orc(path)
     # round-trip equality (partition column moves to the end; compare as sets)
     cols = sorted(o.columns)
     assert sorted(back.columns) == cols
@@ -1021,13 +953,13 @@ def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
 
 
 def test_jsonl_write_read_roundtrip(spark, sf_dir, tmp_path):
-    from boatrace_database_spark.sources.jsonl import read_jsonl, write_jsonl
+    from boatrace_database_spark.sources.jsonl import read_jsonl
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     path = str(tmp_path / "docs_jsonl")
-    write_jsonl(d, path)
+    d.write.mode("overwrite").json(path)
     good, bad = read_jsonl(spark, f"{path}/*.json", d.schema)
     assert bad.count() == 0
     assert sorted(map(tuple, good.collect())) == sorted(map(tuple, d.collect()))
