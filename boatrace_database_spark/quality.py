@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from boatrace_database_spark.operators import dedup as D
 from boatrace_database_spark.operators import similarity as SIM
+from boatrace_database_spark.queries._util import load_table
 
 
 def _topk_sets(rows) -> dict[int, set[int]]:
@@ -47,7 +48,7 @@ def ann_recalls(
     """Mean top-k recall of the LSH and IVF ANN paths vs brute-force
     cosine (the tests/test_llm_ops.py definitions, bounded query set so
     the exact baseline stays cheap at sf0.1)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     queries = emb.where(F.col("vec_id") < n_queries)
     exact = _topk_sets(SIM.cosine_topk(emb, queries, k=k).collect())
@@ -194,7 +195,7 @@ def dedup_recalls(
     all-pairs exact op; above it (sf1's 50k docs, where the exact
     baseline's candidate joins exhausted workers — BENCHNOTES §38) an
     anchored-sample truth, linear in corpus size."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     anchored = docs.count() > max_docs
     if anchored:
         anchor_ids, exact = _anchored_jaccard_truth(docs)
@@ -282,7 +283,7 @@ def _anchored_cosine_truth(
     operator buckets by)."""
     import numpy as np
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     anchors_pdf = (
         emb.select(
             "vec_id",
@@ -372,7 +373,7 @@ def _exact_cosine_pairs(
     key = (sf_dir, max_vectors, _corpus_fingerprint(path))
     if key not in _GT_CACHE:
         _GT_CACHE.clear()  # single entry: bound memory, drop stale
-        emb = spark.read.parquet(path)
+        emb = load_table(spark, sf_dir, "embeddings")
         if emb.count() > max_vectors:
             _GT_CACHE[key] = None
         else:
@@ -403,7 +404,7 @@ def lsh_cosine_pairs_recall(
     the catalog operating point) against exact truth: full all-pairs
     under the size gate, anchored-sample above it (so the number exists
     at any sf — r8 verdict #3)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     lsh = {
         (r.id_a, r.id_b)
         for r in SIM.cosine_pairs_lsh(emb, threshold=threshold).collect()
@@ -426,7 +427,7 @@ def semantic_dedup_recall(
     construction (within-cell scoring is exact), so recall is the one
     number that moves with n_assign/n_cells. Truth is full all-pairs
     under the size gate, anchored-sample above it (r8 verdict #3)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     sem = {
         (r.id_a, r.id_b)
         for r in SIM.semantic_pairs(
@@ -459,7 +460,7 @@ def media_pair_recalls(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         media_dedup_dhash,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
 
     out: dict[str, float] = {}
     for key, fn, group in (
@@ -519,7 +520,7 @@ def banding_cap_fracs(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         row = D.banding_cap_stats(banded, keys, 256).collect()[0]
         return round(row.capped_row_frac, 6)
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     out: dict[str, float] = {}
     mh_sig = D.minhash_table(docs, "doc_id", "text", 32, 3)
     out["minhash_capped_frac"] = frac(

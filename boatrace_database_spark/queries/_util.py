@@ -1,72 +1,37 @@
-"""Shared table loader for the query catalog.
-
-events.parquet's ts encoding has drifted between driver rounds
-(TIMESTAMP(NANOS) → timestamp[us]); ``timeutil.normalize_ts`` absorbs
-every observed encoding so `ts` is always a plain TimestampType
-downstream. The nanosAsLong conf is still set defensively (it is a
-dynamic SQL conf) for the NANOS case, which Spark's reader otherwise
-rejects (PARQUET_TYPE_ILLEGAL). DuckDB reads the same file natively;
-sub-microsecond ordering ties are broken by event_id in every catalog
-query, so micro truncation cannot flip results.
-"""
+"""Shared table loader for the query catalog."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from boatrace_database_spark.schemas import CATALOG_SCHEMAS
 from boatrace_database_spark.timeutil import normalize_ts
-
-# Parquet-footer SCHEMA cache: (app, path) -> (freshness token, schema),
-# one entry per path, so a rewrite replaces its entry. Schema inference
-# for an unknown parquet path runs a real 1-task Spark job per
-# spark.read.parquet call; with every catalog query re-reading 1-4
-# tables per invocation those inference jobs were ~10-20% of the wall
-# time of the small star-schema queries (r13 cost profile: q1 ran 6
-# jobs for 0.5 s of executor work). METADATA-only reuse — the same
-# class as Spark's own per-session file-index cache: every invocation
-# still scans the parquet data itself. Keyed by applicationId so a new
-# session (or a driver-supplied one) never sees a stale entry from a
-# previous app, and by full path so different sf_dirs never collide.
-_SCHEMA_CACHE: dict = {}
-
-
-def _freshness_token(path: str):
-    """Cheap invalidation token for a local/posix parquet path: (mtime,
-    size) of the file or of the directory entry for a parquet dir —
-    rewriting a path changes both, so a same-application rewrite with a
-    different schema re-infers instead of silently reading nulls
-    through a stale explicit schema (ADVICE r13). Non-posix paths
-    (s3a:// etc.) return None — immutable-catalog discipline applies
-    there, and a miss only costs the original inference job."""
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_mtime_ns, st.st_size)
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    token = _freshness_token(path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is None or cached[0] != token:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = (token, df.schema)
-        return df
-    return spark.read.schema(cached[1]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read catalog table ``name`` from ``{sf_dir}/{name}.parquet`` with
+    its declared schema, ``schemas.CATALOG_SCHEMAS[name]``: one read
+    path, and no footer-inference job before the scan.
+
+    Input contract:
+
+    - The files carry the declared columns with the declared types.
+    - A type drift fails the read: a ``ts`` stored as TIMESTAMP(NANOS),
+      say, raises ``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``
+      when the rows are collected.
+    - A MISSING column is not refused: Spark reads it as nulls. Only the
+      schema-equality test (``tests/test_catalog_schemas.py``) guards
+      against that, by checking the declarations against the files.
+
+    ``events`` goes through ``timeutil.normalize_ts``, so ``ts`` is a
+    plain TIMESTAMP downstream.
+    """
     # the driver calls queries() on ITS OWN session — pin the dynamic
     # confs our results depend on (timestamp rendering must match the
     # UTC-naive DuckDB oracle regardless of the host session's defaults)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_ts(_read_parquet(spark, f"{sf_dir}/events.parquet"))
-    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(CATALOG_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_ts(df) if name == "events" else df
 
 
 def cents(col, digits: int = 2):

@@ -1,4 +1,5 @@
-"""Schemas for the boatrace warehouse (silver / gold).
+"""Schemas for the boatrace warehouse (silver / gold) and the query
+catalog's star-schema tables.
 
 The reference stores every column as SQLite TEXT (see SURVEY §1.1;
 reference main.py:104-108 declares header names only). Silver keeps the
@@ -80,4 +81,44 @@ WAREHOUSE_SCHEMAS = {
         ("race_meta", RACE_META_COLUMNS),
         ("race", RACE_COLUMNS),
     )
+}
+
+
+# The query catalog's input tables (the driver's star schema), declared
+# as stored: each DDL string equals the schema Spark infers from the
+# table's parquet footer (pyarrow's zone-less ``timestamp[us]`` reads as
+# TIMESTAMP_NTZ). ``queries._util.load_table`` reads with these, so no
+# read launches a footer-inference job.
+CATALOG_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
 }

@@ -63,8 +63,6 @@ def get_spark(app_name: str = "boatrace_database_spark", master: str | None = No
         )
         # -- determinism for oracle comparison ----------------------------
         .config("spark.sql.session.timeZone", "UTC")
-        # -- testdata compatibility: events.parquet uses TIMESTAMP(NANOS)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # -- storage ------------------------------------------------------
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

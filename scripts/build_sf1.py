@@ -41,6 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from boatrace_database_spark.schemas import CATALOG_SCHEMAS  # noqa: E402
 from boatrace_database_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -112,10 +113,7 @@ def main() -> None:
     dst_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     spark = get_spark("build-sf1")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
+    for name in CATALOG_SCHEMAS:
         build_table(spark, name, dst_dir)
     # integrity spot checks: row counts and one join fan-out
     li = spark.read.parquet(f"{dst_dir}/lineitem.parquet")

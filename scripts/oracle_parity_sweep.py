@@ -26,10 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # var must not silently turn the 10x sweep into a re-run of the gate's
 # own scale — pass the dir explicitly or take the sf0.1 default
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 _TEMP_DIR = "/tmp/oracle_sweep_duckdb_tmp"
 
 
@@ -144,6 +140,7 @@ def main() -> None:
     import duckdb
 
     from boatrace_database_spark.queries import ORACLES, QUERIES
+    from boatrace_database_spark.schemas import CATALOG_SCHEMAS
     from boatrace_database_spark.session import get_spark
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -173,7 +170,7 @@ def main() -> None:
     import shutil
 
     atexit.register(shutil.rmtree, _TEMP_DIR, ignore_errors=True)
-    for t in TABLES:
+    for t in CATALOG_SCHEMAS:
         # testdata ships single files; builder output (e.g. /tmp/sf1)
         # is a Spark parquet DIRECTORY — glob its parts for DuckDB
         path = f"{SF_DIR}/{t}.parquet"

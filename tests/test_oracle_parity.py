@@ -20,17 +20,15 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from boatrace_database_spark.queries import domain
+from boatrace_database_spark.schemas import CATALOG_SCHEMAS
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")
 def ddb():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in CATALOG_SCHEMAS:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
@@ -201,20 +199,6 @@ def test_contract_invariants():
     assert set(os_) <= set(qs)
     assert all(isinstance(v, str) and v.strip() for v in os_.values())
     assert len(qs) >= 60
-
-
-def test_schema_cache_keeps_one_entry_per_path(spark, tmp_path):
-    """Rewriting a catalog path replaces its cached schema instead of
-    adding a key per rewrite, and the next read sees the new columns."""
-    from boatrace_database_spark.queries import _util
-
-    path = str(tmp_path / "t.parquet")
-    for i in range(3):
-        spark.range(2).selectExpr(f"id AS c{i}").write.mode("overwrite").parquet(path)
-        assert _util._read_parquet(spark, path).columns == [f"c{i}"]
-    assert [k for k in _util._SCHEMA_CACHE if k[1] == path] == [
-        (spark.sparkContext.applicationId, path)
-    ]
 
 
 @pytest.mark.slow
