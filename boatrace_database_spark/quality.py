@@ -238,30 +238,6 @@ def dedup_recalls(
     }
 
 
-#: ONE score matrix per process — both recall metrics threshold the
-#: SAME n² matmul instead of each re-reading, re-collecting, and
-#: re-multiplying the corpus (the most expensive driver-side step of
-#: quality_metrics, done once not twice). Single-entry by design: the
-#: matrix reaches ~134 MB at the 4096-vector gate (round 9 lowered it
-#: from 20k — the 3.2 GB matrix there is what §38 OOM'd on; larger
-#: corpora take the anchored path), so a per-key dict would
-#: pin one per (sf_dir, max_vectors) forever. The key includes the
-#: parquet's (mtime, size) fingerprint so a regenerated
-#: embeddings.parquet in the same process can never serve a stale
-#: ground truth.
-_GT_CACHE: dict = {}
-
-
-def _corpus_fingerprint(path: str):
-    import os
-
-    try:
-        stt = os.stat(path)
-        return (stt.st_mtime_ns, stt.st_size)
-    except OSError:
-        return None
-
-
 def _anchored_cosine_truth(
     spark: SparkSession,
     sf_dir: str,
@@ -365,27 +341,19 @@ def _exact_cosine_pairs(
     exactly why the demo corpus can have a ground truth at all).
     Returns None when the corpus exceeds the gate; the ONE definition
     every pair-recall metric below measures against (same rounding,
-    same id canonicalization), cached so different thresholds share
-    the matmul."""
+    same id canonicalization). Computed from the files on every call:
+    a cached matrix could not tell a part file rewritten in place from
+    the one it was computed from."""
     import numpy as np
 
-    path = f"{sf_dir}/embeddings.parquet"
-    key = (sf_dir, max_vectors, _corpus_fingerprint(path))
-    if key not in _GT_CACHE:
-        _GT_CACHE.clear()  # single entry: bound memory, drop stale
-        emb = load_table(spark, sf_dir, "embeddings")
-        if emb.count() > max_vectors:
-            _GT_CACHE[key] = None
-        else:
-            pdf = emb.select("vec_id", "embedding").toPandas()
-            ids = pdf["vec_id"].to_numpy()
-            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            _GT_CACHE[key] = (ids, np.round(Mn @ Mn.T, 4))
-    cached = _GT_CACHE[key]
-    if cached is None:
+    emb = load_table(spark, sf_dir, "embeddings")
+    if emb.count() > max_vectors:
         return None
-    ids, S = cached
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+    S = np.round(Mn @ Mn.T, 4)
     iu = np.triu_indices(len(ids), k=1)
     hits = S[iu] >= threshold
     return {

@@ -1686,30 +1686,20 @@ def stream_ingest_boatrace(
 ) -> StreamingQuery:
     """The reference's daily-append workflow (main.py:240-267) made
     incremental: a binaryFile stream watches for arriving daily TXT
-    files; each micro-batch runs the fused decode+parse kernel and
-    upserts the day into every silver table plus the gold race join
-    with merge_upsert's write keyed on race_date — so a republished day
-    REPLACES its partition (idempotent) instead of duplicating it (the
-    reference's duplicate-append defect, SURVEY §2.4, cannot occur).
-
-    What an epoch launches: one job that fills the cache of the
-    persisted parse and observes, on the way, which tables received
-    rows for which days; then one partition-replace write per silver
-    table that received rows, all submitted together from driver
-    threads; and, as soon as result, env and schedule have committed,
-    the gold race join over the merged silver of the touched days
-    (declared-schema reads, so no footer-inference jobs) with its one
-    write, overlapping the remaining silver writes. A day's K+B epoch
-    is at most ten jobs, every one in the query's job group.
+    files, and each micro-batch is parsed by the fused decode+parse
+    kernel and loaded by ``warehouse._load_days`` — the step the
+    backfill runs too — which replaces the day's partition of every
+    silver table it fed plus the gold race join, keyed on race_date: a
+    republished day REPLACES its partition (idempotent) instead of
+    duplicating it (the reference's duplicate-append defect, SURVEY
+    §2.4, cannot occur). ``_load_days`` says what an epoch launches.
 
     Exactly-once: the file source checkpoints which files each epoch
     consumed, and the partition-replace merge is idempotent per day, so
     replays after failure converge to the batch-build state.
     """
     from boatrace_database_spark import warehouse as W
-    from boatrace_database_spark.gold import race_table
     from boatrace_database_spark.parse.kernel import parse_binary_df
-    from boatrace_database_spark.silver import silver_tables
 
     binary = (
         spark.readStream.format("binaryFile")
@@ -1724,60 +1714,8 @@ def stream_ingest_boatrace(
         .load(watch_dir)
     )
 
-    def _exists(path: str) -> bool:
-        # Hadoop FS probe, not os.path — the warehouse may live on
-        # HDFS/S3 at cluster scale
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        return fs.exists(jpath)
-
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
-        parsed, pairs = W._materialize(parse_binary_df(batch))
-        # a table without rows (the day's other file kind hasn't arrived
-        # yet) has nothing to merge
-        received = {table for table, _ in pairs}
-        touched = sorted({d for _, d in pairs})
-        tables = silver_tables(parsed)
-
-        # rebuild gold for the touched dates from the MERGED silver, not
-        # the batch frames: a day's K (results) and B (program) files
-        # may arrive in different micro-batches, and the inner race join
-        # needs both sides — joining only the batch's own rows would
-        # silently drop the day whenever the pair splits across batches.
-        # Until all three inputs exist on disk the join is empty anyway.
-        def write_race() -> None:
-            if not all(_exists(f"{warehouse_dir}/{n}") for n in W.GOLD_INPUTS):
-                return
-            silver = {
-                name: W.read_table(spark, warehouse_dir, name).where(
-                    F.col("race_date").isin(touched)
-                )
-                for name in W.GOLD_INPUTS
-            }
-            race = race_table(silver["result"], silver["env"], silver["schedule"])
-            W._merge_write(spark, f"{warehouse_dir}/race", race, ["race_date"])
-
-        try:
-            W._write_together(
-                spark,
-                {
-                    name: partial(
-                        W._merge_write,
-                        spark,
-                        f"{warehouse_dir}/{name}",
-                        tables[name],
-                        ["race_date"],
-                    )
-                    for name in W.SILVER_TABLES
-                    if name in received
-                },
-                write_race if pairs else None,
-            )
-        finally:
-            parsed.unpersist()
+        W._load_days(spark, parse_binary_df(batch), warehouse_dir)
 
     return _start(binary, None, each_batch=_ingest, checkpoint_dir=checkpoint_dir)
 

@@ -3,19 +3,22 @@ race table, registered views, legacy query API, and reference-layout
 CSV export.
 
 Maps the reference's storage operators (SURVEY §2.1):
-- S5 SQLite append sink  -> Parquet tables partitioned by race_date
+- S5 SQLite append sink  -> Parquet tables partitioned by race_date,
+                            loaded one race_date partition per day
+                            (``_load_days``)
 - S6 SQL table scan      -> spark.table(name) over registered views
-- S7 DB reset            -> mode("overwrite") rebuild
+- S7 DB reset            -> delete of the seven tables, then the same
+                            daily load (``build_warehouse``)
 - S4 CSV sink            -> export_reference_csvs (one file per day,
                             UTF-8 + header, reference table/odds layout)
 - S8 output-path derivation -> the {table}/{date}.csv naming scheme
 - P11-P13 interactive queries -> day_slice / day_range / full scan
 
 Scale notes: every table partitions by race_date, so P11's LIKE-prefix
-day query prunes to one partition; the silver build reads raw bytes
-once (fused decode+parse) and writes all six silver tables plus the
-gold ``race`` table from the cached one-pass parse (the reference
-re-scans each K file 3x; SURVEY §4). The writes are independent Spark
+day query prunes to one partition; a load reads raw bytes once (fused
+decode+parse) and writes the six silver tables plus the gold ``race``
+table from the cached one-pass parse (the reference re-scans each K
+file 3x; SURVEY §4). The writes are independent Spark
 jobs, so they are submitted together from driver threads
 (``_write_together``) instead of one after another.
 """
@@ -45,38 +48,97 @@ def build_warehouse(
     spark: SparkSession, path_glob: str, warehouse_dir: str
 ) -> dict[str, DataFrame]:
     """Full rebuild from a glob of daily TXT files or ``.lzh`` archives
-    (reference __main__ semantics: delete + reload, main.py:283-294 —
-    here an idempotent overwrite, no duplicate-append defect; SURVEY
-    §2.4 documents why per-rebuild semantics are the intended ones).
+    (reference __main__ semantics: delete + reload, main.py:283-294;
+    SURVEY §2.4 documents why per-rebuild semantics are the intended
+    ones): the seven tables' directories are deleted — nothing else
+    under ``warehouse_dir`` — and the parsed days go through the daily
+    load step, ``_load_days``. The glob is planned before the delete, so
+    a glob that matches nothing leaves the warehouse as it was.
 
-    Every silver table and ``race`` is written, empty or not: a B-only
-    build still registers all seven tables."""
-    parsed, _ = _materialize(parse_files(spark, path_glob))
+    A table no file fed (``result`` in a B-only build) stays absent on
+    disk; ``register_views`` still registers it, empty."""
+    parsed = parse_files(spark, path_glob)
+    root, fs = _fs(spark, warehouse_dir)
+    for name in (*SILVER_TABLES, "race"):
+        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(root, name), True)
+    # a load whose files held no rows writes no table; the warehouse it
+    # leaves must still register (empty)
+    fs.mkdirs(root)
+    _load_days(spark, parsed, warehouse_dir)
+    return register_views(spark, warehouse_dir)
+
+
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop Path, its FileSystem) for ``path``: the Hadoop FS API, not
+    ``os``, so the warehouse may live on any scheme (HDFS, S3)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _load_days(spark: SparkSession, parsed: DataFrame, warehouse_dir: str) -> None:
+    """Load the parsed days into the warehouse: every silver table that
+    received rows has each of its days' race_date partitions replaced
+    (``_merge_write`` keyed on race_date, so a republished day replaces
+    its partition instead of duplicating it), and gold ``race`` is
+    rebuilt for the touched days. The backfill (``build_warehouse``,
+    after its reset) and every stream epoch (``stream_ingest_boatrace``)
+    run this one step.
+
+    What a load launches: one job that fills the cache of the persisted
+    parse and observes, on the way, which tables received rows for which
+    days; then one partition-replace write per silver table that
+    received rows, all submitted together from driver threads; and, as
+    soon as result, env and schedule have committed, the gold race join
+    over the merged silver of the touched days (declared-schema reads,
+    so no footer-inference jobs) with its one write, overlapping the
+    remaining silver writes. A day's K+B load is at most ten jobs, every
+    one in the caller's job group.
+    """
+    parsed, pairs = _materialize(parsed)
+    # a table without rows (the day's other file kind hasn't arrived
+    # yet) has nothing to merge
+    received = {table for table, _ in pairs}
+    touched = sorted({d for _, d in pairs})
     tables = silver.silver_tables(parsed)
 
+    # rebuild gold for the touched dates from the MERGED silver, not the
+    # parsed frames: a day's K (results) and B (program) files may arrive
+    # in different loads, and the inner race join needs both sides —
+    # joining only this load's rows would silently drop the day whenever
+    # the pair splits across loads. Until all three inputs exist on disk
+    # the join is empty anyway.
     def write_race() -> None:
-        # build gold from the written silver (stable lineage, cache-free)
-        stored = {name: read_table(spark, warehouse_dir, name) for name in GOLD_INPUTS}
+        for name in GOLD_INPUTS:
+            path, fs = _fs(spark, f"{warehouse_dir}/{name}")
+            if not fs.exists(path):
+                return
+        stored = {
+            name: read_table(spark, warehouse_dir, name).where(
+                F.col("race_date").isin(touched)
+            )
+            for name in GOLD_INPUTS
+        }
         race = gold.race_table(stored["result"], stored["env"], stored["schedule"])
-        _overwrite(race, f"{warehouse_dir}/race")
+        _merge_write(spark, f"{warehouse_dir}/race", race, ["race_date"])
 
     try:
         _write_together(
             spark,
             {
-                name: partial(_overwrite, tables[name], f"{warehouse_dir}/{name}")
+                name: partial(
+                    _merge_write,
+                    spark,
+                    f"{warehouse_dir}/{name}",
+                    tables[name],
+                    ["race_date"],
+                )
                 for name in SILVER_TABLES
+                if name in received
             },
-            write_race,
+            write_race if pairs else None,
         )
     finally:
         parsed.unpersist()
-    return register_views(spark, warehouse_dir)
-
-
-def _overwrite(df: DataFrame, table_dir: str) -> None:
-    """S7: replace the whole table with ``df``, partitioned by race_date."""
-    df.write.mode("overwrite").partitionBy("race_date").parquet(table_dir)
 
 
 def _materialize(parsed: DataFrame) -> tuple[DataFrame, set[tuple[str, str]]]:
@@ -134,8 +196,8 @@ def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
 
 
 def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
-    """S6: make every table present under ``warehouse_dir`` addressable
-    by name in spark.sql.
+    """S6: make the seven tables under ``warehouse_dir`` addressable by
+    name in spark.sql.
 
     Declared-schema contract: each table is read with its schema from
     ``schemas.WAREHOUSE_SCHEMAS``, so registering launches no Spark job.
@@ -143,27 +205,37 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
     the columns of one part file per table are checked first (a footer
     read on the driver, no job): a table whose columns differ from the
     declared ones raises ``ValueError`` naming the table and both
-    column lists. A table directory without part files reads as empty.
+    column lists. A table directory without part files, or a table
+    absent on disk (one no loaded file fed), registers as an empty frame
+    of its declared schema, so every view always exists. A
+    ``warehouse_dir`` that does not exist raises ``FileNotFoundError``:
+    a mistyped path must not read as an empty warehouse.
     """
     import glob
 
     import pyarrow.parquet as pq
 
+    # one Hadoop FS listing, so a table is found under any scheme
+    root, fs = _fs(spark, warehouse_dir)
+    if not fs.exists(root):
+        raise FileNotFoundError(f"register_views: no warehouse at {warehouse_dir}")
+    present = {st.getPath().getName() for st in fs.listStatus(root)}
     out = {}
     for name in (*SILVER_TABLES, "race"):
         path = f"{warehouse_dir}/{name}"
-        if not os.path.exists(path):
-            continue
-        part = next(glob.iglob(f"{path}/race_date=*/*.parquet"), None)
-        if part is not None:
-            on_disk = pq.read_schema(part).names
-            declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
-            if set(on_disk) != set(declared):
-                raise ValueError(
-                    f"register_views: table {name!r} ({path}) has columns "
-                    f"{on_disk}, declared {declared}"
-                )
-        df = read_table(spark, warehouse_dir, name)
+        if name not in present:
+            df = spark.createDataFrame([], S.WAREHOUSE_SCHEMAS[name])
+        else:
+            part = next(glob.iglob(f"{path}/race_date=*/*.parquet"), None)
+            if part is not None:
+                on_disk = pq.read_schema(part).names
+                declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
+                if set(on_disk) != set(declared):
+                    raise ValueError(
+                        f"register_views: table {name!r} ({path}) has columns "
+                        f"{on_disk}, declared {declared}"
+                    )
+            df = read_table(spark, warehouse_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
@@ -252,10 +324,9 @@ def _merge_write(
     # Dynamic mode only rewrites partitions PRESENT in the written data:
     # delete the emptied ones explicitly (Hadoop FS API, so any scheme
     # works).
-    hconf = spark._jsc.hadoopConfiguration()
     for d in emptied:
-        p = spark._jvm.org.apache.hadoop.fs.Path(f"{table_dir}/race_date={d}")
-        p.getFileSystem(hconf).delete(p, True)
+        path, fs = _fs(spark, f"{table_dir}/race_date={d}")
+        fs.delete(path, True)
     # drop the stale shared file-status cache for this path
     spark.catalog.refreshByPath(table_dir)
     return schema
@@ -786,9 +857,7 @@ def compact_partitions(
     """
     from urllib.parse import unquote
 
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = jpath.getFileSystem(hconf)
+    jpath, fs = _fs(spark, table_dir)
     prefix = f"{partition_col}="
 
     def _parquet_files(dir_status):

@@ -52,26 +52,35 @@ def _comment_only_lines(source: str) -> set[int]:
     return comments - code
 
 
+def kept_lines(source: str, skip: set[int] = frozenset()) -> list[tuple[int, str]]:
+    """(line number, stripped text) of each line of ``source`` that is
+    not blank, not comment-only, not part of a docstring and not in
+    ``skip``."""
+    skip = skip | _docstring_lines(ast.parse(source)) | _comment_only_lines(source)
+    return [
+        (i, line.strip())
+        for i, line in enumerate(source.splitlines(), start=1)
+        if line.strip() and i not in skip
+    ]
+
+
 def code_lines(source: str) -> int:
     """Lines of ``source`` that are not blank, not comment-only and not
     part of a docstring."""
-    lines = source.splitlines()
-    skip = _docstring_lines(ast.parse(source)) | _comment_only_lines(source)
-    return sum(
-        1
-        for i, line in enumerate(lines, start=1)
-        if line.strip() and i not in skip
-    )
+    return len(kept_lines(source))
+
+
+def module_paths(argv: list[str]) -> list[pathlib.Path]:
+    """The paths named in ``argv``, or with none every ``.py`` file of
+    the package."""
+    if argv:
+        return [pathlib.Path(p) for p in argv]
+    return sorted((ROOT / "boatrace_database_spark").rglob("*.py"))
 
 
 def main(argv: list[str]) -> None:
-    paths = (
-        [pathlib.Path(p) for p in argv]
-        if argv
-        else sorted((ROOT / "boatrace_database_spark").rglob("*.py"))
-    )
     total = 0
-    for path in paths:
+    for path in module_paths(argv):
         n = code_lines(path.read_text(encoding="utf-8"))
         total += n
         print(f"{n:6d}  {path}")

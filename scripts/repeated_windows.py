@@ -1,0 +1,98 @@
+"""Find code repeated across (or within) modules: every window of 6
+consecutive code lines, stripped of indentation, whose text is at least
+200 characters long and appears at two or more places. Blank lines,
+comment-only lines, docstrings and multi-line string literals are left
+out before the windows are cut (a copied SQL string is data, not code),
+all found with ``ast`` and ``tokenize``. Overlapping windows that repeat
+together are reported as one block, so a copied 8-line block counts as
+one window, not three. This is the repeated-window scan ROADMAP
+direction 8 judges "done" by.
+
+Usage: python scripts/repeated_windows.py [path ...]
+With no paths, every ``.py`` file under ``boatrace_database_spark/`` is
+scanned. Prints each repeated block (its lines per place and every
+``path:line`` it starts at), then ``<windows> windows / <occurrences>
+occurrences``.
+"""
+
+from __future__ import annotations
+
+import io
+import sys
+import tokenize
+from collections import defaultdict
+
+from code_lines import kept_lines, module_paths
+
+SIZE = 6
+MIN_CHARS = 200
+
+
+def _multiline_string_lines(source: str) -> set[int]:
+    lines: set[int] = set()
+    opened = []  # start lines of the f-strings open (Python >= 3.12 tokens)
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        if tok.type == getattr(tokenize, "FSTRING_START", None):
+            opened.append(tok.start[0])
+            continue
+        if tok.type == getattr(tokenize, "FSTRING_END", None):
+            start = opened.pop()
+        elif tok.type == tokenize.STRING:
+            start = tok.start[0]
+        else:
+            continue
+        if tok.end[0] > start:
+            lines.update(range(start, tok.end[0] + 1))
+    return lines
+
+
+def repeated_windows(sources: dict[str, str]) -> list[tuple[int, list[tuple[str, int]]]]:
+    """The repeated blocks of ``sources`` (path -> text): one
+    ``(lines per place, [(path, first line), ...])`` per block, a block
+    being a run of overlapping windows that repeat at the same places."""
+    places = defaultdict(list)  # window text -> [(path, index into code)]
+    at = {}  # (path, index) -> window text
+    numbers = {}
+    for path, source in sources.items():
+        code = kept_lines(source, _multiline_string_lines(source))
+        numbers[path] = [n for n, _ in code]
+        for i in range(len(code) - SIZE + 1):
+            text = "\n".join(s for _, s in code[i:i + SIZE])
+            if len(text) >= MIN_CHARS:
+                places[text].append((path, i))
+                at[path, i] = text
+    repeated = {t: p for t, p in places.items() if len(p) > 1}
+
+    def follows(text: str) -> str | None:
+        """The other repeated window ``text`` continues at every one of
+        its places, if there is one."""
+        before = {at.get((p, i - 1)) for p, i in repeated[text]}
+        prev = before.pop() if len(before) == 1 else None
+        if prev != text and prev in repeated and len(repeated[prev]) == len(repeated[text]):
+            return prev
+        return None
+
+    prev_of = {t: follows(t) for t in repeated}
+    next_of = {p: t for t, p in prev_of.items() if p is not None}
+    blocks = []
+    for text, where in repeated.items():
+        if prev_of[text] is not None:
+            continue
+        length, cur = SIZE, text
+        while cur in next_of:
+            length, cur = length + 1, next_of[cur]
+        blocks.append((length, [(p, numbers[p][i]) for p, i in where]))
+    return sorted(blocks, key=lambda b: sorted(b[1]))
+
+
+def main(argv: list[str]) -> None:
+    sources = {str(p): p.read_text(encoding="utf-8") for p in module_paths(argv)}
+    blocks = repeated_windows(sources)
+    for length, where in blocks:
+        print(f"{length} lines at " + ", ".join(f"{p}:{n}" for p, n in sorted(where)))
+    total = sum(len(where) for _, where in blocks)
+    print(f"{len(blocks)} windows / {total} occurrences")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])

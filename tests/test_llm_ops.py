@@ -146,6 +146,35 @@ def test_quality_lsh_cosine_pairs_recall(spark):
     assert out["lsh_cosine_pairs_recall"] >= 0.85, out
 
 
+def test_exact_cosine_truth_reads_the_current_files(spark, tmp_path):
+    """The exact cosine ground truth is computed from the files on each
+    call: rewriting the one part file of ``embeddings.parquet`` in place
+    (the directory's own stat unchanged) changes the truth."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from boatrace_database_spark.quality import _exact_cosine_pairs
+
+    root = tmp_path / "embeddings.parquet"
+    root.mkdir()
+
+    def write(vectors):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(4), pa.int64()),
+                "embedding": pa.array(vectors, pa.list_(pa.float32())),
+                "label": pa.array([0] * 4, pa.int32()),
+            }),
+            root / "part-00000.parquet",
+        )
+
+    write([[1, 0], [1, 0.1], [0, 1], [0.1, 1]])
+    assert _exact_cosine_pairs(spark, str(tmp_path), 0.9, 16) == {(0, 1), (2, 3)}
+    write([[1, 0], [0, 1], [1, 0.1], [0.1, 1]])
+    spark.catalog.refreshByPath(str(root))
+    assert _exact_cosine_pairs(spark, str(tmp_path), 0.9, 16) == {(0, 2), (1, 3)}
+
+
 def test_project_embeddings_jl_properties(spark):
     """JL contract: numpy-reference parity (same planes, same scale),
     expected-norm preservation (mean squared norm within 25% at

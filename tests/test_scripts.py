@@ -73,6 +73,33 @@ def test_code_lines_skips_docstrings_comments_and_blanks():
     assert module.code_lines(source) == 7
 
 
+def test_repeated_windows_merges_overlaps_and_skips_strings():
+    spec = importlib.util.spec_from_file_location(
+        "repeated_windows", ROOT / "scripts" / "repeated_windows.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.syspath_prepend(str(ROOT / "scripts"))
+        spec.loader.exec_module(module)
+    block = "".join(
+        f"    value_{i} = compute_something_long(argument_{i}, other_{i})\n"
+        for i in range(8)
+    )
+    sql = "".join(f"    SELECT column_{i}, other_column_{i} FROM t_{i}\n" for i in range(8))
+    short = "".join(f"    x{i} = {i}\n" for i in range(8))
+    source = "".join(
+        f'def f{k}():\n    """Docstring."""\n    # comment\n{block}'
+        f'    q = """\n{sql}"""\n    return q{k}\n\n\n'
+        for k in range(2)
+    )
+    other = f"def g():\n{block}\n\ndef h():\n{short}\n\ndef i():\n{short}"
+    # the 8-line block is one window at three places; the SQL string and
+    # the short lines (under 200 characters a window) are not windows
+    assert module.repeated_windows({"a.py": source, "b.py": other}) == [
+        (8, [("a.py", 4), ("a.py", 28), ("b.py", 2)])
+    ]
+
+
 class _StubContext:
     """Answers `_jsc.sc().isStopped()` like a live SparkContext until
     the session is lost, then raises like py4j with the JVM gone."""

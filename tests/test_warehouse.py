@@ -584,7 +584,7 @@ def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
 
 
 def test_b_only_build_registers_all_tables(spark, tmp_path):
-    """A build over program (B) files alone still writes and registers
+    """A build over program (B) files alone still registers
     all seven tables; those fed only by result (K) files are empty."""
     corpus.build(GEN_SEED, GEN_DATES, str(tmp_path / "lzh"))
     views = W.build_warehouse(spark, str(tmp_path / "lzh" / "B*.lzh"), str(tmp_path / "wh"))
@@ -594,23 +594,115 @@ def test_b_only_build_registers_all_tables(spark, tmp_path):
     assert counts["result"] == counts["race"] == 0, counts
 
 
+def _lzh(gen_wh) -> str:
+    """The archive directory ``gen_wh`` was built from."""
+    return os.path.join(os.path.dirname(gen_wh), "lzh")
+
+
+def test_rebuild_keeps_only_the_rebuilt_days(spark, gen_wh, tmp_path):
+    """S7: a rebuild over one of the two days deletes the seven tables
+    first, so every table holds that day alone; whatever else lives
+    under the warehouse directory is left in place."""
+    wh = tmp_path / "wh"
+    shutil.copytree(gen_wh, wh)
+    (wh / "notes").mkdir()
+    day = GEN_DATES[1]
+    views = W.build_warehouse(spark, f"{_lzh(gen_wh)}/*{day}.lzh", str(wh))
+    for name, df in views.items():
+        assert {r[0] for r in df.select("race_date").distinct().collect()} == {day}, name
+    assert (wh / "notes").is_dir()
+
+
+def test_rebuild_over_no_files_keeps_the_warehouse(spark, gen_wh, tmp_path):
+    """The glob is resolved before the reset: one that matches no file
+    fails the build and deletes nothing."""
+    wh = str(tmp_path / "wh")
+    shutil.copytree(gen_wh, wh)
+    with pytest.raises(Exception, match="nope_"):
+        W.build_warehouse(spark, str(tmp_path / "nope_*.lzh"), wh)
+    assert sorted(os.listdir(wh)) == sorted(os.listdir(gen_wh))
+
+
+def test_k_only_rebuild_empties_the_program_tables(spark, gen_wh, tmp_path):
+    """A rebuild of a B+K warehouse over result (K) files alone leaves no
+    program rows behind: schedule reads empty, and so does race, whose
+    join needs it."""
+    wh = str(tmp_path / "wh")
+    shutil.copytree(gen_wh, wh)
+    views = W.build_warehouse(spark, f"{_lzh(gen_wh)}/K*.lzh", wh)
+    counts = {name: df.count() for name, df in views.items()}
+    assert counts["result"] > 0, counts
+    assert counts["schedule"] == counts["race"] == 0, counts
+
+
+def test_register_views_absent_table_is_empty(spark, gen_wh, tmp_path):
+    """A table absent on disk registers as an empty frame of its declared
+    schema, like a table directory without part files; the tables present
+    are found whether the warehouse is named by a path or a URI."""
+    wh = str(tmp_path / "wh")
+    shutil.copytree(gen_wh, wh)
+    shutil.rmtree(f"{wh}/odds")
+    for root in (wh, f"file://{wh}"):
+        views = W.register_views(spark, root)
+        assert set(views) == {*W.SILVER_TABLES, "race"}
+        assert views["odds"].schema == S.WAREHOUSE_SCHEMAS["odds"]
+        assert views["odds"].count() == spark.table("odds").count() == 0
+        assert views["env"].count() > 0, root
+
+
+def test_register_views_refuses_a_missing_warehouse(spark, tmp_path):
+    """A warehouse directory that does not exist raises rather than
+    registering seven empty views: a mistyped path must not read as an
+    empty warehouse."""
+    with pytest.raises(FileNotFoundError, match="no_such_wh"):
+        W.register_views(spark, str(tmp_path / "no_such_wh"))
+
+
+def test_build_over_files_without_rows_registers_empty(spark, tmp_path):
+    """A build whose files hold no rows writes no table, yet creates the
+    warehouse directory, so all seven views register, empty."""
+    (tmp_path / "K200302.TXT").write_bytes(b"")
+    views = W.build_warehouse(spark, str(tmp_path / "*.TXT"), str(tmp_path / "wh"))
+    assert {name: df.count() for name, df in views.items()} == dict.fromkeys(
+        (*W.SILVER_TABLES, "race"), 0
+    )
+
+
+def test_build_launches_one_loads_jobs(spark, gen_wh, tmp_path):
+    """Building the two generated days launches the jobs of one K+B
+    stream epoch: the observed cache fill, six silver writes, and the
+    gold join with its write — ten, every one in the caller's job group
+    (the writes run on driver threads)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("build", "two generated days")
+    try:
+        W.build_warehouse(spark, f"{_lzh(gen_wh)}/*.lzh", str(tmp_path / "wh"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("build")) == 10
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 @pytest.mark.parametrize("failing", ["odds", "result"])
 def test_build_write_error_raised_after_all_writes(spark, tmp_path, monkeypatch, failing):
     """A failed table write fails the build, but only once every other
     submitted write has finished. Gold is submitted unless one of its
     inputs failed."""
     corpus.build(GEN_SEED, GEN_DATES, str(tmp_path / "lzh"))
-    overwrite, started, finished = W._overwrite, [], []
+    merge_write, started, finished = W._merge_write, [], []
 
-    def flaky(df, table_dir):
+    def flaky(spark, table_dir, updates, keys):
         name = os.path.basename(table_dir)
         started.append(name)
         if name == failing:
             raise RuntimeError(f"write of {name} failed")
-        overwrite(df, table_dir)
+        schema = merge_write(spark, table_dir, updates, keys)
         finished.append(name)
+        return schema
 
-    monkeypatch.setattr(W, "_overwrite", flaky)
+    monkeypatch.setattr(W, "_merge_write", flaky)
     with pytest.raises(RuntimeError, match=f"write of {failing} failed"):
         W.build_warehouse(spark, str(tmp_path / "lzh" / "*.lzh"), str(tmp_path / "wh"))
     others = {*W.SILVER_TABLES} - {failing}
