@@ -7,6 +7,13 @@ they carry no oracle — the driver records rows-only checks; their
 correctness is covered by pytest recall/agreement tests against the
 exact operators (tests/test_llm_ops.py).
 
+Oracle SQL is written once: a text two or more oracles need (an
+expression, a run of CTEs) is one module-level fragment (`_QUALITY_SQL`,
+`_BM25_CTE`, `_TFIDF_CTES`, ...) or generator (`_knuth_sql`,
+`_cosine_scored_ctes`, `_lsh_sig_sql`) that the oracles compose. A
+composed oracle is still one self-contained string; the string half of
+`scripts/repeated_windows.py` shows any copy left.
+
 The synthetic-media family (`media_decode_*`, `media_frame_sample`,
 `media_gif_animation`, the audio and dHash builders) keeps only its
 closed form: each query defines ``encode(doc_id) -> (payload_bytes,
@@ -91,7 +98,17 @@ def dedup_best_quality(spark, sf_dir):
     )
 
 
-DEDUP_BEST_QUALITY_SQL = r"""
+# TX.quality_score of `text` over its lower-cased words `lw`, rounded to
+# 6 dp: the one text every quality oracle composes
+_QUALITY_SQL = r"""round((least(length(text) / 500.0, 1.0)
+                + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
+                       / greatest(length(text), 1))
+                + least(len(list_filter(lw, x -> x IN
+                        ('the','a','an','of','to','and','in','is','it',
+                         'for','on','with')))
+                        / greatest(len(lw), 1) * 4, 1.0)) / 3, 6)"""
+
+DEDUP_BEST_QUALITY_SQL = rf"""
 WITH t AS (
   SELECT doc_id, text,
          md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
@@ -100,13 +117,7 @@ WITH t AS (
 ),
 scored AS (
   SELECT doc_id, fp,
-         round((least(length(text) / 500.0, 1.0)
-                + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
-                       / greatest(length(text), 1))
-                + least(len(list_filter(lw, x -> x IN
-                        ('the','a','an','of','to','and','in','is','it',
-                         'for','on','with')))
-                        / greatest(len(lw), 1) * 4, 1.0)) / 3, 6)
+         {_QUALITY_SQL}
            AS quality
   FROM t
 ),
@@ -122,6 +133,19 @@ FROM r WHERE rn = 1 ORDER BY keeper_id
 """
 
 
+def _seen_and_batch(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The incremental-dedup split of ``d``: even doc_ids' fingerprints
+    play the persisted keepers (``seen``), odd doc_ids with theirs the
+    arriving ``batch``."""
+    seen = d.where(F.col("doc_id") % 2 == 0).select(
+        TX.fingerprint(F.col("text")).alias("fp")
+    )
+    batch = d.where(F.col("doc_id") % 2 == 1).select(
+        "doc_id", TX.fingerprint(F.col("text")).alias("fp")
+    )
+    return seen, batch
+
+
 def dedup_incremental_batch(spark, sf_dir):
     """Batch-incremental dedup (dedup.incremental_exact_dedup): odd
     doc_ids play the arriving daily batch, even doc_ids' fingerprints
@@ -130,12 +154,7 @@ def dedup_incremental_batch(spark, sf_dir):
     first-seen state, with state read from the table instead of the
     stream."""
     d = _t(spark, sf_dir, "documents")
-    seen = d.where(F.col("doc_id") % 2 == 0).select(
-        TX.fingerprint(F.col("text")).alias("fp")
-    )
-    batch = d.where(F.col("doc_id") % 2 == 1).select(
-        "doc_id", TX.fingerprint(F.col("text")).alias("fp")
-    )
+    seen, batch = _seen_and_batch(d)
     return (
         D.incremental_exact_dedup(batch, seen, ["fp"], "doc_id")
         .select("keeper_id", "n_copies")
@@ -229,8 +248,9 @@ def repeated_substring_spans(spark, sf_dir):
     )
 
 
-REPEATED_SUBSTRING_SQL = r"""
-WITH docs AS (
+# each document's words `docs` and its repeated 8-gram positions numbered
+# into islands (a gap of more than 8 tokens starts a new one)
+_REPEATED_SPAN_CTES = r"""docs AS (
   SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
 ),
 grams AS (
@@ -249,7 +269,9 @@ isl2 AS (
   SELECT doc_id, pos,
          sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
   FROM isl
-)
+)"""
+
+REPEATED_SUBSTRING_SQL = "\nWITH " + _REPEATED_SPAN_CTES + r"""
 SELECT doc_id AS id, min(pos) AS span_start, max(pos) + 8 AS span_end,
        count(*) AS n_grams
 FROM isl2 GROUP BY doc_id, island ORDER BY id, span_start
@@ -273,27 +295,7 @@ def strip_repeated_spans(spark, sf_dir):
     )
 
 
-STRIP_REPEATED_SQL = r"""
-WITH docs AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-),
-grams AS (
-  SELECT doc_id, i - 1 AS pos, array_to_string(w[i:i+7], ' ') AS gram
-  FROM docs, unnest(generate_series(1, greatest(len(w) - 7, 0))) AS t(i)
-),
-dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) > 1),
-hits AS (SELECT doc_id, pos FROM grams JOIN dup USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
-         THEN 1 ELSE 0 END AS brk
-  FROM hits
-),
-isl2 AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM isl
-),
+STRIP_REPEATED_SQL = "\nWITH " + _REPEATED_SPAN_CTES + r""",
 spans AS (
   SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e
   FROM isl2 GROUP BY doc_id, island
@@ -332,12 +334,7 @@ def dedup_incremental_bloom(spark, sf_dir):
     from boatrace_database_spark.operators import bloom as B
 
     d = _t(spark, sf_dir, "documents")
-    seen = d.where(F.col("doc_id") % 2 == 0).select(
-        TX.fingerprint(F.col("text")).alias("fp")
-    )
-    batch = d.where(F.col("doc_id") % 2 == 1).select(
-        "doc_id", TX.fingerprint(F.col("text")).alias("fp")
-    )
+    seen, batch = _seen_and_batch(d)
     # n_items=None: build_bloom counts the seen side so the filter is
     # sized for WHATEVER sf_dir the driver runs (a hardcoded count
     # would saturate at larger scale factors and silently degrade the
@@ -383,20 +380,24 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-DEDUP_JACCARD_SQL = r"""
-WITH docs AS (
+# each document's distinct word 3-shingles `sh` (D.ngram_jaccard_pairs,
+# TX.top_ngrams n=3), then the shingle-set sizes and pairwise overlaps
+_SHINGLE_CTES = r"""docs AS (
   SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents
 ),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') AS shingle
   FROM docs, unnest(generate_series(1, greatest(len(words) - 2, 0))) AS t(i)
-),
+)"""
+_JACCARD_CTES = _SHINGLE_CTES + r""",
 sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+DEDUP_JACCARD_SQL = "\nWITH " + _JACCARD_CTES + r"""
 SELECT id_a, id_b,
        round(n_inter / (sa.set_size + sb.set_size - n_inter), 6) AS jaccard
 FROM inter
@@ -479,7 +480,7 @@ def text_profile(spark, sf_dir):
     )
 
 
-TEXT_PROFILE_SQL = r"""
+TEXT_PROFILE_SQL = rf"""
 WITH t AS (
   SELECT doc_id, text,
          string_split_regex(trim(lower(text)), '\s+') AS lw,
@@ -493,11 +494,7 @@ SELECT doc_id,
              / greatest(len(lw), 1), 6) AS stopword_ratio,
        round(length(regexp_replace(text, '[^0-9]', '', 'g'))
              / greatest(length(text), 1), 6) AS digit_ratio,
-       round((least(length(text) / 500.0, 1.0)
-              + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
-                     / greatest(length(text), 1))
-              + least(len(list_filter(lw, x -> x IN ('the','a','an','of','to','and','in','is','it','for','on','with')))
-                      / greatest(len(lw), 1) * 4, 1.0)) / 3, 6) AS quality,
+       {_QUALITY_SQL} AS quality,
        CASE WHEN len(list_filter(lw, x -> x IN ('the','a','an','of','to','and','in','is','it','for','on','with'))) >= 2
             THEN 'en' ELSE 'und' END AS lang_pred,
        md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint
@@ -567,20 +564,7 @@ def dedup_cluster_assign(spark, sf_dir):
     )
 
 
-DEDUP_CLUSTER_SQL = r"""
-WITH RECURSIVE docs AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') AS shingle
-  FROM docs, unnest(generate_series(1, greatest(len(words) - 2, 0))) AS t(i)
-),
-sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+DEDUP_CLUSTER_SQL = "\nWITH RECURSIVE " + _JACCARD_CTES + r""",
 pairs AS (
   SELECT id_a, id_b FROM inter
   JOIN sizes sa ON id_a = sa.doc_id
@@ -684,14 +668,7 @@ def ngram_topk(spark, sf_dir):
     return TX.top_ngrams(d, "doc_id", "text", n=3, k=25)
 
 
-NGRAM_TOPK_SQL = r"""
-WITH docs AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') AS shingle
-  FROM docs, unnest(generate_series(1, greatest(len(words) - 2, 0))) AS t(i)
-)
+NGRAM_TOPK_SQL = "\nWITH " + _SHINGLE_CTES + r"""
 SELECT shingle, count(DISTINCT doc_id) AS doc_freq
 FROM sh GROUP BY shingle
 ORDER BY doc_freq DESC, shingle
@@ -772,24 +749,31 @@ FROM documents ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-def embedding_cosine_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    queries = e.where(F.col("vec_id") < 5)
-    return SIM.cosine_topk(e, queries, k=5).orderBy("query_id", "rk")
-
-
-COSINE_TOPK_SQL = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
-scored AS (
+def _cosine_scored_ctes(q: str, c: str, scored: str) -> str:
+    """CTEs ``c`` (every embedding as neighbor_id/cvec) and ``scored``:
+    the exact cosine (SIM.cosine_topk), rounded to 6 dp, of each query
+    of CTE ``q`` (query_id/qvec) with every other vector."""
+    return f"""{c} AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
+{scored} AS (
   SELECT query_id, neighbor_id,
     round((SELECT sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
            FROM (SELECT unnest(qvec) AS x, unnest(cvec) AS y))
       / (sqrt((SELECT sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM (SELECT unnest(qvec) AS x)))
          * sqrt((SELECT sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) FROM (SELECT unnest(cvec) AS y)))),
       6) AS score
-  FROM c, q WHERE neighbor_id != query_id
-)
+  FROM {c}, {q} WHERE neighbor_id != query_id
+)"""
+
+
+def embedding_cosine_topk(spark, sf_dir):
+    e = _t(spark, sf_dir, "embeddings")
+    queries = e.where(F.col("vec_id") < 5)
+    return SIM.cosine_topk(e, queries, k=5).orderBy("query_id", "rk")
+
+
+COSINE_TOPK_SQL = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
+{_cosine_scored_ctes("q", "c", "scored")}
 SELECT query_id, neighbor_id, score, rk FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
                                ORDER BY score DESC, neighbor_id) AS rk
@@ -851,19 +835,10 @@ def retrieval_eval_metrics(spark, sf_dir):
     return R.ranking_metrics(run, qrels, k=10).orderBy("query_id")
 
 
-RETRIEVAL_EVAL_SQL = """
+RETRIEVAL_EVAL_SQL = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qvec, label AS qlabel
            FROM embeddings WHERE vec_id < 20),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-    round((SELECT sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-           FROM (SELECT unnest(qvec) AS x, unnest(cvec) AS y))
-      / (sqrt((SELECT sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM (SELECT unnest(qvec) AS x)))
-         * sqrt((SELECT sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) FROM (SELECT unnest(cvec) AS y)))),
-      6) AS score
-  FROM c, q WHERE neighbor_id != query_id
-),
+{_cosine_scored_ctes("q", "c", "scored")},
 run AS (
   SELECT query_id, neighbor_id AS doc_id, rk FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
@@ -985,18 +960,9 @@ def retrieval_rrf_fusion(spark, sf_dir):
 
 
 RRF_FUSION_SQL = (
-    "WITH " + _BM25_CTE + r""",
+    "WITH " + _BM25_CTE + rf""",
 qv AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-cv AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
-cos_scored AS (
-  SELECT query_id, neighbor_id,
-    round((SELECT sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-           FROM (SELECT unnest(qvec) AS x, unnest(cvec) AS y))
-      / (sqrt((SELECT sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM (SELECT unnest(qvec) AS x)))
-         * sqrt((SELECT sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) FROM (SELECT unnest(cvec) AS y)))),
-      6) AS score
-  FROM cv, qv WHERE neighbor_id != query_id
-),
+{_cosine_scored_ctes("qv", "cv", "cos_scored")},
 cos_rk AS (
   SELECT query_id, neighbor_id AS doc_id,
          row_number() OVER (PARTITION BY query_id
@@ -1371,10 +1337,9 @@ def tfidf_top_terms_per_doc(spark, sf_dir):
     )
 
 
-# weights CTE shared conceptually with TFIDF_RELATED_SQL (kept inline:
-# each oracle must be a self-contained string for the driver)
-TFIDF_TOP_TERMS_SQL = r"""
-WITH toks AS (
+# bigram tf-idf (R.tfidf_top_terms / R.tfidf_related_topk, ngram=2): each
+# (doc_id, term)'s weight `w` and each document's L2 norm `nrm`
+_TFIDF_CTES = r"""toks AS (
   SELECT doc_id,
          list_filter(
            string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
@@ -1394,7 +1359,9 @@ w AS (
   FROM tf JOIN dft USING (term) CROSS JOIN n
   WHERE dft.df < n.n_docs
 ),
-nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
+nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1)"""
+
+TFIDF_TOP_TERMS_SQL = "\nWITH " + _TFIDF_CTES + r""",
 wn AS (
   SELECT w.doc_id, w.term, round(w.w / nrm.nrm, 6) AS weight
   FROM w JOIN nrm USING (doc_id)
@@ -1424,8 +1391,8 @@ def tfidf_related_docs(spark, sf_dir):
     (measured: window, grouped list(), and lateral-unnest forms all
     exceed 9 min into tens of GB of temp spill), so the two-decade
     sweep (scripts/oracle_parity_sweep.py `HEAVY_ORACLES`) keeps the
-    pairs stage in DuckDB — the same CTE text, sliced from this very
-    string — and consolidates top-5 in numpy, bit-identical."""
+    pairs stage in DuckDB — the same `_TFIDF_PAIRS_CTES` this oracle
+    composes — and consolidates top-5 in numpy, bit-identical."""
     d = _t(spark, sf_dir, "documents")
     return (
         R.tfidf_related_topk(d, "doc_id", "text", k=5, ngram=2)
@@ -1433,34 +1400,16 @@ def tfidf_related_docs(spark, sf_dir):
     )
 
 
-TFIDF_RELATED_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(
-           string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-           t -> t <> ''
-         ) AS toks
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS term
-  FROM toks, unnest(generate_series(1, greatest(len(toks) - 1, 0))) AS t(i)
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM grams GROUP BY 1, 2),
-n AS (SELECT count(*) AS n_docs FROM documents),
-dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-w AS (
-  SELECT tf.doc_id, tf.term, tf.tf * ln(n.n_docs / dft.df) AS w
-  FROM tf JOIN dft USING (term) CROSS JOIN n
-  WHERE dft.df < n.n_docs
-),
-nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
+# the unit-normalized weights `wn` and every co-occurring pair's cosine
+_TFIDF_PAIRS_CTES = _TFIDF_CTES + r""",
 wn AS (SELECT w.doc_id, w.term, w.w / nrm.nrm AS wn FROM w JOIN nrm USING (doc_id)),
 pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, round(sum(a.wn * b.wn), 6) AS cosine
   FROM wn a JOIN wn b ON a.term = b.term AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-),
+)"""
+
+TFIDF_RELATED_SQL = "\nWITH " + _TFIDF_PAIRS_CTES + r""",
 sym AS (
   SELECT id_a AS doc_id, id_b AS other_id, cosine FROM pairs
   UNION ALL
@@ -1556,6 +1505,25 @@ def ann_lsh_topk(spark, sf_dir):
     return SIM.lsh_ann_topk(e, queries, k=5).orderBy("query_id", "rk")
 
 
+def _lsh_sig_sql(n_planes: int, n_tables: int, dim: int, cols: str = "") -> str:
+    """The body of a ``sig`` CTE: every row of ``c`` once per table,
+    its ``cols`` then ``tbl`` and the plane-sign bucket key of ``vec``
+    (bit j set when the dot product with plane j is positive) over the
+    identical plane stream (ANN_PLANE_SEED) the operator slices."""
+    planes = SIM.rademacher_planes(
+        n_tables * n_planes, dim, SIM.ANN_PLANE_SEED
+    )
+    sels = []
+    for t in range(n_tables):
+        key = " + ".join(
+            f"(CASE WHEN list_dot_product(vec, {_lit_list(planes[t * n_planes + j])}) > 0 "
+            f"THEN {1 << j} ELSE 0 END)"
+            for j in range(n_planes)
+        )
+        sels.append(f"SELECT {cols}{t} AS tbl, {key} AS bucket FROM c")
+    return "\nUNION ALL\n".join(sels)
+
+
 def _ann_lsh_topk_oracle_sql(
     n_planes: int = 6,
     n_tables: int = 4,
@@ -1568,19 +1536,7 @@ def _ann_lsh_topk_oracle_sql(
     identical plane stream (ANN_PLANE_SEED), identical table slicing,
     identical multiprobe mask set, exact cosine on distinct candidate
     pairs, same (score DESC, neighbor_id) tie-break."""
-    planes = SIM.rademacher_planes(
-        n_tables * n_planes, dim, SIM.ANN_PLANE_SEED
-    )
-
-    sels = []
-    for t in range(n_tables):
-        key = " + ".join(
-            f"(CASE WHEN list_dot_product(vec, {_lit_list(planes[t * n_planes + j])}) > 0 "
-            f"THEN {1 << j} ELSE 0 END)"
-            for j in range(n_planes)
-        )
-        sels.append(f"SELECT id, vec, {t} AS tbl, {key} AS bucket FROM c")
-    sig = "\nUNION ALL\n".join(sels)
+    sig = _lsh_sig_sql(n_planes, n_tables, dim, "id, vec, ")
     masks = [0]
     if probe_hamming >= 1:
         masks += [1 << p for p in range(n_planes)]
@@ -1653,19 +1609,7 @@ def ann_bucket_stats(spark, sf_dir):
 def _ann_bucket_stats_oracle_sql(
     n_planes: int = 6, n_tables: int = 2, dim: int = 64
 ) -> str:
-    planes = SIM.rademacher_planes(
-        n_tables * n_planes, dim, SIM.ANN_PLANE_SEED
-    )
-
-    sels = []
-    for t in range(n_tables):
-        key = " + ".join(
-            f"(CASE WHEN list_dot_product(vec, {_lit_list(planes[t * n_planes + j])}) > 0 "
-            f"THEN {1 << j} ELSE 0 END)"
-            for j in range(n_planes)
-        )
-        sels.append(f"SELECT {t} AS tbl, {key} AS bucket FROM c")
-    sig = "\nUNION ALL\n".join(sels)
+    sig = _lsh_sig_sql(n_planes, n_tables, dim)
     return f"""
 WITH c AS (
   SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
@@ -2779,14 +2723,17 @@ def decontaminate_eval(spark, sf_dir):
     ).orderBy("eval_id")
 
 
-DECONTAMINATE_SQL = r"""
-WITH docs AS (
+# each document's distinct word 13-grams `grams` (TX.ngram_contamination,
+# TX.decontaminate_corpus n=13)
+_GRAM13_CTES = r"""docs AS (
   SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
 ),
 grams AS (
   SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
   FROM docs, unnest(generate_series(1, greatest(len(w) - 12, 0))) AS t(i)
-),
+)"""
+
+DECONTAMINATE_SQL = "\nWITH " + _GRAM13_CTES + r""",
 train AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 0),
 ev AS (SELECT * FROM grams WHERE doc_id % 2 = 1),
 hits AS (
@@ -2826,14 +2773,7 @@ def decontaminate_drop_train(spark, sf_dir):
     )
 
 
-DECONTAMINATE_DROP_SQL = r"""
-WITH docs AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-  FROM docs, unnest(generate_series(1, greatest(len(w) - 12, 0))) AS t(i)
-),
+DECONTAMINATE_DROP_SQL = "\nWITH " + _GRAM13_CTES + r""",
 bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 1),
 tr AS (SELECT * FROM grams WHERE doc_id % 2 = 0),
 hits AS (
@@ -3133,24 +3073,20 @@ def quality_topk_per_source(spark, sf_dir):
     )
 
 
-QUALITY_TOPK_SQL = r"""
-WITH t AS (
+# each document's source and quality: the head of the per-source oracles
+_SOURCE_QUALITY_CTES = rf"""t AS (
   SELECT doc_id, source, text,
          string_split_regex(trim(lower(text)), '\s+') AS lw
   FROM documents
 ),
 scored AS (
   SELECT doc_id, source,
-         round((least(length(text) / 500.0, 1.0)
-                + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
-                       / greatest(length(text), 1))
-                + least(len(list_filter(lw, x -> x IN
-                        ('the','a','an','of','to','and','in','is','it',
-                         'for','on','with')))
-                        / greatest(len(lw), 1) * 4, 1.0)) / 3, 6)
+         {_QUALITY_SQL}
            AS quality
   FROM t
-),
+)"""
+
+QUALITY_TOPK_SQL = "\nWITH " + _SOURCE_QUALITY_CTES + r""",
 r AS (
   SELECT doc_id, source, quality,
          row_number() OVER (PARTITION BY source
@@ -3180,24 +3116,7 @@ def quality_quantile_gate(spark, sf_dir):
     )
 
 
-QUALITY_GATE_SQL = r"""
-WITH t AS (
-  SELECT doc_id, source, text,
-         string_split_regex(trim(lower(text)), '\s+') AS lw
-  FROM documents
-),
-scored AS (
-  SELECT doc_id, source,
-         round((least(length(text) / 500.0, 1.0)
-                + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
-                       / greatest(length(text), 1))
-                + least(len(list_filter(lw, x -> x IN
-                        ('the','a','an','of','to','and','in','is','it',
-                         'for','on','with')))
-                        / greatest(len(lw), 1) * 4, 1.0)) / 3, 6)
-           AS quality
-  FROM t
-),
+QUALITY_GATE_SQL = "\nWITH " + _SOURCE_QUALITY_CTES + r""",
 pr AS (
   SELECT doc_id, source, quality,
          round(percent_rank() OVER (PARTITION BY source
@@ -3319,7 +3238,7 @@ def training_data_pipeline(spark, sf_dir):
     )
 
 
-TRAINING_PIPELINE_SQL = r"""
+TRAINING_PIPELINE_SQL = rf"""
 WITH cand AS (
   SELECT doc_id, source, text,
          string_split_regex(trim(lower(text)), '\s+') AS lw
@@ -3327,12 +3246,7 @@ WITH cand AS (
 ),
 gated AS (
   SELECT doc_id, source, text FROM cand
-  WHERE round((least(length(text) / 500.0, 1.0)
-         + (1 - length(regexp_replace(text, '[^0-9]', '', 'g'))
-                / greatest(length(text), 1))
-         + least(len(list_filter(lw, x -> x IN ('the','a','an','of','to',
-                 'and','in','is','it','for','on','with')))
-                 / greatest(len(lw), 1) * 4, 1.0)) / 3, 6) >= 0.5
+  WHERE {_QUALITY_SQL} >= 0.5
 ),
 fp AS (
   SELECT doc_id, source, text,

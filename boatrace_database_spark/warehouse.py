@@ -202,19 +202,18 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
     Declared-schema contract: each table is read with its schema from
     ``schemas.WAREHOUSE_SCHEMAS``, so registering launches no Spark job.
     A declared read would turn a column missing on disk into nulls, so
-    the columns of one part file per table are checked first (a footer
-    read on the driver, no job): a table whose columns differ from the
-    declared ones raises ``ValueError`` naming the table and both
-    column lists. A table directory without part files, or a table
+    the columns of one part file per table are checked first: the file
+    is found with the warehouse's Hadoop FS and its footer read on the
+    driver by pyarrow (no job), so a warehouse named by a URI is checked
+    too. A table whose columns differ from the declared ones raises
+    ``ValueError`` naming the table and both column lists; a part file
+    whose scheme pyarrow cannot open raises ``ValueError`` naming the
+    scheme. A table directory without part files, or a table
     absent on disk (one no loaded file fed), registers as an empty frame
     of its declared schema, so every view always exists. A
     ``warehouse_dir`` that does not exist raises ``FileNotFoundError``:
     a mistyped path must not read as an empty warehouse.
     """
-    import glob
-
-    import pyarrow.parquet as pq
-
     # one Hadoop FS listing, so a table is found under any scheme
     root, fs = _fs(spark, warehouse_dir)
     if not fs.exists(root):
@@ -226,9 +225,11 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
         if name not in present:
             df = spark.createDataFrame([], S.WAREHOUSE_SCHEMAS[name])
         else:
-            part = next(glob.iglob(f"{path}/race_date=*/*.parquet"), None)
-            if part is not None:
-                on_disk = pq.read_schema(part).names
+            parts = fs.globStatus(
+                spark._jvm.org.apache.hadoop.fs.Path(f"{path}/race_date=*/*.parquet")
+            )
+            if parts:
+                on_disk = _footer_columns(parts[0].getPath().toUri().toString())
                 declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
                 if set(on_disk) != set(declared):
                     raise ValueError(
@@ -239,6 +240,23 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def _footer_columns(uri: str) -> list[str]:
+    """The column names in the footer of the parquet file at ``uri``,
+    read on the driver through the pyarrow filesystem of its scheme."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    try:
+        pfs, path = pafs.FileSystem.from_uri(uri)
+    except (ValueError, OSError) as e:
+        scheme = uri.split(":", 1)[0]
+        raise ValueError(
+            f"register_views: cannot check the columns of {uri}: pyarrow "
+            f"cannot open scheme {scheme!r} ({e})"
+        ) from e
+    return pq.read_schema(path, filesystem=pfs).names
 
 
 # --------------------------------------------------------------------------
@@ -384,7 +402,9 @@ def export_sqlite(
     reference's ``boatrace.db`` (SQLite, every column TEXT — the
     reference declares no types, main.py:221-225), so the reference's
     own read_db.py queries (``SELECT * FROM race WHERE レースID LIKE
-    '2020-09-28%'``) run unchanged against our build.
+    '2020-09-28%'``) run unchanged against our build. ``tables`` are the
+    warehouse's tables as ``register_views``/``build_warehouse`` return
+    them, so ``race`` is the materialized table.
 
     Driver-side by design: SQLite is a single-file embedded DB — the
     same scale regime as the reference itself (SURVEY §6: 11.9 MB for
@@ -397,11 +417,6 @@ def export_sqlite(
 
     import pandas as pd
 
-    if "race" in include and "race" not in tables:
-        tables = dict(tables)
-        tables["race"] = gold.race_table(
-            tables["result"], tables["env"], tables["schedule"]
-        )
     con = sqlite3.connect(db_path)
     try:
         for name in include:
@@ -488,18 +503,21 @@ def export_reference_csvs(
     tables: dict[str, DataFrame], out_dir: str, dates: list[str] | None = None
 ) -> list[str]:
     """Write per-day CSVs in the committed reference layout:
-    ``table/{date}.csv`` (21-col joined race) and ``odds/{date}.csv``.
+    ``table/{date}.csv`` (the 21-col joined race) and ``odds/{date}.csv``,
+    from ``tables`` as ``register_views``/``build_warehouse`` return them:
+    the joined race is the materialized ``race`` table, not a new join.
 
-    Scale-safe: the dates filter is pushed into the scan (partition
-    pruning), rows never collect to the driver — Spark writes one CSV
-    per race_date partition (repartition("race_date") puts each day in
-    exactly one task) and a driver-side rename pass maps the part file
-    to the reference's ``{sub}/{date}.csv`` name.
+    Scale-safe: the dates filter is pushed into the scans (partition
+    pruning of ``race`` and ``odds``), rows never collect to the driver
+    — Spark writes one CSV per race_date partition
+    (repartition("race_date") puts each day in exactly one task) and a
+    driver-side rename pass maps the part file to the reference's
+    ``{sub}/{date}.csv`` name.
     """
     import glob
     import shutil
 
-    race = gold.race_table(tables["result"], tables["env"], tables["schedule"])
+    race = tables["race"]
     odds = tables["odds"]
     written: list[str] = []
     for sub, df, cols in (
@@ -819,11 +837,15 @@ def compact_partitions(
     _post_stage_hook=None,
 ) -> dict[str, int]:
     """Small-file compaction for a partitioned parquet table — the
-    maintenance twin of the streaming ingest: every foreachBatch epoch
-    appends at least one file per touched partition, so a long-running
-    `stream_ingest_boatrace` steadily fragments the warehouse and scan
-    cost drifts from data-bound to file-open-bound. This rewrites each
-    over-fragmented partition into ceil(bytes/target_bytes) files.
+    maintenance twin of the streams that append per epoch: each epoch
+    of an ``_append_parquet`` sink (``stream_ingest_parquet``, the
+    batch-operator streams' ``sink_dir``) or of ``stream_bm25_ingest``
+    (its postings, one file per touched bucket) adds files, so a
+    long-running stream steadily fragments its table and scan cost
+    drifts from data-bound to file-open-bound. (``stream_ingest_boatrace``
+    epochs replace each touched day's partition instead, so the
+    warehouse tables do not fragment.) This rewrites each over-fragmented
+    partition into ceil(bytes/target_bytes) files.
 
     A partition is over-fragmented when its file count exceeds what
     its byte size needs at ``target_bytes`` per file; right-sized

@@ -38,8 +38,8 @@ def _tfidf_related_heavy(con):
     row_number, grouped list(), lateral unnest) ran >9 min into tens of
     GB of temp spill (measured; the window form is what exhausted the
     disk in the r11 sweep). So the heavy half stays IN DuckDB — the
-    same `pairs` CTE text as the driver oracle, sliced from
-    TFIDF_RELATED_SQL so the two can never drift — and only the
+    same `pairs` CTE text as the driver oracle, both composed from
+    `_TFIDF_PAIRS_CTES` so the two can never drift — and only the
     top-5-per-doc consolidation moves to numpy, with the identical
     deterministic order (cosine DESC, other_id ASC) encoded in one
     int64 key: m = round(cosine*1e6)*2^40 - other_id. cosine is
@@ -48,13 +48,10 @@ def _tfidf_related_heavy(con):
     Returns (cols, rows) shaped like the driver oracle's output."""
     import numpy as np
 
-    from boatrace_database_spark.queries.llm import TFIDF_RELATED_SQL
+    from boatrace_database_spark.queries.llm import _TFIDF_PAIRS_CTES
 
-    marker = ",\nsym AS ("
-    assert marker in TFIDF_RELATED_SQL, "TFIDF_RELATED_SQL shape changed"
-    prefix = TFIDF_RELATED_SQL.split(marker)[0]
     at = con.execute(
-        prefix + "\nSELECT id_a, id_b, cosine FROM pairs"
+        "WITH " + _TFIDF_PAIRS_CTES + "\nSELECT id_a, id_b, cosine FROM pairs"
     ).fetch_arrow_table()
     ida = at["id_a"].to_numpy().astype(np.int64)
     idb = at["id_b"].to_numpy().astype(np.int64)

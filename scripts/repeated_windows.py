@@ -8,11 +8,16 @@ together are reported as one block, so a copied 8-line block counts as
 one window, not three. This is the repeated-window scan ROADMAP
 direction 8 judges "done" by.
 
+The same rule is then applied to the other side: the lines of the
+multi-line string literals that are not docstrings (the oracle SQL), so
+a query text copied between oracles shows up too.
+
 Usage: python scripts/repeated_windows.py [path ...]
 With no paths, every ``.py`` file under ``boatrace_database_spark/`` is
-scanned. Prints each repeated block (its lines per place and every
+scanned. Prints each repeated code block (its lines per place and every
 ``path:line`` it starts at), then ``<windows> windows / <occurrences>
-occurrences``.
+occurrences``; then each repeated string block the same way, then
+``<windows> string windows / <occurrences> occurrences``.
 """
 
 from __future__ import annotations
@@ -46,18 +51,33 @@ def _multiline_string_lines(source: str) -> set[int]:
     return lines
 
 
-def repeated_windows(sources: dict[str, str]) -> list[tuple[int, list[tuple[str, int]]]]:
-    """The repeated blocks of ``sources`` (path -> text): one
+def code(source: str) -> list[tuple[int, str]]:
+    """The kept code lines of ``source``: no multi-line string lines."""
+    return kept_lines(source, _multiline_string_lines(source))
+
+
+def strings(source: str) -> list[tuple[int, str]]:
+    """The kept lines of ``source``'s multi-line string literals that
+    are not docstrings."""
+    every = set(range(1, len(source.splitlines()) + 1))
+    return kept_lines(source, every - _multiline_string_lines(source))
+
+
+def repeated_windows(
+    sources: dict[str, str], lines=code
+) -> list[tuple[int, list[tuple[str, int]]]]:
+    """The repeated blocks of ``sources`` (path -> text), windows cut
+    from each source's ``lines`` (`code` or `strings`): one
     ``(lines per place, [(path, first line), ...])`` per block, a block
     being a run of overlapping windows that repeat at the same places."""
-    places = defaultdict(list)  # window text -> [(path, index into code)]
+    places = defaultdict(list)  # window text -> [(path, index into kept)]
     at = {}  # (path, index) -> window text
     numbers = {}
     for path, source in sources.items():
-        code = kept_lines(source, _multiline_string_lines(source))
-        numbers[path] = [n for n, _ in code]
-        for i in range(len(code) - SIZE + 1):
-            text = "\n".join(s for _, s in code[i:i + SIZE])
+        kept = lines(source)
+        numbers[path] = [n for n, _ in kept]
+        for i in range(len(kept) - SIZE + 1):
+            text = "\n".join(s for _, s in kept[i:i + SIZE])
             if len(text) >= MIN_CHARS:
                 places[text].append((path, i))
                 at[path, i] = text
@@ -87,11 +107,12 @@ def repeated_windows(sources: dict[str, str]) -> list[tuple[int, list[tuple[str,
 
 def main(argv: list[str]) -> None:
     sources = {str(p): p.read_text(encoding="utf-8") for p in module_paths(argv)}
-    blocks = repeated_windows(sources)
-    for length, where in blocks:
-        print(f"{length} lines at " + ", ".join(f"{p}:{n}" for p, n in sorted(where)))
-    total = sum(len(where) for _, where in blocks)
-    print(f"{len(blocks)} windows / {total} occurrences")
+    for lines, label in ((code, "windows"), (strings, "string windows")):
+        blocks = repeated_windows(sources, lines)
+        for length, where in blocks:
+            print(f"{length} lines at " + ", ".join(f"{p}:{n}" for p, n in sorted(where)))
+        total = sum(len(where) for _, where in blocks)
+        print(f"{len(blocks)} {label} / {total} occurrences")
 
 
 if __name__ == "__main__":

@@ -73,7 +73,7 @@ def test_code_lines_skips_docstrings_comments_and_blanks():
     assert module.code_lines(source) == 7
 
 
-def test_repeated_windows_merges_overlaps_and_skips_strings():
+def _repeated_windows_module():
     spec = importlib.util.spec_from_file_location(
         "repeated_windows", ROOT / "scripts" / "repeated_windows.py"
     )
@@ -81,6 +81,11 @@ def test_repeated_windows_merges_overlaps_and_skips_strings():
     with pytest.MonkeyPatch.context() as mp:
         mp.syspath_prepend(str(ROOT / "scripts"))
         spec.loader.exec_module(module)
+    return module
+
+
+def test_repeated_windows_merges_overlaps_and_skips_strings():
+    module = _repeated_windows_module()
     block = "".join(
         f"    value_{i} = compute_something_long(argument_{i}, other_{i})\n"
         for i in range(8)
@@ -98,6 +103,23 @@ def test_repeated_windows_merges_overlaps_and_skips_strings():
     assert module.repeated_windows({"a.py": source, "b.py": other}) == [
         (8, [("a.py", 4), ("a.py", 28), ("b.py", 2)])
     ]
+
+
+def test_repeated_windows_counts_copied_strings_but_not_docstrings():
+    module = _repeated_windows_module()
+    sql = "".join(f"SELECT column_{i}, other_column_{i} FROM table_{i}\n" for i in range(8))
+    doc = "".join(f"    Explains argument_{i} of the function at length.\n" for i in range(8))
+    source = "".join(
+        f'def f{k}():\n    """Docstring.\n{doc}    """\n    return {k}\n\n\n'
+        f'Q{k} = """\n{sql}"""\n\n\n'
+        for k in range(2)
+    )
+    # the copied SQL is one string window; the copied docstring is none,
+    # and neither is a code window
+    assert module.repeated_windows({"a.py": source}, module.strings) == [
+        (9, [("a.py", 16), ("a.py", 42)])
+    ]
+    assert module.repeated_windows({"a.py": source}) == []
 
 
 class _StubContext:

@@ -565,10 +565,73 @@ def test_partition_replace_from_own_files(spark, gen_wh, tmp_path):
     assert _rows(merged.where(F.col("race_date") == day2)) == other
 
 
+def _manifest(gen_wh) -> dict:
+    """The ground-truth manifest of the days ``gen_wh`` was built from."""
+    return corpus.build(GEN_SEED, GEN_DATES, _lzh(gen_wh))
+
+
+def _csv_rows(path) -> list[list[str]]:
+    with open(path, encoding="utf-8", newline="") as fh:
+        return list(csv.reader(fh))
+
+
+def test_csv_export_layout_matches_the_manifest(spark, gen_wh, tmp_path):
+    """The reference-layout CSV export of the generated days: the race
+    header is the reference's column list, and each day's race and odds
+    files hold the manifest's row counts."""
+    days = _manifest(gen_wh)["days"]
+    written = W.export_reference_csvs(W.register_views(spark, gen_wh), str(tmp_path))
+    assert sorted(os.path.relpath(p, tmp_path) for p in written) == sorted(
+        f"{sub}/{d}.csv" for sub in ("table", "odds") for d in GEN_DATES
+    )
+    for d in GEN_DATES:
+        race = _csv_rows(tmp_path / "table" / f"{d}.csv")
+        assert race[0] == S.RACE_COLUMNS
+        assert len(race) - 1 == days[d]["race"], d
+        assert len(_csv_rows(tmp_path / "odds" / f"{d}.csv")) - 1 == days[d]["counts"]["odds"], d
+
+
+def test_csv_export_reimport_roundtrip_hermetic(spark, gen_wh, tmp_path):
+    """One exported day re-imports through the CSV source into the same
+    race rows as ``day_slice`` of the warehouse, as strings."""
+    day = GEN_DATES[1]
+    views = W.register_views(spark, gen_wh)
+    W.export_reference_csvs(views, str(tmp_path), dates=[day])
+    assert os.listdir(tmp_path / "table") == [f"{day}.csv"]
+    back = spark.read.option("header", True).csv(str(tmp_path / "table" / f"{day}.csv"))
+    race = W.day_slice(views["race"], day).drop("race_date")
+    assert back.columns == race.columns
+
+    def strings(df):
+        return sorted(tuple("" if v is None else str(v) for v in r) for r in df.collect())
+
+    assert strings(back) == strings(race)
+
+
+def test_sqlite_export_day_counts_match_the_manifest(spark, gen_wh, tmp_path):
+    """The exported boatrace.db answers the reference's LIKE-prefix day
+    query with the manifest's race count for each generated day."""
+    import sqlite3
+
+    days = _manifest(gen_wh)["days"]
+    db = W.export_sqlite(W.register_views(spark, gen_wh), str(tmp_path / "boatrace.db"))
+    con = sqlite3.connect(db)
+    try:
+        for d in GEN_DATES:
+            n = con.execute(
+                f"SELECT count(*) FROM race WHERE レースID LIKE '{d}%'"
+            ).fetchone()[0]
+            assert n == days[d]["race"], d
+    finally:
+        con.close()
+
+
 def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
     """Views read with the declared schemas; a table whose on-disk
     columns differ is refused, naming the table and the columns, rather
-    than read as nulls."""
+    than read as nulls, whether the warehouse is named by a path or a
+    ``file://`` URI (the part file is found with the warehouse's own
+    filesystem)."""
     wh = str(tmp_path / "wh")
     shutil.copytree(gen_wh, wh)
     views = W.register_views(spark, wh)
@@ -579,8 +642,14 @@ def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
         *S.RACE_COLUMNS, F.col("race_date").cast("string")))
     renamed = views["odds"].withColumnRenamed("単勝", "win").localCheckpoint(eager=True)
     renamed.write.mode("overwrite").partitionBy("race_date").parquet(f"{wh}/odds")
-    with pytest.raises(ValueError, match=r"'odds'.*'win'"):
-        W.register_views(spark, wh)
+    for root in (wh, f"file://{wh}"):
+        with pytest.raises(ValueError, match=r"'odds'.*'win'"):
+            W.register_views(spark, root)
+
+
+def test_footer_columns_names_a_scheme_pyarrow_cannot_open():
+    with pytest.raises(ValueError, match="'s3a'"):
+        W._footer_columns("s3a://bucket/wh/odds/race_date=2020-03-02/part-0.parquet")
 
 
 def test_b_only_build_registers_all_tables(spark, tmp_path):
