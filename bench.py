@@ -113,27 +113,7 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/codegen warmup, then spin up the FULL reused-python-worker
-    # pool with a fanned-out Arrow pandas_udf — otherwise the first LSH
-    # query measured pays 32 interpreter+numpy cold starts, and with
-    # worker reuse that one-time cost lands on whichever query runs
-    # first (the source of multi-second per-process outliers in r2).
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v):
-        import numpy as np  # noqa: F401  (loads numpy in every worker)
-
-        return v * 1.0
-
-    (
-        spark.range(100_000)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(_warm(col("id").cast("double")))
-        .count()
-    )
+    warm_up(spark)
     # idle-window discipline (r12 verdict item #6): two consecutive
     # rounds of the official artifact regressed on host load alone and
     # were un-regressed by idle re-brackets — so the bench now WAITS
@@ -278,6 +258,29 @@ def main() -> None:
     if skipped:
         payload["skipped"] = skipped
     print(stdout_line(payload))
+
+
+def warm_up(spark) -> None:
+    """JVM/codegen warmup, then spin up the FULL reused-python-worker
+    pool with a fanned-out Arrow pandas_udf — otherwise the first LSH
+    query measured pays one interpreter+numpy cold start per core, and
+    with worker reuse that one-time cost lands on whichever query runs
+    first (the source of multi-second per-process outliers in r2)."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    from pyspark.sql.functions import col, pandas_udf
+
+    @pandas_udf("double")
+    def _warm(v):
+        import numpy as np  # noqa: F401  (loads numpy in every worker)
+
+        return v * 1.0
+
+    (
+        spark.range(100_000)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(_warm(col("id").cast("double")))
+        .count()
+    )
 
 
 def stdout_line(payload: dict) -> str:

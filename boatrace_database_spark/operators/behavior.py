@@ -266,7 +266,6 @@ def cohort_retention(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    max_weeks: int | None = None,
 ) -> DataFrame:
     """Weekly cohort-retention grid.
 
@@ -308,8 +307,6 @@ def cohort_retention(
         )
         .where(F.col("week_offset") >= 0)
     )
-    if max_weeks is not None:
-        act = act.where(F.col("week_offset") < max_weeks)
     grid = (
         act.groupBy("cohort_week", "week_offset")
         .agg(F.count_distinct(user_col).alias("active_users"))

@@ -300,32 +300,13 @@ def _cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFra
     O(buckets × max_bucket²) — the standard scale guard.
 
     Broadcasts the KEEP set (one row per surviving bucket) — right for
-    batch-sized inputs where that list is bounded; for corpus-sized
-    inputs use `_drop_fat_buckets`, which broadcasts the (few) fat
-    buckets instead.
+    the batch-sized inputs every caller caps, where that list is
+    bounded.
     """
     counts = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bsz"))
     return banded.join(
         F.broadcast(counts.where(F.col("_bsz") <= max_bucket)), on=keys
     ).drop("_bsz")
-
-
-def _drop_fat_buckets(
-    banded: DataFrame, keys: list[str], max_bucket: int
-) -> DataFrame:
-    """`_cap_buckets` inverted for CORPUS-sized tables: the broadcast
-    side is the fat-bucket list (`_bsz > max_bucket` — few by
-    construction, they are the degenerate outliers), anti-joined away.
-    Output-identical to `_cap_buckets` (tested); the bucket-count
-    aggregate is a map-side-combined pass over the table, bounded by
-    distinct bucket keys per partition, and the broadcast never grows
-    with table size."""
-    counts = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bsz"))
-    return banded.join(
-        F.broadcast(counts.where(F.col("_bsz") > max_bucket).select(*keys)),
-        on=keys,
-        how="left_anti",
-    )
 
 
 def _rows_per_band(num_hashes: int, bands: int) -> int:
@@ -480,21 +461,14 @@ def _seen_probe(
     capped_banded: DataFrame,
     num_hashes: int,
     threshold: float,
-    max_seen_bucket: int | None = None,
 ) -> DataFrame:
     """The incremental near-dup seen-probe: batch ids whose estimated
     Jaccard vs any seen keeper clears the threshold. The seen side is
     only SCANNED — the batch side is broadcast, so every join builds
     the batch (plan-asserted in tests, exposed as a helper precisely
     so the contract stays inspectable past the caller's lineage cut)."""
-    seen = seen_banded
-    if max_seen_bucket is not None:
-        # corpus-sized side: broadcast the FAT buckets (few), not the
-        # keep set (≈ every bucket key in the table) — costs one
-        # map-side-combined count pass over seen, never a huge broadcast
-        seen = _drop_fat_buckets(seen, ["band", "bucket"], max_seen_bucket)
     return (
-        seen.alias("s")
+        seen_banded.alias("s")
         .join(
             F.broadcast(
                 capped_banded.selectExpr(
@@ -523,7 +497,6 @@ def incremental_minhash_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_bucket: int = 256,
-    max_seen_bucket: int | None = None,
 ) -> DataFrame:
     """Daily-ingest NEAR-dup dedup — `incremental_exact_dedup`'s fuzzy
     twin: drop arriving docs whose estimated Jaccard vs any PREVIOUSLY
@@ -552,12 +525,7 @@ def incremental_minhash_dedup(
     row fan-out), but the RETURNED keeper rows are the uncapped
     banding — a doc whose every bucket is capped is simply admitted
     un-compared (possibly a duplicate copy), never silently dropped.
-    ``max_seen_bucket`` (off by default) additionally caps the seen
-    side at probe time: the accumulated table can concentrate
-    hash-colliding-but-dissimilar content in one (band, bucket) over
-    many batches, growing probe fan-out with ingest history; capping
-    bounds it at the price of possibly admitting duplicates of
-    fat-bucket content.
+    The seen side is never capped.
 
     Scale shape: signatures/banding are computed on the (daily-sized)
     batch only — the corpus is never re-shingled; the seen-probe joins
@@ -577,10 +545,10 @@ def incremental_minhash_dedup(
     capped = _cap_buckets(banded, ["band", "bucket"], max_bucket)
 
     dup_of_seen = _seen_probe(
-        seen_banded, capped, num_hashes, threshold, max_seen_bucket
+        seen_banded, capped, num_hashes, threshold
     ).localCheckpoint(eager=False)  # feeds the pair stage AND the
     # final removal union — without this the corpus-sized seen probe
-    # (scan + fat-bucket aggregate) would run twice per batch
+    # would run twice per batch
 
     pairs = _banded_pairs(
         capped.join(F.broadcast(dup_of_seen), "id", "left_anti"),
@@ -814,7 +782,6 @@ def simhash_pairs(
     bits: int = 64,
     chunk_bits: int | None = None,
     key_chunks: int | None = None,
-    n_docs: int | None = None,
     skew: float | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, banded on signature
@@ -845,9 +812,9 @@ def simhash_pairs(
     — the defect class measured on dHash at sf1 (recall 0.13,
     BENCHNOTES §45b), one decade above simhash's own anchor. Deriving
     costs one count + one occupancy aggregate over the (eagerly
-    checkpointed, then reused) signature table; pass ``n_docs`` to
-    skip the count, an explicit ``skew`` to pin the multiplier, or
-    explicit dials to pin a geometry.
+    checkpointed, then reused) signature table; pass an explicit
+    ``skew`` to pin the multiplier, or explicit dials to pin a
+    geometry.
 
     64-bit signatures are the scale-safe width: the 10x scale probe
     (BENCHNOTES §12) showed 32-bit random collisions
@@ -856,7 +823,7 @@ def simhash_pairs(
     sig = simhash_table(df, id_col, text_col, shingle_n, bits)
     return hamming_pairs_banded(
         sig, "id", "sim", max_hamming, max_bucket, bits, chunk_bits,
-        key_chunks, n_rows=n_docs, skew=skew,
+        key_chunks, skew=skew,
     )
 
 
@@ -1162,7 +1129,7 @@ def resolve_hamming_banding(
 def banding_cap_stats(
     banded: DataFrame, keys: list[str], max_bucket: int
 ) -> DataFrame:
-    """One-row report of what `_cap_buckets`/`_drop_fat_buckets` WILL
+    """One-row report of what `_cap_buckets` WILL
     drop from a banded table at ``max_bucket`` — the observability
     face of the cap (r11 verdict item #2: cap drops were silent, so
     band-key saturation was only ever found by planted-pair anchors).

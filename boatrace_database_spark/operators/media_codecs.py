@@ -733,13 +733,12 @@ def decode_gif(payload: bytes) -> dict:
     }
 
 
-def encode_gif(
-    frames, delays_cs=None, loop: bool = True
-) -> bytes:
+def encode_gif(frames, delays_cs=None) -> bytes:
     """List of (h, w, 3) uint8 RGB frames (all same shape, <= 256
     unique colors ACROSS frames) -> GIF89a bytes with one global
-    palette; multi-frame inputs get graphic-control blocks (disposal
-    1 = draw over). Not a quantizer — a palette overflow raises."""
+    palette; multi-frame inputs loop forever and get graphic-control
+    blocks (disposal 1 = draw over). Not a quantizer — a palette
+    overflow raises."""
     if not isinstance(frames, (list, tuple)):
         frames = [frames]
     arrs = [np.asarray(f, dtype=np.uint8) for f in frames]
@@ -760,7 +759,7 @@ def encode_gif(
     out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
     out += pal_bytes
-    if loop and len(arrs) > 1:  # Netscape looping application ext
+    if len(arrs) > 1:  # Netscape looping application ext
         out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
     mcs = max(depth, 2)
     per_frame = np.split(inverse.astype(np.int32), len(arrs))

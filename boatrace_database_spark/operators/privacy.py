@@ -33,17 +33,15 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact(text: Column, patterns: list[tuple[str, str, str]] | None = None) -> Column:
+def redact(text: Column) -> Column:
     """Apply every pattern in order, replacing matches with its token."""
     out = text
-    for _name, pat, token in patterns or PII_PATTERNS:
+    for _name, pat, token in PII_PATTERNS:
         out = F.regexp_replace(out, pat, token)
     return out
 
 
-def pii_counts(
-    text: Column, patterns: list[tuple[str, str, str]] | None = None
-) -> dict[str, Column]:
+def pii_counts(text: Column) -> dict[str, Column]:
     """Per-pattern match counts for the audit trail.
 
     Counts are taken pattern-by-pattern on progressively redacted text,
@@ -53,7 +51,7 @@ def pii_counts(
     """
     counts: dict[str, Column] = {}
     cur = text
-    for name, pat, token in patterns or PII_PATTERNS:
+    for name, pat, token in PII_PATTERNS:
         counts[f"n_{name}"] = F.regexp_count(cur, F.lit(pat))
         cur = F.regexp_replace(cur, pat, token)
     return counts
@@ -62,7 +60,6 @@ def pii_counts(
 def pii_redact(
     df: DataFrame,
     text_cols: list[str],
-    patterns: list[tuple[str, str, str]] | None = None,
     with_counts: bool = True,
 ) -> DataFrame:
     """Redact every listed column in place; optionally append per-pattern
@@ -74,15 +71,14 @@ def pii_redact(
     ``WHERE n_email + n_phone + ... > 0`` post-filter to quarantine hot
     documents without a second pass.
     """
-    pats = patterns or PII_PATTERNS
     out_cols: dict[str, Column] = {}
     for c in text_cols:
-        out_cols[c] = redact(F.col(c), pats)
+        out_cols[c] = redact(F.col(c))
     if with_counts:
         # one progressive-redaction count chain per column, reused for
         # every pattern (not rebuilt per pattern — P*C trees, not P^2*C)
-        per_col = {c: pii_counts(F.col(c), pats) for c in text_cols}
-        for name, _pat, _tok in pats:
+        per_col = {c: pii_counts(F.col(c)) for c in text_cols}
+        for name, _pat, _tok in PII_PATTERNS:
             out_cols[f"n_{name}"] = sum(
                 (per_col[c][f"n_{name}"] for c in text_cols),
                 start=F.lit(0),

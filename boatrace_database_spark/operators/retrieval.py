@@ -678,7 +678,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     k: int = 5,
     ngram: int = 1,
-    max_df_frac: float | None = None,
 ) -> DataFrame:
     """Keyword extraction: the k highest-tf-idf terms per document —
     the third face of the tf-idf family (vectors → related docs →
@@ -692,7 +691,7 @@ def tfidf_top_terms(
     window (WindowGroupLimit keeps k rows per doc before the sort) —
     no self-join; this is the cheap member of the family.
     """
-    wn = tfidf_weights(docs, id_col, text_col, ngram, max_df_frac)
+    wn = tfidf_weights(docs, id_col, text_col, ngram)
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("weight"), F.asc("term")
     )

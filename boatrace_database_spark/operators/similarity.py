@@ -517,7 +517,6 @@ def ivf_write_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_cells: int | None = None,
 ) -> None:
     """Persist an IVF index as tables: the inverted file partitioned by
     `cell` plus the centroid lookup. THE deployment shape at 100 TB —
@@ -526,7 +525,7 @@ def ivf_write_index(
     the nprobe probed cells' files are ever read (plan-asserted in
     tests), the storage-level realization of 'a probe touches
     nprobe/n_cells of the corpus'."""
-    indexed, centroids = ivf_build_index(corpus, id_col, vec_col, n_cells)
+    indexed, centroids = ivf_build_index(corpus, id_col, vec_col)
     indexed.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/inverted"
     )
@@ -1282,7 +1281,6 @@ def lsh_ann_candidates(
     vec_col: str = "embedding",
     n_planes: int | None = None,
     dim: int = 64,
-    multiprobe: bool = True,
     n_tables: int | None = None,
     probe_hamming: int | None = None,
     n: int | None = None,
@@ -1309,8 +1307,6 @@ def lsh_ann_candidates(
     else:
         probe_hamming = 2 if probe_hamming is None else probe_hamming
         n_tables = 4 if n_tables is None else n_tables
-    if not multiprobe:
-        probe_hamming = 0
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
     buckets = F.posexplode(
         _table_buckets(F.col(vec_col), n_planes, dim, n_tables)
@@ -1348,7 +1344,6 @@ def lsh_ann_topk(
     k: int = 5,
     n_planes: int | None = None,
     dim: int = 64,
-    multiprobe: bool = True,
     n_tables: int | None = None,
     probe_hamming: int | None = None,
     candidates: DataFrame | None = None,
@@ -1381,7 +1376,7 @@ def lsh_ann_topk(
     - ``probe_hamming`` multiprobe depth per table: each query also
       probes buckets within Hamming distance 1 (n_planes extra keys) or
       2 (+ n_planes·(n_planes-1)/2 keys) of its own. Probes multiply
-      only the tiny query side; ``multiprobe=False`` forces depth 0.
+      only the tiny query side; ``probe_hamming=0`` probes none.
       Measured sweep at sf0.1 (n_planes=6, k=10): (L=4, H1) 0.67 ·
       (L=6, H1) 0.86 · (L=8, H1) 0.93 · (L=4, H2) 0.96 — the default
       (L=4, H2) buys the most recall per candidate scored.
@@ -1407,7 +1402,7 @@ def lsh_ann_topk(
         if candidates is not None
         else lsh_ann_candidates(
             corpus, queries, id_col, vec_col, n_planes, dim,
-            multiprobe, n_tables, probe_hamming, n,
+            n_tables, probe_hamming, n,
         )
     )
     return _rank_topk(cand.select("query_id", "neighbor_id", _exact_score()), k)
@@ -2022,17 +2017,15 @@ def ivfpq_write_index(
     n_cells: int | None = None,
     n_subspaces: int = 8,
     n_codes: int = 256,
-    by_residual: bool = True,
 ) -> None:
     """Persist an IVF-PQ index: cell-partitioned PQ codes (dynamic
     partition pruning on probe, like `ivf_write_index`) + centroids +
-    the codebook tensor flattened to rows. The ``by_residual`` mode
-    rides the codes column's schema metadata through parquet, so
+    the codebook tensor flattened to rows. The index's by_residual
+    mode rides the codes column's schema metadata through parquet, so
     `ivfpq_read_index` + `ivfpq_probe` need no side-channel."""
     spark = corpus.sparkSession
     codes, centroids, books = ivfpq_build_index(
-        corpus, id_col, vec_col, n_cells, n_subspaces, n_codes,
-        by_residual=by_residual,
+        corpus, id_col, vec_col, n_cells, n_subspaces, n_codes
     )
     codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")

@@ -247,7 +247,6 @@ def decontaminate_corpus(
     text_col: str,
     n: int = 13,
     max_rate: float = 0.0,
-    hash_keys: bool = False,
 ) -> DataFrame:
     """The REMOVAL direction of decontamination: keep only training
     documents whose n-gram collision rate against the benchmark corpus
@@ -256,14 +255,10 @@ def decontaminate_corpus(
     REPORTS eval-side rates; this guards the train side, which is what
     a pipeline actually ships.
 
-    ``hash_keys`` defaults to FALSE here, inverting the reporting
-    op's default, because the collision tolerance flips with the
-    direction: a 64-bit xxhash collision only nudges a REPORTED rate,
-    but at max_rate=0 it silently DELETES an uncontaminated training
-    document — and at 100 TB (~1e10 train × ~1e8 bench grams) the
-    expected collision count is not negligible. Enable hash_keys for
-    the shuffle-volume win only with a slack max_rate, where one
-    colliding gram cannot cross the bar on its own.
+    Grams join as exact strings (``hash_keys=False``), unlike the
+    reporting op's hashed default: a 64-bit xxhash collision only
+    nudges a REPORTED rate, but at max_rate=0 it silently DELETES an
+    uncontaminated training document.
 
     Returns the surviving train rows with their original columns plus
     ``n_ngrams`` / ``n_contaminated`` / ``contamination_rate`` audit
@@ -277,7 +272,7 @@ def decontaminate_corpus(
     one-row-per-doc rate table.
     """
     rates = ngram_contamination(
-        benchmark_df, train_df, id_col, text_col, n=n, hash_keys=hash_keys
+        benchmark_df, train_df, id_col, text_col, n=n, hash_keys=False
     ).withColumnRenamed("eval_id", id_col)
     return (
         train_df.join(rates, id_col)
@@ -471,7 +466,6 @@ def strip_repeated_substrings(
     id_col: str,
     text_col: str,
     min_tokens: int = 50,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """The curation ACTION for `repeated_substring_spans`: rewrite each
     document with every repeated span's tokens removed (the Lee et al.
@@ -488,7 +482,7 @@ def strip_repeated_substrings(
     beyond the span computation itself.
     """
     spans = (
-        repeated_substring_spans(df, id_col, text_col, min_tokens, hash_grams)
+        repeated_substring_spans(df, id_col, text_col, min_tokens)
         .groupBy("id")
         .agg(
             F.collect_list(

@@ -385,21 +385,20 @@ def semantic_dedup_recall(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = 0.4,
-    n_cells: int | None = None,
-    n_assign: int | None = None,
     max_vectors: int = 4096,
 ) -> dict[str, float]:
     """Pair recall of cluster-scoped `semantic_pairs` (the catalog's
-    semantic_dedup_assign operating point) vs the shared
-    `_exact_cosine_pairs` ground truth. Precision is 1.0 by
-    construction (within-cell scoring is exact), so recall is the one
-    number that moves with n_assign/n_cells. Truth is full all-pairs
-    under the size gate, anchored-sample above it (r8 verdict #3)."""
+    semantic_dedup_assign operating point: n_cells and n_assign both
+    derived from the corpus size) vs the shared `_exact_cosine_pairs`
+    ground truth. Precision is 1.0 by construction (within-cell
+    scoring is exact), so recall is the one number that moves with
+    n_assign/n_cells. Truth is full all-pairs under the size gate,
+    anchored-sample above it (r8 verdict #3)."""
     emb = load_table(spark, sf_dir, "embeddings")
     sem = {
         (r.id_a, r.id_b)
         for r in SIM.semantic_pairs(
-            emb, threshold=threshold, n_cells=n_cells, n_assign=n_assign
+            emb, threshold=threshold, n_assign=None
         ).collect()
     }
     recall, _ = _pair_recall_vs_truth(sem, spark, sf_dir, threshold, max_vectors)

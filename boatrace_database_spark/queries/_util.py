@@ -1,4 +1,4 @@
-"""Shared table loader for the query catalog."""
+"""Shared table loader and oracle SQL fragments for the query catalog."""
 
 from __future__ import annotations
 
@@ -75,3 +75,36 @@ def decsum(col_name: str):
     from pyspark.sql import functions as F
 
     return F.sum(F.col(col_name).cast("decimal(38,0)"))
+
+
+def cohort_retention_sql(events: str, user_col: str, cohort_event: str) -> str:
+    """The DuckDB twin of `behavior.cohort_retention` over the relation
+    ``events`` (``user_col``, event_type, ts), cohorted on
+    ``cohort_event``: the CTEs ``first``/``f2``/``sizes``/``act`` and
+    the grid SELECT, to follow a ``WITH`` (and any CTE of the caller)."""
+    return f"""first AS (
+  SELECT {user_col}, min(CAST(ts AS DATE)) AS cohort_day
+  FROM {events} WHERE event_type = '{cohort_event}' GROUP BY {user_col}
+),
+f2 AS (
+  SELECT {user_col}, cohort_day,
+         CAST(date_trunc('week', cohort_day) AS DATE) AS cohort_week
+  FROM first
+),
+sizes AS (
+  SELECT cohort_week, count(*) AS cohort_size FROM f2 GROUP BY cohort_week
+),
+act AS (
+  SELECT DISTINCT e.{user_col}, f2.cohort_week,
+         CAST(floor(date_diff('day', f2.cohort_day, CAST(e.ts AS DATE))
+                    / 7.0) AS BIGINT) AS week_offset
+  FROM {events} e JOIN f2 ON e.{user_col} = f2.{user_col}
+  WHERE CAST(e.ts AS DATE) >= f2.cohort_day
+)
+SELECT a.cohort_week, a.week_offset,
+       CAST(count(*) AS BIGINT) AS active_users,
+       round((100.0 * count(*)) / min(s.cohort_size), 2) AS retention_pct
+FROM act a JOIN sizes s ON a.cohort_week = s.cohort_week
+GROUP BY a.cohort_week, a.week_offset
+ORDER BY a.cohort_week, a.week_offset
+"""

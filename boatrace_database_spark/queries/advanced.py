@@ -10,6 +10,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from boatrace_database_spark.queries._util import cents as _cents
+from boatrace_database_spark.queries._util import (
+    cohort_retention_sql as _cohort_retention_sql,
+)
 from boatrace_database_spark.queries._util import decsum as _decsum
 from boatrace_database_spark.queries._util import load_table as _t
 
@@ -555,30 +558,7 @@ def cohort_retention_grid(spark, sf_dir):
     return behavior.cohort_retention(e, cohort_event="signup")
 
 
-COHORT_SQL = """
-WITH first AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-  FROM events WHERE event_type = 'signup' GROUP BY user_id
-), f2 AS (
-  SELECT user_id, cohort_day,
-         CAST(date_trunc('week', cohort_day) AS DATE) AS cohort_week
-  FROM first
-), sizes AS (
-  SELECT cohort_week, count(*) AS cohort_size FROM f2 GROUP BY cohort_week
-), act AS (
-  SELECT DISTINCT e.user_id, f2.cohort_week,
-         CAST(floor(date_diff('day', f2.cohort_day, CAST(e.ts AS DATE))
-                    / 7.0) AS BIGINT) AS week_offset
-  FROM events e JOIN f2 ON e.user_id = f2.user_id
-  WHERE CAST(e.ts AS DATE) >= f2.cohort_day
-)
-SELECT a.cohort_week, a.week_offset,
-       CAST(count(*) AS BIGINT) AS active_users,
-       round((100.0 * count(*)) / min(s.cohort_size), 2) AS retention_pct
-FROM act a JOIN sizes s ON a.cohort_week = s.cohort_week
-GROUP BY a.cohort_week, a.week_offset
-ORDER BY a.cohort_week, a.week_offset
-"""
+COHORT_SQL = "\nWITH " + _cohort_retention_sql("events", "user_id", "signup")
 
 
 # first-order Markov transition matrix over per-user event sequences

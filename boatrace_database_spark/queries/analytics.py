@@ -312,16 +312,7 @@ ORDER BY rf, ls
 
 def grouping_sets(spark, sf_dir):
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               count(*) AS n
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        ORDER BY status, priority
-        """
-    )
+    return spark.sql(GROUPING_SETS_SQL)
 
 
 GROUPING_SETS_SQL = """

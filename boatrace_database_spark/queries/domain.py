@@ -40,6 +40,7 @@ from boatrace_database_spark import schemas as S
 from boatrace_database_spark.gold import race_table
 from boatrace_database_spark.operators import behavior
 from boatrace_database_spark.parse.kernel import parse_files
+from boatrace_database_spark.queries._util import cohort_retention_sql
 from boatrace_database_spark.silver import silver_tables
 
 REF = "/root/reference"
@@ -227,32 +228,7 @@ def racer_first_win_cohort(spark, sf_dir):
 
 FIRST_WIN_COHORT_SQL = f"""
 WITH {_BASE_CTE},
-first AS (
-  SELECT player_id, min(CAST(ts AS DATE)) AS cohort_day
-  FROM ev WHERE event_type = 'win' GROUP BY player_id
-),
-f2 AS (
-  SELECT player_id, cohort_day,
-         CAST(date_trunc('week', cohort_day) AS DATE) AS cohort_week
-  FROM first
-),
-sizes AS (
-  SELECT cohort_week, count(*) AS cohort_size FROM f2 GROUP BY cohort_week
-),
-act AS (
-  SELECT DISTINCT e.player_id, f2.cohort_week,
-         CAST(floor(date_diff('day', f2.cohort_day, CAST(e.ts AS DATE))
-                    / 7.0) AS BIGINT) AS week_offset
-  FROM ev e JOIN f2 ON e.player_id = f2.player_id
-  WHERE CAST(e.ts AS DATE) >= f2.cohort_day
-)
-SELECT a.cohort_week, a.week_offset,
-       CAST(count(*) AS BIGINT) AS active_users,
-       round((100.0 * count(*)) / min(s.cohort_size), 2) AS retention_pct
-FROM act a JOIN sizes s ON a.cohort_week = s.cohort_week
-GROUP BY a.cohort_week, a.week_offset
-ORDER BY a.cohort_week, a.week_offset
-"""
+{cohort_retention_sql("ev", "player_id", "win")}"""
 
 
 QUERIES = {

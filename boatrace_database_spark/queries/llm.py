@@ -1739,16 +1739,16 @@ ORDER BY vec_id
 _IVF_INDEX_CACHE: dict = {}
 
 
-def ivf_index_for(spark, sf_dir, n_cells=None):
+def ivf_index_for(spark, sf_dir):
     """Build (or fetch the cached) IVF index for sf_dir's embeddings,
-    materialized so probes don't re-run k-means assignment.
-    ``n_cells=None`` derives the quantizer size from the corpus count
-    (`ann_cells` — the r9 verdict's fix for the pinned 16-cell demo
-    quantizer whose sf1 recall fell to 0.45 on the PQ path)."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells)
+    materialized so probes don't re-run k-means assignment. The
+    quantizer size derives from the corpus count (`ann_cells` — the r9
+    verdict's fix for the pinned 16-cell demo quantizer whose sf1
+    recall fell to 0.45 on the PQ path)."""
+    key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_INDEX_CACHE:
         e = _t(spark, sf_dir, "embeddings")
-        indexed, centroids = SIM.ivf_build_index(e, n_cells=n_cells)
+        indexed, centroids = SIM.ivf_build_index(e)
         # truncate lineage + materialize: a probe must scan the stored
         # inverted file, not replay the k-means transform
         indexed = indexed.localCheckpoint(eager=True)
@@ -1783,20 +1783,16 @@ def ann_ivf_topk(spark, sf_dir):
 _IVFPQ_INDEX_CACHE: dict = {}
 
 
-def ivfpq_index_for(spark, sf_dir, n_cells=None, n_subspaces=16, n_codes=256):
+def ivfpq_index_for(spark, sf_dir, n_subspaces=16, n_codes=256):
     """Build (or fetch the cached) IVF-PQ index for sf_dir's embeddings
-    — codes materialized so probes scan stored codes, not re-encode."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        n_cells,
-        n_subspaces,
-        n_codes,
-    )
+    — codes materialized so probes scan stored codes, not re-encode.
+    The cell count derives from the corpus count, as in
+    `ivf_index_for`."""
+    key = (spark.sparkContext.applicationId, sf_dir, n_subspaces, n_codes)
     if key not in _IVFPQ_INDEX_CACHE:
         e = _t(spark, sf_dir, "embeddings")
         codes, centroids, books = SIM.ivfpq_build_index(
-            e, n_cells=n_cells, n_subspaces=n_subspaces, n_codes=n_codes
+            e, n_subspaces=n_subspaces, n_codes=n_codes
         )
         _IVFPQ_INDEX_CACHE[key] = (
             codes.localCheckpoint(eager=True),

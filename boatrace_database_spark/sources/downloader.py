@@ -42,18 +42,18 @@ def download_archives(
     out_dir: str = "lzh",
     fetch: Callable[[str], bytes] | None = None,
     interval_s: float = REQUEST_INTERVAL_S,
-    check_existence: bool = True,
     sleep: Callable[[float], None] = time.sleep,
 ) -> list[str]:
     """Fetch archives sequentially with the politeness interval;
-    skip-if-exists caching like the reference (main.py:64-66)."""
+    an archive already in ``out_dir`` is kept, not fetched again, like
+    the reference's skip-if-exists cache (main.py:64-66)."""
     fetch = fetch or _default_fetch
     os.makedirs(out_dir, exist_ok=True)
     paths: list[str] = []
     for date in dates:
         for kind in kinds:
             path = os.path.join(out_dir, f"{kind}{date}.lzh")
-            if check_existence and os.path.exists(path):
+            if os.path.exists(path):
                 paths.append(path)
                 continue
             payload = fetch(archive_url(date, kind))

@@ -270,16 +270,15 @@ def _each_epoch(
     )
 
 
-def _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus):
+def _ann_probe(codes, centroids, books, id_col, vec_col, refine=0, corpus=None):
     """``probe(batch, k=…)``: the batch `ivfpq_probe` against the frozen
-    index — the dense side of `stream_ann_serve` and
-    `stream_hybrid_serve`."""
+    index at its derived nprobe — the dense side of `stream_ann_serve`
+    and `stream_hybrid_serve`."""
     from boatrace_database_spark.operators.similarity import ivfpq_probe
 
     return partial(
         ivfpq_probe, codes, centroids, books,
-        id_col=id_col, vec_col=vec_col, nprobe=nprobe, refine=refine,
-        corpus=corpus,
+        id_col=id_col, vec_col=vec_col, refine=refine, corpus=corpus,
     )
 
 
@@ -479,13 +478,13 @@ def stream_funnel(
     spark: SparkSession,
     source_dir: str,
     schema: StructType,
-    stages: list[str] | None = None,
     query_name: str = "funnel_state",
     state_ttl_ms: int | None = None,
     within_seconds: int | None = None,
 ) -> StreamingQuery:
     """Streaming twin of operators/behavior.funnel_summary: per-user
-    funnel progress maintained as unbounded events arrive.
+    funnel progress through view → click → purchase maintained as
+    unbounded events arrive.
 
     State per user = one microsecond timestamp per stage (-1 unset).
     Each micro-batch replays the user's funnel-type events in
@@ -522,9 +521,7 @@ def stream_funnel(
     """
     import pandas as pd
 
-    stages = list(stages or ["view", "click", "purchase"])
-    if len(set(stages)) != len(stages):
-        raise ValueError(f"funnel stages must be distinct: {stages!r}")
+    stages = ["view", "click", "purchase"]
     k = len(stages)
     idx_of = {s: i for i, s in enumerate(stages, start=1)}
     uddl, _ = _id_type(schema, "user_id")
@@ -764,7 +761,6 @@ def stream_event_edges(
     source_dir: str,
     schema: StructType,
     query_name: str = "event_edges",
-    state_ttl_ms: int | None = None,
 ) -> StreamingQuery:
     """Streaming twin of operators/behavior.event_transitions' edge
     extraction: per-user (from_type → to_type) adjacency edges as
@@ -784,8 +780,7 @@ def stream_event_edges(
     equal-ts events within one batch). Equal-ts events split across
     batches out of event_id order resolve in arrival order — the
     stored last event is never re-sorted against a later arrival.
-    ``state_ttl_ms`` evicts idle users; their next event starts a
-    fresh chain (no cross-eviction edge).
+    State is held for the life of the query.
     """
     import pandas as pd
 
@@ -813,8 +808,7 @@ def stream_event_edges(
     out = _keyed_state(
         events, ["user_id"], edges,
         f"user_id {uddl}, from_type STRING, to_type STRING",
-        f"last_ts LONG, last_eid {eddl}, last_type STRING", "append",
-        state_ttl_ms,
+        f"last_ts LONG, last_eid {eddl}, last_type STRING", "append", None,
     )
     return _start(out, query_name)
 
@@ -1268,16 +1262,16 @@ def stream_dedup_simhash(
     chunk_bits: int = 8,
     max_members: int = 256,
     query_name: str = "stream_simhash",
-    state_ttl_ms: int | None = None,
 ) -> StreamingQuery:
     """Streaming SimHash near-dup: the third member of the streaming
     dedup family (exact → MinHash → SimHash), same first-seen state
     contract as its siblings. Defaults (max_hamming=8, shingle_n=2,
     bits=64, chunk_bits=8) match batch ``simhash_pairs`` exactly, so
     the twins agree out of the box (64-bit is the scale-safe width —
-    see the batch docstring's saturation measurement); ``state_ttl_ms``
-    and the ``max_members`` capped-regime caveat behave as documented
-    on ``stream_dedup_minhash``.
+    see the batch docstring's saturation measurement); the
+    ``max_members`` capped-regime caveat behaves as documented on
+    ``stream_dedup_minhash``, and state is held for the life of the
+    query.
 
     Per-row signatures: the batch operator bit-votes with a groupBy
     over exploded shingles; here the SAME ``bits`` votes come from
@@ -1307,7 +1301,6 @@ def stream_dedup_simhash(
         sig, iddl, _cid,
         max_hamming=max_hamming, bits=bits, chunk_bits=chunk_bits,
         max_members=max_members, query_name=query_name,
-        state_ttl_ms=state_ttl_ms,
     )
 
 
@@ -1321,7 +1314,6 @@ def _hamming_dedup_stream(
     chunk_bits: int,
     max_members: int,
     query_name: str,
-    state_ttl_ms: int | None,
 ) -> StreamingQuery:
     """Signature-generic stateful Hamming dedup core — the streaming
     twin of batch `dedup.hamming_pairs_banded`, factored out of
@@ -1354,7 +1346,7 @@ def _hamming_dedup_stream(
     flagged = _keyed_state(
         chunked, ["chunk", "key"], flag,
         f"id_a {iddl}, id_b {iddl}, hamming INT",
-        f"ids ARRAY<{iddl}>, sims ARRAY<LONG>", "append", state_ttl_ms,
+        f"ids ARRAY<{iddl}>, sims ARRAY<LONG>", "append", None,
     )
     return _start(flagged, query_name)
 
@@ -1369,7 +1361,6 @@ def stream_dedup_dhash(
     chunk_bits: int = 8,
     max_members: int = 256,
     query_name: str = "stream_dhash",
-    state_ttl_ms: int | None = None,
 ) -> StreamingQuery:
     """Streaming perceptual IMAGE dedup (round 9): arriving media rows
     (the `multimodal.MEDIA_SCHEMA` layout — binary payload + meta) are
@@ -1401,7 +1392,6 @@ def stream_dedup_dhash(
         sig, iddl, _cid,
         max_hamming=max_hamming, bits=bits, chunk_bits=chunk_bits,
         max_members=max_members, query_name=query_name,
-        state_ttl_ms=state_ttl_ms,
     )
 
 
@@ -1415,7 +1405,6 @@ def stream_dedup_audio(
     hop: int = 512,
     max_members: int = 256,
     query_name: str = "stream_audio",
-    state_ttl_ms: int | None = None,
 ) -> StreamingQuery:
     """Streaming AUDIO near-dup dedup (round 10) — the stream twin of
     batch `multimodal.audio_dedup_pairs`, sharing its two-stage shape:
@@ -1478,7 +1467,7 @@ def stream_dedup_audio(
     flagged = _keyed_state(
         keyed, ["fp"], flag, f"id_a {iddl}, id_b {iddl}, ber DOUBLE",
         f"ids ARRAY<{iddl}>, cat ARRAY<LONG>, lens ARRAY<INT>", "append",
-        state_ttl_ms,
+        None,
     )
     return _start(flagged, query_name)
 
@@ -1884,13 +1873,12 @@ def stream_dedup_semantic(
     n_assign: int = 1,
     max_members: int = 256,
     query_name: str = "stream_semantic",
-    state_ttl_ms: int | None = None,
 ) -> StreamingQuery:
     """Streaming SemDeDup: the fourth member of the streaming dedup
     family (exact → MinHash → SimHash → semantic), same first-seen
-    state contract as its siblings; ``state_ttl_ms`` and the
-    ``max_members`` capped-regime caveat behave as documented on
-    ``stream_dedup_minhash``.
+    state contract as its siblings; the ``max_members`` capped-regime
+    caveat behaves as documented on ``stream_dedup_minhash``, and state
+    is held for the life of the query.
 
     The coarse quantizer is STATIC by necessity — a stream cannot
     retrain k-means — so ``centroids`` is the table from a prebuilt
@@ -1980,7 +1968,7 @@ def stream_dedup_semantic(
     flagged = _keyed_state(
         assigned, ["cell"], flag,
         f"id_a {id_ddl}, id_b {id_ddl}, cell INT, score DOUBLE",
-        f"ids ARRAY<{id_ddl}>, flat ARRAY<DOUBLE>", "append", state_ttl_ms,
+        f"ids ARRAY<{id_ddl}>, flat ARRAY<DOUBLE>", "append", None,
     )
     return _start(flagged, query_name)
 
@@ -2087,7 +2075,6 @@ def stream_ann_serve(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    nprobe: int | None = None,
     refine: int = 0,
     corpus: DataFrame | None = None,
     query_name: str = "ann_serve",
@@ -2103,7 +2090,8 @@ def stream_ann_serve(
     its own vector and the frozen index (per-query independence), so
     stream results are byte-identical to the batch probe over the same
     queries under ANY arrival order or batch split: exact parity with
-    zero state, no watermark. ``refine=R`` carries the FAISS refinement
+    zero state, no watermark. The probe depth is the index's derived
+    ``nprobe`` (`ann_nprobe`). ``refine=R`` carries the FAISS refinement
     stage through (exact re-rank of the ADC short-list against
     ``corpus``) — the `target_recall=` operating point served online.
 
@@ -2121,7 +2109,7 @@ def stream_ann_serve(
     raw rows in the cold vector table. Index updates arrive by
     restarting the serve stream on the next index snapshot, exactly as
     `stream_ivfpq_ingest` documents from the maintenance side."""
-    probe = _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus)
+    probe = _ann_probe(codes, centroids, books, id_col, vec_col, refine, corpus)
     return _each_epoch(
         spark, source_dir, schema, partial(probe, k=k), query_name,
         checkpoint_dir, sink_dir,
@@ -2199,9 +2187,6 @@ def stream_hybrid_serve(
     text_col: str = "query_text",
     k: int = 10,
     depth: int | None = None,
-    nprobe: int | None = None,
-    refine: int = 0,
-    corpus: DataFrame | None = None,
     k1: float = 1.2,
     b: float = 0.75,
     n_buckets: int = 64,
@@ -2215,8 +2200,8 @@ def stream_hybrid_serve(
     BM25 probe, appended to ``sink_dir`` as
     (query_id, doc_id, rrf, rk) rows.
 
-    Mechanics: per epoch, `ivfpq_probe` (optional ``refine=`` exact
-    re-rank) and `bm25_topk_prebuilt` each produce a ``depth``-deep
+    Mechanics: per epoch, `ivfpq_probe` (derived nprobe, no refine
+    stage) and `bm25_topk_prebuilt` each produce a ``depth``-deep
     ranking (default ``k``), and `rrf_fuse` combines them — all three
     batch operators VERBATIM inside foreachBatch. Every stage is
     per-query independent against FROZEN index snapshots, so the
@@ -2237,7 +2222,7 @@ def stream_hybrid_serve(
     from boatrace_database_spark.operators.retrieval import rrf_fuse
 
     d = depth or k
-    dense = _ann_probe(codes, centroids, books, id_col, vec_col, nprobe, refine, corpus)
+    dense = _ann_probe(codes, centroids, books, id_col, vec_col)
     lexical = _bm25_probe(spark, index_path, id_col, text_col, k1, b, n_buckets)
 
     def fuse(batch: DataFrame) -> DataFrame:

@@ -202,17 +202,22 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
     Declared-schema contract: each table is read with its schema from
     ``schemas.WAREHOUSE_SCHEMAS``, so registering launches no Spark job.
     A declared read would turn a column missing on disk into nulls, so
-    the columns of one part file per table are checked first: the file
-    is found with the warehouse's Hadoop FS and its footer read on the
-    driver by pyarrow (no job), so a warehouse named by a URI is checked
-    too. A table whose columns differ from the declared ones raises
-    ``ValueError`` naming the table and both column lists; a part file
-    whose scheme pyarrow cannot open raises ``ValueError`` naming the
-    scheme. A table directory without part files, or a table
-    absent on disk (one no loaded file fed), registers as an empty frame
-    of its declared schema, so every view always exists. A
-    ``warehouse_dir`` that does not exist raises ``FileNotFoundError``:
-    a mistyped path must not read as an empty warehouse.
+    the columns of one part file per ``race_date`` partition are checked
+    first: one ``_merge_write`` replaces a partition as a unit, so all
+    of a partition's files share one schema, while two partitions may
+    have been written days apart. The files are the declared read's own
+    file listing (made on the driver by the warehouse's Hadoop FS) and
+    their footers are read on the driver by pyarrow (no job), so a
+    warehouse named by a URI is checked too. A
+    partition whose columns differ from the declared ones raises
+    ``ValueError`` naming the table, the partition and both column
+    lists; a part file whose scheme pyarrow cannot open raises
+    ``ValueError`` naming the scheme. A table directory without part
+    files, or a table absent on disk (one no loaded file fed),
+    registers as an empty frame of its declared schema, so every view
+    always exists. A ``warehouse_dir`` that does not exist raises
+    ``FileNotFoundError``: a mistyped path must not read as an empty
+    warehouse.
     """
     # one Hadoop FS listing, so a table is found under any scheme
     root, fs = _fs(spark, warehouse_dir)
@@ -225,18 +230,19 @@ def register_views(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFra
         if name not in present:
             df = spark.createDataFrame([], S.WAREHOUSE_SCHEMAS[name])
         else:
-            parts = fs.globStatus(
-                spark._jvm.org.apache.hadoop.fs.Path(f"{path}/race_date=*/*.parquet")
-            )
-            if parts:
-                on_disk = _footer_columns(parts[0].getPath().toUri().toString())
-                declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
+            df = read_table(spark, warehouse_dir, name)
+            # the read's own file listing: one URI string per part file
+            first_of_day = {}
+            for uri in df.inputFiles():
+                first_of_day.setdefault(uri.rsplit("/", 2)[-2], uri)
+            declared = S.WAREHOUSE_SCHEMAS[name].names[:-1]
+            for day, uri in first_of_day.items():
+                on_disk = _footer_columns(uri)
                 if set(on_disk) != set(declared):
                     raise ValueError(
-                        f"register_views: table {name!r} ({path}) has columns "
-                        f"{on_disk}, declared {declared}"
+                        f"register_views: table {name!r} ({path}/{day}) has "
+                        f"columns {on_disk}, declared {declared}"
                     )
-            df = read_table(spark, warehouse_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
@@ -451,9 +457,7 @@ def export_sqlite(
     return db_path
 
 
-def import_sqlite(
-    spark: SparkSession, db_path: str, tables: tuple[str, ...] | None = None
-) -> dict[str, DataFrame]:
+def import_sqlite(spark: SparkSession, db_path: str) -> dict[str, DataFrame]:
     """Migration entry: read an existing reference ``boatrace.db`` into
     DataFrames (all-TEXT columns, exactly as the reference stores them)
     and register temp views — a reference user's accumulated database
@@ -475,8 +479,6 @@ def import_sqlite(
                 "SELECT name FROM sqlite_master WHERE type='table'"
             )
         ]
-        if tables is not None:
-            names = [n for n in names if n in tables]
         out: dict[str, DataFrame] = {}
         for name in names:
             cur = con.execute(f'SELECT * FROM "{name}"')
@@ -575,9 +577,8 @@ def cluster_write(
     path: str,
     cluster_cols: list[str],
     n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Zone-map clustering: write parquet range-partitioned AND sorted
+    """Zone-map clustering: (over)write parquet range-partitioned AND sorted
     on ``cluster_cols``, so each output file (and each row group inside
     it) covers a narrow, near-disjoint slice of the key space. Parquet
     footers carry per-row-group min/max for every column; a selective
@@ -605,7 +606,7 @@ def cluster_write(
     (
         df.repartitionByRange(int(n), *[F.col(c) for c in cluster_cols])
         .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -715,9 +716,8 @@ def export_orc(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write a table as ORC — the interchange columnar format for
+    """(Over)write a table as ORC — the interchange columnar format for
     consumers standardized on the Hive/Trino side of the house.
     Functionally parquet's peer here: columnar, splittable, per-stripe
     min/max zone maps, snappy by default; Spark's reader keeps
@@ -730,7 +730,7 @@ def export_orc(
     mixing formats in one warehouse costs more in tooling than the
     format differences are worth.
     """
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
@@ -758,9 +758,8 @@ def zorder_write(
     cluster_cols: list[str],
     n_files: int | None = None,
     bits: int = 8,
-    mode: str = "overwrite",
 ) -> None:
-    """MULTI-dimensional zone-map clustering: write parquet range-
+    """MULTI-dimensional zone-map clustering: (over)write parquet range-
     partitioned and sorted on the Z-VALUE (Morton code) of
     ``cluster_cols`` — bit-interleaved per-column buckets — so each
     file/row group covers a small hyper-rectangle of the key space and
@@ -823,7 +822,7 @@ def zorder_write(
         .repartitionByRange(int(n), F.col("_zorder"))
         .sortWithinPartitions("_zorder")
         .drop("_zorder")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

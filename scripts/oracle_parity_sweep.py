@@ -142,9 +142,9 @@ def main() -> None:
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "tests"))
-    from test_oracle_parity import (  # the gate's EXACT comparison pieces
+    from test_oracle_parity import (  # the gate's EXACT comparison
         _arrow_type_class,
-        _rows_to_set,
+        _oracle_mismatch,
         _spark_type_class,
     )
 
@@ -201,7 +201,6 @@ def main() -> None:
         try:
             sdf = QUERIES[name](spark, SF_DIR)
             srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
             if name in HEAVY_ORACLES and n_docs > 8192:
                 dcols, drows = HEAVY_ORACLES[name](con)
                 atable = None
@@ -211,54 +210,32 @@ def main() -> None:
                 dcols = atable.column_names
             checked += 1
             n_rows = len(srows)
-            # the gate's full comparison: columns, type classes, counts,
-            # then typed values — type drift must fail even when the
-            # value level cannot see it (0-row / all-NULL regimes)
-            if sorted(scols) != sorted(dcols):
-                mismatches[name] = {"columns": [scols, dcols]}
-            else:
+            if atable is None:
+                # heavy override: classes from the ACTUAL python/numpy
+                # row values (first non-None per column), so a dtype
+                # regression in the heavy path is caught by the drift
+                # report, not only the value hash (r13 ADVICE #3). An
+                # all-None column falls back to the Spark class
+                # (nothing to type against).
                 sclasses = {
                     f.name: _spark_type_class(f.dataType)
                     for f in sdf.schema.fields
                 }
-                if atable is None:
-                    # heavy override: classes from the ACTUAL python/
-                    # numpy row values (first non-None per column), so
-                    # a dtype regression in the heavy path is caught by
-                    # the drift report, not only the value hash (r13
-                    # ADVICE #3). An all-None column falls back to the
-                    # Spark class (nothing to type against).
-                    dclasses = {}
-                    for ci, c in enumerate(dcols):
-                        val = next(
-                            (r[ci] for r in drows if r[ci] is not None), None
-                        )
-                        dclasses[c] = (
-                            sclasses[c] if val is None
-                            else _python_type_class(val)
-                        )
-                else:
-                    dclasses = {
-                        fld.name: _arrow_type_class(fld.type)
-                        for fld in atable.schema
-                    }
-                drift = {
-                    c: (sclasses[c], dclasses[c])
-                    for c in sclasses
-                    if sclasses[c] != dclasses[c]
+                dclasses = {}
+                for ci, c in enumerate(dcols):
+                    val = next((r[ci] for r in drows if r[ci] is not None), None)
+                    dclasses[c] = (
+                        sclasses.get(c) if val is None else _python_type_class(val)
+                    )
+            else:
+                dclasses = {
+                    fld.name: _arrow_type_class(fld.type) for fld in atable.schema
                 }
-                if drift:
-                    mismatches[name] = {"type_drift": drift}
-                elif len(srows) != len(drows):
-                    mismatches[name] = {"rows": [len(srows), len(drows)]}
-                else:
-                    a = _rows_to_set(scols, srows)
-                    b = _rows_to_set(dcols, drows)
-                    if a != b:
-                        diff = [(x, y) for x, y in zip(a, b) if x != y]
-                        mismatches[name] = {
-                            "first_value_diff": repr(diff[:1])[:300]
-                        }
+            # the gate's own comparison: columns, type classes, counts,
+            # then typed values
+            mismatch = _oracle_mismatch(sdf.schema, srows, dcols, drows, dclasses)
+            if mismatch is not None:
+                mismatches[name] = mismatch
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             mismatches[name] = {"error": str(exc).split("\n")[0][:200]}
         status = "MISMATCH " + next(iter(mismatches[name])) if name in mismatches else "ok"

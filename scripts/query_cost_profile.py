@@ -23,27 +23,12 @@ from perfbench.harness import rest  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from bench import HEADLINE
+    from bench import HEADLINE, warm_up
 
     names = sys.argv[1:] or HEADLINE
     spark = get_spark("cost_profile")
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql.functions import col, pandas_udf
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    @pandas_udf("double")
-    def _warm(v):
-        import numpy as np  # noqa: F401
-
-        return v * 1.0
-
-    (
-        spark.range(100_000)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(_warm(col("id").cast("double")))
-        .count()
-    )
+    warm_up(spark)
     out = {}
     for name in names:
         # warm run (codegen/broadcast caches), then measured run

@@ -1622,18 +1622,6 @@ def test_bm25_add_to_index_equals_full_rebuild(spark, tmp_path):
     assert inc == full and inc
 
 
-def test_drop_fat_buckets_equals_cap_buckets(spark):
-    """The corpus-sized-side variant (broadcast the FAT buckets,
-    anti-join) is output-identical to _cap_buckets (broadcast the keep
-    set) on a table with buckets straddling the cap."""
-    rows = [(i, i % 3, i % 2) for i in range(40)] + [(100 + i, 9, 9) for i in range(3)]
-    banded = spark.createDataFrame(rows, "id LONG, band INT, bucket INT")
-    cap = 5
-    a = sorted(tuple(r) for r in D._cap_buckets(banded, ["band", "bucket"], cap).collect())
-    b = sorted(tuple(r) for r in D._drop_fat_buckets(banded, ["band", "bucket"], cap).collect())
-    assert a == b and a  # some buckets survive, fat ones dropped in both
-
-
 @pytest.mark.slow
 def test_bm25_add_to_index_retry_is_idempotent(spark, tmp_path):
     """Double-delivering the same batch to bm25_add_to_index appends
@@ -1687,17 +1675,17 @@ def test_incremental_minhash_probe_plan_shape(spark, tmp_path):
     # the probe helper is exactly what incremental_minhash_dedup
     # checkpoints; inspect it directly (the caller's lineage cut hides
     # it from the composed plan)
-    probe = D._seen_probe(seen, banded, 32, 0.5, max_seen_bucket=256)
+    probe = D._seen_probe(seen, banded, 32, 0.5)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     seen_joins = [ln for ln in plan.splitlines() if "Join" in ln]
-    # every join — the (band,bucket) probe AND the fat-bucket anti —
-    # must build a broadcast side; the seen rows themselves never shuffle
+    # every join must build a broadcast side; the seen rows themselves
+    # never shuffle
     assert seen_joins and all(
         "BroadcastHashJoin" in ln for ln in seen_joins
     ), plan
     # the seen parquet scan must feed the probe without an Exchange on
     # its row stream: the only hashpartitioning exchanges allowed are
-    # the batch groupBys and the fat-bucket count aggregate
+    # the batch groupBys
     assert probe.count() >= 0
     out = D.incremental_minhash_dedup(batch, seen, "doc_id", "text")
     assert out.count() >= 0
@@ -3297,8 +3285,6 @@ def test_banding_cap_stats_counts(spark):
     # parity: the report predicts exactly what the cap drops
     kept = D._cap_buckets(banded, ["key"], 3).count()
     assert kept == r.rows - r.dropped_rows
-    kept2 = D._drop_fat_buckets(banded, ["key"], 3).count()
-    assert kept2 == kept
     e = D.banding_cap_stats(banded.where("id < 0"), ["key"], 3).collect()[0]
     assert (e.rows, e.dropped_rows, e.capped_row_frac) == (0, 0, 0.0)
 

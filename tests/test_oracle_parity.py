@@ -107,6 +107,41 @@ def _arrow_type_class(t) -> str:
     return str(t)
 
 
+def _oracle_mismatch(spark_schema, spark_rows, ddb_cols, ddb_rows, ddb_classes):
+    """The gate's comparison of one query's Spark result (its schema and
+    rows as tuples) against its oracle's (columns, rows, type class per
+    column): columns, then type classes, then row count, then
+    order-insensitive typed values. Returns None on a match, else a
+    one-key dict naming the first check that failed: ``columns``,
+    ``type_drift`` (column -> (spark, oracle) class; the gate's value
+    hash is typed, so drift fails it even when values are numerically
+    equal: add an explicit CAST), ``rows`` or
+    ``first_value_diff``. Type drift is checked before values so it
+    fails even where values cannot show it (0-row / all-NULL results).
+    """
+    spark_cols = spark_schema.names
+    if sorted(spark_cols) != sorted(ddb_cols):
+        return {"columns": [spark_cols, ddb_cols]}
+    spark_classes = {
+        f.name: _spark_type_class(f.dataType) for f in spark_schema.fields
+    }
+    drift = {
+        c: (spark_classes[c], ddb_classes[c])
+        for c in spark_classes
+        if spark_classes[c] != ddb_classes[c]
+    }
+    if drift:
+        return {"type_drift": drift}
+    if len(spark_rows) != len(ddb_rows):
+        return {"rows": [len(spark_rows), len(ddb_rows)]}
+    a = _rows_to_set(spark_cols, spark_rows)
+    b = _rows_to_set(ddb_cols, ddb_rows)
+    if a != b:
+        diff = [(x, y) for x, y in zip(a, b) if x != y]
+        return {"first_value_diff": repr(diff[:1])[:300]}
+    return None
+
+
 ALL_QUERIES = sorted(entry_mod.queries().keys())
 # the boatrace-domain entries parse the committed reference month
 REFERENCE_QUERIES = set(domain.QUERIES)
@@ -125,7 +160,6 @@ def test_query_matches_oracle(name, spark, ddb):
     q = entry_mod.queries()[name]
     sdf = q(spark, SF_DIR)
     spark_rows = sdf.collect()
-    spark_cols = sdf.columns
 
     oracle = entry_mod.oracle_sql().get(name)
     if oracle is None:
@@ -138,35 +172,14 @@ def test_query_matches_oracle(name, spark, ddb):
     # fetchall, hiding exactly the type drift that flips the driver's
     # typed value hash. Arrow surfaces it as decimal128 → Decimal.
     atable = ddb.execute(oracle).fetch_arrow_table()
-    ddb_cols = atable.column_names
-    ddb_rows = [tuple(r.values()) for r in atable.to_pylist()]
-
-    assert sorted(spark_cols) == sorted(ddb_cols), (
-        f"{name}: column mismatch {spark_cols} vs {ddb_cols}"
+    mismatch = _oracle_mismatch(
+        sdf.schema,
+        [tuple(r) for r in spark_rows],
+        atable.column_names,
+        [tuple(r.values()) for r in atable.to_pylist()],
+        {fld.name: _arrow_type_class(fld.type) for fld in atable.schema},
     )
-    spark_classes = {
-        f.name: _spark_type_class(f.dataType) for f in sdf.schema.fields
-    }
-    ddb_classes = {
-        fld.name: _arrow_type_class(fld.type) for fld in atable.schema
-    }
-    type_drift = {
-        c: (spark_classes[c], ddb_classes[c])
-        for c in spark_classes
-        if spark_classes[c] != ddb_classes[c]
-    }
-    assert not type_drift, (
-        f"{name}: column type-class drift (spark, oracle): {type_drift} — "
-        "the driver's value hash is typed, so this fails its gate even "
-        "when values are numerically equal (add an explicit CAST)"
-    )
-    assert len(spark_rows) == len(ddb_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(ddb_rows)}"
-    )
-    a = _rows_to_set(spark_cols, [tuple(r) for r in spark_rows])
-    b = _rows_to_set(ddb_cols, ddb_rows)
-    mismatches = [(x, y) for x, y in zip(a, b) if x != y]
-    assert not mismatches, f"{name}: first diffs {mismatches[:3]}"
+    assert mismatch is None, f"{name}: {mismatch}"
 
 
 def test_canon_is_typed():

@@ -122,6 +122,18 @@ def test_repeated_windows_counts_copied_strings_but_not_docstrings():
     assert module.repeated_windows({"a.py": source}) == []
 
 
+def test_package_oracle_sql_has_no_repeated_string_windows():
+    """Oracle SQL is written once: a CTE or query text that two oracles
+    need is one fragment they compose (ROADMAP direction 8), so the
+    package's multi-line strings hold no repeated window."""
+    module = _repeated_windows_module()
+    sources = {
+        str(p): p.read_text(encoding="utf-8")
+        for p in sorted((ROOT / "boatrace_database_spark").rglob("*.py"))
+    }
+    assert module.repeated_windows(sources, module.strings) == []
+
+
 class _StubContext:
     """Answers `_jsc.sc().isStopped()` like a live SparkContext until
     the session is lost, then raises like py4j with the JVM gone."""

@@ -647,6 +647,29 @@ def test_register_views_refuses_undeclared_columns(spark, gen_wh, tmp_path):
             W.register_views(spark, root)
 
 
+def test_register_views_checks_every_partition(spark, gen_wh, tmp_path):
+    """A column renamed in the last day's partition only is refused as
+    well: every race_date partition's footer is checked, not only the
+    first part file the table's listing returns."""
+    import pyarrow.parquet as pq
+
+    wh = str(tmp_path / "wh")
+    shutil.copytree(gen_wh, wh)
+    day_dir = f"{wh}/odds/race_date={GEN_DATES[-1]}"
+    for name in os.listdir(day_dir):
+        path = f"{day_dir}/{name}"
+        if name.endswith(".crc"):
+            os.remove(path)
+        elif name.endswith(".parquet"):
+            t = pq.ParquetFile(path).read()
+            pq.write_table(
+                t.rename_columns(["win" if c == "単勝" else c for c in t.column_names]),
+                path,
+            )
+    with pytest.raises(ValueError, match=rf"'odds'.*{GEN_DATES[-1]}.*'win'"):
+        W.register_views(spark, wh)
+
+
 def test_footer_columns_names_a_scheme_pyarrow_cannot_open():
     with pytest.raises(ValueError, match="'s3a'"):
         W._footer_columns("s3a://bucket/wh/odds/race_date=2020-03-02/part-0.parquet")
