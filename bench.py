@@ -67,6 +67,9 @@ HEADLINE = [
 ]
 
 BOATRACE_TXT = "/root/reference/txt/*2008*.TXT"
+# full 2020: 732 lzh archives -> fused decode+parse -> gold join;
+# reference extrapolation ~33 s single-threaded (2.75 s/month)
+BOATRACE_LZH = "/root/reference/lzh/*.lzh"
 # the timing lines that need the reference tree; on a host without it
 # they are named under "skipped" with the reason instead of dropped
 BOATRACE_LINES = ("boatrace_month_e2e", "boatrace_year_from_lzh")
@@ -75,36 +78,21 @@ BOATRACE_LINES = ("boatrace_month_e2e", "boatrace_year_from_lzh")
 ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
 
 
-def time_boatrace(spark) -> float:
+def time_boatrace(spark, glob: str, line: str) -> float:
+    """One ingest timing: parse the files ``glob`` matches (TXT or
+    lzh), split silver, join gold and count the race rows. Prints
+    ``<line>: <n> rows in <s>s`` to stderr and returns the seconds."""
     from boatrace_database_spark.gold import race_table
     from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     t0 = time.perf_counter()
-    parsed = parse_files(spark, BOATRACE_TXT).persist()
-    t = silver_tables(parsed)
-    race = race_table(t["result"], t["env"], t["schedule"])
-    n = race.count()
-    parsed.unpersist()
-    dt = time.perf_counter() - t0
-    print(f"boatrace_month_e2e: {n} rows in {dt:.2f}s", file=sys.stderr)
-    return dt
-
-
-def time_boatrace_year(spark) -> float:
-    """Full 2020: 732 lzh archives -> fused decode+parse -> gold join.
-    Reference extrapolation: ~33 s single-threaded (2.75 s/month)."""
-    from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_files
-    from boatrace_database_spark.silver import silver_tables
-
-    t0 = time.perf_counter()
-    parsed = parse_files(spark, "/root/reference/lzh/*.lzh").persist()
+    parsed = parse_files(spark, glob).persist()
     t = silver_tables(parsed)
     n = race_table(t["result"], t["env"], t["schedule"]).count()
     parsed.unpersist()
     dt = time.perf_counter() - t0
-    print(f"boatrace_year_from_lzh: {n} rows in {dt:.2f}s", file=sys.stderr)
+    print(f"{line}: {n} rows in {dt:.2f}s", file=sys.stderr)
     return dt
 
 
@@ -156,18 +144,18 @@ def main() -> None:
         from boatrace_database_spark.parse.kernel import parse_files
 
         parse_files(spark, "/root/reference/txt/K200801.TXT").count()
+        globs = {"boatrace_month_e2e": BOATRACE_TXT}
+        if os.path.exists("/root/reference/lzh"):
+            globs["boatrace_year_from_lzh"] = BOATRACE_LZH
+        else:
+            skipped["boatrace_year_from_lzh"] = "no reference lzh"
         # min-of-N like the star-schema queries below: BASELINE.md's
         # reference numbers are steady-state measurements too, and the
         # first run absorbs one-time JVM codegen compilation
-        timings["boatrace_month_e2e"] = round(
-            min(time_boatrace(spark) for _ in range(ITERS)), 3
-        )
-        if os.path.exists("/root/reference/lzh"):
-            timings["boatrace_year_from_lzh"] = round(
-                min(time_boatrace_year(spark) for _ in range(ITERS)), 3
+        for line, glob in globs.items():
+            timings[line] = round(
+                min(time_boatrace(spark, glob, line) for _ in range(ITERS)), 3
             )
-        else:
-            skipped["boatrace_year_from_lzh"] = "no reference lzh"
     else:
         skipped = dict.fromkeys(BOATRACE_LINES, "no reference txt")
 

@@ -87,7 +87,6 @@ def _index_components(
 
 def _score_topk(
     post: DataFrame,
-    dl: DataFrame | None,
     df_t: DataFrame,
     stats: DataFrame,
     qterms: DataFrame,
@@ -97,17 +96,13 @@ def _score_topk(
 ) -> DataFrame:
     """Shared BM25 scoring core over index components (in-memory or
     read back from a persisted index — both paths produce identical
-    rankings, tested). ``dl=None`` means ``post`` already carries a
-    ``dl`` column (the persisted layout denormalizes doc length onto
-    the posting rows so a probe never scans the corpus-sized doclens
-    table)."""
-    part = post.join(
-        F.broadcast(qterms), "term"
-    )  # candidate gen: broadcast probe
-    if dl is not None:
-        part = part.join(dl, "doc_id")
+    rankings, tested). ``post`` carries a ``dl`` column (both paths
+    denormalize doc length onto the posting rows, so a probe never
+    scans a corpus-sized doclens table)."""
     part = (
-        part.join(F.broadcast(df_t), "term")
+        # candidate gen: broadcast probe
+        post.join(F.broadcast(qterms), "term")
+        .join(F.broadcast(df_t), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
@@ -240,7 +235,7 @@ def bm25_topk(
     # df over query terms equals the full-corpus df for those terms:
     # every doc containing the term contributes exactly one posting row
     df_t = post.groupBy("term").agg(F.count("*").alias("df"))
-    return _score_topk(post, None, df_t, stats, qterms, k, k1, b)
+    return _score_topk(post, df_t, stats, qterms, k, k1, b)
 
 
 def term_bucket(term: Column, n_buckets: int) -> Column:
@@ -289,57 +284,52 @@ def bm25_add_to_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 64,
-    df_update: str = "delta",
 ) -> None:
     """Incrementally extend a persisted BM25 index with a new document
     batch, WITHOUT re-tokenizing the existing corpus (the retrieval
     twin of `ivf_add_to_index`): the batch's posting rows (with their
     denormalized doc lengths) APPEND into the bucket-partitioned
-    postings table, then df and the 1-row stats — cheap per-term /
-    global aggregates — rebuild from one scan of the merged postings.
-    Probing after an add equals probing an index built from the union
-    corpus (tested). Caller contract: batch doc ids are disjoint from
-    the indexed corpus (same as every incremental op here) — and the
-    function ENFORCES it: already-indexed doc ids are filtered out
-    before the append (the incremental_exact_dedup semi-probe shape
-    against the ``docids`` sidecar — one row per doc, so the guard
-    costs O(n_docs), never O(n_postings)), so a RETRIED or
-    double-delivered batch appends nothing and scores stay correct
-    (tested). The sidecar appends BEFORE the postings on purpose: a
-    crash between the two loses that batch from the index (visible,
-    recoverable by rebuild), where the opposite order would make a
-    redelivery silently double-count — missing beats corrupt. The
-    df/stats rebuild is similarly non-atomic (stale until the next
-    add); production deployments at scale should back the index with a
-    transactional table format.
+    postings table, then the batch's per-term df deltas and its exact
+    dl sum FOLD into the stored df and stats. Probing after an add
+    equals probing an index built from the union corpus (tested).
+    Caller contract: batch doc ids are disjoint from the indexed
+    corpus (same as every incremental op here) — and the function
+    ENFORCES it: already-indexed doc ids are filtered out before the
+    append (the incremental_exact_dedup semi-probe shape against the
+    ``docids`` sidecar — one row per doc, so the guard costs
+    O(n_docs), never O(n_postings)), so a RETRIED or double-delivered
+    batch appends nothing and scores stay correct (tested). The
+    sidecar appends BEFORE the postings on purpose: a crash between
+    the two loses that batch from the index (visible, recoverable by
+    rebuild), where the opposite order would make a redelivery
+    silently double-count — missing beats corrupt. The df/stats fold
+    is similarly non-atomic (stale until the next add); production
+    deployments at scale should back the index with a transactional
+    table format.
+
+    The index must be in `bm25_write_index`'s layout: a ``docids``
+    sidecar (its read fails otherwise) and stats carrying the exact
+    ``sum_dl``. An index whose stats predate ``sum_dl`` is refused
+    with a ValueError before anything is written; rebuild it.
 
     Scale shape: the expensive part (tokenize + explode + tf groupBy)
-    touches ONLY the batch. ``df_update="delta"`` (default, round 13)
-    makes the df/stats refresh batch-sized too: the batch's per-term
-    df deltas FOLD into the stored df with one outer merge over the
-    VOCABULARY-sized df table (eagerly checkpointed before the
-    overwrite deletes its own input — the merge_upsert pattern), and
-    stats folds in O(1) from the exact ``sum_dl`` the builder stores
-    — avg over longs is one double division, so the folded avgdl is
-    bit-identical to a full recompute, and add ≡ full-rebuild stays
-    EXACT (tested both modes). ``df_update="scan"`` keeps the r11
-    one-scan-of-merged-postings rebuild (also the automatic fallback
-    for a legacy index whose stats predate ``sum_dl`` — its exact dl
-    sum is only recoverable from the postings). Per-epoch maintenance
-    cost is thus O(batch + vocabulary), never O(postings): the upgrade
-    from compaction-grade to probe-grade the r11 docstring deferred.
+    touches ONLY the batch. The df refresh is one outer merge of the
+    batch's per-term df deltas over the VOCABULARY-sized df table
+    (eagerly checkpointed before the overwrite deletes its own input
+    — the merge_upsert pattern), and stats folds in O(1) from the
+    stored ``sum_dl`` — avg over longs is one double division, so the
+    folded avgdl is bit-identical to a full recompute, and add ≡
+    full-rebuild stays EXACT (tested). Per-epoch maintenance cost is
+    O(batch + vocabulary), never O(postings).
     """
-    if df_update not in ("delta", "scan"):
-        raise ValueError(
-            f"bm25_add_to_index: df_update must be 'delta' or 'scan', "
-            f"got {df_update!r}"
-        )
     spark = new_docs.sparkSession
-    try:  # docids sidecar: O(n_docs) guard scan
-        indexed_ids = spark.read.parquet(f"{path}/docids")
-    except Exception:  # index written before the sidecar existed
-        indexed_ids = (
-            spark.read.parquet(f"{path}/postings").select("doc_id").distinct()
+    indexed_ids = spark.read.parquet(f"{path}/docids")  # O(n_docs) guard
+    old_stats = spark.read.parquet(f"{path}/stats")
+    if "sum_dl" not in old_stats.columns:
+        raise ValueError(
+            f"BM25 index at {path} predates the sum_dl stats layout "
+            "(its exact dl sum is not stored); rebuild it with "
+            "bm25_write_index"
         )
     batch_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
     dup_hits = indexed_ids.join(
@@ -355,65 +345,47 @@ def bm25_add_to_index(
     post.join(dl, "doc_id").withColumn(
         "bucket", term_bucket(F.col("term"), n_buckets)
     ).write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
-    old_stats = spark.read.parquet(f"{path}/stats")
-    if df_update == "delta" and "sum_dl" not in old_stats.columns:
-        df_update = "scan"  # legacy index: its exact dl sum is only
-        # recoverable from the postings; the scan below writes sum_dl,
-        # so the NEXT add folds
-    if df_update == "delta":
-        # fold the batch's per-term df deltas into the stored df: one
-        # outer merge over the VOCABULARY-sized table, eagerly
-        # checkpointed because the overwrite deletes its own input
-        merged_df = (
-            spark.read.parquet(f"{path}/df")
-            .drop("bucket")
-            .join(batch_df.withColumnRenamed("df", "_delta"), "term", "full")
-            .select(
-                "term",
-                (
-                    F.coalesce("df", F.lit(0)) + F.coalesce("_delta", F.lit(0))
-                ).alias("df"),
-            )
-            .withColumn("bucket", term_bucket(F.col("term"), n_buckets))
-            .localCheckpoint(eager=True)
+    # fold the batch's per-term df deltas into the stored df: one
+    # outer merge over the VOCABULARY-sized table, eagerly
+    # checkpointed because the overwrite deletes its own input
+    merged_df = (
+        spark.read.parquet(f"{path}/df")
+        .drop("bucket")
+        .join(batch_df.withColumnRenamed("df", "_delta"), "term", "full")
+        .select(
+            "term",
+            (
+                F.coalesce("df", F.lit(0)) + F.coalesce("_delta", F.lit(0))
+            ).alias("df"),
         )
-        merged_df.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{path}/df"
-        )
-        # stats folds in O(1): exact long sums add, then the single
-        # double division — bit-identical to the full recompute
-        folded = (
-            old_stats.crossJoin(
-                F.broadcast(
-                    batch_stats.select(
-                        F.col("n_docs").alias("_bn"),
-                        F.coalesce("sum_dl", F.lit(0)).alias("_bsum"),
-                    )
+        .withColumn("bucket", term_bucket(F.col("term"), n_buckets))
+        .localCheckpoint(eager=True)
+    )
+    merged_df.write.mode("overwrite").partitionBy("bucket").parquet(
+        f"{path}/df"
+    )
+    # stats folds in O(1): exact long sums add, then the single
+    # double division — bit-identical to the full recompute
+    folded = (
+        old_stats.crossJoin(
+            F.broadcast(
+                batch_stats.select(
+                    F.col("n_docs").alias("_bn"),
+                    F.coalesce("sum_dl", F.lit(0)).alias("_bsum"),
                 )
             )
-            .select(
-                (F.col("n_docs") + F.col("_bn")).alias("n_docs"),
-                (
-                    (F.col("sum_dl") + F.col("_bsum")).cast("double")
-                    / (F.col("n_docs") + F.col("_bn"))
-                ).alias("avgdl"),
-                (F.col("sum_dl") + F.col("_bsum")).alias("sum_dl"),
-            )
-            .localCheckpoint(eager=True)
         )
-        folded.write.mode("overwrite").parquet(f"{path}/stats")
-        return
-    # df/stats rebuild READS postings and WRITES df/stats — no path
-    # overlaps its own input, so plain overwrites are safe
-    merged = spark.read.parquet(f"{path}/postings")
-    merged.groupBy("term").agg(F.count("*").alias("df")).withColumn(
-        "bucket", term_bucket(F.col("term"), n_buckets)
-    ).write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/df")
-    merged.groupBy("doc_id").agg(F.first("dl").alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.sum("dl").alias("sum_dl"),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+        .select(
+            (F.col("n_docs") + F.col("_bn")).alias("n_docs"),
+            (
+                (F.col("sum_dl") + F.col("_bsum")).cast("double")
+                / (F.col("n_docs") + F.col("_bn"))
+            ).alias("avgdl"),
+            (F.col("sum_dl") + F.col("_bsum")).alias("sum_dl"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    folded.write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def bm25_topk_prebuilt(
@@ -465,7 +437,7 @@ def bm25_topk_prebuilt(
         .drop("bucket")
     )
     stats = spark.read.parquet(f"{path}/stats")
-    return _score_topk(post, None, df_t, stats, qterms, k, k1, b)
+    return _score_topk(post, df_t, stats, qterms, k, k1, b)
 
 
 def bm25_index_stats(

@@ -613,9 +613,8 @@ def ivfpq_add_to_index(
 def _pq_extend_rows(codes, centroids, books, new_corpus, id_col, vec_col):
     """Index rows that extend the built IVF-PQ index ``codes`` with
     ``new_corpus``: assigned to the existing cells, encoded in the
-    index's own by_residual mode (its codes metadata), with a norm iff
-    the index stores one. The batch add and the stream ingest both
-    emit exactly these rows."""
+    index's own by_residual mode (its codes metadata). The batch add
+    and the stream ingest both emit exactly these rows."""
     meta = codes.schema["codes"].metadata or {}
     by_residual = bool(meta.get("by_residual", False))
     C = centroid_matrix(centroids)
@@ -623,7 +622,6 @@ def _pq_extend_rows(codes, centroids, books, new_corpus, id_col, vec_col):
         _assign_cells(new_corpus, C, id_col, vec_col),
         books,
         C if by_residual else None,
-        with_norm="norm" in codes.columns,
     )
 
 
@@ -1939,9 +1937,9 @@ def ivfpq_build_index(
     return _pq_index_rows(indexed, books, C), centroids, books
 
 
-def _pq_index_rows(assigned: DataFrame, books, C, with_norm: bool = True):
+def _pq_index_rows(assigned: DataFrame, books, C):
     """The one IVF-PQ row encoder: assigned (neighbor_id, cvec, cell)
-    rows to index rows (neighbor_id, cell, codes[, norm]). With a
+    rows to index rows (neighbor_id, cell, codes, norm). With a
     centroid matrix ``C`` the codes quantize the residual
     ``x − C[cell]``, without it the raw vector; the mode is stamped
     into the codes column's metadata, so probes self-configure."""
@@ -1950,18 +1948,16 @@ def _pq_index_rows(assigned: DataFrame, books, C, with_norm: bool = True):
     code_col = (
         enc(F.col("cvec"), F.col("cell")) if by_residual else enc(F.col("cvec"))
     )
-    cols = [
+    return assigned.select(
         F.col("neighbor_id"),
         F.col("cell"),
         code_col.alias("codes", metadata={"by_residual": by_residual}),
-    ]
-    if with_norm:
         # exact |x| stored per vector (JVM-side, one double — noise in
         # the ADC cosine DENOMINATOR disappears entirely, leaving only
         # numerator quantization; the standard store-the-norm trick
         # for cosine/IP over PQ codes, +8 B/vector vs dim floats)
-        cols.append(l2_norm(F.col("cvec")).alias("norm"))
-    return assigned.select(*cols)
+        l2_norm(F.col("cvec")).alias("norm"),
+    )
 
 
 def index_remove(
@@ -2089,27 +2085,34 @@ def ivfpq_probe(
     ADC mechanics: per (query, subspace) a LUT of dot(q_s, codebook
     entry) is built ONCE (n_subspaces x n_codes floats), so scoring a
     candidate is n_subspaces table lookups + adds instead of a dim-wide
-    dot product. Approximate cosine = the codeword-reconstructed
-    vector's cosine against q, so ranking is comparable with the
+    dot product. Approximate cosine = dot(q, codeword-reconstructed
+    vector) over |q| times the vector's exact norm, stored in the
+    index's ``norm`` column, so ranking is comparable with the
     exact-path scores (and EQUALS them when quantization is lossless,
     e.g. n_codes >= corpus size — the pytest contract). Zero-norm
-    reconstructions score 0.0, the engine-wide zero-norm policy.
+    vectors score 0.0, the engine-wide zero-norm policy. An index
+    without the ``norm`` column (a layout no writer here produces) is
+    refused with a ValueError; rebuild it.
 
     Residual mode (read from the ``codes`` column's schema metadata,
     stamped by `ivfpq_build_index`): the reconstruction is
     ``C[cell] + r̂``, so the dot gains a per-(query, cell) centroid
-    term and the norm gains the query-INDEPENDENT tables
-    ``|C[cell]|²`` and ``dot(C[cell]_s, B[s,k])`` — all tiny
-    (n_cells·S·K floats), built once per Arrow task from the broadcast
-    matrices; per-candidate cost stays S lookups + adds.
+    term, computed JVM-side in the probe join; per-candidate cost
+    stays S lookups + adds.
 
     Scale shape: the query table is collected and broadcast (queries
     are the small side by contract, as in `cosine_topk`); candidates
-    move only (query_id, neighbor_id, codes) — S ints per row; scoring
+    move only (query_id, neighbor_id, codes, norm) plus the residual
+    mode's qdotc — S ints and a double or two per row; scoring
     is one Arrow pass; top-k is a per-query k-row window.
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    if "norm" not in codes.columns:
+        raise ValueError(
+            "ivfpq_probe: the IVF-PQ index has no norm column (it predates "
+            "stored norms); rebuild it with ivfpq_build_index"
+        )
     spark = codes.sparkSession
     code_meta = codes.schema["codes"].metadata or {}
     by_residual = bool(code_meta.get("by_residual", False))
@@ -2129,21 +2132,11 @@ def ivfpq_probe(
     }
     books_bc = spark.sparkContext.broadcast(books)
     q_bc = spark.sparkContext.broadcast(qvecs)
-    has_norm = "norm" in codes.columns
-    # driver-side centroid matrix ONLY for the legacy-index fallback
-    # (no stored norms -> the reconstructed |C+r̂| needs per-cell
-    # tables); the modern path gets its centroid term as the qdotc
-    # column and never collects
-    cmat_bc = (
-        spark.sparkContext.broadcast(centroid_matrix(centroids))
-        if by_residual and not has_norm
-        else None
-    )
 
     cand_cols = (
         ["query_id", "neighbor_id", "codes"]
-        + (["cell", "qdotc"] if by_residual else [])
-        + (["norm"] if has_norm else [])
+        + (["qdotc"] if by_residual else [])
+        + ["norm"]
     )
     cand = (
         codes.join(F.broadcast(probes), on="cell")
@@ -2161,15 +2154,6 @@ def ivfpq_probe(
     def adc_score(batches):
         B = books_bc.value
         S, K, dsub = B.shape
-        # codeword squared norms are query-independent: one (S, K) table
-        norm_lut = np.einsum("skd,skd->sk", B, B)
-        if cmat_bc is not None:
-            # legacy residual index without stored norms: the
-            # reconstructed |C+r̂| needs the per-cell tables
-            Cm = cmat_bc.value  # (n_cells, dim)
-            Cr = Cm.reshape(len(Cm), S, dsub)
-            cc_lut = np.einsum("csd,skd->csk", Cr, B)  # dot(C_s, B[s,k])
-            cn2 = np.einsum("cd,cd->c", Cm, Cm)  # |C[cell]|²
         qv = q_bc.value
         lut_cache: dict = {}
         rows = np.arange(S)
@@ -2182,13 +2166,7 @@ def ivfpq_probe(
                 if by_residual
                 else None
             )
-            if cmat_bc is not None:
-                cells_m = pdf["cell"].to_numpy().astype(np.int64)
-            norms_m = (
-                pdf["norm"].to_numpy().astype(np.float64)
-                if has_norm
-                else None
-            )
+            norms_m = pdf["norm"].to_numpy().astype(np.float64)
             scores = np.empty(len(pdf), dtype=np.float64)
             for qid, idx in pdf.groupby("query_id").groups.items():
                 if qid not in lut_cache:
@@ -2206,20 +2184,8 @@ def ivfpq_probe(
                     # dot(q, C+r̂) gains the per-(query, cell) term,
                     # delivered as the JVM-computed qdotc column
                     dot = dot + qdotc_m[pos]
-                if norms_m is not None:
-                    # exact stored |x|: denominator noise is zero
-                    nrm = norms_m[pos]
-                else:
-                    # legacy index without norms: reconstructed |x̂|
-                    sqn = norm_lut[rows, cm].sum(axis=1)
-                    if cmat_bc is not None:
-                        cc = cells_m[pos]
-                        # |C+r̂|² = |C|² + 2·dot(C, r̂) + |r̂|²
-                        sqn = sqn + cn2[cc] + 2.0 * cc_lut[
-                            cc[:, None], rows[None, :], cm
-                        ].sum(axis=1)
-                    nrm = np.sqrt(np.maximum(sqn, 0.0))
-                den = qn * nrm
+                # exact stored |x|: denominator noise is zero
+                den = qn * norms_m[pos]
                 scores[pos] = np.where(den > 0, dot / np.maximum(den, 1e-300), 0.0)
             out = pdf[["query_id", "neighbor_id"]].copy()
             out["score"] = scores

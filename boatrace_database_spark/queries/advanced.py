@@ -6,7 +6,7 @@ so the oracle checks it like any plain join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from boatrace_database_spark.queries._util import cents as _cents

@@ -6,7 +6,7 @@ set ops, scalar/JSON functions, sampling, percentiles, time windows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 

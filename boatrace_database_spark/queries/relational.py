@@ -9,7 +9,7 @@ genuinely-small sides (dimension tables).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 

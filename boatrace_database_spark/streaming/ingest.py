@@ -2268,15 +2268,16 @@ def stream_bm25_ingest(
     double-delivered epoch appends nothing (the checkpoint still
     bounds how much the source re-reads after a restart).
 
-    Unlike the PQ ingest twin there IS per-epoch global work — the
-    df/stats rebuild scans the merged postings (the batch op's
-    documented compaction-grade trade). At 100 TB, trigger this
-    stream on accumulated batches (processingTime minutes, not
-    seconds) or fold term deltas into df as the batch docstring
-    prescribes; the expensive part (tokenize + explode + tf groupBy)
-    touches only the arriving batch either way. Serving reads the
-    next index snapshot by restarting `stream_bm25_serve` — the
-    snapshot contract both serve twins document.
+    Unlike the PQ ingest twin there IS per-epoch global work, but it
+    is vocabulary-sized, not postings-sized: the batch op folds the
+    epoch's per-term df deltas into the stored df with one outer
+    merge and folds stats in O(1) from the stored ``sum_dl``. The
+    expensive part (tokenize + explode + tf groupBy) touches only the
+    arriving batch. The index must be in `bm25_write_index`'s layout;
+    the batch op refuses an older one (no ``docids`` sidecar, or stats
+    without ``sum_dl``) before it writes. Serving reads the next index
+    snapshot by restarting `stream_bm25_serve` — the snapshot contract
+    both serve twins document.
 
     Doc ids must be non-null and unique across the stream. The sidecar
     guard drops a later arrival that reuses an indexed id, and the

@@ -2642,6 +2642,19 @@ def test_ivfpq_persist_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+def test_ivfpq_probe_refuses_index_without_norms(spark):
+    """Every IVF-PQ writer stores the exact per-vector norm; an index
+    without the norm column is refused, not scored another way."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    codes, cents, books = SIM.ivfpq_build_index(
+        emb, n_cells=4, n_subspaces=8, n_codes=16
+    )
+    with pytest.raises(ValueError, match="norm"):
+        SIM.ivfpq_probe(
+            codes.drop("norm"), cents, books, emb.where(F.col("vec_id") < 2)
+        )
+
+
 def test_centroid_cells_metadata_no_count(spark, tmp_path):
     """r11 §45: deriving nprobe from the centroid table must be a
     schema-metadata read, never a count — counting even a 16-row
@@ -3501,13 +3514,10 @@ def test_escalated_plan_reads_zero_cap_frac(spark):
     assert r_new.capped_row_frac < 0.01
 
 
-@pytest.mark.slow
-def test_bm25_add_delta_fold_equals_scan_and_rebuild(spark, tmp_path):
-    """Round-13 df_update="delta": folding the batch's term-df deltas
-    and the exact sum_dl stats must leave df and stats tables
-    VALUE-identical to both the r11 scan rebuild and a from-scratch
-    build — and a legacy index whose stats predate sum_dl silently
-    falls back to scan, upgrading itself so the next add folds."""
+def test_bm25_add_delta_fold_equals_rebuild(spark, tmp_path):
+    """Folding each batch's term-df deltas and its exact dl sum must
+    leave the df and stats tables VALUE-identical to a from-scratch
+    build of the union corpus, avgdl included bit for bit."""
     from boatrace_database_spark.operators import retrieval as R
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(120)
@@ -3531,33 +3541,41 @@ def test_bm25_add_delta_fold_equals_scan_and_rebuild(spark, tmp_path):
             .collect()
         ]
 
-    delta, scan, full = (str(tmp_path / n) for n in ("d", "s", "f"))
+    delta, full = str(tmp_path / "d"), str(tmp_path / "f")
     R.bm25_write_index(a, delta, n_buckets=16)
-    R.bm25_write_index(a, scan, n_buckets=16)
     R.bm25_write_index(docs, full, n_buckets=16)
     for batch in (b, c):
-        R.bm25_add_to_index(batch, delta, n_buckets=16)  # default delta
-        R.bm25_add_to_index(batch, scan, n_buckets=16, df_update="scan")
-    assert df_rows(delta) == df_rows(scan) == df_rows(full)
+        R.bm25_add_to_index(batch, delta, n_buckets=16)
+    assert df_rows(delta) == df_rows(full)
     # bit-identical stats incl. the double avgdl (exact-sum division)
-    assert stats_row(delta) == stats_row(scan) == stats_row(full)
+    assert stats_row(delta) == stats_row(full)
 
-    # legacy fallback: strip sum_dl as an r11-era index would look
-    legacy = str(tmp_path / "legacy")
-    R.bm25_write_index(a, legacy, n_buckets=16)
-    st = spark.read.parquet(f"{legacy}/stats").drop("sum_dl").localCheckpoint(
+
+def test_bm25_add_refuses_stats_without_sum_dl(spark, tmp_path):
+    """An index whose stats predate the stored sum_dl is refused
+    before anything is appended: the postings and docids listings are
+    unchanged, so no half-updated index is left behind."""
+    from boatrace_database_spark.operators import retrieval as R
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(40)
+    idx = tmp_path / "idx"
+    R.bm25_write_index(docs.where(F.col("doc_id") < 20), str(idx), n_buckets=16)
+    st = spark.read.parquet(f"{idx}/stats").drop("sum_dl").localCheckpoint(
         eager=True
     )
-    st.write.mode("overwrite").parquet(f"{legacy}/stats")
-    R.bm25_add_to_index(b, legacy, n_buckets=16)  # delta -> scan fallback
-    ab = docs.where(F.col("doc_id") < 90)
-    ref = str(tmp_path / "ref_ab")
-    R.bm25_write_index(ab, ref, n_buckets=16)
-    assert stats_row(legacy) == stats_row(ref)  # scan wrote sum_dl back
-    R.bm25_add_to_index(c, legacy, n_buckets=16)  # now folds
-    assert df_rows(legacy) == df_rows(full)
-    assert stats_row(legacy) == stats_row(full)
+    st.write.mode("overwrite").parquet(f"{idx}/stats")
 
-    with pytest.raises(ValueError):
-        R.bm25_add_to_index(c, delta, df_update="bogus")
+    def listing():
+        return sorted(
+            str(p.relative_to(idx))
+            for table in ("postings", "docids")
+            for p in (idx / table).rglob("*")
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="sum_dl"):
+        R.bm25_add_to_index(
+            docs.where(F.col("doc_id") >= 20), str(idx), n_buckets=16
+        )
+    assert listing() == before
 

@@ -134,6 +134,54 @@ def test_package_oracle_sql_has_no_repeated_string_windows():
     assert module.repeated_windows(sources, module.strings) == []
 
 
+def _unread_imports(tree: ast.Module) -> list[str]:
+    """Names a module imports and never reads: not as a name, and not
+    inside a string annotation (``"np.ndarray"``)."""
+    imported = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                imported[alias.asname or alias.name.split(".")[0]] = node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for alias in node.names:
+                imported[alias.asname or alias.name] = node.lineno
+    exprs = [tree]
+    for node in ast.walk(tree):
+        for field in ("annotation", "returns"):
+            ann = getattr(node, field, None)
+            for c in ast.walk(ann) if ann is not None else ():
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    exprs.append(ast.parse(c.value, mode="eval"))
+    read = {
+        n.id
+        for e in exprs
+        for n in ast.walk(e)
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+    }
+    return [f"{name} (line {line})" for name, line in imported.items()
+            if name not in read]
+
+
+def test_unread_imports_catches_dead_and_keeps_string_annotations():
+    tree = ast.parse(
+        "import numpy as np\nfrom os import path, sep\n"
+        "def f(x: 'np.ndarray') -> None:\n    return sep\n"
+    )
+    assert _unread_imports(tree) == ["path (line 2)"]
+
+
+def test_package_modules_import_no_unread_names():
+    """A package module (not ``__init__.py``, whose imports re-export)
+    imports only names it reads."""
+    dead = {}
+    for p in sorted((ROOT / "boatrace_database_spark").rglob("*.py")):
+        if p.name != "__init__.py":
+            tree = ast.parse(p.read_text(encoding="utf-8"))
+            if unread := _unread_imports(tree):
+                dead[str(p.relative_to(ROOT))] = unread
+    assert dead == {}
+
+
 class _StubContext:
     """Answers `_jsc.sc().isStopped()` like a live SparkContext until
     the session is lost, then raises like py4j with the JVM gone."""

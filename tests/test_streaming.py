@@ -20,7 +20,6 @@ SRC = "/root/testdata/sf0.001/events.parquet"
 
 
 def _events_schema(spark):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(SRC).schema
 
 
